@@ -41,7 +41,10 @@ def merge_dataframes(
     row twice") via a pre-check aggregate.
     """
     dup = source.groupBy(*on).count().filter(F.col("count") > 1)
-    if dup.limit(1).count() > 0:
+    # no .limit(1) before the count: a codegen'd limit names its counter
+    # from a JVM-global sequence, so its classes would be new code text (a
+    # Janino recompile) on every MERGE; the aggregate runs in full either way
+    if dup.count() > 0:
         raise ValueError("MERGE source has duplicate join keys")
 
     src = source.select(

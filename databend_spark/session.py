@@ -36,6 +36,20 @@ ALL_TABLES = TPCH_TABLES + ("events", "documents", "embeddings")
 _DEFAULT_SF_DIR = "/root/testdata/sf0.1"
 
 
+CODEGEN_CACHE_CONF = "spark.sql.codegen.cache.maxEntries"
+# Janino-compiled classes the JVM keeps (Spark's default: 100). Measured
+# working set: one session running bench.py's 32-query suite at sf0.1
+# and sf1, the seven perfbench olap texts through SessionContext.sql and
+# all 188 suite queries at sf0.01 compiles 1,668-1,675 distinct classes
+# (four sessions). Under the default, the seven olap texts alone (103
+# classes) evict each other and every repeat recompiles. Guava splits the
+# bound evenly over 4 segments, so ~2.4x headroom also covers an uneven
+# hash split. Static conf, read once when the JVM first generates code:
+# sessions built without get_spark (such as the bare SparkSession in
+# tools/check_oracle.py) keep Spark's default.
+CODEGEN_CACHE_ENTRIES = 4096
+
+
 def _default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
@@ -113,6 +127,7 @@ def get_spark(app_name: str = "databend_spark") -> SparkSession:
         )
         # '${name}' in string literals stays literal (regexp templates)
         .config("spark.sql.variable.substitute", "false")
+        .config(CODEGEN_CACHE_CONF, str(CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
     )
@@ -121,6 +136,14 @@ def get_spark(app_name: str = "databend_spark") -> SparkSession:
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Generated classes Janino has compiled in this JVM so far (Spark's
+    ``CodegenMetrics`` compile-time histogram counts one per compile; a
+    codegen cache hit adds nothing)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 
 # runtime-settable confs every session MUST carry for correct results on the
@@ -577,6 +600,13 @@ class SessionContext:
                 ("active_stages", float(len(tracker.getActiveStageIds()))),
                 ("default_parallelism", float(sc.defaultParallelism)),
                 ("queries_logged", float(len(self._query_log))),
+                # JVM-wide since start: a repeat query that moves this
+                # count recompiled its generated classes
+                ("codegen_compiles", float(codegen_compiles(spark))),
+                (
+                    "codegen_cache_max_entries",
+                    float(spark.conf.get(CODEGEN_CACHE_CONF)),
+                ),
             ]
             return spark.createDataFrame(rows, "metric string, value double")
         raise ValueError(f"unknown system table: {name}")

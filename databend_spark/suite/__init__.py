@@ -13,52 +13,15 @@ Modules map to SURVEY.md §2 sections:
 
 from databend_spark.suite.base import REGISTRY, oracle_sql, queries  # noqa: F401
 import databend_spark.suite.tpch  # noqa: F401,E402
-
-try:  # modules added incrementally; keep imports resilient during build-out
-    import databend_spark.suite.relational  # noqa: F401
-except ImportError:
-    pass
-try:
-    import databend_spark.suite.functions  # noqa: F401
-except ImportError:
-    pass
-try:
-    import databend_spark.suite.llm  # noqa: F401
-except ImportError:
-    pass
-try:
-    import databend_spark.suite.events  # noqa: F401
-except ImportError:
-    pass
-try:
-    import databend_spark.suite.mutations_suite  # noqa: F401
-except ImportError:
-    pass
-try:
-    import databend_spark.suite.udf_suite  # noqa: F401
-except ImportError:
-    pass
-try:
-    import databend_spark.suite.hits  # noqa: F401
-except ImportError:
-    pass
-try:
-    import databend_spark.suite.tpcds_style  # noqa: F401
-except ImportError:
-    pass
-try:
-    import databend_spark.suite.tpcds_real  # noqa: F401
-except ImportError:
-    pass
-try:
-    import databend_spark.suite.geo  # noqa: F401
-except ImportError:
-    pass
-try:
-    import databend_spark.suite.variant_suite  # noqa: F401
-except ImportError:
-    pass
-try:
-    import databend_spark.suite.stage_suite  # noqa: F401
-except ImportError:
-    pass
+import databend_spark.suite.relational  # noqa: F401,E402
+import databend_spark.suite.functions  # noqa: F401,E402
+import databend_spark.suite.llm  # noqa: F401,E402
+import databend_spark.suite.events  # noqa: F401,E402
+import databend_spark.suite.mutations_suite  # noqa: F401,E402
+import databend_spark.suite.udf_suite  # noqa: F401,E402
+import databend_spark.suite.hits  # noqa: F401,E402
+import databend_spark.suite.tpcds_style  # noqa: F401,E402
+import databend_spark.suite.tpcds_real  # noqa: F401,E402
+import databend_spark.suite.geo  # noqa: F401,E402
+import databend_spark.suite.variant_suite  # noqa: F401,E402
+import databend_spark.suite.stage_suite  # noqa: F401,E402

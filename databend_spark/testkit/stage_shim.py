@@ -75,6 +75,9 @@ def _data_farm() -> str:
     import shutil as _sh
 
     _sh.rmtree(_DATA_FARM, ignore_errors=True)
+    # the walk below creates nothing when the fixtures are absent, and
+    # the marker still needs its directory
+    os.makedirs(_DATA_FARM, exist_ok=True)
     count = 0
     for dirp, _dirs, files in os.walk(REF_DATA):
         rel = os.path.relpath(dirp, REF_DATA)

@@ -41,9 +41,25 @@ def _green_files():
     ]
 
 
-@pytest.mark.parametrize(
-    "path", _green_files(), ids=lambda p: p.split("suites/")[-1]
-)
+def _green_params():
+    """One param per pinned file; without the corpus, a single skipped
+    param that names the missing precondition (an empty list would hand
+    pytest's ``ids`` callback a NOTSET placeholder and fail collection)."""
+    files = _green_files()
+    if not files:
+        return [
+            pytest.param(
+                None,
+                id="no-corpus",
+                marks=pytest.mark.skip(
+                    reason=f"reference corpus not found under {REFERENCE}"
+                ),
+            )
+        ]
+    return [pytest.param(p, id=p.split("suites/")[-1]) for p in files]
+
+
+@pytest.mark.parametrize("path", _green_params())
 def test_slt_file_stays_green(spark, path):
     from databend_spark.testkit import run_slt_file
 

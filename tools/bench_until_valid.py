@@ -22,12 +22,19 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PROBE_S = 20.0
 PROBE_STEAL_MAX = 0.5  # % — don't even start during a burst
 QUIET_WAIT_S = 45.0  # between failed probes
+MAX_WAITS = 8  # failed probes per attempt before the attempt counts as failed
 
 
 def _ticks() -> tuple[int, int]:
-    parts = open("/proc/stat").readline().split()[1:]
-    vals = [int(x) for x in parts]
-    return sum(vals[:8]), vals[7] if len(vals) > 7 else 0
+    """(total, steal) ticks, or (0, 0) when /proc/stat is unreadable —
+    the caller's max(1, t1 - t0) turns that into a 0% probe."""
+    try:
+        with open("/proc/stat") as fh:
+            parts = fh.readline().split()[1:]
+        vals = [int(x) for x in parts]
+        return sum(vals[:8]), vals[7] if len(vals) > 7 else 0
+    except (OSError, ValueError):
+        return 0, 0
 
 
 def _probe_steal(seconds: float = PROBE_S) -> float:
@@ -46,7 +53,9 @@ def main() -> int:
         # teardown: bench.py's own gate marks loadavg_1m > 25% of cores
         # as contended, so starting before it decays burns an attempt
         steal, load = _probe_steal(), os.getloadavg()[0]
-        while steal >= PROBE_STEAL_MAX or load > 0.2 * ncpu:
+        waits = 0
+        while (steal >= PROBE_STEAL_MAX or load > 0.2 * ncpu) and waits < MAX_WAITS:
+            waits += 1
             print(
                 f"[attempt {attempt}] probe steal {steal:.2f}% "
                 f"load {load:.1f} — waiting",
@@ -55,6 +64,14 @@ def main() -> int:
             )
             time.sleep(QUIET_WAIT_S)
             steal, load = _probe_steal(), os.getloadavg()[0]
+        if steal >= PROBE_STEAL_MAX or load > 0.2 * ncpu:
+            print(
+                f"[attempt {attempt}] no quiet window after {MAX_WAITS} "
+                "probes — attempt failed",
+                file=sys.stderr,
+                flush=True,
+            )
+            continue
         print(
             f"[attempt {attempt}] probe steal {steal:.2f}% — running bench",
             file=sys.stderr,
