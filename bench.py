@@ -199,14 +199,21 @@ def main() -> None:
             from tools.gen_scale import main as _gen
 
             _argv, sys.argv = sys.argv, ["gen_scale", "10", SF_DIR, sf1_dir]
+            # gen_scale prints per-table progress; stdout must stay
+            # reserved for the ONE bench JSON line (a fresh checkout
+            # regenerates sf1 in-run, and its prints otherwise land in
+            # the captured bench output). Python-level prints and
+            # C-level writes to fd 1 (duckdb) both go to stderr.
+            sys.stdout.flush()
+            saved_fd1 = os.dup(1)
+            os.dup2(2, 1)
             try:
-                # gen_scale prints per-table progress; stdout must stay
-                # reserved for the ONE bench JSON line (a fresh checkout
-                # regenerates sf1 in-run, and its prints otherwise land
-                # in the captured bench output)
                 with contextlib.redirect_stdout(sys.stderr):
                     _gen()
             finally:
+                sys.stdout.flush()
+                os.dup2(saved_fd1, 1)
+                os.close(saved_fd1)
                 sys.argv = _argv
         except Exception:  # noqa: BLE001 — sf1 is optional
             pass

@@ -18,16 +18,15 @@ from __future__ import annotations
 
 import re
 from collections.abc import Callable
+from contextvars import ContextVar
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from databend_spark.sqlgen.options import current_options
+
 # --- pure renames: databend name -> spark SQL function name ----------------
 # (sources: function_list.txt aliases block; scalars/{string,timestamp,…})
-# forced by the testkit when Spark rejects a Python UDF inside a lambda
-# body — macros re-expand with JVM-only templates
-LAMBDA_SAFE_MODE: list[bool] = [False]
-
 RENAME: dict[str, str] = {
     # type conversion
     "to_string": "cast_to_string",  # handled in COMPOSED (needs type arg)
@@ -350,7 +349,7 @@ SQL_MACROS: dict[str, str] = {
                     sep=_literal_text(args[1])[1:-1].replace("'", "''"),
                 )
             )
-            if LAMBDA_SAFE_MODE[0]
+            if current_options().lambda_safe
             and _literal_text(args[1]).startswith("'")
             else "__split(CAST({0} AS STRING), CAST({1} AS STRING))".format(
                 *args
@@ -1388,8 +1387,7 @@ def _typeof_macro(args: list[str]) -> str | None:
         # replacement strings ride as masked literals so later
         # type-alias / tuple-literal passes can't rewrite them.
         def lit(s: str) -> str:
-            CURRENT_LITERALS.append("'" + s + "'")
-            return f"\x00{len(CURRENT_LITERALS) - 1}\x00"
+            return _mask_literal("'" + s + "'")
 
         expr = f"upper(t\x03ypeof({t}))"
         expr = f"regexp_replace({expr}, {lit('STRUCT<')}, {lit('TUPLE(')})"
@@ -1473,11 +1471,6 @@ def _last_day(args: list[str]) -> str | None:
 
 SQL_MACROS["last_day"] = _last_day
 
-# datetime parse mode, bound per statement by the SLT runner from
-# enable_strict_datetime_parser / enable_auto_detect_datetime_format
-# (reference settings; query/functions/02_0012 auto-detect suite)
-DT_PARSE_MODE = {"strict": False, "auto": False}
-
 # auto-detect datetime parsing (reference enable_auto_detect_datetime_
 # format): try a curated format chain, then epoch-number fallback
 _DATE_FMTS = ["yyyy-M-d", "M/d/yyyy", "dd-MMM-yyyy", "MMM d, yyyy",
@@ -1496,11 +1489,11 @@ _TS_FMTS = [
 def _try_to_date(args: list[str]) -> str | None:
     if len(args) != 1:
         return None
-    x = args[0]
-    if DT_PARSE_MODE["strict"] and not DT_PARSE_MODE["auto"]:
+    x, opts = args[0], current_options()
+    if opts.dt_strict and not opts.dt_auto:
         # strict parser without auto-detect: zero-padded ISO only
         return f"try_to_d\x03ate({x}, 'yyyy-MM-dd')"
-    if DT_PARSE_MODE["auto"]:
+    if opts.dt_auto:
         # Snowflake-style detection: pure-numeric text is epoch DAYS
         # (saturating to 0001-01-01 outside the date domain), tried
         # BEFORE compact formats so '20240305' stays epoch-based
@@ -1529,14 +1522,14 @@ def _try_to_date(args: list[str]) -> str | None:
 def _try_to_timestamp(args: list[str]) -> str | None:
     if len(args) != 1:
         return None
-    x = args[0]
-    if DT_PARSE_MODE["strict"] and not DT_PARSE_MODE["auto"]:
+    x, opts = args[0], current_options()
+    if opts.dt_strict and not opts.dt_auto:
         # strict parser without auto-detect: zero-padded ISO only
         return (
             f"try_to_t\x03imestamp({x},"
             " 'yyyy-MM-dd HH:mm:ss[.SSSSSS]')"
         )
-    if DT_PARSE_MODE["auto"]:
+    if opts.dt_auto:
         return _try_to_timestamp_auto(x)
     # Spark ≥3 rejects day-name patterns when parsing — strip the weekday
     # prefix textually and parse the remainder instead of using EEE
@@ -1960,18 +1953,26 @@ _TO_VARIANT = (
 _NUM_RE = "'^-?([0-9]+([.][0-9]*)?|[.][0-9]+)([eE][+-]?[0-9]+)?$'"
 
 
-# masked-literal table for the current rewrite (set by sqlgen around
-# expand_sql_macros) — lets literal-inspecting macros read values
-CURRENT_LITERALS: list[str] = []
+# masked-literal table of the rewrite running in this context (set by
+# sqlgen around expand_sql_macros) — lets literal-inspecting macros read
+# values
+LITERALS: ContextVar[list[str]] = ContextVar("macro_literals", default=[])
 _MASKED_LIT = re.compile("^\x00(\\d+)\x00$")
 
 
 def _literal_text(arg: str) -> str:
     """Resolve a masked string-literal placeholder to its raw text."""
-    m = _MASKED_LIT.match(arg.strip())
-    if m and int(m.group(1)) < len(CURRENT_LITERALS):
-        return CURRENT_LITERALS[int(m.group(1))]
+    m, lits = _MASKED_LIT.match(arg.strip()), LITERALS.get()
+    if m and int(m.group(1)) < len(lits):
+        return lits[int(m.group(1))]
     return arg
+
+
+def _mask_literal(quoted: str) -> str:
+    """Add a quoted SQL literal to the table; return its placeholder."""
+    lits = LITERALS.get()
+    lits.append(quoted)
+    return f"\x00{len(lits) - 1}\x00"
 
 
 def _to_char_dispatch(args: list[str]) -> str:
@@ -2501,15 +2502,6 @@ def _histogram(args: list[str]) -> str | None:
     return None
 
 
-# when True (runner retry pass), get() always takes the variant path —
-# set by testkit on DATATYPE_MISMATCH from the element_at interpretation
-VARIANT_GET_MODE: list[bool] = [False]
-
-# set by the runner when the statement references VECTOR-typed columns
-# (reference types/vector.rs stores float32 — distances compute in f32)
-VECTOR_F32_MODE: list[bool] = [False]
-
-
 def _vec_arg_to_array(a: str) -> str:
     """A vector argument → ARRAY<DOUBLE> expression: json-text sources
     (string literals / parse_json) go through from_json, arrays CAST."""
@@ -2534,7 +2526,8 @@ def _vec_arg_to_array(a: str) -> str:
 def _vec_distance_macro(metric: str, args: list[str]) -> str | None:
     if len(args) != 2:
         return None
-    f32 = VECTOR_F32_MODE[0] or bool(
+    # VECTOR-typed columns (reference types/vector.rs) store float32
+    f32 = current_options().vector_f32 or bool(
         re.search(
             r"vector\s*\(|ARRAY\s*[<(]\s*FLOAT\b|AS\s+FLOAT\b",
             args[0] + " " + args[1],
@@ -2555,7 +2548,7 @@ SQL_MACROS["inner_product"] = lambda a: _vec_distance_macro("dot", a)
 SQL_MACROS["vector_dims"] = "size({0})"
 SQL_MACROS["vector_norm"] = lambda a: (
     f"__vec_norm(CAST(({a[0]}) AS ARRAY<DOUBLE>),"
-    f" {str(bool(VECTOR_F32_MODE[0])).lower()})"
+    f" {str(current_options().vector_f32).lower()})"
     if len(a) == 1
     else None
 )
@@ -2770,7 +2763,7 @@ def _to_timestamp_tz_sql(args: list[str], fallback: str) -> str | None:
     fn = "__ts_tz_text"
     if "try" in fallback:
         fn += "_try"
-    if DT_PARSE_MODE["auto"]:
+    if current_options().dt_auto:
         fn += "_auto"
     if lit.startswith("'") and lit.endswith("'"):
         # literal text keeps its wall time; a missing offset binds the
@@ -2816,8 +2809,7 @@ def _glob_sql(args: list[str]) -> str | None:
         for c in pat
     ) + "$"
     rx_sql = rx.replace("\\", "\\\\").replace("'", "''")
-    CURRENT_LITERALS.append("'" + rx_sql + "'")
-    tok = f"\x00{len(CURRENT_LITERALS) - 1}\x00"
+    tok = _mask_literal("'" + rx_sql + "'")
     return f"(CAST({args[0]} AS STRING) RLIKE {tok})"
 
 
@@ -2865,8 +2857,7 @@ def _regexp_split_sql(args: list[str], explode: bool) -> str | None:
             return None
         flags = flag_lit.strip("'").replace("g", "")
         raw = (f"(?{flags})" if flags else "") + raw
-        CURRENT_LITERALS.append("'" + raw.replace("'", "''") + "'")
-        pat_sql = f"\x00{len(CURRENT_LITERALS) - 1}\x00"
+        pat_sql = _mask_literal("'" + raw.replace("'", "''") + "'")
     base = f"sp\x03lit({args[0]}, {pat_sql})"
     if raw is not None:
         try:
@@ -2879,15 +2870,12 @@ def _regexp_split_sql(args: list[str], explode: bool) -> str | None:
     return any(_JSON_ENC_VARIANTISH.match(a.strip()) for a in args)
 
 
-# forced by the testkit's DATATYPE_MISMATCH retry: a variant COLUMN is
-# textually indistinguishable from an array column, so the first attempt
-# uses the plain array template and the retry re-rewrites with every
-# array function routed to its __va_* jsonb implementation
-VARIANT_ARRAY_MODE: list[bool] = [False]
-
-
 def _any_variantish(args: list[str]) -> bool:
-    if VARIANT_ARRAY_MODE[0]:
+    # a variant COLUMN is textually indistinguishable from an array
+    # column: the first attempt uses the plain array template and the
+    # variant_array fallback re-rewrites with every array function
+    # routed to its __va_* jsonb implementation
+    if current_options().variant_array:
         return True
     return any(_JSON_ENC_VARIANTISH.match(a.strip()) for a in args)
 
@@ -2974,11 +2962,11 @@ def _get_dispatch(args: list[str]) -> str | None:
     """get(container, key_or_idx): arrays/maps → element_at; variant
     expressions (parse_json / chained accessors / NULL) → JSONB access
     (reference scalars/variant.rs get). VARIANT columns can't be told
-    apart textually — the testkit retries with VARIANT_GET_MODE on
-    analysis-type errors."""
+    apart textually — the variant_get fallback retries with that option
+    on analysis-type errors."""
     if len(args) != 2:
         return None
-    if VARIANT_GET_MODE[0] or _VARIANTISH.match(args[0]):
+    if current_options().variant_get or _VARIANTISH.match(args[0]):
         return _variant_access_sql(args[0], "a", args[1], False)
     return f"try_element_at({args[0]}, {args[1]})"
 

@@ -379,12 +379,14 @@ class SessionContext:
     def sql(self, query: str) -> DataFrame:
         """Run SQL. Databend-dialect constructs are rewritten first
         (see ``databend_spark.sqlgen``); the Spark-compatible core goes
-        straight to Catalyst. Every call lands in system.query_log
-        (reference: storages/system/src/query_log_table.rs — theirs logs
-        start/finish events; one row per query is the useful core)."""
+        straight to Catalyst, and analysis errors walk the shared
+        fallback table (``sqlgen/fallbacks.py``). Every call lands in
+        system.query_log (reference: storages/system/src/
+        query_log_table.rs — theirs logs start/finish events; one row
+        per query is the useful core)."""
         import time
 
-        from databend_spark.sqlgen import rewrite_databend_sql
+        from databend_spark.sqlgen.fallbacks import execute
 
         t0 = time.time()
         if self._agg_indexes:
@@ -393,42 +395,19 @@ class SessionContext:
             hit = try_rewrite(query, self._agg_indexes)
             if hit is not None:
                 query = hit
-        try:
-            df = self.spark.sql(rewrite_databend_sql(query))
-        except Exception as e:
-            # Databend `col:path` reads named tuples AND json text;
-            # Spark's native `:` needs true VARIANT — retry both forms
-            if "COLUMN_IS_NOT_VARIANT_TYPE" in str(e):
-                from databend_spark.sqlgen import (
-                    variant_paths_to_json,
-                    variant_paths_to_struct,
-                )
 
-                for alt in (
-                    variant_paths_to_struct(query),
-                    variant_paths_to_json(query),
-                ):
-                    try:
-                        df = self.spark.sql(rewrite_databend_sql(alt))
-                        break
-                    except Exception:
-                        continue
-                else:
-                    df = None
-                if df is not None:
-                    self._query_log.append(
-                        (len(self._query_log) + 1, query, "ok", "",
-                         t0, time.time() - t0)
-                    )
-                    return df
-            self._query_log.append(
-                (len(self._query_log) + 1, query, "error",
-                 type(e).__name__, t0, time.time() - t0)
-            )
+        def log(status: str, error: str, fallback: str | None) -> None:
+            self._query_log.append((
+                len(self._query_log) + 1, query, status, error, t0,
+                time.time() - t0, fallback or "",
+            ))
+
+        try:
+            df, fallback = execute(self.spark, query)
+        except Exception as e:
+            log("error", type(e).__name__, None)
             raise
-        self._query_log.append(
-            (len(self._query_log) + 1, query, "ok", "", t0, time.time() - t0)
-        )
+        log("ok", "", fallback)
         return df
 
     # -- incremental-layer objects (streams / tasks / stages) --------------
@@ -521,9 +500,10 @@ class SessionContext:
             )
         if name == "query_log":
             return spark.createDataFrame(
-                self._query_log or [(0, "", "", "", 0.0, 0.0)],
+                self._query_log or [(0, "", "", "", 0.0, 0.0, "")],
                 "query_id int, query_text string, status string, "
-                "error string, start_time double, duration_s double",
+                "error string, start_time double, duration_s double, "
+                "fallback string",
             ).filter("query_id > 0")
         if name == "streams":
             rows = [

@@ -17,6 +17,13 @@ from __future__ import annotations
 import json
 import re
 
+from databend_spark.sqlgen.options import (
+    _CURRENT,
+    DEFAULT,
+    RewriteOptions,
+    current_options,
+)
+
 _UNSUPPORTED = [
     (re.compile(r"\bCHANGES\s*\(", re.I),
      "CHANGES(...) — use databend_spark.streaming.VersionedTable.changes()"),
@@ -3330,9 +3337,9 @@ def _rewrite_variant_ext(s: str) -> str:
         ),
         s,
     )
-    from databend_spark.functions.registry import DT_PARSE_MODE as _dtm0
-
-    _tstz_fn = "__ts_tz_text_auto" if _dtm0["auto"] else "__ts_tz_text"
+    _tstz_fn = (
+        "__ts_tz_text_auto" if current_options().dt_auto else "__ts_tz_text"
+    )
     out = _TSTZ_CAST.sub(
         lambda m: (
             f"{_tstz_fn}({_tstz_recv(m.group(1))},"
@@ -3825,9 +3832,18 @@ def _split_top_commas(text: str) -> list[str]:
     return parts
 
 
-def rewrite_databend_sql(sql: str) -> str:
+def rewrite_databend_sql(sql: str, opts: RewriteOptions = DEFAULT) -> str:
     """Rewrite the Databend-only constructs we support; raise a clear
-    error on the ones we don't (never silently mis-parse)."""
+    error on the ones we don't (never silently mis-parse). ``opts`` is
+    visible to the function macros for this call only."""
+    token = _CURRENT.set(opts)
+    try:
+        return _rewrite(sql)
+    finally:
+        _CURRENT.reset(token)
+
+
+def _rewrite(sql: str) -> str:
     if re.search(r"\b(timestamp|timestamp_tz)_from_parts\s*\(", sql, re.I):
         sql = _rewrite_from_parts(sql)
     if re.search(
@@ -4097,20 +4113,18 @@ def rewrite_databend_sql(sql: str) -> str:
             return f"CAST({vu} AS DOUBLE)"
         if tgt in ("date",):
             from databend_spark.functions.registry import (
-                DT_PARSE_MODE as _dtm,
                 _try_to_date as _ttd,
             )
 
-            if _dtm["auto"]:
+            if current_options().dt_auto:
                 return _ttd([f"({vu})"])
             return f"CAST({vu} AS DATE)"
         if tgt in ("datetime", "timestamp"):
             from databend_spark.functions.registry import (
-                DT_PARSE_MODE as _dtm,
                 _try_to_timestamp_auto as _tta,
             )
 
-            if _dtm["auto"]:
+            if current_options().dt_auto:
                 return _tta(f"({vu})")
             return f"CAST({vu} AS TIMESTAMP)"
         spark_t = {
@@ -4983,11 +4997,11 @@ def rewrite_databend_sql(sql: str) -> str:
     # direction, …) need to see through the masking placeholders
     from databend_spark.functions import registry as _reg
 
-    _reg.CURRENT_LITERALS = literals
+    token = _reg.LITERALS.set(literals)
     try:
         masked = expand_sql_macros(masked)
     finally:
-        _reg.CURRENT_LITERALS = []
+        _reg.LITERALS.reset(token)
     if re.search(r"\bexplode\s*\(", masked, re.I):
         masked = _rewrite_srf_post(masked)
     if "__interval_" in masked:

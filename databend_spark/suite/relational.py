@@ -259,18 +259,17 @@ def join_asof_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchase keeps its nearest prior signup; signups picked by no
     purchase surface NULL-padded. Runs through the sqlgen pick-key
     rewrite (``_rewrite_asof_outer``)."""
-    from databend_spark.sqlgen import rewrite_databend_sql
+    from databend_spark.sqlgen.fallbacks import execute
 
-    return spark.sql(
-        rewrite_databend_sql(
+    return execute(
+        spark,
             f"""
             {_ASOF_FULL_CTES}
             SELECT p.event_id AS purchase_id, s.s_event AS signup_id
             FROM p ASOF FULL JOIN s
               ON p.user_id = s.s_user AND p.ts >= s.s_ts
-            """
-        )
-    )
+            """,
+    )[0]
 
 
 sql_query(
@@ -308,10 +307,10 @@ def join_any_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     suites/query/join/any_join.test): every left row joined to at most
     one right row per key — sqlgen desugars the ANY side to a
     min(struct(*)) GROUP BY key derived table."""
-    from databend_spark.sqlgen import rewrite_databend_sql
+    from databend_spark.sqlgen.fallbacks import execute
 
-    return spark.sql(
-        rewrite_databend_sql(
+    return execute(
+        spark,
             """
             SELECT c.c_custkey, c.c_name, o.o_orderkey, o.n_orders
             FROM customer c LEFT ANY JOIN (
@@ -319,9 +318,8 @@ def join_any_left(spark: SparkSession, sf_dir: str) -> DataFrame:
                        count(*) OVER (PARTITION BY o_custkey) AS n_orders
                 FROM orders
             ) o ON c.c_custkey = o.o_custkey
-            """
-        )
-    )
+            """,
+    )[0]
 
 
 @register(
@@ -339,18 +337,17 @@ def join_any_left(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def join_any_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INNER ANY JOIN: one output row per matching key pair."""
-    from databend_spark.sqlgen import rewrite_databend_sql
+    from databend_spark.sqlgen.fallbacks import execute
 
-    return spark.sql(
-        rewrite_databend_sql(
+    return execute(
+        spark,
             """
             SELECT orders.o_orderkey, c.c_custkey, c.c_name
             FROM orders INNER ANY JOIN (
                 SELECT c_custkey, c_name FROM customer
             ) c ON orders.o_custkey = c.c_custkey
-            """
-        )
-    )
+            """,
+    )[0]
 
 
 # ---------------------------------------------------------------------------

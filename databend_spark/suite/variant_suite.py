@@ -20,11 +20,11 @@ from databend_spark.suite.base import register
 
 def _dialect_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
     from databend_spark.functions.variant_runtime import register_variant_udfs
-    from databend_spark.sqlgen import rewrite_databend_sql
+    from databend_spark.sqlgen.fallbacks import execute
 
     register_tables(spark, sf_dir, ALL_TABLES)
     register_variant_udfs(spark)
-    return spark.sql(rewrite_databend_sql(sql))
+    return execute(spark, sql)[0]
 
 
 _OBJ = (

@@ -18,9 +18,9 @@ import re
 
 
 def _sql(spark, q: str):
-    from databend_spark.sqlgen import rewrite_databend_sql
+    from databend_spark.sqlgen.fallbacks import execute
 
-    return spark.sql(rewrite_databend_sql(q))
+    return execute(spark, q)[0]
 
 # privilege display names in UserPrivilegeType bit order (reference
 # src/meta/app/src/principal/user_privilege.rs:38-80); merged privilege

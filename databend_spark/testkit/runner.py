@@ -25,6 +25,7 @@ formatting differs across engines), NULL ↔ "NULL", empty string ↔
 
 from __future__ import annotations
 
+import dataclasses
 import datetime
 import math
 import os
@@ -32,8 +33,11 @@ import re
 import sys
 import time
 from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark.sql import SparkSession
+
+from databend_spark.sqlgen.fallbacks import split_top_level as _split_args
 
 OUR_NAMES = {"spark", "databend_spark", "databend"}
 
@@ -219,68 +223,6 @@ def _rows_match(expected: list[list[str]], actual: list[list[str]]) -> bool:
 
 _SETTINGS_STMT = re.compile(r"^\s*(un)?set\s+\w+", re.I)
 
-_DATE_CALL = re.compile(
-    r"-\s*(today\s*\(\s*\)|yesterday\s*\(\s*\)|tomorrow\s*\(\s*\)"
-    r"|current_date\s*\(\s*\)|to_date\s*\([^()]*\)|DATE\s*'[^']*')",
-    re.I,
-)
-
-
-def _rewrite_date_minus(sql: str) -> str:
-    """``A - <date expr>`` → ``datediff(A, <date expr>)`` (the reference
-    types date-minus-date as an INT day count; Spark yields an
-    interval). The left operand is scanned back to the nearest
-    expression boundary (depth-0 comma/paren/keyword)."""
-    out = sql
-    # right-to-left so earlier indexes stay valid
-    for m in reversed(list(_DATE_CALL.finditer(sql))):
-        i = m.start()
-        j = i
-        while j > 0:
-            k = j - 1
-            while k >= 0 and sql[k].isspace():
-                k -= 1
-            if k < 0:
-                break
-            c = sql[k]
-            if c == ")":
-                depth = 0
-                while k >= 0:
-                    if sql[k] == ")":
-                        depth += 1
-                    elif sql[k] == "(":
-                        depth -= 1
-                        if depth == 0:
-                            break
-                    k -= 1
-                # include a function name before the paren group
-                e = k
-                while e > 0 and (sql[e - 1].isalnum() or sql[e - 1] in "_."):
-                    e -= 1
-                j = e
-            elif c.isalnum() or c in "_.'`":
-                e = k
-                if c == "'":
-                    e -= 1
-                    while e >= 0 and sql[e] != "'":
-                        e -= 1
-                while e > 0 and (sql[e - 1].isalnum() or sql[e - 1] in "_.'`"):
-                    e -= 1
-                word = sql[e : k + 1].upper()
-                if word in ("SELECT", "WHERE", "AND", "OR", "BY", "THEN",
-                            "ELSE", "WHEN", "AS", "ON", "FROM", "SET"):
-                    break
-                j = e
-            elif c in "+-*/":
-                j = k
-            else:
-                break
-        a = sql[j:i].strip()
-        if not a:
-            continue
-        b = m.group(1)
-        out = out[:j] + f" datediff({a}, {b}) " + out[m.end():]
-    return out
 _SET_TIMEZONE = re.compile(
     r"^\s*set\s+timezone\s*=\s*'([^']+)'\s*;?\s*$", re.I
 )
@@ -1014,24 +956,6 @@ def _apply_truncating_casts(sql: str) -> str:
     return res
 
 
-def _split_args(text: str) -> list[str]:
-    """Split an argument/type list on top-level commas."""
-    parts, buf, depth = [], [], 0
-    for ch in text:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append("".join(buf))
-            buf = []
-        else:
-            buf.append(ch)
-    if buf or parts:
-        parts.append("".join(buf))
-    return parts
-
-
 _PTYPE_NORM = {
     "int": "int32", "integer": "int32", "int32": "int32",
     "bigint": "int64", "int64": "int64", "uint8": "uint8",
@@ -1056,7 +980,19 @@ def run_slt_file(
     skip_patterns: list[str] | None = None,
     isolate: bool = True,
 ) -> SLTReport:
-    from databend_spark.sqlgen import rewrite_databend_sql
+    from databend_spark.sqlgen import (
+        RewriteOptions,
+        rewrite_databend_sql,
+        rewrite_values_as_select,
+    )
+    from databend_spark.sqlgen.fallbacks import (
+        FALLBACKS,
+        Failure,
+        Fallback,
+        decorrelate_join_on,
+        execute,
+        splice,
+    )
 
     # variant accessor UDF (`->`, get_path, …) — idempotent
     from databend_spark.functions.variant_runtime import register_variant_udfs
@@ -3960,80 +3896,6 @@ def run_slt_file(
             re.sub(r"(?:([A-Za-z_]\w*)\.)?\$(\d+)", repl, masked), _lits
         )
 
-    def _decorrelate_join_on(sql: str) -> str | None:
-        """Correlated subqueries inside JOIN ON (reference decorrelates;
-        Spark rejects): push each scalar subquery into its correlated
-        side as a derived-table column, reference it in the condition,
-        and EXCEPT it out of the star projection. EXISTS over both
-        sides (inner join) moves to WHERE."""
-        m = re.match(
-            r"^\s*select\s+\*\s+from\s+(\w+)\s+"
-            r"((?:left|right|full|inner)\s+(?:outer\s+)?)?join\s+(\w+)"
-            r"\s+on\s+(.*?)(\s+order\s+by\s+.*?)?;?\s*$",
-            sql,
-            re.I | re.S,
-        )
-        if not m:
-            return None
-        t1, jt, t2, cond, tail = (
-            m.group(1),
-            (m.group(2) or "").strip(),
-            m.group(3),
-            m.group(4).strip(),
-            m.group(5) or "",
-        )
-        if re.match(r"^exists\s*\(", cond, re.I) and not jt:
-            return (
-                f"select * from {t1} join {t2} on 1=1 "
-                f"where {cond} {tail}"
-            )
-        # collect balanced scalar subqueries in the condition
-        subs = []
-        i = 0
-        while True:
-            ms = re.search(r"\(\s*select\b", cond[i:], re.I)
-            if not ms:
-                break
-            start = i + ms.start()
-            depth, j = 1, start + 1
-            while j < len(cond) and depth:
-                if cond[j] == "(":
-                    depth += 1
-                elif cond[j] == ")":
-                    depth -= 1
-                j += 1
-            subs.append(cond[start:j])
-            i = j
-        if not subs:
-            return None
-        derived: dict[str, list[tuple[str, str]]] = {t1: [], t2: []}
-        for k, sub in enumerate(subs):
-            if re.search(rf"\b{re.escape(t2)}\.", sub):
-                side = t2
-            elif re.search(rf"\b{re.escape(t1)}\.", sub):
-                side = t1
-            else:
-                return None
-            alias = f"__sc{k}"
-            derived[side].append((alias, sub))
-            cond = cond.replace(sub, f"{side}.{alias}")
-
-        def rel(side: str) -> str:
-            if not derived[side]:
-                return side
-            cols = ", ".join(
-                f"{sub} as {alias}" for alias, sub in derived[side]
-            )
-            return f"(select {side}.*, {cols} from {side}) {side}"
-
-        excepts = ", ".join(
-            alias for side in (t1, t2) for alias, _ in derived[side]
-        )
-        return (
-            f"select * except ({excepts}) from {rel(t1)} "
-            f"{jt + ' ' if jt else ''}join {rel(t2)} on {cond} {tail}"
-        )
-
     def _mixed_outer_sum_rewrite(sql: str) -> str | None:
         """sum() mixing an outer reference with local columns inside an
         uncorrelated-looking scalar subquery (reference binds the outer
@@ -4403,51 +4265,265 @@ def run_slt_file(
         )
         return out
 
-    def _arrays_zip_broadcast(sql: str) -> str | None:
-        """Probe arrays_zip argument types; scalar columns broadcast
-        along the first array argument, NULL arrays act as [NULL]."""
-        m = re.search(r"\barrays_zip\s*(\()", sql, re.I)
-        if not m:
-            return None
-        depth, j = 0, m.start(1)
-        while j < len(sql):
-            depth += {"(": 1, ")": -1}.get(sql[j], 0)
-            j += 1
-            if depth == 0:
-                break
-        argtext = sql[m.start(1) + 1 : j - 1]
-        args = _split_args(argtext)
-        mf = re.search(r"\bFROM\b.*$", sql, re.I | re.S)
-        fseg = mf.group(0).rstrip("; \n") if mf else ""
-        kinds = []
-        for a in args:
-            try:
-                dt = (
-                    spark.sql(
-                        rewrite_databend_sql(
-                            f"SELECT ({a}) AS __p {fseg} LIMIT 0"
-                        )
-                    )
-                    .schema[0]
-                    .dataType.simpleString()
-                )
-            except Exception:  # noqa: BLE001
-                return None
-            kinds.append("arr" if dt.startswith("array<") else "scalar")
-        if "arr" not in kinds:
-            return None
-        ref = f"coalesce({args[kinds.index('arr')]}, array(NULL))"
-        prep = [
-            f"coalesce(({a}), array(NULL))"
-            if k == "arr"
-            else f"transform({ref}, __bc -> ({a}))"
-            for a, k in zip(args, kinds)
-        ]
-        return (
-            sql[: m.start()]
-            + f"arrays_zip({', '.join(prep)})"
-            + sql[j:]
+    def _retry_insert_casts(sql):
+        """Mixed-type VALUES rows (e.g. map literals with differing
+        key/value types): the reference casts each row to the
+        TARGET column types — retry with explicit per-branch casts;
+        returns None when inapplicable."""
+        mins = re.match(
+            r"^\s*INSERT\s+INTO\s+(?:TABLE\s+)?([\w.`]+)\s*"
+            r"(?:\(([^)]*)\))?\s*VALUES\s*(\(.*)$",
+            sql,
+            re.I | re.S,
         )
+        if mins:
+            try:
+                tsch = {
+                    f.name.lower(): f.dataType.simpleString()
+                    for f in spark.table(
+                        mins.group(1)
+                    ).schema.fields
+                }
+            except Exception:  # noqa: BLE001
+                tsch = {}
+            ccols = (
+                [
+                    c.strip().strip("`").lower()
+                    for c in mins.group(2).split(",")
+                ]
+                if mins.group(2)
+                else [
+                    f.name.lower()
+                    for f in spark.table(mins.group(1)).schema
+                ]
+            )
+            from databend_spark.sqlgen import (
+                _mask_strings,
+                _unmask_strings,
+            )
+
+            bodyi, litsi = _mask_strings(
+                mins.group(3).rstrip().rstrip(";")
+            )
+            rowsi, valsi, depi, sti = [], [], 0, 0
+            for ii, chi in enumerate(bodyi):
+                if chi == "(":
+                    depi += 1
+                    if depi == 1:
+                        valsi, sti = [], ii + 1
+                elif chi == ")":
+                    depi -= 1
+                    if depi == 0:
+                        valsi.append(bodyi[sti:ii])
+                        rowsi.append(valsi)
+                elif chi == "," and depi == 1:
+                    valsi.append(bodyi[sti:ii])
+                    sti = ii + 1
+            if tsch and rowsi:
+                # rewrite each row's expressions FIRST (map/
+                # array literals etc.), then assemble the cast
+                # statement and run it UN-rewritten so generic
+                # type commas survive
+                sels = []
+                try:
+                    for valsi in rowsi:
+                        row_sql = rewrite_databend_sql(
+                            _unmask_strings(
+                                "SELECT " + ", ".join(valsi),
+                                litsi,
+                            )
+                        )
+                        rmask, rlits = _mask_strings(
+                            row_sql[len("SELECT "):]
+                        )
+                        exprs = [
+                            _unmask_strings(p, rlits)
+                            for p in _split_args(rmask)
+                        ]
+                        casted = [
+                            f"CAST(({v}) AS {tsch[c]}) AS `{c}`"
+                            if c in tsch
+                            else v
+                            for v, c in zip(exprs, ccols)
+                        ]
+                        sels.append(
+                            "SELECT " + ", ".join(casted)
+                        )
+                    head_i = (
+                        f"({mins.group(2)}) "
+                        if mins.group(2)
+                        else ""
+                    )
+                    return spark.sql(
+                        f"INSERT INTO {mins.group(1)} {head_i}"
+                        "SELECT /*+ COALESCE(1) */ * FROM ("
+                        + " UNION ALL ".join(sels)
+                        + ") __vc"
+                    )
+                except Exception:  # noqa: BLE001
+                    pass
+        return None
+
+    def _location_exists(f, loc):
+        # a killed run can leave orphan table dirs the catalog no longer
+        # tracks — remove the stale location and retry once
+        from databend_spark.testkit.sandbox import safe_rmtree
+
+        safe_rmtree(loc.group(1))
+        yield partial(spark.sql, f.rewritten)
+
+    def _create_schema(f, mdb):
+        # the corpus relies on dbs created by earlier suite files
+        # (shared server state); materialize the missing one
+        spark.sql(f"CREATE DATABASE IF NOT EXISTS {mdb.group(1)}")
+        yield partial(spark.sql, f.rewritten)
+
+    def _overwrite_swap(f, io):
+        # self-referencing overwrite → copy-on-write swap
+        _replace_table(io.group(1), io.group(2).rstrip("; \n"))
+        yield partial(spark.sql, "SELECT 1 AS ok WHERE false")
+
+    def _casts_or_raise(sql, err):
+        out = _retry_insert_casts(sql)
+        if out is None:
+            raise err
+        return out
+
+    def _values_or_casts(f, _):
+        err = yield rewrite_values_as_select(f.sql)
+        if err is not None:
+            # still incompatible across rows → cast every row to the
+            # TARGET column types
+            yield partial(_casts_or_raise, f.sql, err)
+
+    def _first(*fns):
+        """Candidates: the first of ``fn(sql)`` that is not None."""
+
+        def candidates(f, _):
+            for fn in fns:
+                alt = fn(f.sql)
+                if alt is not None:
+                    return (alt,)
+            return ()
+
+        return candidates
+
+    # runtime (collect-time) errors never reach run_sql's analysis
+    # fallbacks — the safe ones run here, each candidate through run_sql
+    # and collect again
+    _shared = {fb.name: fb for fb in FALLBACKS}
+    collect_fallbacks = (
+        Fallback(
+            "decorrelate",
+            lambda f: "UNSUPPORTED_SUBQUERY_EXPRESSION_CATEGORY" in f.msg,
+            _first(decorrelate_join_on, _mixed_outer_sum_rewrite),
+        ),
+        Fallback(
+            "scalar_group_by",
+            lambda f: "SCALAR_SUBQUERY_IS_IN_GROUP_BY" in f.msg,
+            _first(_scalar_groupby_rewrite),
+        ),
+        Fallback(
+            "values_as_union", lambda f: "INVALID_INLINE_TABLE" in f.msg,
+            _first(_values_rel_to_union),
+        ),
+        Fallback(
+            "nested_in_decorrelate", lambda f: "UNRESOLVED_COLUMN" in f.msg,
+            _first(_nested_in_decorrelate),
+        ),
+        Fallback(
+            "exists_derived_hoist",
+            lambda f: "INTERNAL_ERROR" in f.msg
+            or "ATTRIBUTE_NOT_FOUND" in f.msg,
+            _first(_exists_derived_hoist),
+        ),
+        dataclasses.replace(
+            _shared["temporal_vs_empty_string"],
+            when=lambda f: "CAST_INVALID_INPUT" in f.msg
+            and (
+                'cannot be cast to "DATE' in f.msg
+                or 'cannot be cast to "TIMESTAMP' in f.msg
+            )
+            and re.search(r"(=|!=|<>)\s*''", f.sql),
+        ),
+        # string ↔ integer comparisons fold at runtime under ANSI
+        _shared["string_int_compare"],
+        _shared["decimal_text_int_cast"],
+        _shared["string_int_column_compare"],
+    )
+
+    def _collect_fallback(sql, e):
+        f = Failure(spark, sql, "", str(e), run_sql)
+        for fb in collect_fallbacks:
+            hit = fb.when(f)
+            for alt in fb.candidates(f, hit) if hit else ():
+                try:
+                    return _run_limited(
+                        lambda: _collect_for_compare(run_sql(alt))
+                    )
+                except Exception:  # noqa: BLE001
+                    pass
+        return None
+
+    # the shared fallbacks plus the runner's side-effecting entries, at
+    # the positions the corpus was tuned against
+    runner_fallbacks = splice(
+        FALLBACKS,
+        before={
+            "order_by_ordinal": (
+                Fallback(
+                    "location_exists",
+                    lambda f: "LOCATION_ALREADY_EXISTS" in f.msg and re.search(
+                        r"location 'file:([^']+)' already exists", f.msg
+                    ),
+                    _location_exists, propagate=True,
+                ),
+                Fallback(
+                    "recursive_cte",
+                    lambda f: "INVALID_RECURSIVE_CTE" in f.msg or (
+                        "RECURSIVE" in f.sql.upper()
+                        and (
+                            ("UNION" in f.msg and "2 children" in f.msg)
+                            or "CANNOT_MERGE_INCOMPATIBLE_DATA_TYPE" in f.msg
+                        )
+                    ),
+                    lambda f, _: (partial(_recursive_cte_multibranch, f.sql),),
+                ),
+            ),
+            "variant_path_parse_error": (
+                Fallback(
+                    "create_missing_schema",
+                    lambda f: "SCHEMA_NOT_FOUND" in f.msg and re.match(
+                        r"\s*CREATE\s+(?:OR\s+REPLACE\s+)?TABLE\s+"
+                        r"(?:IF\s+NOT\s+EXISTS\s+)?([\w`]+)\.", f.sql, re.I
+                    ),
+                    _create_schema, propagate=True,
+                ),
+            ),
+            "not_over_int": (
+                Fallback(
+                    "insert_casts",
+                    lambda f: (
+                        "INCOMPATIBLE_COLUMN_TYPE" in f.msg
+                        or "CANNOT_MERGE_INCOMPATIBLE_DATA_TYPE" in f.msg
+                    ) and re.match(r"^\s*INSERT\s", f.sql, re.I),
+                    lambda f, _: (partial(_retry_insert_casts, f.sql),),
+                    propagate=True,
+                ),
+            ),
+            "drop_if_exists_noop": (
+                Fallback(
+                    "overwrite_swap",
+                    lambda f: "UNSUPPORTED_OVERWRITE" in f.msg and re.match(
+                        r"^\s*INSERT\s+OVERWRITE\s+(?:TABLE\s+)?([\w.`]+)\s+"
+                        r"(.*)$", f.sql, re.I | re.S,
+                    ),
+                    _overwrite_swap, propagate=True,
+                ),
+            ),
+        },
+        candidates={"values_as_select": _values_or_casts},
+    )
 
     def run_sql(sql: str):
         sql = _preserve_unknown_escapes(sql)
@@ -10699,105 +10775,6 @@ def run_slt_file(
                     return spark.createDataFrame(
                         [(after - before,)], "count bigint"
                     )
-        def _retry_insert_casts(sql):
-            """Mixed-type VALUES rows (e.g. map literals with differing
-            key/value types): the reference casts each row to the
-            TARGET column types — retry with explicit per-branch casts;
-            returns None when inapplicable."""
-            mins = re.match(
-                r"^\s*INSERT\s+INTO\s+(?:TABLE\s+)?([\w.`]+)\s*"
-                r"(?:\(([^)]*)\))?\s*VALUES\s*(\(.*)$",
-                sql,
-                re.I | re.S,
-            )
-            if mins:
-                try:
-                    tsch = {
-                        f.name.lower(): f.dataType.simpleString()
-                        for f in spark.table(
-                            mins.group(1)
-                        ).schema.fields
-                    }
-                except Exception:  # noqa: BLE001
-                    tsch = {}
-                ccols = (
-                    [
-                        c.strip().strip("`").lower()
-                        for c in mins.group(2).split(",")
-                    ]
-                    if mins.group(2)
-                    else [
-                        f.name.lower()
-                        for f in spark.table(mins.group(1)).schema
-                    ]
-                )
-                from databend_spark.sqlgen import (
-                    _mask_strings,
-                    _unmask_strings,
-                )
-
-                bodyi, litsi = _mask_strings(
-                    mins.group(3).rstrip().rstrip(";")
-                )
-                rowsi, valsi, depi, sti = [], [], 0, 0
-                for ii, chi in enumerate(bodyi):
-                    if chi == "(":
-                        depi += 1
-                        if depi == 1:
-                            valsi, sti = [], ii + 1
-                    elif chi == ")":
-                        depi -= 1
-                        if depi == 0:
-                            valsi.append(bodyi[sti:ii])
-                            rowsi.append(valsi)
-                    elif chi == "," and depi == 1:
-                        valsi.append(bodyi[sti:ii])
-                        sti = ii + 1
-                if tsch and rowsi:
-                    # rewrite each row's expressions FIRST (map/
-                    # array literals etc.), then assemble the cast
-                    # statement and run it UN-rewritten so generic
-                    # type commas survive
-                    sels = []
-                    try:
-                        for valsi in rowsi:
-                            row_sql = rewrite_databend_sql(
-                                _unmask_strings(
-                                    "SELECT " + ", ".join(valsi),
-                                    litsi,
-                                )
-                            )
-                            rmask, rlits = _mask_strings(
-                                row_sql[len("SELECT "):]
-                            )
-                            exprs = [
-                                _unmask_strings(p, rlits)
-                                for p in _split_args(rmask)
-                            ]
-                            casted = [
-                                f"CAST(({v}) AS {tsch[c]}) AS `{c}`"
-                                if c in tsch
-                                else v
-                                for v, c in zip(exprs, ccols)
-                            ]
-                            sels.append(
-                                "SELECT " + ", ".join(casted)
-                            )
-                        head_i = (
-                            f"({mins.group(2)}) "
-                            if mins.group(2)
-                            else ""
-                        )
-                        return spark.sql(
-                            f"INSERT INTO {mins.group(1)} {head_i}"
-                            "SELECT /*+ COALESCE(1) */ * FROM ("
-                            + " UNION ALL ".join(sels)
-                            + ") __vc"
-                        )
-                    except Exception:  # noqa: BLE001
-                        pass
-            return None
-
         # DuckDB-style COLUMNS(...) expansion (reference binder
         # select_columns): name-lambda / regex / * EXCLUDE over the
         # FROM relation's column list
@@ -10883,22 +10860,17 @@ def run_slt_file(
                         "[1065] SELECT with no columns: every column "
                         "is excluded"
                     )
-        # VECTOR-typed columns compute distances in float32 — flag the
-        # registry macros when a referenced table declares Vector(N)
-        from databend_spark.functions.registry import VECTOR_F32_MODE
-
-        _vec_mode = False
-        if vector_cols and re.search(
+        # VECTOR-typed columns compute distances in float32 when a
+        # referenced table declares Vector(N)
+        _vec_f32 = bool(vector_cols) and bool(re.search(
             r"\b(cosine_distance|l[12]_distance|inner_product"
             r"|vector_norm)\s*\(",
             sql,
             re.I,
-        ):
-            VECTOR_F32_MODE[0] = any(
-                vector_cols.get(t.split(".")[-1].strip("`").lower())
-                for t in re.findall(r"\bfrom\s+([\w.`]+)", sql, re.I)
-            )
-            _vec_mode = True
+        )) and any(
+            vector_cols.get(t.split(".")[-1].strip("`").lower())
+            for t in re.findall(r"\bfrom\s+([\w.`]+)", sql, re.I)
+        )
         _gcols = {
             c
             for d in ddl_decl_types.values()
@@ -10932,8 +10904,6 @@ def run_slt_file(
             )
             if _mt:
                 _stmt_tz = _mt.group(1)
-        from databend_spark.functions.registry import DT_PARSE_MODE
-
         _dt_strict = str(
             setting_overrides.get(
                 "enable_strict_datetime_parser",
@@ -10956,15 +10926,12 @@ def run_slt_file(
                     _dt_strict = _dv == "1"
                 elif _dk.lower() == "enable_auto_detect_datetime_format":
                     _dt_auto = _dv == "1"
-        DT_PARSE_MODE["strict"] = _dt_strict
-        DT_PARSE_MODE["auto"] = _dt_auto
-        try:
-            rewritten = rewrite_databend_sql(sql)
-        finally:
-            if _vec_mode:
-                VECTOR_F32_MODE[0] = False
-            DT_PARSE_MODE["strict"] = False
-            DT_PARSE_MODE["auto"] = False
+        rewritten = rewrite_databend_sql(
+            sql,
+            RewriteOptions(
+                vector_f32=_vec_f32, dt_strict=_dt_strict, dt_auto=_dt_auto
+            ),
+        )
         if _stmt_tz and "current_timezone()" in rewritten:
             rewritten = rewritten.replace(
                 "current_timezone()", f"'{_stmt_tz}'"
@@ -10999,8 +10966,11 @@ def run_slt_file(
         wcommit = ins or re.match(
             r"^\s*TRUNCATE\s+(?:TABLE\s+)?([\w.`]+)", sql, re.I
         )
-        try:
-            res = spark.sql(rewritten)
+        res, fallback = execute(
+            spark, sql, rewritten=rewritten, table=runner_fallbacks,
+            resubmit=run_sql,
+        )
+        if fallback is None:
             if (
                 qcache["enabled"]
                 and qcache["min_secs"] == 0
@@ -11010,1489 +10980,7 @@ def run_slt_file(
                 result_cache[" ".join(sql.split())] = res
             if wcommit:
                 _bump_commit(wcommit.group(2) if wcommit is ins else wcommit.group(1))
-            return res
-        except Exception as e:  # noqa: BLE001
-            # a killed run can leave orphan table dirs the catalog no
-            # longer tracks — remove the stale location and retry once
-            msg = str(e)
-            loc = re.search(r"location 'file:([^']+)' already exists", msg)
-            if "LOCATION_ALREADY_EXISTS" in msg and loc:
-                from databend_spark.testkit.sandbox import safe_rmtree
-
-                safe_rmtree(loc.group(1))
-                return spark.sql(rewritten)
-            if "INVALID_RECURSIVE_CTE" in msg or (
-                "RECURSIVE" in sql.upper()
-                and (
-                    ("UNION" in msg and "2 children" in msg)
-                    or "CANNOT_MERGE_INCOMPATIBLE_DATA_TYPE" in msg
-                )
-            ):
-                try:
-                    out = _recursive_cte_multibranch(sql)
-                except Exception:  # noqa: BLE001
-                    out = None
-                if out is not None:
-                    return out
-            if "AMBIGUOUS_REFERENCE" in msg and re.search(
-                r"ORDER\s+BY", sql, re.I
-            ):
-                # duplicate output names make a QUALIFIED order-by ref
-                # ambiguous in Spark; bind to the select-item ordinal
-                mo2 = re.match(
-                    r"^(\s*SELECT\s+)(.*?)(\s+FROM\b.*?)"
-                    r"(ORDER\s+BY\s+)([\w.`]+)(\s*;?\s*)$",
-                    sql,
-                    re.I | re.S,
-                )
-                if mo2:
-                    items, depth, start = [], 0, 0
-                    body = mo2.group(2)
-                    for k, ch in enumerate(body):
-                        depth += {"(": 1, ")": -1}.get(ch, 0)
-                        if ch == "," and depth == 0:
-                            items.append(body[start:k])
-                            start = k + 1
-                    items.append(body[start:])
-                    tgt = mo2.group(5).replace("`", "").lower()
-                    for idx, it in enumerate(items):
-                        if it.strip().replace("`", "").lower() == tgt:
-                            alt = (
-                                mo2.group(1) + mo2.group(2) + mo2.group(3)
-                                + mo2.group(4) + str(idx + 1)
-                                + mo2.group(6)
-                            )
-                            try:
-                                return spark.sql(rewrite_databend_sql(alt))
-                            except Exception:  # noqa: BLE001
-                                break
-            mlag = re.search(
-                r'"(lag|lead)\(.*due to data type mismatch: The third '
-                r'parameter requires the \("([^"]+)"', msg, re.S
-            )
-            if mlag:
-                # lag/lead default value coerces to the value type in
-                # the reference; Spark demands an exact match
-                alt = re.sub(
-                    rf"\b{mlag.group(1)}\s*\("
-                    r"((?:[^(),]|\([^()]*\)|\[[^\[\]]*\])+),"
-                    r"((?:[^(),]|\([^()]*\))+),"
-                    r"((?:[^()]|\([^()]*\)|\[[^\[\]]*\])+)\)",
-                    rf"{mlag.group(1)}(\1,\2, CAST(\3 AS"
-                    rf" {mlag.group(2)}))",
-                    sql,
-                    flags=re.I,
-                )
-                if alt != sql:
-                    try:
-                        return spark.sql(rewrite_databend_sql(alt))
-                    except Exception:  # noqa: BLE001
-                        pass
-            if "LATERAL_COLUMN_ALIAS_IN_WINDOW" in msg:
-                # window specs may reference select-list aliases in the
-                # reference — inline the defining expressions
-                msel = re.match(
-                    r"^(\s*SELECT\s+)(.*?)(\s+FROM\b.*)$", sql, re.I | re.S
-                )
-                if msel:
-                    items, depth, start = [], 0, 0
-                    body = msel.group(2)
-                    for k, ch in enumerate(body):
-                        depth += {"(": 1, ")": -1}.get(ch, 0)
-                        if ch == "," and depth == 0:
-                            items.append(body[start:k])
-                            start = k + 1
-                    items.append(body[start:])
-                    amap = {}
-                    for it in items:
-                        ma = re.match(
-                            r"^\s*(.*?)\s+(?:AS\s+)?`?(\w+)`?\s*$",
-                            it,
-                            re.I | re.S,
-                        )
-                        if ma and "OVER" not in ma.group(1).upper():
-                            amap[ma.group(2).lower()] = ma.group(1)
-
-                    def _inline(mm):
-                        spec = mm.group(1)
-                        for al, ex in amap.items():
-                            spec = re.sub(
-                                rf"(?<![\w.`']){al}(?![\w.`'(])",
-                                f"({ex})",
-                                spec,
-                                flags=re.I,
-                            )
-                        return f"OVER ({spec})"
-
-                    alt = re.sub(
-                        r"\bOVER\s*\(((?:[^()]|\([^()]*\))*)\)",
-                        _inline,
-                        sql,
-                        flags=re.I,
-                    )
-                    if alt != sql:
-                        try:
-                            return spark.sql(rewrite_databend_sql(alt))
-                        except Exception:  # noqa: BLE001
-                            pass
-            if "UNSUPPORTED_EXPR_FOR_OPERATOR" in msg and re.search(
-                r"\bOVER\b", sql, re.I
-            ):
-                # window expressions in ORDER BY: hoist them into hidden
-                # projection columns (the reference binds them directly)
-                # find the last DEPTH-0 ORDER BY (one inside an OVER
-                # spec must not split the statement)
-                _s0 = sql.rstrip().rstrip(";")
-                depth, ob_at = 0, -1
-                for k in range(len(_s0)):
-                    depth += {"(": 1, ")": -1}.get(_s0[k], 0)
-                    if depth == 0 and re.match(
-                        r"ORDER\s+BY\s", _s0[k:], re.I
-                    ):
-                        ob_at = k
-                ms0 = re.match(r"^\s*SELECT\s+", _s0, re.I)
-                mo = None
-                if ob_at > 0 and ms0:
-                    tail = _s0[ob_at:]
-                    mtl = re.match(
-                        r"(ORDER\s+BY\s+)(.*?)(\s+LIMIT\s+[\d, ]+)?$",
-                        tail,
-                        re.I | re.S,
-                    )
-
-                    class _MO:  # match-like shim for the code below
-                        def group(self, n):
-                            return {
-                                1: ms0.group(0),
-                                2: _s0[ms0.end():ob_at].rstrip(),
-                                3: mtl.group(2),
-                                4: mtl.group(3),
-                            }[n]
-
-                    mo = _MO() if mtl else None
-                if mo and "(" not in (mo.group(4) or ""):
-                    items, depth, start = [], 0, 0
-                    ob = mo.group(3)
-                    for k, ch in enumerate(ob):
-                        depth += {"(": 1, ")": -1}.get(ch, 0)
-                        if ch == "," and depth == 0:
-                            items.append(ob[start:k])
-                            start = k + 1
-                    items.append(ob[start:])
-                    hoisted, new_ob, aux = [], [], 0
-                    for it in items:
-                        if re.search(r"\bOVER\b", it, re.I):
-                            mdir = re.search(
-                                r"\s+(ASC|DESC)\s*$", it, re.I
-                            )
-                            expr = it[: mdir.start()] if mdir else it
-                            hoisted.append(
-                                f"({expr.strip()}) AS __slt_o{aux}"
-                            )
-                            new_ob.append(
-                                f"__slt_o{aux}"
-                                + (f" {mdir.group(1)}" if mdir else "")
-                            )
-                            aux += 1
-                        else:
-                            new_ob.append(it.strip())
-                    # insert hoisted exprs into the SELECT list (before
-                    # the depth-0 FROM), not after the query tail
-                    body, depth, fat = mo.group(2), 0, -1
-                    for k in range(len(body)):
-                        depth += {"(": 1, ")": -1}.get(body[k], 0)
-                        if depth == 0 and body[k : k + 5].upper() == "FROM ":
-                            fat = k
-                            break
-                    if hoisted and fat > 0:
-                        excl = ", ".join(
-                            f"__slt_o{k}" for k in range(aux)
-                        )
-                        alt = (
-                            f"SELECT * EXCEPT({excl}) FROM ("
-                            f"{mo.group(1)}{body[:fat]}, "
-                            f"{', '.join(hoisted)} {body[fat:]}) ORDER BY "
-                            f"{', '.join(new_ob)}{mo.group(4) or ''}"
-                        )
-                        try:
-                            return spark.sql(rewrite_databend_sql(alt))
-                        except Exception:  # noqa: BLE001
-                            pass
-            if "ASSIGNMENT_ARITY_MISMATCH" in msg:
-                # a short column-alias list names a prefix in the
-                # reference; the rest keep their colN auto-names
-                mar = re.search(
-                    r"aliased: (\d+) does not match the number of source "
-                    r"expressions: (\d+)", msg
-                )
-                mal = re.search(
-                    r"((?:AS\s+)?\w+)\s*\(([^()]*)\)\s*"
-                    r"(as\b|select|order|where|group|$)",
-                    sql, re.I,
-                )
-                if mar and mal and int(mar.group(2)) < int(mar.group(1)):
-                    have = [
-                        x.strip() for x in mal.group(2).split(",") if x.strip()
-                    ]
-                    need = int(mar.group(1))
-                    fills = [
-                        f"col{k}" for k in range(len(have), need)
-                    ]
-                    alt = sql.replace(
-                        f"{mal.group(1)}({mal.group(2)})",
-                        f"{mal.group(1)}({', '.join(have + fills)})",
-                        1,
-                    ) if f"{mal.group(1)}({mal.group(2)})" in sql else re.sub(
-                        re.escape(mal.group(1)) + r"\s*\("
-                        + re.escape(mal.group(2)) + r"\)",
-                        f"{mal.group(1)}({', '.join(have + fills)})",
-                        sql,
-                        count=1,
-                    )
-                    if alt != sql:
-                        try:
-                            return spark.sql(rewrite_databend_sql(alt))
-                        except Exception:  # noqa: BLE001
-                            pass
-            mfb = re.search(
-                r'Filter expression "(.+?)" of type "\w+" is not a '
-                r"boolean", msg, re.S
-            )
-            if "FILTER_NOT_BOOLEAN" in msg and mfb:
-                # non-boolean WHERE/HAVING: non-zero is true
-                expr = mfb.group(1)
-                if expr.startswith("(") and expr.endswith(")"):
-                    expr = expr[1:-1]
-                toks = re.findall(r"\w+|\S", expr)
-                pat = r"\s*".join(re.escape(t) for t in toks)
-                repl = f"(({expr}) <> 0)"
-                alt = re.sub(
-                    rf"\(\s*{pat}\s*\)", lambda m2: repl, sql, count=1
-                )
-                if alt == sql:
-                    alt = re.sub(pat, lambda m2: repl, sql, count=1)
-                if alt != sql:
-                    try:
-                        return run_sql(alt)  # chain further retries
-                    except Exception:  # noqa: BLE001
-                        pass
-            if "MISSING_AGGREGATION" in msg and re.search(
-                r"\bHAVING\b", sql, re.I
-            ) and not re.search(r"\bGROUP\s+BY\b", sql, re.I):
-                # HAVING without GROUP BY is a plain filter in the
-                # reference; Spark forces a global aggregate
-                alt = re.sub(
-                    r"\bHAVING\b",
-                    "AND" if re.search(r"\bWHERE\b", sql, re.I) else "WHERE",
-                    sql,
-                    count=1,
-                    flags=re.I,
-                )
-                if alt != sql:
-                    try:
-                        return spark.sql(rewrite_databend_sql(alt))
-                    except Exception:  # noqa: BLE001
-                        pass
-            if "NESTED_IN_EXPRESSIONS" in msg and re.search(
-                r"\btypeof\s*\(", sql, re.I
-            ):
-                # typeof over a duplicated SRF call: hoist the SRF into a
-                # subquery; typeof of a variant value is its jsonb type
-                msrf = re.match(
-                    r"^\s*select\s+(.*?)\s+from\s+([\w.`]+)\s*;?\s*$",
-                    sql,
-                    re.I | re.S,
-                )
-                if msrf:
-                    items, depth, start = [], 0, 0
-                    body = msrf.group(1)
-                    for k, ch in enumerate(body):
-                        depth += {"(": 1, ")": -1}.get(ch, 0)
-                        if ch == "," and depth == 0:
-                            items.append(body[start:k].strip())
-                            start = k + 1
-                    items.append(body[start:].strip())
-                    srf = next(
-                        (
-                            it
-                            for it in items
-                            if re.match(r"json_path_query\s*\(", it, re.I)
-                        ),
-                        None,
-                    )
-                    if srf:
-                        tyex = (
-                            "CASE WHEN upper(__json_typeof(CAST(__slt_v AS"
-                            " STRING))) = 'STRING' THEN 'VARCHAR' ELSE"
-                            " upper(__json_typeof(CAST(__slt_v AS STRING)))"
-                            " END"
-                        )
-                        outer = [
-                            tyex
-                            if re.fullmatch(
-                                rf"typeof\s*\(\s*{re.escape(srf)}\s*\)",
-                                it,
-                                re.I,
-                            )
-                            else ("__slt_v" if it == srf else it)
-                            for it in items
-                        ]
-                        alt = (
-                            f"SELECT {', '.join(outer)} FROM (SELECT "
-                            f"{', '.join(i for i in items if i != srf and not re.match(r'typeof', i, re.I))}, "
-                            f"{srf} AS __slt_v FROM {msrf.group(2)})"
-                        )
-                        try:
-                            return spark.sql(rewrite_databend_sql(alt))
-                        except Exception:  # noqa: BLE001
-                            pass
-            if re.search(
-                r"name `_(row_id|block_name|segment_name)`", msg
-            ):
-                # fuse internal columns (reference 05_0031): emulate with
-                # Spark's row-id generator / input file metadata
-                alt = re.sub(
-                    r"(?<![\w.`])_row_id(?![\w.`])",
-                    "monotonically_increasing_id()",
-                    sql,
-                )
-                alt = re.sub(
-                    r"(?<![\w.`])_(block_name|segment_name)(?![\w.`])",
-                    "input_file_name()",
-                    alt,
-                )
-                if alt != sql:
-                    try:
-                        return spark.sql(rewrite_databend_sql(alt))
-                    except Exception:  # noqa: BLE001
-                        pass
-            mqal = re.search(
-                r"name `(\w+)`\.`(\w+)` cannot be resolved", msg
-            )
-            if mqal:
-                # anonymous derived tables inherit their source table's
-                # name in the reference — attach it as the alias
-                tn = mqal.group(1)
-                alt = re.sub(
-                    rf"(\((?:[^()]|\([^()]*\))*\bFROM\s+{re.escape(tn)}\b"
-                    rf"(?:[^()]|\([^()]*\))*\))"
-                    rf"(\s*(?:,|JOIN\b|WHERE\b|ORDER\b|GROUP\b|LIMIT\b"
-                    rf"|ON\b|$))",
-                    rf"\1 AS {tn}\2",
-                    sql,
-                    count=1,
-                    flags=re.I,
-                )
-                if alt != sql:
-                    try:
-                        return spark.sql(rewrite_databend_sql(alt))
-                    except Exception:  # noqa: BLE001
-                        pass
-            if "INVALID_DEFAULT_VALUE" in msg and re.search(
-                r"AS\s+DATE", sql, re.I
-            ):
-                # a DATE default in a numeric column is its day number
-                alt = re.sub(
-                    r"CAST\s*\(\s*('[^']+')\s+AS\s+DATE\s*\)",
-                    r"datediff(\1, '1970-01-01')",
-                    sql,
-                    flags=re.I,
-                )
-                if alt != sql:
-                    try:
-                        return spark.sql(rewrite_databend_sql(alt))
-                    except Exception:  # noqa: BLE001
-                        pass
-            mcol0 = re.search(
-                r"name `col(\d+)` cannot be resolved.*?"
-                r"Did you mean one of the following\? \[`col\d+`", msg, re.S
-            )
-            if mcol0:
-                # Databend numbers VALUES columns col0.., Spark col1..
-                alt = re.sub(
-                    r"\bcol(\d+)\b",
-                    lambda m2: f"col{int(m2.group(1)) + 1}",
-                    sql,
-                )
-                if alt != sql:
-                    try:
-                        return spark.sql(rewrite_databend_sql(alt))
-                    except Exception:  # noqa: BLE001
-                        pass
-            mdupa = re.search(
-                r"name `(\w+)` cannot be resolved. Did you mean one of "
-                r"the following\? \[`(\w+)`, `\2`", msg
-            )
-            if mdupa and mdupa.group(1) == mdupa.group(2):
-                # duplicate select-list aliases make ORDER BY <alias>
-                # ambiguous in Spark; the reference binds the first —
-                # rewrite to its ordinal
-                name = mdupa.group(1)
-                msel = re.match(
-                    r"^\s*SELECT\s+(.*?)\s+FROM\b", sql, re.I | re.S
-                )
-                if msel:
-                    items, depth, start = [], 0, 0
-                    body = msel.group(1)
-                    for k, ch in enumerate(body):
-                        depth += {"(": 1, ")": -1}.get(ch, 0)
-                        if ch == "," and depth == 0:
-                            items.append(body[start:k])
-                            start = k + 1
-                    items.append(body[start:])
-                    same = {
-                        re.sub(
-                            r"\s+|\(|\)", "",
-                            re.sub(
-                                rf"\bAS\s+`?{re.escape(name)}`?\s*$", "",
-                                it.strip(), flags=re.I,
-                            ),
-                        ).lower()
-                        for it in items
-                        if re.search(
-                            rf"\bAS\s+`?{re.escape(name)}`?\s*$",
-                            it.strip(), re.I,
-                        )
-                    }
-                    for idx, it in enumerate(items):
-                        if len(same) == 1 and re.search(
-                            rf"\bAS\s+`?{re.escape(name)}`?\s*$",
-                            it.strip(), re.I,
-                        ):
-                            alt = re.sub(
-                                rf"(ORDER\s+BY\s+){re.escape(name)}\b",
-                                rf"\g<1>{idx + 1}",
-                                sql,
-                                flags=re.I,
-                            )
-                            if alt != sql:
-                                try:
-                                    return spark.sql(
-                                        rewrite_databend_sql(alt)
-                                    )
-                                except Exception:  # noqa: BLE001
-                                    pass
-                            break
-            mmdb = re.match(
-                r"\s*CREATE\s+(?:OR\s+REPLACE\s+)?TABLE\s+"
-                r"(?:IF\s+NOT\s+EXISTS\s+)?([\w`]+)\.", sql, re.I
-            )
-            if "SCHEMA_NOT_FOUND" in msg and mmdb:
-                # the corpus relies on dbs created by earlier suite files
-                # (shared server state); materialize the missing one
-                spark.sql(
-                    f"CREATE DATABASE IF NOT EXISTS {mmdb.group(1)}"
-                )
-                return spark.sql(rewritten)
-            if "PARSE_SYNTAX_ERROR" in msg and ":" in sql:
-                # `col:path` with bracket segments never parses natively
-                from databend_spark.sqlgen import variant_paths_to_json
-
-                forced = rewrite_databend_sql(variant_paths_to_json(sql))
-                if forced != rewritten:
-                    try:
-                        return spark.sql(forced)
-                    except Exception:  # noqa: BLE001
-                        pass
-            mlat = re.search(
-                r"LATERAL_COLUMN_ALIAS_IN_WINDOW.*?lateral column alias "
-                r"`(\w+)`",
-                msg,
-                re.S,
-            )
-            if mlat:
-                # Spark refuses lateral aliases inside window ORDER BY;
-                # inline the alias expression (reference allows it)
-                al = mlat.group(1)
-                mdef = re.search(
-                    rf"((?:[^,()]|\((?:[^()]|\([^()]*\))*\))+?)\s+AS\s+{al}\b",
-                    rewritten,
-                    re.I,
-                )
-                expr = mdef.group(1).strip() if mdef else None
-
-                def _inline_over(mo):
-                    if expr and "(" not in expr:
-                        return re.sub(rf"\b{al}\b", f"({expr})", mo.group(0))
-                    # drop the alias key instead (safe: lateral aliases
-                    # appear as trailing tie-breakers in these suites)
-                    return re.sub(rf",\s*\b{al}\b", "", mo.group(0))
-
-                forced = re.sub(
-                    r"OVER\s*\((?:[^()]|\([^()]*\))*\)",
-                    _inline_over,
-                    rewritten,
-                    flags=re.I,
-                )
-                if forced != rewritten:
-                    try:
-                        return spark.sql(forced)
-                    except Exception:  # noqa: BLE001
-                        pass
-            # Databend positional tuple access (t.N) on a NAMED tuple:
-            # resolve N against the field list the error reports
-            # (types/tuple access, reference member_fields); loop since
-            # one query can hold several positional accesses
-            forced = rewritten
-            for _ in range(8):
-                mfnf = re.search(
-                    r"No such struct field `(\d+)` in "
-                    r"((?:`[^`]+`(?:,\s*)?)+)",
-                    msg,
-                )
-                if not mfnf:
-                    break
-                flds = re.findall(r"`([^`]+)`", mfnf.group(2))
-                idx = int(mfnf.group(1))
-                if not 1 <= idx <= len(flds):
-                    break
-                nxt = forced.replace(f"`{idx}`", f"`{flds[idx - 1]}`")
-                if nxt == forced:
-                    break
-                forced = nxt
-                try:
-                    return spark.sql(forced)
-                except Exception as e2:  # noqa: BLE001
-                    msg = str(e2)
-            if "INVALID_EXTRACT_BASE_FIELD_TYPE" in msg:
-                # `z.z` inside a correlated subquery: Spark prefers an
-                # inner relation's COLUMN z (field-extract on a scalar,
-                # hence this error) where the reference resolves the
-                # OUTER table alias z. Rename the table-position alias
-                # so the qualified refs resolve unambiguously
-                # (query/cte/basic_r_cte.test sudoku shapes).
-                msh = re.search(
-                    r"""Can't extract a value from "(\w+)\"""", msg
-                )
-                if msh and re.search(
-                    rf"(\bFROM\s+[\w.`()]+\s+AS\s+|\bJOIN\s+[\w.`()]+"
-                    rf"\s+AS\s+|,\s*[\w.`()]+\s+AS\s+)"
-                    rf"{re.escape(msh.group(1))}\b",
-                    sql,
-                    re.I,
-                ):
-                    _al = msh.group(1)
-                    _new = f"__sa_{_al}"
-                    s2 = re.sub(
-                        rf"(\bFROM\s+[\w.`()]+\s+AS\s+|\bJOIN\s+"
-                        rf"[\w.`()]+\s+AS\s+|,\s*[\w.`()]+\s+AS\s+)"
-                        rf"{re.escape(_al)}\b",
-                        rf"\g<1>{_new}",
-                        sql,
-                        flags=re.I,
-                    )
-                    s2 = re.sub(rf"\b{re.escape(_al)}\s*\.", f"{_new}.", s2)
-                    if s2 != sql:
-                        try:
-                            return run_sql(s2)
-                        except Exception:  # noqa: BLE001
-                            pass
-            if "COLUMN_IS_NOT_VARIANT_TYPE" in msg:
-                # Databend `col:path` reads named tuples AND json — Spark's
-                # native `:` needs true VARIANT. Retry as struct access,
-                # then as get_json_object over the JSON text.
-                from databend_spark.sqlgen import (
-                    variant_paths_to_access,
-                    variant_paths_to_json,
-                    variant_paths_to_struct,
-                )
-
-                for alt in (
-                    variant_paths_to_struct(sql),
-                    variant_paths_to_json(variant_paths_to_access(sql)),
-                    variant_paths_to_json(sql),
-                ):
-                    forced = rewrite_databend_sql(alt)
-                    if forced == rewritten:
-                        continue
-                    try:
-                        return spark.sql(forced)
-                    except Exception:  # noqa: BLE001
-                        continue
-            if (
-                "DATATYPE_MISMATCH" in msg or "UNEXPECTED_INPUT_TYPE" in msg
-            ) and re.search(
-                r"\b(?:array_\w+|contains|json_array_\w+)\s*\(", sql, re.I
-            ):
-                # array function over a VARIANT column (textually an
-                # array) — re-rewrite with every array fn forced onto
-                # the __va_* jsonb path
-                from databend_spark.functions.registry import (
-                    VARIANT_ARRAY_MODE,
-                )
-
-                VARIANT_ARRAY_MODE[0] = True
-                try:
-                    forced = rewrite_databend_sql(sql)
-                finally:
-                    VARIANT_ARRAY_MODE[0] = False
-                if forced != rewritten:
-                    try:
-                        return spark.sql(forced)
-                    except Exception:  # noqa: BLE001
-                        pass
-            if "INVALID_EXTRACT_BASE_FIELD_TYPE" in msg:
-                # a relation alias equal to one of its column names makes
-                # Spark parse `z.z` as field extraction of the COLUMN —
-                # rename the relation alias and its qualified references
-                _mex2 = re.search(r'value from "(\w+)"', msg)
-                if _mex2 and re.search(
-                    rf"\bAS\s+{_mex2.group(1)}\b", sql, re.I
-                ):
-                    a = _mex2.group(1)
-                    alt = re.sub(
-                        rf"\bAS\s+{a}\b", f"AS __rel_{a}", sql, flags=re.I
-                    )
-                    alt = re.sub(
-                        rf"\b{a}\s*\.", f"__rel_{a}.", alt, flags=re.I
-                    )
-                    try:
-                        return spark.sql(rewrite_databend_sql(alt))
-                    except Exception:  # noqa: BLE001
-                        pass
-            if "LAMBDA_FUNCTION_WITH_PYTHON_UDF" in msg:
-                # a macro expanded to a Python UDF inside a lambda body —
-                # re-rewrite with JVM-only templates
-                from databend_spark.functions.registry import (
-                    LAMBDA_SAFE_MODE,
-                )
-
-                LAMBDA_SAFE_MODE[0] = True
-                try:
-                    forced = rewrite_databend_sql(sql)
-                finally:
-                    LAMBDA_SAFE_MODE[0] = False
-                if forced != rewritten:
-                    try:
-                        return spark.sql(forced)
-                    except Exception:  # noqa: BLE001
-                        pass
-            if (
-                "UNEXPECTED_INPUT_TYPE" in msg
-                and 'Cannot resolve "length(' in msg
-                and re.search(r"\blength\s*\(", sql, re.I)
-            ):
-                # Databend's length() also counts array/map elements
-                try:
-                    return spark.sql(
-                        rewrite_databend_sql(
-                            re.sub(
-                                r"\blength\s*\(", "size(", sql, flags=re.I
-                            )
-                        )
-                    )
-                except Exception:  # noqa: BLE001
-                    pass
-            if (
-                "DATATYPE_MISMATCH" in msg
-                and re.search(r"\barrays_zip\s*\(", sql, re.I)
-            ):
-                # arrays_zip broadcasts scalar COLUMNS along the array
-                # argument (reference array.rs); probe each argument's
-                # type and wrap scalars
-                alt = _arrays_zip_broadcast(sql)
-                if alt:
-                    try:
-                        return spark.sql(rewrite_databend_sql(alt))
-                    except Exception:  # noqa: BLE001
-                        pass
-            if (
-                ("DATATYPE_MISMATCH" in msg or "UNEXPECTED_INPUT_TYPE" in msg)
-                and re.search(r"\bget\s*\(", sql, re.I)
-                and re.search(r'has the type "STRING"', msg)
-            ):
-                # get() on a VARIANT column: textually indistinguishable
-                # from array/map get — retry with the JSONB interpretation
-                from databend_spark.functions.registry import VARIANT_GET_MODE
-
-                VARIANT_GET_MODE[0] = True
-                try:
-                    forced = rewrite_databend_sql(sql)
-                finally:
-                    VARIANT_GET_MODE[0] = False
-                if forced != rewritten:
-                    try:
-                        return spark.sql(forced)
-                    except Exception:  # noqa: BLE001
-                        pass
-            if (
-                "UNEXPECTED_INPUT_TYPE" in msg
-                and 'Cannot resolve "explode(' in msg
-                and re.search(r"\bunnest\s*\(", sql, re.I)
-            ):
-                # unnest() over a VARIANT (JSON-string) array: in table
-                # position the reference exposes a variant `value`
-                # column — route through the flatten UDTF; in scalar
-                # position explode the parsed JSON list
-                from databend_spark.functions.registry import rewrite_call
-
-                tbl = re.sub(
-                    r"\b(LATERAL\s+|FROM\s+|,\s*)unnest\s*\(",
-                    r"\1flatten(input => ",
-                    sql,
-                    flags=re.I,
-                )
-                for alt in (tbl, None):
-                    if alt is None:
-                        alt = rewrite_call(
-                            sql,
-                            "unnest",
-                            "explode(from_json(__variant_path_query("
-                            "CAST(({0}) AS STRING), '$[*]', 'list'),"
-                            " 'array<string>'))",
-                            arity=1,
-                        )
-                    forced = rewrite_databend_sql(alt)
-                    if forced != rewritten:
-                        try:
-                            return spark.sql(forced)
-                        except Exception:  # noqa: BLE001
-                            pass
-            if "AMBIGUOUS_REFERENCE" in msg and re.search(
-                r"\*\s+(EXCLUDE|EXCEPT)\b", sql, re.I
-            ):
-                # `* EXCLUDE id` over a join where both sides have the
-                # column: the reference drops it from EVERY side —
-                # expand to per-relation qualified stars
-                mex2 = re.match(
-                    r"^(\s*SELECT\s+)\*\s+(?:EXCLUDE|EXCEPT)\s*"
-                    r"(?:\(([^)]*)\)|([\w`]+))\s*(\s+FROM\s+.*)$",
-                    sql,
-                    re.I | re.S,
-                )
-                if mex2:
-                    exn = {
-                        c.strip().strip("`").lower()
-                        for c in (
-                            mex2.group(2) or mex2.group(3)
-                        ).split(",")
-                    }
-                    rels = re.findall(
-                        r"\b(?:from|join)\s+([\w.`]+)",
-                        mex2.group(4),
-                        re.I,
-                    )
-                    stars = []
-                    try:
-                        for r_ in rels:
-                            rc = [
-                                c
-                                for c in spark.table(r_).columns
-                                if c.lower() not in exn
-                            ]
-                            qual = r_.split(".")[-1].strip("`")
-                            stars.extend(
-                                f"`{qual}`.`{c}`" for c in rc
-                            )
-                        alt = (
-                            mex2.group(1)
-                            + ", ".join(stars)
-                            + mex2.group(4)
-                        )
-                        return spark.sql(rewrite_databend_sql(alt))
-                    except Exception:  # noqa: BLE001
-                        pass
-            if (
-                "INCOMPATIBLE_COLUMN_TYPE" in msg
-                or "CANNOT_MERGE_INCOMPATIBLE_DATA_TYPE" in msg
-            ) and re.match(r"^\s*INSERT\s", sql, re.I):
-                out = _retry_insert_casts(sql)
-                if out is not None:
-                    return out
-            if (
-                "UNEXPECTED_INPUT_TYPE" in msg
-                and '"(NOT ' in msg
-                and re.search(r"\bnot\s*\(", sql, re.I)
-            ):
-                # NOT over an integer column: the reference coerces
-                # int→bool (0 = false) — retry as `expr = 0`
-                alt = re.sub(
-                    r"\bnot\s*\(((?:[^()]|\([^()]*\))*)\)",
-                    r"((\1) = 0)",
-                    sql,
-                    flags=re.I,
-                )
-                if alt != sql:
-                    try:
-                        return spark.sql(rewrite_databend_sql(alt))
-                    except Exception:  # noqa: BLE001
-                        pass
-            if ("DATATYPE_MISMATCH" in msg or "CAST_INVALID_INPUT" in msg) and re.search(
-                r"\barray_(insert|distinct|intersection|except|overlap"
-                r"|slice|concat|append|prepend|compact|contains|flatten"
-                r"|indexof|remove|remove_first|remove_last|reverse"
-                r"|unique)\s*\(",
-                sql,
-                re.I,
-            ):
-                # array functions over VARIANT columns: the macro's
-                # textual dispatch can't see runtime types — force the
-                # JSONB implementations (reference scalars/variant.rs)
-                from databend_spark.functions.registry import rewrite_call
-
-                alt = sql
-                for name, tpl, ar in (
-                    ("array_insert", "__va_insert(CAST(({0}) AS STRING),"
-                     " ({1}), CAST(({2}) AS STRING))", 3),
-                    ("array_distinct", "__va_distinct(CAST(({0}) AS"
-                     " STRING))", 1),
-                    ("array_intersection", "__va_intersection(CAST(({0})"
-                     " AS STRING), CAST(({1}) AS STRING))", 2),
-                    ("array_except", "__va_except(CAST(({0}) AS STRING),"
-                     " CAST(({1}) AS STRING))", 2),
-                    ("array_overlap", "__va_overlap(CAST(({0}) AS STRING),"
-                     " CAST(({1}) AS STRING))", 2),
-                    ("array_slice", "__va_slice(CAST(({0}) AS STRING),"
-                     " ({1}), ({2}))", 3),
-                    ("array_concat", "__va_concat(CAST(({0}) AS STRING),"
-                     " CAST(({1}) AS STRING))", 2),
-                    ("array_append", "__va_append(CAST(({0}) AS STRING),"
-                     " CAST(({1}) AS STRING))", 2),
-                    ("array_prepend", "__va_prepend(CAST(({0}) AS"
-                     " STRING), CAST(({1}) AS STRING))", 2),
-                    ("array_compact", "__va_compact(CAST(({0}) AS"
-                     " STRING))", 1),
-                    ("array_contains", "__va_contains(CAST(({0}) AS"
-                     " STRING), CAST(({1}) AS STRING))", 2),
-                    ("array_flatten", "__va_flatten(CAST(({0}) AS"
-                     " STRING))", 1),
-                    ("array_indexof", "__va_indexof(CAST(({0}) AS"
-                     " STRING), CAST(({1}) AS STRING))", 2),
-                    ("array_remove", "__va_remove(CAST(({0}) AS STRING),"
-                     " CAST(({1}) AS STRING))", 2),
-                    ("array_remove_first", "__va_remove_first(CAST(({0})"
-                     " AS STRING))", 1),
-                    ("array_remove_last", "__va_remove_last(CAST(({0})"
-                     " AS STRING))", 1),
-                    ("array_reverse", "__va_reverse(CAST(({0}) AS"
-                     " STRING))", 1),
-                    ("array_unique", "__va_unique(CAST(({0}) AS"
-                     " STRING))", 1),
-                ):
-                    alt = rewrite_call(alt, name, tpl, arity=ar)
-                forced = rewrite_databend_sql(alt)
-                if forced != rewritten:
-                    try:
-                        return spark.sql(forced)
-                    except Exception:  # noqa: BLE001
-                        pass
-            um = re.search(
-                r"UNRESOLVED_COLUMN.*?name `'([^`']+)'`.*?"
-                r"Did you mean.*?\[`([^`]+)`", msg, re.S
-            )
-            if um and um.group(1) == um.group(2):
-                # Databend names a literal select item with its quotes
-                # (`'hello'`); our CTAS strips them — retry unquoted
-                forced = rewrite_databend_sql(
-                    sql.replace(f"`'{um.group(1)}'`", f"`{um.group(1)}`")
-                    .replace(f"\"'{um.group(1)}'\"", f"`{um.group(1)}`")
-                )
-                if forced != rewritten:
-                    try:
-                        return spark.sql(forced)
-                    except Exception:  # noqa: BLE001
-                        pass
-            if "CAST_INVALID_INPUT" in msg and re.search(
-                r"The value '[^']*' of the type \"STRING\" cannot be cast"
-                r" to \"(DATE|TIMESTAMP)\"", msg
-            ) and re.search(r"(=|!=|<>)\s*''", sql):
-                # comparing a DATE/TIMESTAMP column with '' errors in
-                # Spark; the reference compares as strings (no match)
-                alt = re.sub(
-                    r"([\w.`]+)\s*(=|!=|<>)\s*''",
-                    r"CAST(\1 AS STRING) \2 ''",
-                    sql,
-                )
-                forced = rewrite_databend_sql(alt)
-                if forced != rewritten:
-                    try:
-                        return spark.sql(forced)
-                    except Exception:  # noqa: BLE001
-                        pass
-            if (
-                "UNEXPECTED_INPUT_TYPE" in msg
-                and 'Cannot resolve "date_add(' in msg
-                and "BIGINT" in msg
-                and re.search(
-                    r"(DATE\s*'[^']*'|to_date\s*\([^()]*\)|[\w.`]+)\s*\+\s*"
-                    r"CAST\s*\(",
-                    sql,
-                    re.I,
-                )
-            ):
-                # DATE + Int64 in the reference is saturating-add then
-                # clamp: out-of-range → DATE_MIN 0001-01-01 (reference
-                # datetime.rs register_timestamp_add_sub: clamp_date(
-                # (a as i64).saturating_add(b)), date.rs:51 clamp_date)
-                def _clamp_plus(m: re.Match) -> str:
-                    d, x = m.group(1), m.group(2)
-                    days = f"(unix_date({d}) + CAST({x} AS BIGINT))"
-                    return (
-                        "date_from_unix_date(CAST(CASE WHEN "
-                        f"{days} BETWEEN -719162 AND 2932896 "
-                        f"THEN {days} ELSE -719162 END AS INT))"
-                    )
-
-                alt = re.sub(
-                    r"(DATE\s*'[^']*'|to_date\s*\([^()]*\))\s*\+\s*"
-                    r"(CAST\s*\([^()]*\s+AS\s+BIGINT\s*\))",
-                    _clamp_plus,
-                    sql,
-                    flags=re.I,
-                )
-                if alt != sql:
-                    forced = rewrite_databend_sql(alt)
-                    if forced != rewritten:
-                        try:
-                            return spark.sql(forced)
-                        except Exception:  # noqa: BLE001
-                            pass
-            if (
-                "UNEXPECTED_INPUT_TYPE" in msg
-                and 'Cannot resolve "date_add(' in msg
-                and "BIGINT" in msg
-            ):
-                # DATE + BIGINT: Spark's date_add takes INT; the
-                # reference accepts int64 (overflow then errors — the
-                # ANSI BIGINT→INT cast raises the same way)
-                alt = re.sub(
-                    r"\bCAST\s*\(([^()]*)\s+AS\s+BIGINT\s*\)",
-                    r"CAST(\1 AS INT)",
-                    sql,
-                    flags=re.I,
-                )
-                # timestamp + N adds MICROSECONDS in the reference
-                alt = re.sub(
-                    r"((?:to_datetime|to_timestamp)\s*\([^()]*\)"
-                    r"|TIMESTAMP\s*'[^']*')\s*\+\s*"
-                    r"([A-Za-z_][\w.]*(?:\s*%\s*\d+)?)",
-                    r"timestampadd(MICROSECOND, CAST(\2 AS BIGINT), \1)",
-                    alt,
-                    flags=re.I,
-                )
-                # date + bigint_column: narrow the added identifier
-                alt = re.sub(
-                    r"(to_date\s*\([^()]*\)|DATE\s*'[^']*')\s*\+\s*"
-                    r"([A-Za-z_][\w.]*)",
-                    r"\1 + CAST(\2 AS INT)",
-                    alt,
-                    flags=re.I,
-                )
-                forced = rewrite_databend_sql(alt)
-                if forced != rewritten:
-                    try:
-                        return spark.sql(forced)
-                    except Exception:  # noqa: BLE001
-                        pass
-            if "INTERNAL_ERROR" in msg or "LATERAL_COLUMN_ALIAS" in msg:
-                # SRFs over a lateral select-list alias: inline the
-                # aliased expression and retry (with the variant-path
-                # fallbacks, since the inlined expr may carry `:` paths)
-                from databend_spark.sqlgen import (
-                    inline_select_aliases,
-                    variant_paths_to_access,
-                    variant_paths_to_json,
-                )
-
-                inl = inline_select_aliases(sql)
-                if inl != sql:
-                    for alt in (
-                        inl,
-                        variant_paths_to_json(variant_paths_to_access(inl)),
-                        # accessors first (identifier receivers), then
-                        # inline the aliases inside the rewritten calls
-                        inline_select_aliases(
-                            variant_paths_to_json(variant_paths_to_access(sql))
-                        ),
-                    ):
-                        try:
-                            forced = rewrite_databend_sql(alt)
-                        except Exception:  # noqa: BLE001
-                            continue
-                        if forced != rewritten:
-                            try:
-                                return spark.sql(forced)
-                            except Exception:  # noqa: BLE001
-                                pass
-            if "UNEXPECTED_INPUT_TYPE" in msg and (
-                'Cannot resolve "length(' in msg
-                or 'Cannot resolve "contains(' in msg
-            ):
-                # Databend length()/contains() also take arrays — Spark
-                # needs size()/array_contains() there
-                alt = sql
-                if 'Cannot resolve "length(' in msg:
-                    alt = re.sub(r"\blength\s*\(", "size(", alt, flags=re.I)
-                else:
-                    # exists-lambda form: the = comparison coerces the
-                    # needle to the element type (array_contains won't)
-                    from databend_spark.functions.registry import rewrite_call
-
-                    alt = rewrite_call(
-                        alt, "contains", "exists({0}, __ce -> __ce = {1})"
-                    )
-                forced = rewrite_databend_sql(alt)
-                if forced != rewritten:
-                    try:
-                        return spark.sql(forced)
-                    except Exception:  # noqa: BLE001
-                        pass
-            if (
-                "CAST_INVALID_INPUT" in msg
-                and '"STRING"' in msg
-                and re.search(r'to "(TINY|SMALL|BIG)?INT"', msg)
-            ):
-                # string ↔ integer comparison: ANSI Spark casts the
-                # string to the int type (fails on '3.1'); the reference
-                # compares numerically — cast both sides to DOUBLE.
-                # Chained `A cmp B cmp N` first (left-assoc boolean
-                # result vs numeric literal → boolean comparison).
-                alt = re.sub(
-                    r"((?:[\w.`']+\s*)(?:=|!=|<>|>=|<=|>|<)(?:\s*[\w.`']+))\s*"
-                    r"(=|!=|<>|>=|<=|>|<)\s*(\d+(?:\.\d+)?)",
-                    r"(\1) \2 CAST(\3 AS BOOLEAN)",
-                    sql,
-                )
-                alt = re.sub(
-                    r"('(?:[^']|'')*')\s*(=|!=|<>|>=|<=|>|<)\s*"
-                    r"(\d+(?:\.\d+)?)",
-                    r"CAST(\1 AS DOUBLE) \2 CAST(\3 AS DOUBLE)",
-                    alt,
-                )
-                alt = re.sub(
-                    r"(\d+(?:\.\d+)?)\s*(=|!=|<>|>=|<=|>|<)\s*"
-                    r"('(?:[^']|'')*')",
-                    r"CAST(\1 AS DOUBLE) \2 CAST(\3 AS DOUBLE)",
-                    alt,
-                )
-                if alt != sql:
-                    forced = rewrite_databend_sql(alt)
-                    if forced != rewritten:
-                        try:
-                            return spark.sql(forced)
-                        except Exception:  # noqa: BLE001
-                            pass
-                # decimal-text string CAST to integer rounds in the
-                # reference ('29.55'::Int → 30)
-                alt3 = re.sub(
-                    r"'(-?\d+\.\d+)'\s*::\s*(u?int\w*|unsigned\b)",
-                    r"CAST(CAST(\1 AS DOUBLE) AS BIGINT)",
-                    sql,
-                    flags=re.I,
-                )
-                alt3 = re.sub(
-                    r"CAST\s*\(\s*'(-?\d+\.\d+)'\s+AS\s+"
-                    r"((?:TINY|SMALL|BIG)?INT|UNSIGNED)\s*\)",
-                    r"CAST(CAST(\1 AS DOUBLE) AS BIGINT)",
-                    alt3,
-                    flags=re.I,
-                )
-                if alt3 != sql:
-                    try:
-                        return spark.sql(rewrite_databend_sql(alt3))
-                    except Exception:  # noqa: BLE001
-                        pass
-                # column-vs-column (JOIN ON t.a = t1.a with a string
-                # side holding '1.0'): numeric comparison via DOUBLE
-                alt2 = re.sub(
-                    r"(?<![\w.`'])((?:\w+\.)?`?\w+`?)\s*"
-                    r"(=|!=|<>|>=|<=|>|<)\s*"
-                    r"((?:\w+\.)?`?\w+`?)(?![\w.`'(])",
-                    lambda m2: (
-                        m2.group(0)
-                        if re.match(
-                            r"^\d|^'|^(true|false|null)$",
-                            m2.group(1) + m2.group(3), re.I,
-                        )
-                        else f"CAST({m2.group(1)} AS DOUBLE) "
-                        f"{m2.group(2)} CAST({m2.group(3)} AS DOUBLE)"
-                    ),
-                    sql,
-                )
-                if alt2 != sql:
-                    try:
-                        return spark.sql(rewrite_databend_sql(alt2))
-                    except Exception:  # noqa: BLE001
-                        pass
-            if "CAST_INVALID_INPUT" in msg and re.search(
-                r"\bto_(date|timestamp)\s*\(", sql, re.I
-            ):
-                # Databend to_date/to_timestamp accept integers (days /
-                # seconds since epoch); Spark's parse strings only
-                from databend_spark.functions.registry import rewrite_call
-
-                alt = rewrite_call(
-                    sql,
-                    "to_date",
-                    "date_add(DATE'1970-01-01', CAST(({0}) AS INT))",
-                    arity=1,
-                )
-                alt = rewrite_call(
-                    alt,
-                    "to_timestamp",
-                    "timestamp_seconds(CAST(({0}) AS BIGINT))",
-                    arity=1,
-                )
-                forced = rewrite_databend_sql(alt)
-                if forced != rewritten:
-                    try:
-                        return spark.sql(forced)
-                    except Exception:  # noqa: BLE001
-                        pass
-            if re.search(
-                r'cannot cast "(TINYINT|SMALLINT|INT|BIGINT)" to "DATE"', msg
-            ):
-                # integer ::Date cast on a column (Databend: days since
-                # epoch); Spark refuses BIGINT→DATE — hop through
-                # date_add like the literal form in rewrite_databend_sql
-                alt = re.sub(
-                    r"([\w.`]+)\s*::\s*Date\b",
-                    r"date_add(DATE'1970-01-01', CAST(\1 AS INT))",
-                    sql,
-                    flags=re.I,
-                )
-                alt = re.sub(
-                    r"\bCAST\s*\(\s*([\w.`]+)\s+AS\s+DATE\s*\)",
-                    r"date_add(DATE'1970-01-01', CAST(\1 AS INT))",
-                    alt,
-                    flags=re.I,
-                )
-                forced = rewrite_databend_sql(alt)
-                if forced != rewritten:
-                    try:
-                        return spark.sql(forced)
-                    except Exception:  # noqa: BLE001
-                        pass
-            if "CAST_INVALID_INPUT" in msg and "The value ''" in msg and (
-                '"DATE"' in msg or '"TIMESTAMP' in msg
-            ):
-                # Databend casts '' to the epoch date/timestamp; Spark
-                # refuses — substitute the epoch literal
-                repl = (
-                    "'1970-01-01'" if '"DATE"' in msg
-                    else "'1970-01-01 00:00:00'"
-                )
-                forced = rewrite_databend_sql(sql.replace("''", repl))
-                if forced != rewritten:
-                    try:
-                        return spark.sql(forced)
-                    except Exception:  # noqa: BLE001
-                        pass
-            if (
-                "BINARY_OP_DIFF_TYPES" in msg or "UNEXPECTED_INPUT_TYPE" in msg
-            ) and ('"TIMESTAMP"' in msg or "TIMESTAMP OR TIMESTAMP" in msg) and (
-                '"INT"' in msg or '"BIGINT"' in msg or '"SMALLINT"' in msg
-            ):
-                # timestamp ± integer is microsecond arithmetic in the
-                # reference (datetime.rs register_timestamp_plus_int) —
-                # hop through unix_micros
-                alt = re.sub(
-                    r"([\w.`]+\((?:[^()]|\([^()]*\))*\)|[\w.`]+)"
-                    r"\s*([+-])\s*(\d+)\b",
-                    r"timestamp_micros(unix_micros(CAST(\1 AS TIMESTAMP))"
-                    r" \2 \3)",
-                    sql,
-                )
-                if alt != sql:
-                    forced = rewrite_databend_sql(alt)
-                    if forced != rewritten:
-                        try:
-                            return spark.sql(forced)
-                        except Exception:  # noqa: BLE001
-                            pass
-            if (
-                "BINARY_OP_WRONG_TYPE" in msg
-                or "BINARY_OP_DIFF_TYPES" in msg
-                or "UNEXPECTED_INPUT_TYPE" in msg
-            ) and re.search(r"\(NOT |\bAND\b|\bOR\b", msg) and re.search(
-                r"\b(AND|OR|NOT)\s+\d|\d\s+(AND|OR)\b", sql, re.I
-            ):
-                # numeric operands of AND/OR/NOT coerce non-zero → true
-                alt = re.sub(
-                    r"\b(\d+(?:\.\d+)?)(?=\s+(?:AND|OR)\b)",
-                    r"(\1 <> 0)",
-                    sql,
-                    flags=re.I,
-                )
-                alt = re.sub(
-                    r"\b(AND|OR|NOT|SELECT)\s+(\d+(?:\.\d+)?)\b(?!\s*[.\w(])",
-                    r"\1 (\2 <> 0)",
-                    alt,
-                    flags=re.I,
-                )
-                if alt != sql:
-                    forced = rewrite_databend_sql(alt)
-                    if forced != rewritten:
-                        try:
-                            return spark.sql(forced)
-                        except Exception:  # noqa: BLE001
-                            pass
-            if "BINARY_OP_WRONG_TYPE" in msg and re.search(
-                r'"\(\w+ (?:AND|OR) \w+\)"', msg
-            ):
-                # integer COLUMNS under AND/OR coerce non-zero → true;
-                # the analyzer names one bad conjunct per pass, so chase
-                # successive errors up to a small bound
-                alt, m2 = sql, re.search(r'"\((\w+) (AND|OR) (\w+)\)"', msg)
-                for _ in range(6):
-                    if not m2:
-                        break
-                    l, op, r_ = m2.group(1), m2.group(2), m2.group(3)
-                    new = re.sub(
-                        rf"\b{re.escape(l)}\s+{op}\s+{re.escape(r_)}\b",
-                        f"(({l} <> 0) {op} ({r_} <> 0))",
-                        alt,
-                        count=1,
-                        flags=re.I,
-                    )
-                    if new == alt:
-                        break
-                    alt = new
-                    try:
-                        return spark.sql(rewrite_databend_sql(alt))
-                    except Exception as e2:  # noqa: BLE001
-                        m2 = re.search(
-                            r'"\((\w+) (AND|OR) (\w+)\)"', str(e2)
-                        )
-            if "BINARY_OP_DIFF_TYPES" in msg and '"BOOLEAN"' in msg and (
-                re.search(r'"(TINY|SMALL|BIG)?INT"', msg)
-                or '"DOUBLE"' in msg
-            ):
-                # numeric ↔ boolean comparison casts the NUMERIC side to
-                # boolean in the reference (non-zero = true)
-                alt = re.sub(
-                    # chained comparison `A cmp B cmp N` is left-assoc:
-                    # boolean result vs numeric literal
-                    r"((?:[\w.`']+\s*)(?:=|!=|<>|>=|<=|>|<)(?:\s*[\w.`']+))\s*"
-                    r"(=|!=|<>|>=|<=|>|<)\s*(\d+(?:\.\d+)?)",
-                    r"(\1) \2 CAST(\3 AS BOOLEAN)",
-                    sql,
-                    flags=re.I,
-                )
-                alt = re.sub(
-                    r"([\w.`]+(?:\([^()]*\))?)\s*(=|!=|<>|>=|<=|>|<)\s*"
-                    r"(true|false)\b",
-                    r"(CAST(\1 AS BOOLEAN) \2 \3)",
-                    alt,
-                    flags=re.I,
-                )
-                alt = re.sub(
-                    r"\b(true|false)\s*(=|!=|<>|>=|<=|>|<)\s*"
-                    r"([\w.`]+(?:\([^()]*\))?)",
-                    r"(\1 \2 CAST(\3 AS BOOLEAN))",
-                    alt,
-                    flags=re.I,
-                )
-                # column-vs-column: cast the numeric side from the
-                # error's exact expression text
-                mbx = re.search(
-                    r'Cannot resolve "\((\w+) (=|!=|<>|>=|<=|>|<) (\w+)\)"'
-                    r'.*?\("(\w+)" and "(\w+)"\)', msg, re.S
-                )
-                if mbx and alt == sql:
-                    l_, op_, r_ = mbx.group(1), mbx.group(2), mbx.group(3)
-                    lb = mbx.group(4) == "BOOLEAN"
-
-                    def _castbool(m2, lb=lb, op_=op_):
-                        left, right = m2.group(1), m2.group(2)
-                        if lb:
-                            right = f"CAST({right} AS BOOLEAN)"
-                        else:
-                            left = f"CAST({left} AS BOOLEAN)"
-                        return f"{left} {op_} {right}"
-
-                    alt = re.sub(
-                        rf"(?<![\w.`])((?:\w+\.)?{re.escape(l_)})\s*"
-                        rf"{re.escape(op_)}\s*"
-                        rf"((?:\w+\.)?{re.escape(r_)})(?![\w.`])",
-                        _castbool,
-                        sql,
-                    )
-                if alt != sql:
-                    forced = rewrite_databend_sql(alt)
-                    if forced != rewritten:
-                        try:
-                            return spark.sql(forced)
-                        except Exception:  # noqa: BLE001
-                            pass
-            if "BINARY_OP_DIFF_TYPES" in msg and "INTERVAL DAY" in msg:
-                # date - date is an INT day count in the reference;
-                # Spark yields INTERVAL — turn `A - <date-expr>` into
-                # datediff(A, <date-expr>) by scanning the left operand
-                # back to the nearest depth-0 boundary
-                alt = _rewrite_date_minus(sql)
-                if alt != sql:
-                    forced = rewrite_databend_sql(alt)
-                    if forced != rewritten:
-                        try:
-                            return spark.sql(forced)
-                        except Exception:  # noqa: BLE001
-                            pass
-            if "UNEXPECTED_INPUT_TYPE" in msg and '"date_add(' in msg.replace(
-                "Cannot resolve ", ""
-            ) and '"BIGINT"' in msg:
-                # date + bigint column: Spark's date_add wants INT
-                md = re.search(
-                    r'however "([\w.`]+)" has the type "BIGINT"', msg
-                )
-                if md:
-                    nm = re.escape(md.group(1))
-                    alt = re.sub(
-                        rf"([+-])\s*({nm})\b",
-                        r"\1 CAST(\2 AS INT)",
-                        sql,
-                    )
-                    # the un-blocked expression may still hit the
-                    # date-minus-date interval problem — fix both
-                    alt = _rewrite_date_minus(alt)
-                    if alt != sql:
-                        forced = rewrite_databend_sql(alt)
-                        if forced != rewritten:
-                            try:
-                                return spark.sql(forced)
-                            except Exception:  # noqa: BLE001
-                                pass
-            if "CAST_INVALID_INPUT" in msg and '"TIMESTAMP"' in msg:
-                # partial timestamp literals ('2024-01-02T', '22:',
-                # '21:59:') parse with zero-padding in the reference
-                def _pad_ts(m):
-                    d, t = m.group(1), (m.group(2) or "").strip("T ")
-                    parts = [p for p in t.split(":") if p != ""]
-                    while len(parts) < 3:
-                        parts.append("00")
-                    hh, mi, ss = (p.zfill(2) for p in parts[:3])
-                    return f"'{d} {hh}:{mi}:{ss}'"
-
-                alt = re.sub(
-                    r"'(\d{4}-\d{2}-\d{2})[T ]((?:\d{1,2}:){0,2}(?:\d{1,2})?)?'",
-                    _pad_ts,
-                    sql,
-                )
-                if alt != sql:
-                    forced = rewrite_databend_sql(alt)
-                    if forced != rewritten:
-                        try:
-                            return spark.sql(forced)
-                        except Exception:  # noqa: BLE001
-                            pass
-            if "NONDETERMINISTIC" in msg and re.search(
-                r"\b(gen_random_uuid|uuid|rand(om)?)\s*\(\s*\)", sql, re.I
-            ):
-                # the reference evaluates per-row nondeterministic calls
-                # inside aggregates; Spark refuses — hoist each call into
-                # a derived column of the relation and aggregate over it
-                smatch = re.match(r"^\s*SELECT\s+", sql, re.I)
-                fmatch = re.search(
-                    r"\bFROM\s+([\w.`()]+(?:\s*\(\s*\d*\s*\))?)\s*;?\s*$",
-                    sql,
-                    re.I,
-                )
-                if smatch and fmatch:
-                    body = sql[smatch.end() : fmatch.start()]
-                    nd_cols = []
-
-                    def _hoist(m):
-                        nd_cols.append(m.group(0))
-                        return f"__nd{len(nd_cols) - 1}"
-
-                    body = re.sub(
-                        r"\b(gen_random_uuid|uuid|rand(?:om)?)\s*\(\s*\)",
-                        _hoist,
-                        body,
-                        flags=re.I,
-                    )
-                    rel = fmatch.group(1)
-                    adds = ", ".join(
-                        f"{c} AS __nd{i}" for i, c in enumerate(nd_cols)
-                    )
-                    forced = rewrite_databend_sql(
-                        f"SELECT {body} FROM (SELECT *, {adds} FROM {rel})"
-                    )
-                    try:
-                        return spark.sql(forced)
-                    except Exception:  # noqa: BLE001
-                        pass
-            if "FILTER_NOT_BOOLEAN" in msg:
-                # the reference coerces numeric filters (non-zero = true)
-                from databend_spark.sqlgen import wrap_where_boolean
-
-                forced = rewrite_databend_sql(wrap_where_boolean(sql))
-                if forced != rewritten:
-                    try:
-                        return spark.sql(forced)
-                    except Exception:  # noqa: BLE001
-                        pass
-            if "UNRESOLVED_COLUMN" in msg and re.search(r"\b_origin_\w+", sql):
-                # change-tracking hidden columns (_origin_version,
-                # _origin_block_id, …) are NULL on plain tables
-                forced = rewrite_databend_sql(
-                    re.sub(r"\b_origin_\w+\b", "NULL", sql)
-                )
-                if forced != rewritten:
-                    try:
-                        return spark.sql(forced)
-                    except Exception:  # noqa: BLE001
-                        pass
-            if "CREATE_PERMANENT_VIEW_WITHOUT_ALIAS" in msg:
-                from databend_spark.sqlgen import auto_alias_view_body
-
-                forced = rewrite_databend_sql(auto_alias_view_body(sql))
-                if forced != rewritten:
-                    return spark.sql(forced)
-            if (
-                "LATERAL_COLUMN_ALIAS_IN_AGGREGATE_FUNC" in msg
-                or "LATERAL_COLUMN_ALIAS_IN_WINDOW" in msg
-                or "UNRESOLVED_COLUMN" in msg
-            ):
-                from databend_spark.sqlgen import inline_select_aliases
-
-                forced = rewrite_databend_sql(inline_select_aliases(sql))
-                if forced != rewritten:
-                    return spark.sql(forced)
-            if "UNSUPPORTED_SUBQUERY_EXPRESSION_CATEGORY" in msg:
-                dec = _decorrelate_join_on(sql)
-                if dec is not None:
-                    forced = rewrite_databend_sql(dec)
-                    if forced != rewritten:
-                        try:
-                            return spark.sql(forced)
-                        except Exception:  # noqa: BLE001
-                            pass
-            if "UNSUPPORTED_OVERWRITE" in msg:
-                io = re.match(
-                    r"^\s*INSERT\s+OVERWRITE\s+(?:TABLE\s+)?([\w.`]+)\s+"
-                    r"(.*)$",
-                    sql,
-                    re.I | re.S,
-                )
-                if io:  # self-referencing overwrite → copy-on-write swap
-                    _replace_table(io.group(1), io.group(2).rstrip("; \n"))
-                    return spark.sql("SELECT 1 AS ok WHERE false")
-            if re.match(
-                r"^\s*DROP\s+(TABLE|VIEW)\s+IF\s+EXISTS\b", sql, re.I
-            ) and (
-                "REQUIRES_SINGLE_PART_NAMESPACE" in msg
-                or "SCHEMA_NOT_FOUND" in msg
-            ):
-                return spark.sql("SELECT 1 AS ok WHERE false")
-            if "INVALID_INLINE_TABLE" in msg:
-                # mixed-type VALUES rows Databend would cast on insert —
-                # the SELECT..UNION ALL form goes through LEGACY store
-                # assignment
-                from databend_spark.sqlgen import rewrite_values_as_select
-
-                forced = rewrite_databend_sql(rewrite_values_as_select(sql))
-                if forced != rewritten:
-                    try:
-                        return spark.sql(forced)
-                    except Exception:  # noqa: BLE001
-                        # still incompatible across rows → cast every
-                        # row to the TARGET column types
-                        out = _retry_insert_casts(sql)
-                        if out is not None:
-                            return out
-                        raise
-            raise
+        return res
 
     if isolate:  # fresh database per file — files reuse table names
         _bootstrap_system_db(spark)
@@ -12943,161 +11431,7 @@ def run_slt_file(
             try:
                 rows = _run_limited(lambda: _collect_for_compare(run_sql(sql)))
             except Exception as e:  # noqa: BLE001
-                # runtime (collect-time) errors never reach run_sql's
-                # analysis-retry ladder — apply the safe ones here
-                emsg = str(e)
-                rows = None
-                if "UNSUPPORTED_SUBQUERY_EXPRESSION_CATEGORY" in emsg:
-                    dec = _decorrelate_join_on(sql)
-                    if dec is None:
-                        dec = _mixed_outer_sum_rewrite(sql)
-                    if dec is not None:
-                        try:
-                            rows = _run_limited(
-                                lambda: _collect_for_compare(run_sql(dec))
-                            )
-                        except Exception:  # noqa: BLE001
-                            rows = None
-                if (
-                    rows is None
-                    and "SCALAR_SUBQUERY_IS_IN_GROUP_BY" in emsg
-                ):
-                    dec = _scalar_groupby_rewrite(sql)
-                    if dec is not None:
-                        try:
-                            rows = _run_limited(
-                                lambda: _collect_for_compare(run_sql(dec))
-                            )
-                        except Exception:  # noqa: BLE001
-                            rows = None
-                if rows is None and "INVALID_INLINE_TABLE" in emsg:
-                    dec = _values_rel_to_union(sql)
-                    if dec is not None:
-                        try:
-                            rows = _run_limited(
-                                lambda: _collect_for_compare(run_sql(dec))
-                            )
-                        except Exception:  # noqa: BLE001
-                            rows = None
-                if rows is None and "UNRESOLVED_COLUMN" in emsg:
-                    dec = _nested_in_decorrelate(sql)
-                    if dec is not None:
-                        try:
-                            rows = _run_limited(
-                                lambda: _collect_for_compare(run_sql(dec))
-                            )
-                        except Exception:  # noqa: BLE001
-                            rows = None
-                if rows is None and (
-                    "INTERNAL_ERROR" in emsg
-                    or "ATTRIBUTE_NOT_FOUND" in emsg
-                ):
-                    dec = _exists_derived_hoist(sql)
-                    if dec is not None:
-                        try:
-                            rows = _run_limited(
-                                lambda: _collect_for_compare(run_sql(dec))
-                            )
-                        except Exception:  # noqa: BLE001
-                            rows = None
-                if rows is None and (
-                    "CAST_INVALID_INPUT" in emsg
-                    and (
-                        'cannot be cast to "DATE' in emsg
-                        or 'cannot be cast to "TIMESTAMP' in emsg
-                    )
-                ) and re.search(r"(=|!=|<>)\s*''", sql):
-                    # DATE/TIMESTAMP column compared with '': the
-                    # reference compares as strings (no match, no error)
-                    alt = re.sub(
-                        r"([\w.`]+)\s*(=|!=|<>)\s*''",
-                        r"CAST(\1 AS STRING) \2 ''",
-                        sql,
-                    )
-                    try:
-                        rows = _run_limited(
-                            lambda: _collect_for_compare(run_sql(alt))
-                        )
-                    except Exception:  # noqa: BLE001
-                        rows = None
-                if (
-                    rows is None
-                    and "CAST_INVALID_INPUT" in emsg
-                    and '"STRING"' in emsg
-                    and re.search(r'to "(TINY|SMALL|BIG)?INT"', emsg)
-                ):
-                    # string ↔ integer comparison folds at runtime under
-                    # ANSI; the reference compares numerically — chained
-                    # boolean-vs-literal first, then DOUBLE both sides
-                    alt = re.sub(
-                        r"((?:[\w.`']+\s*)(?:=|!=|<>|>=|<=|>|<)"
-                        r"(?:\s*[\w.`']+))\s*"
-                        r"(=|!=|<>|>=|<=|>|<)\s*(\d+(?:\.\d+)?)",
-                        r"(\1) \2 CAST(\3 AS BOOLEAN)",
-                        sql,
-                    )
-                    alt = re.sub(
-                        r"('(?:[^']|'')*')\s*(=|!=|<>|>=|<=|>|<)\s*"
-                        r"(\d+(?:\.\d+)?)",
-                        r"CAST(\1 AS DOUBLE) \2 CAST(\3 AS DOUBLE)",
-                        alt,
-                    )
-                    alt = re.sub(
-                        r"(\d+(?:\.\d+)?)\s*(=|!=|<>|>=|<=|>|<)\s*"
-                        r"('(?:[^']|'')*')",
-                        r"CAST(\1 AS DOUBLE) \2 CAST(\3 AS DOUBLE)",
-                        alt,
-                    )
-                    if alt != sql:
-                        try:
-                            rows = _run_limited(
-                                lambda: _collect_for_compare(run_sql(alt))
-                            )
-                        except Exception:  # noqa: BLE001
-                            rows = None
-                    if rows is None:
-                        alt3 = re.sub(
-                            r"'(-?\d+\.\d+)'\s*::\s*(u?int\w*|unsigned\b)",
-                            r"CAST(CAST(\1 AS DOUBLE) AS BIGINT)",
-                            sql,
-                            flags=re.I,
-                        )
-                        if alt3 != sql:
-                            try:
-                                rows = _run_limited(
-                                    lambda: _collect_for_compare(
-                                        run_sql(alt3)
-                                    )
-                                )
-                            except Exception:  # noqa: BLE001
-                                rows = None
-                    if rows is None:
-                        # column-vs-column ON/WHERE comparison
-                        alt2 = re.sub(
-                            r"(?<![\w.`'])((?:\w+\.)?`?\w+`?)\s*"
-                            r"(=|!=|<>|>=|<=|>|<)\s*"
-                            r"((?:\w+\.)?`?\w+`?)(?![\w.`'(])",
-                            lambda m2: (
-                                m2.group(0)
-                                if re.match(
-                                    r"^\d|^'|^(true|false|null)$",
-                                    m2.group(1) + m2.group(3), re.I,
-                                )
-                                else f"CAST({m2.group(1)} AS DOUBLE) "
-                                f"{m2.group(2)} "
-                                f"CAST({m2.group(3)} AS DOUBLE)"
-                            ),
-                            sql,
-                        )
-                        if alt2 != sql:
-                            try:
-                                rows = _run_limited(
-                                    lambda: _collect_for_compare(
-                                        run_sql(alt2)
-                                    )
-                                )
-                            except Exception:  # noqa: BLE001
-                                rows = None
+                rows = _collect_fallback(sql, e)
                 if rows is None:
                     rep.failed += 1
                     rep.failures.append(f"query failed: {sql[:120]} :: {e}")

@@ -80,9 +80,20 @@ def test_system_catalog_expansion(ctx, sample, tmp_path):
         ctx.sql("SELECT definitely_not_a_function_xyz()")
     except Exception:
         pass
+    # a named-tuple `:` path fails natively and succeeds through the
+    # column_not_variant fallback
+    assert ctx.sql(
+        "SELECT x:a AS a FROM (SELECT named_struct('a', 7) AS x) q"
+    ).collect()[0].a == 7
     log = ctx.system("query_log").collect()
     assert any(r.status == "ok" for r in log)
     assert any(r.status == "error" for r in log)
+    by_text = {r.query_text: r for r in log}
+    assert by_text["SELECT 1 AS x"].fallback == ""
+    hit = [r for r in log if "named_struct('a', 7)" in r.query_text]
+    assert [(r.status, r.fallback) for r in hit] == [
+        ("ok", "column_not_variant")
+    ]
 
     tpath = str(tmp_path / "vt")
     from databend_spark.streaming.incremental import VersionedTable
