@@ -1,6 +1,6 @@
 """Spark UDF layer over the pure-Python geometry kernel.
 
-Registers the ``__geo_*`` dispatcher UDFs that the sqlgen macros expand
+Defines the ``__geo_*`` dispatcher UDFs that the sqlgen macros expand
 ``st_*`` calls into (reference surface:
 ``src/query/functions/src/scalars/geographic/src/geometry.rs``). All
 geometry values are EWKB binary; inputs arrive hex()-ed so one UDF
@@ -14,7 +14,6 @@ throughput path.
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
 from pyspark.sql.types import (
     BinaryType,
     BooleanType,
@@ -379,27 +378,30 @@ def _geo_agg(name, arr):
     return K.to_ewkb(geoms[0][0], acc_k, acc_c)
 
 
-def register_geometry_udfs(spark: SparkSession) -> None:
-    B, S, D, L, BO = (
-        BinaryType(),
-        StringType(),
-        DoubleType(),
-        LongType(),
-        BooleanType(),
-    )
-    spark.udf.register("__geo_parse", _geo_parse, B)
-    spark.udf.register("__geo_g1", _geo_g1, B)
-    spark.udf.register("__geo_g2", _geo_g2, B)
-    spark.udf.register("__geo_gd", _geo_gd, B)
-    spark.udf.register("__geo_num", _geo_num, D)
-    spark.udf.register("__geo_bool", _geo_bool, BO)
-    spark.udf.register("__geo_int", _geo_int, L)
-    spark.udf.register("__geo_hilbert_b", _geo_hilbert_b, L)
-    spark.udf.register("__geo_str", _geo_str, S)
-    spark.udf.register("__geo_wkb", _geo_wkb, B)
-    spark.udf.register("__geo_transform", _geo_transform, B)
-    spark.udf.register("__geo_fromgeohash", _geo_fromgeohash, B)
-    spark.udf.register("__geo_makepoint", _geo_makepoint, B)
-    spark.udf.register("__geo_point_geog", _geo_point_geog, B)
-    spark.udf.register("__geo_parse_geog", _geo_parse_geog, B)
-    spark.udf.register("__geo_agg", _geo_agg, B)
+_B, _S, _D, _L, _BO = (
+    BinaryType(),
+    StringType(),
+    DoubleType(),
+    LongType(),
+    BooleanType(),
+)
+
+# name → (function, return type); part of variant_runtime.HELPERS
+GEOMETRY_UDFS = {
+    "__geo_parse": (_geo_parse, _B),
+    "__geo_g1": (_geo_g1, _B),
+    "__geo_g2": (_geo_g2, _B),
+    "__geo_gd": (_geo_gd, _B),
+    "__geo_num": (_geo_num, _D),
+    "__geo_bool": (_geo_bool, _BO),
+    "__geo_int": (_geo_int, _L),
+    "__geo_hilbert_b": (_geo_hilbert_b, _L),
+    "__geo_str": (_geo_str, _S),
+    "__geo_wkb": (_geo_wkb, _B),
+    "__geo_transform": (_geo_transform, _B),
+    "__geo_fromgeohash": (_geo_fromgeohash, _B),
+    "__geo_makepoint": (_geo_makepoint, _B),
+    "__geo_point_geog": (_geo_point_geog, _B),
+    "__geo_parse_geog": (_geo_parse_geog, _B),
+    "__geo_agg": (_geo_agg, _B),
+}

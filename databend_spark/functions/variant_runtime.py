@@ -19,6 +19,38 @@ import json
 import re
 
 from pyspark.sql import SparkSession
+from pyspark.sql.functions import udtf
+from pyspark.sql.types import (
+    ArrayType,
+    BinaryType,
+    BooleanType,
+    DoubleType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
+
+from databend_spark.functions.dt_parse import convert_tz_eval, dt_parse_eval
+from databend_spark.functions.geom_runtime import GEOMETRY_UDFS
+from databend_spark.functions.geometry import wkt_to_ewkb
+from databend_spark.functions.hashes import (
+    blake3_value,
+    city64_seed_value,
+    siphash64_value,
+    xxhash32_value,
+    xxhash64_value,
+)
+from databend_spark.functions.interval_type import (
+    interval_compare_key,
+    interval_text,
+    timestamp_tz_add,
+    timestamp_tz_micros,
+    timestamp_tz_text,
+)
+from databend_spark.functions.pg_numfmt import pg_format_number
+from databend_spark.session import session_state
 
 
 def _canon(v) -> str:
@@ -2362,305 +2394,265 @@ def jq_list(filter_text, input):  # noqa: A002
     return [_canon(out) for out in jq_run(filter_text, doc)]
 
 
-# applicationIds already carrying the UDF registrations — re-registering
-# 60+ Python UDFs costs ~0.3-0.5s of Py4J round-trips per call, which
-# lands on EVERY suite-query invocation (r3 bench regression). appIds are
-# never reused, so registration state can be memoized process-side.
-_UDFS_REGISTERED: set[str] = set()
-
-
-def _session_key(spark: SparkSession) -> str:
+def _va_list(s):
+    if s is None:
+        return None
     try:
-        return spark.sparkContext.applicationId
-    except Exception:  # noqa: BLE001
-        return str(id(spark))
+        v = json.loads(s)
+    except (ValueError, TypeError):
+        return None
+    return v if isinstance(v, list) else None
 
 
-def register_variant_udfs(spark: SparkSession) -> None:
-    """Idempotently register the accessor UDFs on a session."""
-    from pyspark.sql.types import DoubleType, StringType
+def va_elems(s):
+    # variant array → canonical jsonb text per element (unnest over
+    # variants; non-arrays produce no rows like the reference)
+    v = _va_list(s)
+    return [_canon(x) for x in v] if v is not None else []
 
-    sid = _session_key(spark)
-    if sid in _UDFS_REGISTERED:
-        return
-    if len(_UDFS_REGISTERED) > 8:
-        _UDFS_REGISTERED.clear()
-    _UDFS_REGISTERED.add(sid)
 
-    spark.udf.register("__variant_access", variant_access, StringType())
-    spark.udf.register("__variant_path_query", variant_path_query, StringType())
-    spark.udf.register("__check_json", check_json, StringType())
-    spark.udf.register("__jaro_winkler", jaro_winkler, DoubleType())
-    spark.udf.register("__decimal_text", decimal_text, StringType())
-    from databend_spark.functions.hashes import (
-        blake3_value,
-        city64_seed_value,
-        siphash64_value,
-        xxhash32_value,
-        xxhash64_value,
-    )
+def va_join(arr):
+    # element texts (jsonb or plain SQL strings) → canonical jsonb
+    # array text; SQL NULL elements become JSON nulls
+    if arr is None:
+        return None
+    out = []
+    for x in arr:
+        if x is None:
+            out.append("null")
+        else:
+            try:
+                out.append(_canon(json.loads(x)))
+            except (ValueError, TypeError):
+                out.append(_canon(x))
+    return "[" + ",".join(out) + "]"
 
-    spark.udf.register("__siphash64", siphash64_value, StringType())
-    spark.udf.register("__blake3", blake3_value, StringType())
-    spark.udf.register("__city64_seed", city64_seed_value, StringType())
-    spark.udf.register("__xxhash64", xxhash64_value, StringType())
-    spark.udf.register("__xxhash32", xxhash32_value, StringType())
-    from pyspark.sql.types import ArrayType, BooleanType, LongType
 
-    spark.udf.register("__jq_list", jq_list, ArrayType(StringType()))
-    spark.udf.register("__parse_json_strict", parse_json_strict, StringType())
-    spark.udf.register("__json_typeof", json_typeof, StringType())
-    spark.udf.register("__json_length", json_length, LongType())
-    spark.udf.register("__window_funnel", window_funnel_eval, LongType())
-    spark.udf.register("__histogram", histogram_eval, StringType())
-    spark.udf.register("__soundex", soundex_eval, StringType())
-    spark.udf.register("__humanize_size", humanize_size_eval, StringType())
-    spark.udf.register(
-        "__humanize_number", humanize_number_eval, StringType()
-    )
-    spark.udf.register("__inet_aton", inet_aton_eval, LongType())
-    spark.udf.register("__inet_ntoa", inet_ntoa_eval, StringType())
-    spark.udf.register("__instr", instr_eval, LongType())
-    spark.udf.register("__chr", chr_eval, StringType())
-    spark.udf.register("__variant_like", variant_like_eval, BooleanType())
-    spark.udf.register("__regexp_instr", regexp_instr_eval, LongType())
-    spark.udf.register("__regexp_extract", regexp_extract_eval, StringType())
-    spark.udf.register(
-        "__regexp_extract_all", regexp_extract_all_eval,
-        ArrayType(StringType()),
-    )
-    spark.udf.register(
-        "__regexp_extract_named", regexp_extract_named_eval, StringType()
-    )
-    spark.udf.register(
-        "__wide_decimal_cast", wide_decimal_cast_eval, StringType()
-    )
-    spark.udf.register("__split", split_eval, ArrayType(StringType()))
-    spark.udf.register("__split_part", split_part_eval, StringType())
-    spark.udf.register("__interval_add", interval_add_eval, StringType())
-    spark.udf.register("__interval_mul", interval_mul_eval, StringType())
-    spark.udf.register(
-        "__interval_from_micros", interval_from_micros_eval, StringType()
-    )
-    spark.udf.register("__interval_make", interval_make_eval, StringType())
-    from pyspark.sql.types import DoubleType as _DT
-
-    spark.udf.register("__interval_extract", interval_extract_eval, _DT())
-    spark.udf.register("__age", age_eval, StringType())
-    spark.udf.register("__vec_distance", vec_distance_eval, _DT())
-    spark.udf.register("__vec_norm", vec_norm_eval, _DT())
-    from pyspark.sql.types import IntegerType as _IT
-    from pyspark.sql.types import StructField as _SF
-    from pyspark.sql.types import StructType as _ST
-
-    spark.udf.register(
-        "__json_order_key",
-        json_order_key_eval,
-        _ST([
-            _SF("rank", _IT()),
-            _SF("num", _DT()),
-            _SF("txt", StringType()),
-        ]),
-    )
-    spark.udf.register(
-        "__json_array_sort", json_array_sort_eval,
-        ArrayType(StringType()),
-    )
-    spark.udf.register(
-        "__quantile_tdigest", quantile_tdigest_eval, ArrayType(_DT())
-    )
-    from pyspark.sql.types import BinaryType as _BT
-
-    spark.udf.register("__jsonb_binary", jsonb_binary_eval, _BT())
-    spark.udf.register("__bitmap_binary", bitmap_binary_eval, _BT())
-    from databend_spark.functions.geometry import wkt_to_ewkb
-
-    spark.udf.register(
-        "__wkt_ewkb",
-        lambda t, srid=None, ws=True: wkt_to_ewkb(t, srid, ws),
-        _BT(),
-    )
-    from databend_spark.functions.geom_runtime import register_geometry_udfs
-
-    register_geometry_udfs(spark)
-    from databend_spark.functions.pg_numfmt import pg_format_number
-
-    spark.udf.register("__pg_to_char", pg_format_number, StringType())
-
-    def _dec_sum_wide(arr):
-        # exact sum of decimal strings beyond Spark's 38-digit cap
-        # (reference decimal256 sums, enable_decimal_sum_widening)
-        from decimal import Decimal as _D
-
-        if arr is None:
-            return None
-        tot = None
-        for x in arr:
-            if x is None:
-                continue
-            v = _D(x)
-            tot = v if tot is None else tot + v
-        return None if tot is None else str(tot)
-
-    spark.udf.register("__dec_sum_wide", _dec_sum_wide, StringType())
-    from databend_spark.functions.dt_parse import (
-        convert_tz_eval,
-        dt_parse_eval,
-    )
-
-    spark.udf.register("__dt_parse", dt_parse_eval, StringType())
-    spark.udf.register("__convert_tz", convert_tz_eval, StringType())
-    spark.udf.register("__regexp_substr", regexp_substr_eval, StringType())
-    spark.udf.register("__regexp_replace", regexp_replace_eval, StringType())
-    spark.udf.register("__time_slice", time_slice, StringType())
-    spark.udf.register("__to_hex", to_hex, StringType())
-    spark.udf.register("__json_strip_nulls", json_strip_nulls, StringType())
-    spark.udf.register("__variant_has", variant_has, BooleanType())
-    spark.udf.register("__variant_contains", variant_contains, BooleanType())
-    spark.udf.register("__variant_concat", variant_concat, StringType())
-    spark.udf.register("__va_insert", va_insert, StringType())
-    spark.udf.register("__va_distinct", va_distinct, StringType())
-    spark.udf.register("__va_intersection", va_intersection, StringType())
-    spark.udf.register("__va_except", va_except, StringType())
-    spark.udf.register("__va_overlap", va_overlap, BooleanType())
-    spark.udf.register("__va_slice", va_slice, StringType())
-    spark.udf.register("__va_concat", va_concat, StringType())
-    spark.udf.register("__va_append", va_append, StringType())
-    spark.udf.register("__va_prepend", va_prepend, StringType())
-    spark.udf.register("__va_compact", va_compact, StringType())
-    spark.udf.register("__va_contains", va_contains, BooleanType())
-    def _va_list(s):
-        if s is None:
-            return None
-        try:
-            v = json.loads(s)
-        except (ValueError, TypeError):
-            return None
-        return v if isinstance(v, list) else None
-
-    def va_elems(s):
-        # variant array → canonical jsonb text per element (unnest over
-        # variants; non-arrays produce no rows like the reference)
-        v = _va_list(s)
-        return [_canon(x) for x in v] if v is not None else []
-
-    def va_join(arr):
-        # element texts (jsonb or plain SQL strings) → canonical jsonb
-        # array text; SQL NULL elements become JSON nulls
-        if arr is None:
-            return None
-        out = []
-        for x in arr:
-            if x is None:
-                out.append("null")
-            else:
-                try:
-                    out.append(_canon(json.loads(x)))
-                except (ValueError, TypeError):
-                    out.append(_canon(x))
-        return "[" + ",".join(out) + "]"
-
-    def va_scalar(s):
-        # jsonb text → SQL-castable text: strings unquote, json null →
-        # SQL NULL, everything else keeps its json spelling
-        if s is None:
-            return None
-        try:
-            v = json.loads(s)
-        except (ValueError, TypeError):
-            return s
-        if v is None:
-            return None
-        if isinstance(v, str):
-            return v
-        if isinstance(v, bool):
-            return "true" if v else "false"
+def va_scalar(s):
+    # jsonb text → SQL-castable text: strings unquote, json null →
+    # SQL NULL, everything else keeps its json spelling
+    if s is None:
+        return None
+    try:
+        v = json.loads(s)
+    except (ValueError, TypeError):
         return s
+    if v is None:
+        return None
+    if isinstance(v, str):
+        return v
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    return s
 
-    def va_sort(s):
-        v = _va_list(s)
-        if v is None:
-            return None
-        return _canon(sorted(v, key=_jsonb_rank))
 
-    def va_count(s):
-        v = _va_list(s)
-        return len(v) if v is not None else None
+def va_sort(s):
+    v = _va_list(s)
+    if v is None:
+        return None
+    return _canon(sorted(v, key=_jsonb_rank))
 
-    def va_max(s):
-        v = _va_list(s)
-        return _canon(max(v, key=_jsonb_rank)) if v else None
 
-    def va_min(s):
-        v = _va_list(s)
-        return _canon(min(v, key=_jsonb_rank)) if v else None
+def va_count(s):
+    v = _va_list(s)
+    return len(v) if v is not None else None
 
-    def va_acd(s):
-        v = _va_list(s)
-        return len({_canon(x) for x in v}) if v is not None else None
 
-    spark.udf.register("__va_elems", va_elems, ArrayType(StringType()))
-    spark.udf.register("__va_join", va_join, StringType())
-    spark.udf.register("__va_scalar", va_scalar, StringType())
-    spark.udf.register("__va_sort", va_sort, StringType())
-    spark.udf.register("__va_count", va_count, LongType())
-    spark.udf.register("__va_max", va_max, StringType())
-    spark.udf.register("__va_min", va_min, StringType())
-    spark.udf.register("__va_acd", va_acd, LongType())
-    spark.udf.register("__va_flatten", va_flatten, StringType())
-    spark.udf.register("__va_indexof", va_indexof, LongType())
-    spark.udf.register("__va_remove", va_remove, StringType())
-    spark.udf.register("__va_remove_first", va_remove_first, StringType())
-    spark.udf.register("__va_remove_last", va_remove_last, StringType())
-    spark.udf.register("__va_unique", va_unique, LongType())
-    spark.udf.register("__va_reverse", va_reverse, StringType())
-    spark.udf.register("__variant_minus", variant_minus, StringType())
-    spark.udf.register("__variant_delete_path", variant_delete_path, StringType())
-    spark.udf.register("__object_insert", object_insert, StringType())
-    spark.udf.register("__object_delete", object_delete, StringType())
-    spark.udf.register("__object_pick", object_pick, StringType())
-    spark.udf.register("__json_each_list", json_each_list, ArrayType(StringType()))
-    from databend_spark.functions.interval_type import (
-        interval_compare_key,
-        interval_text,
-        timestamp_tz_add,
-        timestamp_tz_micros,
-        timestamp_tz_text,
-    )
+def va_max(s):
+    v = _va_list(s)
+    return _canon(max(v, key=_jsonb_rank)) if v else None
 
-    spark.udf.register("__interval_text", interval_text, StringType())
-    spark.udf.register("__interval_key", interval_compare_key, LongType())
-    spark.udf.register("__ts_tz_text", timestamp_tz_text, StringType())
-    spark.udf.register(
-        "__ts_tz_text_auto",
-        lambda v, tz: timestamp_tz_text(v, tz, auto=True),
-        StringType(),
-    )
-    spark.udf.register(
-        "__ts_tz_text_try",
-        lambda v, tz: timestamp_tz_text(v, tz, soft=True),
-        StringType(),
-    )
-    spark.udf.register(
-        "__ts_tz_text_try_auto",
-        lambda v, tz: timestamp_tz_text(v, tz, auto=True, soft=True),
-        StringType(),
-    )
-    spark.udf.register("__ts_tz_us", timestamp_tz_micros, LongType())
-    spark.udf.register(
-        "__ts_tz_add",
+
+def va_min(s):
+    v = _va_list(s)
+    return _canon(min(v, key=_jsonb_rank)) if v else None
+
+
+def va_acd(s):
+    v = _va_list(s)
+    return len({_canon(x) for x in v}) if v is not None else None
+
+
+def dec_sum_wide(arr):
+    # exact sum of decimal strings beyond Spark's 38-digit cap
+    # (reference decimal256 sums, enable_decimal_sum_widening)
+    from decimal import Decimal
+
+    if arr is None:
+        return None
+    tot = None
+    for x in arr:
+        if x is None:
+            continue
+        v = Decimal(x)
+        tot = v if tot is None else tot + v
+    return None if tot is None else str(tot)
+
+
+_S, _B, _L, _D, _BIN = (
+    StringType(), BooleanType(), LongType(), DoubleType(), BinaryType()
+)
+_SA = ArrayType(StringType())
+
+# Every Python helper that rewritten SQL may call: name → (function,
+# return type). A session registers a helper the first time a statement
+# run through ``sqlgen.fallbacks.execute`` calls it
+# (register_called_helpers); register_all_helpers registers them all.
+HELPERS: dict[str, tuple] = {
+    "__variant_access": (variant_access, _S),
+    "__variant_path_query": (variant_path_query, _S),
+    "__check_json": (check_json, _S),
+    "__jaro_winkler": (jaro_winkler, _D),
+    "__decimal_text": (decimal_text, _S),
+    "__siphash64": (siphash64_value, _S),
+    "__blake3": (blake3_value, _S),
+    "__city64_seed": (city64_seed_value, _S),
+    "__xxhash64": (xxhash64_value, _S),
+    "__xxhash32": (xxhash32_value, _S),
+    "__jq_list": (jq_list, _SA),
+    "__parse_json_strict": (parse_json_strict, _S),
+    "__json_typeof": (json_typeof, _S),
+    "__json_length": (json_length, _L),
+    "__window_funnel": (window_funnel_eval, _L),
+    "__histogram": (histogram_eval, _S),
+    "__soundex": (soundex_eval, _S),
+    "__humanize_size": (humanize_size_eval, _S),
+    "__humanize_number": (humanize_number_eval, _S),
+    "__inet_aton": (inet_aton_eval, _L),
+    "__inet_ntoa": (inet_ntoa_eval, _S),
+    "__instr": (instr_eval, _L),
+    "__chr": (chr_eval, _S),
+    "__variant_like": (variant_like_eval, _B),
+    "__regexp_instr": (regexp_instr_eval, _L),
+    "__regexp_extract": (regexp_extract_eval, _S),
+    "__regexp_extract_all": (regexp_extract_all_eval, _SA),
+    "__regexp_extract_named": (regexp_extract_named_eval, _S),
+    "__wide_decimal_cast": (wide_decimal_cast_eval, _S),
+    "__split": (split_eval, _SA),
+    "__split_part": (split_part_eval, _S),
+    "__interval_add": (interval_add_eval, _S),
+    "__interval_mul": (interval_mul_eval, _S),
+    "__interval_from_micros": (interval_from_micros_eval, _S),
+    "__interval_make": (interval_make_eval, _S),
+    "__interval_extract": (interval_extract_eval, _D),
+    "__age": (age_eval, _S),
+    "__vec_distance": (vec_distance_eval, _D),
+    "__vec_norm": (vec_norm_eval, _D),
+    "__json_order_key": (json_order_key_eval, StructType([
+        StructField("rank", IntegerType()),
+        StructField("num", _D),
+        StructField("txt", _S),
+    ])),
+    "__json_array_sort": (json_array_sort_eval, _SA),
+    "__quantile_tdigest": (quantile_tdigest_eval, ArrayType(_D)),
+    "__jsonb_binary": (jsonb_binary_eval, _BIN),
+    "__bitmap_binary": (bitmap_binary_eval, _BIN),
+    "__wkt_ewkb": (
+        lambda t, srid=None, ws=True: wkt_to_ewkb(t, srid, ws), _BIN
+    ),
+    **GEOMETRY_UDFS,
+    "__pg_to_char": (pg_format_number, _S),
+    "__dec_sum_wide": (dec_sum_wide, _S),
+    "__dt_parse": (dt_parse_eval, _S),
+    "__convert_tz": (convert_tz_eval, _S),
+    "__regexp_substr": (regexp_substr_eval, _S),
+    "__regexp_replace": (regexp_replace_eval, _S),
+    "__time_slice": (time_slice, _S),
+    "__to_hex": (to_hex, _S),
+    "__json_strip_nulls": (json_strip_nulls, _S),
+    "__variant_has": (variant_has, _B),
+    "__variant_contains": (variant_contains, _B),
+    "__variant_concat": (variant_concat, _S),
+    "__va_insert": (va_insert, _S),
+    "__va_distinct": (va_distinct, _S),
+    "__va_intersection": (va_intersection, _S),
+    "__va_except": (va_except, _S),
+    "__va_overlap": (va_overlap, _B),
+    "__va_slice": (va_slice, _S),
+    "__va_concat": (va_concat, _S),
+    "__va_append": (va_append, _S),
+    "__va_prepend": (va_prepend, _S),
+    "__va_compact": (va_compact, _S),
+    "__va_contains": (va_contains, _B),
+    "__va_elems": (va_elems, _SA),
+    "__va_join": (va_join, _S),
+    "__va_scalar": (va_scalar, _S),
+    "__va_sort": (va_sort, _S),
+    "__va_count": (va_count, _L),
+    "__va_max": (va_max, _S),
+    "__va_min": (va_min, _S),
+    "__va_acd": (va_acd, _L),
+    "__va_flatten": (va_flatten, _S),
+    "__va_indexof": (va_indexof, _L),
+    "__va_remove": (va_remove, _S),
+    "__va_remove_first": (va_remove_first, _S),
+    "__va_remove_last": (va_remove_last, _S),
+    "__va_unique": (va_unique, _L),
+    "__va_reverse": (va_reverse, _S),
+    "__variant_minus": (variant_minus, _S),
+    "__variant_delete_path": (variant_delete_path, _S),
+    "__object_insert": (object_insert, _S),
+    "__object_delete": (object_delete, _S),
+    "__object_pick": (object_pick, _S),
+    "__json_each_list": (json_each_list, _SA),
+    "__interval_text": (interval_text, _S),
+    "__interval_key": (interval_compare_key, _L),
+    "__ts_tz_text": (timestamp_tz_text, _S),
+    "__ts_tz_text_auto": (
+        lambda v, tz: timestamp_tz_text(v, tz, auto=True), _S
+    ),
+    "__ts_tz_text_try": (
+        lambda v, tz: timestamp_tz_text(v, tz, soft=True), _S
+    ),
+    "__ts_tz_text_try_auto": (
+        lambda v, tz: timestamp_tz_text(v, tz, auto=True, soft=True), _S
+    ),
+    "__ts_tz_us": (timestamp_tz_micros, _L),
+    "__ts_tz_add": (
         lambda s, iv, sg, tz: timestamp_tz_add(
             s, iv, int(sg) if sg is not None else 1, tz
         ),
-        StringType(),
-    )
-    try:
-        from pyspark.sql.functions import udtf
+        _S,
+    ),
+}
 
-        spark.udtf.register("flatten", udtf(FlattenUDTF, returnType=FLATTEN_SCHEMA))
-        spark.udtf.register("__jq_table", udtf(JqUDTF, returnType="jq string"))
-        spark.udtf.register(
-            "__json_each_table", udtf(JsonEachUDTF, returnType="key string, value string")
-        )
-    except Exception:  # noqa: BLE001 — older pyspark without udtf
-        pass
+# table functions: name → (handler class, output schema)
+UDTFS: dict[str, tuple] = {
+    "flatten": (FlattenUDTF, FLATTEN_SCHEMA),
+    "__jq_table": (JqUDTF, "jq string"),
+    "__json_each_table": (JsonEachUDTF, "key string, value string"),
+}
+
+_ALL = frozenset(HELPERS) | frozenset(UDTFS)
+# a call of a helper or of the FLATTEN table function in Spark SQL text
+_CALL = re.compile(r"\b(__\w+|flatten)\s*\(", re.I)
+
+
+def register_helpers(spark: SparkSession, names) -> None:
+    """Register each helper in ``names`` that ``spark`` lacks. The
+    session's record is checked and filled under its lock, so threads
+    naming the same helper register it once."""
+    state = session_state(spark)
+    if not names - state.udfs:
+        return
+    with state.lock:
+        for name in sorted(names - state.udfs):
+            if name in UDTFS:
+                handler, schema = UDTFS[name]
+                spark.udtf.register(name, udtf(handler, returnType=schema))
+            else:
+                spark.udf.register(name, *HELPERS[name])
+            state.udfs.add(name)
+
+
+def register_called_helpers(spark: SparkSession, text: str) -> None:
+    """Register the helpers the Spark SQL ``text`` calls."""
+    names = {n.lower() for n in _CALL.findall(text)} & _ALL
+    if names:
+        register_helpers(spark, names)
+
+
+def register_all_helpers(spark: SparkSession) -> None:
+    """Register every helper: for callers that run Spark text outside
+    ``sqlgen.fallbacks.execute`` (the SLT runner, the variant suite)."""
+    register_helpers(spark, _ALL)

@@ -154,33 +154,28 @@ def markov_train_display(
     return "[" + ",".join(rows) + "]"
 
 
-_MARKOV_REGISTERED: set[str] = set()
-
-
 def register_markov_udfs(spark) -> None:
     from pyspark.sql.types import StringType
 
-    from databend_spark.functions.variant_runtime import _session_key
+    from databend_spark.session import session_state
 
-    sid = _session_key(spark)
-    if sid in _MARKOV_REGISTERED:
-        return
-    if len(_MARKOV_REGISTERED) > 8:
-        _MARKOV_REGISTERED.clear()
-    _MARKOV_REGISTERED.add(sid)
-
-    spark.udf.register(
-        "__markov_train_display",
-        lambda arr, o, fc, nbc, fa, fd: markov_train_display(
-            arr, int(o), int(fc), int(nbc), int(fa), float(fd)
-        ),
-        StringType(),
-    )
-    spark.udf.register(
-        "markov_generate",
-        lambda m, p, s, d: markov_generate(m, p, int(s or 0), d),
-        StringType(),
-    )
+    state = session_state(spark)
+    with state.lock:
+        if "markov_generate" in state.udfs:
+            return
+        spark.udf.register(
+            "__markov_train_display",
+            lambda arr, o, fc, nbc, fa, fd: markov_train_display(
+                arr, int(o), int(fc), int(nbc), int(fa), float(fd)
+            ),
+            StringType(),
+        )
+        spark.udf.register(
+            "markov_generate",
+            lambda m, p, s, d: markov_generate(m, p, int(s or 0), d),
+            StringType(),
+        )
+        state.udfs |= {"__markov_train_display", "markov_generate"}
 
 
 def _utf8_char_width(b: int) -> int:

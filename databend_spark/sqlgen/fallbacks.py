@@ -10,9 +10,11 @@ the entry's ``RewriteOptions``; one that rewrites to the failed text
 is skipped) or thunks that return a DataFrame, or None to decline.
 ``execute`` tries the entries in table order and returns the first
 success with the entry's name; when nothing succeeds the first
-attempt's error is raised. ``SessionContext.sql``, the suite and the
-SLT runner all run SQL through ``execute``; the runner splices its
-side-effecting entries into the table (``splice``)."""
+attempt's error is raised. Before a Spark text runs, the Python
+helper UDFs it calls are registered on the session, once each.
+``SessionContext.sql``, the suite and the SLT runner all run SQL
+through ``execute``; the runner splices its side-effecting entries
+into the table (``splice``)."""
 
 from __future__ import annotations
 
@@ -23,6 +25,7 @@ from functools import partial
 from typing import Any
 
 from databend_spark.functions.registry import rewrite_call
+from databend_spark.functions.variant_runtime import register_called_helpers
 from databend_spark.sqlgen import (
     DEFAULT,
     RewriteOptions,
@@ -81,6 +84,7 @@ def execute(
     table = FALLBACKS if table is None else table
     if rewritten is None:
         rewritten = rewrite_databend_sql(sql, opts)
+    register_called_helpers(spark, rewritten)
     try:
         return spark.sql(rewritten), None
     except Exception as e:  # noqa: BLE001
@@ -117,6 +121,7 @@ def _attempt(fb: Fallback, f: Failure, hit):
                 continue
             if text == f.rewritten:
                 continue
+            register_called_helpers(f.spark, text)
             run = partial(f.spark.sql, text)
         try:
             df = run()

@@ -994,10 +994,11 @@ def run_slt_file(
         splice,
     )
 
-    # variant accessor UDF (`->`, get_path, …) — idempotent
-    from databend_spark.functions.variant_runtime import register_variant_udfs
+    # every Python helper UDF: the runner also hands rewritten text to
+    # spark.sql directly, outside execute's lazy registration
+    from databend_spark.functions.variant_runtime import register_all_helpers
 
-    register_variant_udfs(spark)
+    register_all_helpers(spark)
     from databend_spark.operators.markov import register_markov_udfs
 
     register_markov_udfs(spark)
@@ -9706,7 +9707,7 @@ def run_slt_file(
                             invalidate_view_memo,
                         )
 
-                        invalidate_view_memo(tuple(created))
+                        invalidate_view_memo(spark, tuple(created))
                     except Exception:  # noqa: BLE001
                         pass
         m = _update_stmt.match(sql)
@@ -11000,7 +11001,7 @@ def run_slt_file(
         try:  # the drop above invalidates register_tables' view memo
             from databend_spark.session import invalidate_view_memo
 
-            invalidate_view_memo()
+            invalidate_view_memo(spark)
         except Exception:  # noqa: BLE001
             pass
         try:  # clear SET overrides a previous file left in the view

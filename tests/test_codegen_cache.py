@@ -12,7 +12,7 @@ import math
 from pyspark.sql import functions as F
 
 from databend_spark.operators.mutations import merge_dataframes, src
-from databend_spark.session import codegen_compiles
+from databend_spark.session import SessionContext, codegen_compiles, session_state
 from databend_spark.suite import REGISTRY
 
 # perfbench's olap_sf01 ops, submitted as SQL text through ctx.sql
@@ -69,3 +69,9 @@ def test_metrics_report_codegen(ctx):
     assert max_entries == float(
         ctx.spark.conf.get("spark.sql.codegen.cache.maxEntries")
     )
+    assert rows["python_udfs_registered"] == len(session_state(ctx.spark).udfs)
+    # a new session has registered none; a query registers what it calls
+    fresh = SessionContext(ctx.spark.newSession())
+    assert dict(fresh.system("metrics").collect())["python_udfs_registered"] == 0
+    fresh.sql("SELECT humanize_size(1024) AS v, soundex('a') AS w").collect()
+    assert dict(fresh.system("metrics").collect())["python_udfs_registered"] == 2

@@ -12,9 +12,9 @@ from databend_spark.sqlgen import RewriteOptions, rewrite_databend_sql
 
 @pytest.fixture()
 def inline(spark):
-    from databend_spark.functions.variant_runtime import register_variant_udfs
+    from databend_spark.functions.variant_runtime import register_all_helpers
 
-    register_variant_udfs(spark)
+    register_all_helpers(spark)
     spark.sql(
         "CREATE OR REPLACE TEMP VIEW fb_json AS SELECT * FROM VALUES"
         " ('{\"a\":1}', '[1,1,2]'), ('{\"a\":2}', '[3]') AS t(j, ja)"
