@@ -50,6 +50,7 @@ from databend_spark.functions.interval_type import (
     timestamp_tz_text,
 )
 from databend_spark.functions.pg_numfmt import pg_format_number
+from databend_spark.operators.markov import MARKOV_UDFS
 from databend_spark.session import session_state
 
 
@@ -2551,6 +2552,7 @@ HELPERS: dict[str, tuple] = {
         lambda t, srid=None, ws=True: wkt_to_ewkb(t, srid, ws), _BIN
     ),
     **GEOMETRY_UDFS,
+    **MARKOV_UDFS,
     "__pg_to_char": (pg_format_number, _S),
     "__dec_sum_wide": (dec_sum_wide, _S),
     "__dt_parse": (dt_parse_eval, _S),
@@ -2624,8 +2626,8 @@ UDTFS: dict[str, tuple] = {
 }
 
 _ALL = frozenset(HELPERS) | frozenset(UDTFS)
-# a call of a helper or of the FLATTEN table function in Spark SQL text
-_CALL = re.compile(r"\b(__\w+|flatten)\s*\(", re.I)
+# a function call in Spark SQL text; the names in _ALL are the helpers
+_CALL = re.compile(r"\b(\w+)\s*\(")
 
 
 def register_helpers(spark: SparkSession, names) -> None:
@@ -2653,6 +2655,6 @@ def register_called_helpers(spark: SparkSession, text: str) -> None:
 
 
 def register_all_helpers(spark: SparkSession) -> None:
-    """Register every helper: for callers that run Spark text outside
-    ``sqlgen.fallbacks.execute`` (the SLT runner, the variant suite)."""
+    """Register every helper: for a caller that hands Spark text to
+    ``spark.sql`` outside ``sqlgen.fallbacks.execute`` (the SLT runner)."""
     register_helpers(spark, _ALL)

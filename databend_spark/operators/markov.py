@@ -21,6 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
 
 def transitions(df: DataFrame, col: str, order: int = 3) -> DataFrame:
@@ -154,30 +155,6 @@ def markov_train_display(
     return "[" + ",".join(rows) + "]"
 
 
-def register_markov_udfs(spark) -> None:
-    from pyspark.sql.types import StringType
-
-    from databend_spark.session import session_state
-
-    state = session_state(spark)
-    with state.lock:
-        if "markov_generate" in state.udfs:
-            return
-        spark.udf.register(
-            "__markov_train_display",
-            lambda arr, o, fc, nbc, fa, fd: markov_train_display(
-                arr, int(o), int(fc), int(nbc), int(fa), float(fd)
-            ),
-            StringType(),
-        )
-        spark.udf.register(
-            "markov_generate",
-            lambda m, p, s, d: markov_generate(m, p, int(s or 0), d),
-            StringType(),
-        )
-        state.udfs |= {"__markov_train_display", "markov_generate"}
-
-
 def _utf8_char_width(b: int) -> int:
     if b < 0x80:
         return 1
@@ -275,3 +252,19 @@ def markov_generate(model_text, params_json, seed, determinator):
         written += length
         cps.append(code)
     return out.decode("utf-8", errors="replace")
+
+
+# the two Python helpers, in functions/variant_runtime.HELPERS' form:
+# name → (function, return type)
+MARKOV_UDFS = {
+    "__markov_train_display": (
+        lambda arr, o, fc, nbc, fa, fd: markov_train_display(
+            arr, int(o), int(fc), int(nbc), int(fa), float(fd)
+        ),
+        StringType(),
+    ),
+    "markov_generate": (
+        lambda m, p, s, d: markov_generate(m, p, int(s or 0), d),
+        StringType(),
+    ),
+}

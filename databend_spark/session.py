@@ -25,24 +25,10 @@ import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
-    ArrayType,
-    BinaryType,
-    BooleanType,
-    ByteType,
-    DataType,
-    DateType,
-    DecimalType,
-    DoubleType,
-    FloatType,
-    IntegerType,
     LongType,
-    MapType,
-    ShortType,
-    StringType,
     StructField,
     StructType,
     TimestampNTZType,
-    TimestampType,
 )
 
 TPCH_TABLES = (
@@ -188,14 +174,6 @@ _SESSION_CONFS = (
 )
 
 
-# Spark's own defaults for the two parquet confs that change how it types
-# a footer; load_table's footer mapping assumes them
-_FOOTER_CONFS = (
-    ("spark.sql.parquet.binaryAsString", "false"),
-    ("spark.sql.parquet.int96AsTimestamp", "true"),
-)
-
-
 @dataclasses.dataclass(eq=False)
 class SessionState:
     """What this module has set up on one SparkSession."""
@@ -203,8 +181,6 @@ class SessionState:
     lock: threading.Lock = dataclasses.field(default_factory=threading.Lock)
     # _SESSION_CONFS all applied; retried on the next call until they are
     confs_ok: bool = False
-    # the session types parquet footers as _parquet_schema does
-    footer_schemas: bool = False
     # Python helper UDFs registered (functions/variant_runtime.py)
     udfs: set[str] = dataclasses.field(default_factory=set)
     # (table, sf_dir) → DataFrame read by register_tables
@@ -246,9 +222,6 @@ def ensure_session_confs(spark: SparkSession) -> None:
                 spark.conf.set(k, v)
         except Exception:
             ok = False
-    st.footer_schemas = ok and all(
-        spark.conf.get(k, v).lower() == v for k, v in _FOOTER_CONFS
-    )
     # memoize only a FULLY applied session: a transient py4j failure
     # mid-application must be retried on the next call, not latched as
     # ensured for the session's lifetime (r9 ADVICE)
@@ -305,86 +278,38 @@ def register_tables(
             st.viewed[t] = sf_dir
 
 
-class _Unmapped(Exception):
-    """A parquet type ``_parquet_schema`` does not map."""
+def _footer_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema Spark's inference gives the single parquet file
+    ``path``, from the same Spark code: the footer reader, then the row
+    metadata of a Spark-written file or ParquetToSparkSchemaConverter
+    under the session's parquet confs. It runs on the driver, so no
+    inference job starts. The classes are Spark-internal (signatures of
+    Spark 4.1); tests/test_session_setup.py compares the result with
+    inference, so a change in them shows there."""
+    from py4j.java_gateway import JavaClass
 
+    client = spark._jvm._gateway_client
 
-_PLAIN = {
-    "BOOLEAN": BooleanType(), "INT32": IntegerType(), "INT64": LongType(),
-    "INT96": TimestampType(), "FLOAT": FloatType(), "DOUBLE": DoubleType(),
-    "BYTE_ARRAY": BinaryType(), "FIXED_LEN_BYTE_ARRAY": BinaryType(),
-}
-# (physical type, bit width, signed) of an Int annotation
-_INTS = {
-    ("INT32", 8, True): ByteType(), ("INT32", 16, True): ShortType(),
-    ("INT32", 32, True): IntegerType(), ("INT64", 64, True): LongType(),
-    ("INT32", 8, False): ShortType(), ("INT32", 16, False): IntegerType(),
-    ("INT32", 32, False): LongType(), ("INT64", 64, False): DecimalType(20, 0),
-}
+    def cls(name: str) -> JavaClass:
+        # no py4j round trip; each package step of spark._jvm.org... is one
+        return JavaClass(name, client)
 
-
-def _leaf_type(col) -> DataType:
-    """Spark's type for a parquet leaf column, as Spark's
-    ParquetToSparkSchemaConverter types it under _SESSION_CONFS and
-    _FOOTER_CONFS."""
-    phys = col.physical_type
-    lt = json.loads(col.logical_type.to_json())
-    kind = lt["Type"]
-    if kind == "None" and phys in _PLAIN:
-        return _PLAIN[phys]
-    if kind in ("String", "Enum", "JSON") and phys == "BYTE_ARRAY":
-        return StringType()
-    if kind == "Decimal" and lt["precision"] <= 38:
-        return DecimalType(lt["precision"], lt["scale"])
-    if kind == "Date" and phys == "INT32":
-        return DateType()
-    if kind == "Int" and (phys, lt["bitWidth"], lt["isSigned"]) in _INTS:
-        return _INTS[phys, lt["bitWidth"], lt["isSigned"]]
-    if kind == "Timestamp" and phys == "INT64":
-        # nanosAsLong; with inferTimestampNTZ off both UTC flags read as
-        # TIMESTAMP
-        return LongType() if lt["timeUnit"] == "nanoseconds" else TimestampType()
-    raise _Unmapped(f"{phys} {kind}")
-
-
-def _spark_type(t, leaves) -> DataType:
-    """Spark's type for the arrow type ``t``: the nesting comes from the
-    arrow schema, each leaf from the next parquet column in ``leaves``."""
-    import pyarrow as pa
-
-    if isinstance(t, (pa.ListType, pa.LargeListType, pa.FixedSizeListType)):
-        return ArrayType(_spark_type(t.value_type, leaves))
-    if isinstance(t, pa.MapType):
-        key = _spark_type(t.key_type, leaves)
-        return MapType(key, _spark_type(t.item_type, leaves))
-    if isinstance(t, pa.StructType):
-        return StructType([
-            StructField(f.name, _spark_type(f.type, leaves))
-            for f in (t.field(i) for i in range(t.num_fields))
-        ])
-    if pa.types.is_nested(t) or isinstance(t, pa.ExtensionType):
-        raise _Unmapped(str(t))
-    return _leaf_type(next(leaves))
-
-
-_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
-
-
-def _parquet_schema(pf) -> StructType | None:
-    """The schema Spark would infer for parquet file ``pf``, from its
-    footer; None for a footer whose schema Spark takes from elsewhere (a
-    Spark-written file carries its own in the row metadata, where INT96
-    or char/varchar details live) or that holds a type not mapped
-    here."""
-    import pyarrow as pa
-
-    if _SPARK_ROW_METADATA in (pf.metadata.metadata or {}):
-        return None
-    leaves = (pf.schema.column(i) for i in range(pf.metadata.num_columns))
-    try:
-        return _spark_type(pa.struct(list(pf.schema_arrow)), leaves)
-    except _Unmapped:
-        return None
+    parquet = "org.apache.spark.sql.execution.datasources.parquet."
+    state = spark._jsparkSession.sessionState()
+    hpath = cls("org.apache.hadoop.fs.Path")(path)
+    meta = cls(parquet + "ParquetFooterReader").readFooter(
+        cls("org.apache.parquet.hadoop.util.HadoopInputFile").fromPath(
+            hpath, state.newHadoopConf()
+        ),
+        cls("org.apache.parquet.format.converter.ParquetMetadataConverter")
+        .SKIP_ROW_GROUPS,
+    )
+    schema = cls(parquet + "ParquetFileFormat").readSchemaFromFooter(
+        cls("org.apache.parquet.hadoop.Footer")(hpath, meta),
+        cls(parquet + "ParquetToSparkSchemaConverter")(state.conf()),
+    )
+    # Spark reads every file column as nullable, whatever the footer says
+    return StructType.fromJson(json.loads(schema.asNullable().json()))
 
 
 def _nanos_columns(pf) -> set[str]:
@@ -402,31 +327,26 @@ def _nanos_columns(pf) -> set[str]:
 def load_table(spark: SparkSession, path: str) -> DataFrame:
     """Read a parquet table, normalizing nanosecond timestamps.
 
-    The Spark schema comes from the file's footer (``_parquet_schema``),
-    so the read starts no schema-inference job; a path pyarrow cannot
-    open as one file (a directory, a glob, a URI) and a footer that
-    mapping declines are read with Spark's inference. Parquet
-    TIMESTAMP(NANOS) has no Spark type; with
-    ``spark.sql.legacy.parquet.nanosAsLong`` those columns arrive as
-    bigint nanos — convert to microsecond timestamps (truncation matches
-    DuckDB's ns→us behavior)."""
+    The Spark schema of a single file comes from its footer
+    (``_footer_schema``), so the read starts no schema-inference job; a
+    path pyarrow cannot open as one file (a directory, a glob, a URI) is
+    read with Spark's inference. Parquet TIMESTAMP(NANOS) has no Spark
+    type; with ``spark.sql.legacy.parquet.nanosAsLong`` those columns
+    arrive as bigint nanos — convert to microsecond timestamps
+    (truncation matches DuckDB's ns→us behavior)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
     ensure_session_confs(spark)
-    schema, nanos = None, set()
     try:
         with pq.ParquetFile(path) as pf:
             nanos = _nanos_columns(pf)
-            if session_state(spark).footer_schemas:
-                schema = _parquet_schema(pf)
     except (OSError, pa.ArrowException):
-        pass
-    if schema is None:
         df = spark.read.parquet(path)
-        schema = df.schema
+        schema, nanos = df.schema, set()
     else:
+        schema = _footer_schema(spark, path)
         df = spark.read.schema(schema).parquet(path)
 
     def normalized(f: StructField):

@@ -19,11 +19,9 @@ from databend_spark.suite.base import register
 
 
 def _dialect_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
-    from databend_spark.functions.variant_runtime import register_all_helpers
     from databend_spark.sqlgen.fallbacks import execute
 
     register_tables(spark, sf_dir, ALL_TABLES)
-    register_all_helpers(spark)
     return execute(spark, sql)[0]
 
 

@@ -999,9 +999,6 @@ def run_slt_file(
     from databend_spark.functions.variant_runtime import register_all_helpers
 
     register_all_helpers(spark)
-    from databend_spark.operators.markov import register_markov_udfs
-
-    register_markov_udfs(spark)
 
     _or_replace_tbl = re.compile(
         r"^\s*CREATE\s+OR\s+REPLACE\s+(?:TRANSIENT\s+)?TABLE\s+([\w.`]+)", re.I

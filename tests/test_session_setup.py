@@ -19,7 +19,7 @@ from pyspark.sql.udf import UDFRegistration
 from databend_spark.session import (
     TPCH_TABLES,
     SessionContext,
-    _parquet_schema,
+    _footer_schema,
     load_table,
     register_tables,
     session_state,
@@ -44,6 +44,9 @@ def fresh(spark):
     ("SELECT json_typeof(parse_json('[1,2]')) AS v", "ARRAY"),
     ("SELECT soundex('Robert') AS v", "R163"),
     ("SELECT humanize_size(1024) AS v", "1.00 KiB"),
+    # a helper without the __ prefix
+    ("SELECT markov_generate('[(0,6,4,{97:4,98:2,99:2,100:2})]',"
+     " '{\"order\":1,\"sliding_window_size\":8}', 0, 'ab') AS v", None),
 ])
 def test_helpers_resolve_without_register_tables(fresh, sql, want):
     assert SessionContext(fresh).sql(sql).first()["v"] == want
@@ -146,7 +149,7 @@ def _with_nanos_as_timestamp(schema: StructType, path: str) -> StructType:
 
 def _assert_footer_schema(spark, path):
     inferred = spark.read.parquet(path).schema
-    assert _parquet_schema(pq.ParquetFile(path)) == inferred
+    assert _footer_schema(spark, path) == inferred
     assert load_table(spark, path).schema == _with_nanos_as_timestamp(
         inferred, path
     )
@@ -189,6 +192,7 @@ def test_footer_schema_matches_inference_pyarrow_types(spark, tmp_path):
         "s": pa.array([{"a": 1, "b": "x"}, None]),
         "m": pa.array([[("k", 1)], None], pa.map_(pa.string(), pa.int64())),
         "nested": pa.array([[{"k": [1]}], None]),
+        "null": pa.array([None, None], pa.null()),
     })
     path = str(tmp_path / "types.parquet")
     pq.write_table(table, path)
@@ -198,13 +202,13 @@ def test_footer_schema_matches_inference_pyarrow_types(spark, tmp_path):
     assert row["ts_ns_tz"] == ts[0] and row["dec"] == decimal.Decimal("1.25")
 
 
-def test_unmapped_footer_falls_back_to_inference(spark, tmp_path):
-    path = str(tmp_path / "null_type.parquet")
-    pq.write_table(
-        pa.table({"n": pa.array([None], pa.null()), "i": [1]}), path
-    )
-    assert _parquet_schema(pq.ParquetFile(path)) is None
-    assert load_table(spark, path).schema == spark.read.parquet(path).schema
+def test_directory_falls_back_to_inference(spark, tmp_path):
+    path = tmp_path / "dir"
+    path.mkdir()
+    pq.write_table(pa.table({"i": [1, 2]}), str(path / "part-0.parquet"))
+    df = load_table(spark, str(path))
+    assert df.schema == spark.read.parquet(str(path)).schema
+    assert df.count() == 2
 
 
 @pytest.mark.parametrize("ts_type", ["INT96", "TIMESTAMP_MICROS"])
@@ -224,7 +228,8 @@ def test_spark_written_file_keeps_spark_types(spark, tmp_path, ts_type):
     finally:
         spark.conf.set(key, before)
     (part,) = glob.glob(os.path.join(path, "part-*.parquet"))
-    assert _parquet_schema(pq.ParquetFile(part)) is None  # row metadata
+    inferred = spark.read.parquet(part).schema  # from the row metadata
+    assert _footer_schema(spark, part) == inferred
     loaded = load_table(spark, part)
-    assert loaded.schema == spark.read.parquet(part).schema
+    assert loaded.schema == inferred
     assert loaded.first()["ts"] == ts
