@@ -751,8 +751,8 @@ def _keyset_expr(args: list[str]) -> str | None:
 
 def _to_binary_macro(args: list[str], cast: str) -> str | None:
     """to_binary/try_to_binary: bitmap values (sorted-bigint-array
-    model) serialize through __bitmap_binary; geometry values
-    (__wkt_ewkb) are already binary; strings CAST."""
+    model) serialize through __bitmap_binary; geometry values are
+    already binary; strings CAST."""
     if len(args) != 1:
         return None
     a = args[0]
@@ -761,7 +761,7 @@ def _to_binary_macro(args: list[str], cast: str) -> str | None:
     if re.search(r"st_geography\w*\s*\(|__geo_parse_geog\s*\(", a, re.I):
         # geography → plain WKB (reference casts drop the SRID header)
         return f"__geo_wkb('wkb', {a})"
-    if re.search(r"__wkt_ewkb\s*\(|st_ge\w*from\w*\s*\(", a, re.I):
+    if re.search(r"st_ge\w*from\w*\s*\(", a, re.I):
         return f"({a})"
     return f"{cast}({a} AS BINARY)"
 

@@ -34,7 +34,6 @@ from pyspark.sql.types import (
 
 from databend_spark.functions.dt_parse import convert_tz_eval, dt_parse_eval
 from databend_spark.functions.geom_runtime import GEOMETRY_UDFS
-from databend_spark.functions.geometry import wkt_to_ewkb
 from databend_spark.functions.hashes import (
     blake3_value,
     city64_seed_value,
@@ -2548,9 +2547,6 @@ HELPERS: dict[str, tuple] = {
     "__quantile_tdigest": (quantile_tdigest_eval, ArrayType(_D)),
     "__jsonb_binary": (jsonb_binary_eval, _BIN),
     "__bitmap_binary": (bitmap_binary_eval, _BIN),
-    "__wkt_ewkb": (
-        lambda t, srid=None, ws=True: wkt_to_ewkb(t, srid, ws), _BIN
-    ),
     **GEOMETRY_UDFS,
     **MARKOV_UDFS,
     "__pg_to_char": (pg_format_number, _S),

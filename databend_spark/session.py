@@ -21,15 +21,11 @@ from __future__ import annotations
 import dataclasses
 import json
 import os
+import re
 import threading
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import (
-    LongType,
-    StructField,
-    StructType,
-    TimestampNTZType,
-)
+from pyspark.sql.types import LongType, StructType, TimestampNTZType
 
 TPCH_TABLES = (
     "region",
@@ -59,6 +55,37 @@ CODEGEN_CACHE_CONF = "spark.sql.codegen.cache.maxEntries"
 CODEGEN_CACHE_ENTRIES = 4096
 
 
+# Runtime-settable confs every session MUST carry for correct results on the
+# test data's parquet (nanos timestamps) and for Databend-compatible
+# semantics. get_spark's builder sets them, and ensure_session_confs applies
+# them to *whatever* session is passed in: the caller (e.g. an external
+# correctness harness) may build its own SparkSession without our confs.
+_SESSION_CONFS = (
+    # parquet TIMESTAMP(NANOS) (the test data's events.ts) has no Spark
+    # type: read it as long; load_table converts it to a timestamp
+    ("spark.sql.legacy.parquet.nanosAsLong", "true"),
+    ("spark.sql.session.timeZone", "UTC"),
+    # Databend map_cat/map_insert overwrite on duplicate keys
+    ("spark.sql.mapKeyDedupPolicy", "LAST_WIN"),
+    # Databend casts values on INSERT (binder/default_expr.rs); ANSI
+    # store assignment would reject e.g. string literals into timestamp
+    # columns
+    ("spark.sql.storeAssignmentPolicy", "LEGACY"),
+    # testdata stores micros-without-tz; without this Spark 4 infers
+    # TIMESTAMP_NTZ which breaks unix_micros()/tz arithmetic downstream.
+    # With session tz UTC, LTZ values equal DuckDB's naive reading.
+    ("spark.sql.parquet.inferTimestampNTZ.enabled", "false"),
+    # '${name}' in string literals must stay literal text (regexp
+    # replacement templates) — not Spark variable substitution
+    ("spark.sql.variable.substitute", "false"),
+)
+
+# The directory holding the databend_spark package. Spark's Python workers
+# unpickle helper UDFs by module reference, so they must import the package
+# whatever directory the calling program runs from.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def _default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
@@ -71,7 +98,6 @@ def get_spark(app_name: str = "databend_spark") -> SparkSession:
     cpus = _default_parallelism()
     builder = (
         SparkSession.builder.appName(app_name)
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -98,16 +124,6 @@ def get_spark(app_name: str = "databend_spark") -> SparkSession:
         .config("spark.sql.cteRecursionRowLimit", "10000000")
         .config("spark.sql.cbo.joinReorder.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # driver testdata stores events.ts as parquet TIMESTAMP(NANOS) which
-        # Spark has no native type for; read as long and convert at register
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        # Databend casts values on INSERT (binder/default_expr.rs); ANSI
-        # store assignment would reject e.g. string literals into
-        # timestamp columns
-        .config("spark.sql.storeAssignmentPolicy", "LEGACY")
-        # Databend map_cat/map_insert overwrite on duplicate keys
-        .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
         # Join strategy (guide §3.1): the r2-r8 static 64 MB
         # autoBroadcastJoinThreshold made the planner broadcast the
         # column-pruned FACT table (6M-row lineitem ≈ 100 MB in-memory)
@@ -134,12 +150,13 @@ def get_spark(app_name: str = "databend_spark") -> SparkSession:
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
             str(64 * 1024 * 1024),
         )
-        # '${name}' in string literals stays literal (regexp templates)
-        .config("spark.sql.variable.substitute", "false")
         .config(CODEGEN_CACHE_CONF, str(CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
+    for key, value in _SESSION_CONFS:
+        builder = builder.config(key, value)
     if not os.environ.get("SPARK_GRAFT_ON_CLUSTER"):
         builder = builder.master(f"local[{cpus}]")
     spark = builder.getOrCreate()
@@ -153,25 +170,6 @@ def codegen_compiles(spark: SparkSession) -> int:
     codegen cache hit adds nothing)."""
     metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     return int(metrics.METRIC_COMPILATION_TIME().getCount())
-
-
-# runtime-settable confs every session MUST carry for correct results on the
-# driver's parquet (nanos timestamps) and for Databend-compatible semantics.
-# Applied to *whatever* session is passed in — the caller (e.g. the driver's
-# correctness harness) builds its own SparkSession without our builder confs.
-_SESSION_CONFS = (
-    ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-    ("spark.sql.session.timeZone", "UTC"),
-    ("spark.sql.mapKeyDedupPolicy", "LAST_WIN"),
-    ("spark.sql.storeAssignmentPolicy", "LEGACY"),
-    # testdata stores micros-without-tz; without this Spark 4 infers
-    # TIMESTAMP_NTZ which breaks unix_micros()/tz arithmetic downstream.
-    # With session tz UTC, LTZ values equal DuckDB's naive reading.
-    ("spark.sql.parquet.inferTimestampNTZ.enabled", "false"),
-    # '${name}' in string literals must stay literal text (regexp
-    # replacement templates) — not Spark variable substitution
-    ("spark.sql.variable.substitute", "false"),
-)
 
 
 @dataclasses.dataclass(eq=False)
@@ -278,97 +276,113 @@ def register_tables(
             st.viewed[t] = sf_dir
 
 
-def _footer_schema(spark: SparkSession, path: str) -> StructType:
-    """The schema Spark's inference gives the single parquet file
-    ``path``, from the same Spark code: the footer reader, then the row
-    metadata of a Spark-written file or ParquetToSparkSchemaConverter
-    under the session's parquet confs. It runs on the driver, so no
-    inference job starts. The classes are Spark-internal (signatures of
-    Spark 4.1); tests/test_session_setup.py compares the result with
-    inference, so a change in them shows there."""
+def _jclass(spark: SparkSession, name: str):
+    """The JVM class ``name``, with no py4j round trip (each package step
+    of ``spark._jvm.org...`` is one)."""
     from py4j.java_gateway import JavaClass
 
-    client = spark._jvm._gateway_client
+    return JavaClass(name, spark._jvm._gateway_client)
 
-    def cls(name: str) -> JavaClass:
-        # no py4j round trip; each package step of spark._jvm.org... is one
-        return JavaClass(name, client)
 
+# Hadoop glob of the names Spark's file index lists: it hides "_x" and
+# ".x" (staging dirs, _SUCCESS, .crc files) but keeps a hive "_k=v" dir
+_VISIBLE = "{[!_.]*,_*=*}"
+
+
+def _first_data_file(spark: SparkSession, conf, paths: tuple[str, ...]):
+    """The Hadoop ``Path`` of the first data file under ``paths``, in the
+    order Spark's non-merging schema inference scans them: each path (a
+    glob expands), then depth-first into its visible subdirectories, such
+    as hive ``k=v`` partitions. Listed with Hadoop's ``FileSystem``, so
+    any URI Spark reads works."""
+    path_cls = _jclass(spark, "org.apache.hadoop.fs.Path")
+
+    def first(fs, statuses):
+        if statuses is None:  # no match; not `or ()`, a py4j round trip
+            return None
+        for st in statuses:
+            if not st.isDirectory():
+                return st.getPath()
+            found = first(fs, fs.globStatus(path_cls(st.getPath(), _VISIBLE)))
+            if found is not None:
+                return found
+        return None
+
+    for p in paths:
+        hp = path_cls(p)
+        fs = hp.getFileSystem(conf)
+        found = first(fs, fs.globStatus(hp))
+        if found is not None:
+            return found
+    raise FileNotFoundError(f"no parquet data file under {', '.join(paths)}")
+
+
+# a top-level TIMESTAMP(NANOS) field in a parquet message type's text; a
+# nested field is indented deeper
+_NANOS_FIELD = re.compile(r"^  \w+ int64 (.+) \(TIMESTAMP\(NANOS,\w+\)\)", re.M)
+
+
+def _footer_schema(spark: SparkSession, *paths: str) -> tuple[StructType, set[str]]:
+    """The schema Spark's non-merging inference gives the parquet table
+    at ``paths``, from the same Spark code: the footer reader on the
+    first data file (:func:`_first_data_file`), then the row metadata of
+    a Spark-written file or ParquetToSparkSchemaConverter under the
+    session's parquet confs. Also the names of that file's top-level
+    TIMESTAMP(NANOS) columns, from the footer's message type. It runs in
+    the JVM over py4j, not as a Spark job, so no inference job starts,
+    and it makes the same few py4j calls whatever the column count. The
+    classes are Spark-internal (signatures of Spark 4.1);
+    tests/test_session_setup.py compares the result with inference, so a
+    change in them shows there."""
     parquet = "org.apache.spark.sql.execution.datasources.parquet."
     state = spark._jsparkSession.sessionState()
-    hpath = cls("org.apache.hadoop.fs.Path")(path)
-    meta = cls(parquet + "ParquetFooterReader").readFooter(
-        cls("org.apache.parquet.hadoop.util.HadoopInputFile").fromPath(
-            hpath, state.newHadoopConf()
+    conf = state.newHadoopConf()
+    hpath = _first_data_file(spark, conf, paths)
+    meta = _jclass(spark, parquet + "ParquetFooterReader").readFooter(
+        _jclass(spark, "org.apache.parquet.hadoop.util.HadoopInputFile").fromPath(
+            hpath, conf
         ),
-        cls("org.apache.parquet.format.converter.ParquetMetadataConverter")
-        .SKIP_ROW_GROUPS,
+        _jclass(
+            spark, "org.apache.parquet.format.converter.ParquetMetadataConverter"
+        ).SKIP_ROW_GROUPS,
     )
-    schema = cls(parquet + "ParquetFileFormat").readSchemaFromFooter(
-        cls("org.apache.parquet.hadoop.Footer")(hpath, meta),
-        cls(parquet + "ParquetToSparkSchemaConverter")(state.conf()),
+    schema = _jclass(spark, parquet + "ParquetFileFormat").readSchemaFromFooter(
+        _jclass(spark, "org.apache.parquet.hadoop.Footer")(hpath, meta),
+        _jclass(spark, parquet + "ParquetToSparkSchemaConverter")(state.conf()),
     )
+    nanos = set(_NANOS_FIELD.findall(meta.getFileMetaData().getSchema().toString()))
     # Spark reads every file column as nullable, whatever the footer says
-    return StructType.fromJson(json.loads(schema.asNullable().json()))
+    return StructType.fromJson(json.loads(schema.asNullable().json())), nanos
 
 
-def _nanos_columns(pf) -> set[str]:
-    """Top-level TIMESTAMP(NANOS) columns of parquet file ``pf`` (a nested
-    leaf's path is not its name)."""
-    out = set()
-    for i in range(pf.metadata.num_columns):
-        col = pf.schema.column(i)
-        lt = json.loads(col.logical_type.to_json())
-        if col.name == col.path and lt.get("timeUnit") == "nanoseconds":
-            out.add(col.name)
-    return out
+def load_table(spark: SparkSession, *paths: str) -> DataFrame:
+    """Read a parquet table: one file, a directory, a glob, or several.
 
-
-def load_table(spark: SparkSession, path: str) -> DataFrame:
-    """Read a parquet table, normalizing nanosecond timestamps.
-
-    The Spark schema of a single file comes from its footer
-    (``_footer_schema``), so the read starts no schema-inference job; a
-    path pyarrow cannot open as one file (a directory, a glob, a URI) is
-    read with Spark's inference. Parquet TIMESTAMP(NANOS) has no Spark
-    type; with ``spark.sql.legacy.parquet.nanosAsLong`` those columns
-    arrive as bigint nanos — convert to microsecond timestamps
-    (truncation matches DuckDB's ns→us behavior)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+    The engine's one parquet reader. Like Spark's non-merging inference it
+    takes the schema of one data file, but reads that file's footer
+    in-process (:func:`_footer_schema`) and hands the schema to
+    ``spark.read.schema``, so no inference job starts. Hive partition
+    columns are still discovered from the directory names. Parquet
+    TIMESTAMP(NANOS) has no Spark type; with
+    ``spark.sql.legacy.parquet.nanosAsLong`` those columns arrive as
+    bigint nanos and are converted to microsecond timestamps (truncation
+    matches DuckDB's ns→us behavior)."""
     from pyspark.sql import functions as F
 
     ensure_session_confs(spark)
-    try:
-        with pq.ParquetFile(path) as pf:
-            nanos = _nanos_columns(pf)
-    except (OSError, pa.ArrowException):
-        df = spark.read.parquet(path)
-        schema, nanos = df.schema, set()
-    else:
-        schema = _footer_schema(spark, path)
-        df = spark.read.schema(schema).parquet(path)
-
-    def normalized(f: StructField):
+    schema, nanos = _footer_schema(spark, *paths)
+    fixed = {}
+    for f in schema.fields:
         q = f"`{f.name}`"
-        # pyarrow also reads INT96 as ns, but Spark types that TIMESTAMP:
-        # only the nanos columns Spark reads as longs are converted
         if f.name in nanos and isinstance(f.dataType, LongType):
-            return F.expr(f"timestamp_micros({q} DIV 1000)").alias(f.name)
+            fixed[f.name] = F.expr(f"timestamp_micros({q} DIV 1000)")
         # a TIMESTAMP_NTZ column (a Spark-written file's row metadata can
         # carry one) is read as TIMESTAMP: session tz is UTC, so the
         # instant is unchanged
-        if isinstance(f.dataType, TimestampNTZType):
-            return F.col(q).cast("timestamp").alias(f.name)
-        return None
-
-    fixed = [normalized(f) for f in schema.fields]
-    if all(c is None for c in fixed):
-        return df
-    return df.select(*[
-        F.col(f"`{f.name}`") if c is None else c
-        for f, c in zip(schema.fields, fixed)
-    ])
+        elif isinstance(f.dataType, TimestampNTZType):
+            fixed[f.name] = F.col(q).cast("timestamp")
+    df = spark.read.schema(schema).parquet(*paths)
+    return df.withColumns(fixed) if fixed else df
 
 
 class SessionContext:
@@ -392,29 +406,23 @@ class SessionContext:
 
     # -- catalog -----------------------------------------------------------
     def register_parquet(self, name: str, path: str) -> DataFrame:
-        df = load_table(self.spark, path)
-        df.createOrReplaceTempView(name)
-        return df
+        return self.register_view(name, load_table(self.spark, path))
 
     def register_csv(self, name: str, path: str, **options) -> DataFrame:
-        options.setdefault("header", "true")
-        options.setdefault("inferSchema", "true")
-        df = self.spark.read.options(**options).csv(path)
-        df.createOrReplaceTempView(name)
-        return df
+        from databend_spark.sources.readers import read_stage
+
+        return self.register_view(name, read_stage(self.spark, path, "csv", **options))
 
     def register_json(self, name: str, path: str, schema=None, **options) -> DataFrame:
-        reader = self.spark.read.options(**options)
-        if schema is not None:
-            reader = reader.schema(schema)
-        df = reader.json(path)
-        df.createOrReplaceTempView(name)
-        return df
+        from databend_spark.sources.readers import read_stage
+
+        df = read_stage(self.spark, path, "ndjson", schema, **options)
+        return self.register_view(name, df)
 
     def register_orc(self, name: str, path: str) -> DataFrame:
-        df = self.spark.read.orc(path)
-        df.createOrReplaceTempView(name)
-        return df
+        from databend_spark.sources.readers import read_stage
+
+        return self.register_view(name, read_stage(self.spark, path, "orc"))
 
     def register_view(self, name: str, df: DataFrame) -> DataFrame:
         df.createOrReplaceTempView(name)

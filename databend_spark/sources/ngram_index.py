@@ -23,13 +23,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from databend_spark.session import load_table
+
 
 def build_ngram_index(
     spark: SparkSession, table_path: str, col: str, n: int = 3
 ) -> str:
     """Write the (file, gram) index beside the table; returns its path."""
     idx_path = table_path.rstrip("/") + f"_ngram{n}_idx"
-    df = spark.read.parquet(table_path).select(
+    df = load_table(spark, table_path).select(
         F.input_file_name().alias("file"), F.col(col).alias("_s")
     )
     grams = (
@@ -87,7 +89,7 @@ def pruned_like_scan(
     import os
 
     idx_path = idx_path or table_path.rstrip("/") + f"_ngram{n}_idx"
-    full = spark.read.parquet(table_path).filter(
+    full = load_table(spark, table_path).filter(
         F.lower(F.col(col)).contains(needle.lower())
     )
     if len(needle) < n or not os.path.exists(idx_path):
@@ -98,7 +100,7 @@ def pruned_like_scan(
         .select(F.explode(_gram_array_lit(needle, n)).alias("gram"))
     )
     ngrams = needle_grams.count()
-    idx = spark.read.parquet(idx_path)
+    idx = load_table(spark, idx_path)
     matches = (
         idx.join(F.broadcast(needle_grams), "gram")
         .groupBy("file")
@@ -112,7 +114,7 @@ def pruned_like_scan(
         return full.limit(0)
     if len(files) > max_files:
         return full
-    return spark.read.parquet(*files).filter(
+    return load_table(spark, *files).filter(
         F.lower(F.col(col)).contains(needle.lower())
     )
 

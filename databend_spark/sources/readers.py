@@ -16,6 +16,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from databend_spark.session import load_table
+
 # databend format name → (spark format, default reader options)
 FORMATS: dict[str, tuple[str, dict[str, str]]] = {
     "parquet": ("parquet", {}),
@@ -41,26 +43,28 @@ def read_stage(
     schema=None,
     **options,
 ) -> DataFrame:
-    """SELECT FROM @stage(FILE_FORMAT => fmt) — format-dispatched read."""
+    """SELECT FROM @stage(FILE_FORMAT => fmt) — format-dispatched read.
+    Parquet without a schema or reader options goes through
+    :func:`~databend_spark.session.load_table`, the engine's parquet
+    reader (schema from one footer, no inference job)."""
     key = fmt.lower()
     if key not in FORMATS:
         raise ValueError(f"unknown file format {fmt!r}; supported: {sorted(FORMATS)}")
+    if key == "parquet" and schema is None and not options:
+        return load_table(spark, path)
     spark_fmt, defaults = FORMATS[key]
-    if key in _NEEDS_JAR:
-        try:
-            return _do_read(spark, path, spark_fmt, schema, {**defaults, **options})
-        except Exception as e:  # jar missing → actionable error
-            raise NotImplementedError(
-                f"{key} needs the {_NEEDS_JAR[key]} package on the classpath"
-            ) from e
-    return _do_read(spark, path, spark_fmt, schema, {**defaults, **options})
-
-
-def _do_read(spark, path, spark_fmt, schema, options) -> DataFrame:
-    reader = spark.read.format(spark_fmt).options(**options)
+    reader = spark.read.format(spark_fmt).options(**{**defaults, **options})
     if schema is not None:
         reader = reader.schema(schema)
-    return reader.load(path)
+    try:
+        return reader.load(path)
+    except Exception as e:
+        if key not in _NEEDS_JAR:
+            raise
+        # jar missing → actionable error
+        raise NotImplementedError(
+            f"{key} needs the {_NEEDS_JAR[key]} package on the classpath"
+        ) from e
 
 
 def write_stage(

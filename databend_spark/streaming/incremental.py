@@ -32,6 +32,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from databend_spark.session import load_table
+
 
 class VersionedTable:
     """Append-only snapshot-versioned parquet table."""
@@ -113,7 +115,7 @@ class VersionedTable:
         dirs = self._dirs(0, v)
         if not dirs:
             raise ValueError(f"table {self.path} empty at version {v}")
-        return self.spark.read.parquet(*dirs)
+        return load_table(self.spark, *dirs)
 
     def read_at_timestamp(self, ts: float) -> DataFrame:
         """AT (TIMESTAMP => ...) — last version committed ≤ ts."""
@@ -128,7 +130,7 @@ class VersionedTable:
         dirs = self._dirs(from_version, to_v, as_changes=True)
         if not dirs:
             return self.read(self.version).limit(0)
-        return self.spark.read.parquet(*dirs)
+        return load_table(self.spark, *dirs)
 
     def changes_standard(
         self, from_version: int, to_version: int | None = None
@@ -410,4 +412,4 @@ class DynamicTable:
         log = self.target._read_log()
         if not log:
             raise ValueError("dynamic table never refreshed")
-        return self.spark.read.parquet(log[-1]["dir"])
+        return load_table(self.spark, log[-1]["dir"])

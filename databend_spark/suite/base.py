@@ -31,6 +31,7 @@ class Query:
     fn: Callable[[SparkSession, str], DataFrame]
     oracle: str | None  # DuckDB SQL, or None → driver does rows-only check
     doc: str = ""
+    sql: str | None = None  # Spark SQL text of a sql_query entry
 
 
 REGISTRY: dict[str, Query] = {}
@@ -65,6 +66,7 @@ def sql_query(name: str, spark_sql: str, oracle: str | None = "same", doc: str =
         fn=fn,
         oracle=spark_sql if oracle == "same" else oracle,
         doc=doc,
+        sql=spark_sql,
     )
 
 

@@ -21,6 +21,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from databend_spark.session import load_table
 from databend_spark.suite.base import REGISTRY, Query
 
 _DIR = os.path.abspath(
@@ -76,7 +77,7 @@ def _register(name: str, sql: str, doc: str) -> None:
         for t in _TABLES:
             p = os.path.join(_DIR, f"{t}.parquet")
             if os.path.exists(p):
-                spark.read.parquet(p).createOrReplaceTempView(f"tpcds_{t}")
+                load_table(spark, p).createOrReplaceTempView(f"tpcds_{t}")
         return spark.sql(spark_text)
 
     REGISTRY[name] = Query(name=name, fn=fn, oracle=_oracle(sql), doc=doc)

@@ -6,6 +6,7 @@ import datetime
 import decimal
 import glob
 import os
+import subprocess
 import sys
 import threading
 import time
@@ -13,19 +14,26 @@ import time
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import SparkSession
 from pyspark.sql.types import LongType, StructField, StructType, TimestampType
 from pyspark.sql.udf import UDFRegistration
 
 from databend_spark.session import (
+    CODEGEN_CACHE_CONF,
+    CODEGEN_CACHE_ENTRIES,
     TPCH_TABLES,
     SessionContext,
+    _default_parallelism,
     _footer_schema,
+    get_spark,
     load_table,
     register_tables,
     session_state,
 )
+from databend_spark.streaming.incremental import DynamicTable, VersionedTable
 
 SF001 = "/root/testdata/sf0.01"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _jobs(spark, group: str) -> int:
@@ -149,7 +157,7 @@ def _with_nanos_as_timestamp(schema: StructType, path: str) -> StructType:
 
 def _assert_footer_schema(spark, path):
     inferred = spark.read.parquet(path).schema
-    assert _footer_schema(spark, path) == inferred
+    assert _footer_schema(spark, path)[0] == inferred
     assert load_table(spark, path).schema == _with_nanos_as_timestamp(
         inferred, path
     )
@@ -202,13 +210,102 @@ def test_footer_schema_matches_inference_pyarrow_types(spark, tmp_path):
     assert row["ts_ns_tz"] == ts[0] and row["dec"] == decimal.Decimal("1.25")
 
 
-def test_directory_falls_back_to_inference(spark, tmp_path):
+def test_directory_reads_through_footer(spark, tmp_path):
     path = tmp_path / "dir"
     path.mkdir()
     pq.write_table(pa.table({"i": [1, 2]}), str(path / "part-0.parquet"))
-    df = load_table(spark, str(path))
+    sc = spark.sparkContext
+    sc.setJobGroup("dir-guard", "load_table of a directory")
+    try:
+        df = load_table(spark, str(path))
+        assert _jobs(spark, "dir-guard") == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
     assert df.schema == spark.read.parquet(str(path)).schema
     assert df.count() == 2
+
+
+def _nanos_table(path: str, ts: datetime.datetime) -> None:
+    pq.write_table(
+        pa.table({"ts": pa.array([ts], pa.timestamp("ns")), "i": [1]}), path
+    )
+
+
+def test_directory_reads_nanos_as_timestamp(ctx, tmp_path):
+    """A directory, a glob and a hive-partitioned tree read nanos columns
+    the way a single file does."""
+    ts = datetime.datetime(2024, 1, 1, 12, 0, 0, 123456)
+    for sub in ("flat", "hive/k=1", "hive/k=2"):
+        (tmp_path / sub).mkdir(parents=True)
+        _nanos_table(str(tmp_path / sub / "part-0.parquet"), ts)
+    (tmp_path / "flat" / "_SUCCESS").write_text("")
+    for path, n in [
+        (tmp_path / "flat", 1),
+        (tmp_path / "flat" / "*.parquet", 1),
+        (tmp_path / "hive", 2),
+    ]:
+        df = ctx.register_parquet("nsd", str(path))
+        assert dict(df.dtypes)["ts"] == "timestamp"
+        assert [r.ts for r in ctx.sql("SELECT ts FROM nsd").collect()] == [ts] * n
+
+
+def test_footer_skips_hidden_and_empty_dirs(spark, tmp_path):
+    root = tmp_path / "t"
+    for d in ("_temporary/0", ".staging", "_c=0", "k=1"):
+        (root / d).mkdir(parents=True)
+    # files Spark's listing hides carry another schema
+    for d in ("_temporary/0", ".staging"):
+        pq.write_table(pa.table({"hidden": ["x"]}), str(root / d / "part-0.parquet"))
+    pq.write_table(pa.table({"i": [1]}), str(root / "k=1/part-0.parquet"))
+    (root / "_SUCCESS").write_text("")
+    # _c=0 is a visible hive directory with no file, so the walk backs out
+    for path in (str(root), str(root / "k=*")):
+        df = load_table(spark, path)
+        assert df.schema == spark.read.parquet(path).schema
+        assert df.count() == 1
+    with pytest.raises(FileNotFoundError):
+        load_table(spark, str(root / "_c=0"))
+
+
+def test_partitioned_directories_match_inference(spark, tmp_path):
+    hive = tmp_path / "hive"
+    for k, s in [(1, "a"), (2, "b")]:
+        (hive / f"k={k}" / f"s={s}").mkdir(parents=True)
+        pq.write_table(
+            pa.table({"i": [k], "d": [decimal.Decimal("1.5")]}),
+            str(hive / f"k={k}" / f"s={s}" / "part-0.parquet"),
+        )
+    written = str(tmp_path / "spark_written")
+    spark.sql(
+        "SELECT id AS i, CAST(id AS STRING) AS s, id % 2 AS p,"
+        " array(id) AS l FROM range(4)"
+    ).write.partitionBy("p").parquet(written)
+    for path in (str(hive), written):
+        df = load_table(spark, path)
+        assert df.schema == spark.read.parquet(path).schema
+        assert sorted(df.collect()) == sorted(spark.read.parquet(path).collect())
+
+
+def test_engine_reads_start_no_job(spark, tmp_path):
+    base = VersionedTable(spark, str(tmp_path / "base"))
+    base.append(spark.sql("SELECT id, id * 2 AS v FROM range(4)"))
+    base.append(spark.sql("SELECT id, id * 2 AS v FROM range(4, 6)"))
+    full = DynamicTable(spark, base, str(tmp_path / "full"), lambda df: df)
+    inc = DynamicTable(
+        spark, base, str(tmp_path / "inc"), lambda df: df, mode="incremental"
+    )
+    full.refresh()
+    inc.refresh()
+    sc = spark.sparkContext
+    sc.setJobGroup("read-guard", "engine reads of versioned tables")
+    try:
+        dfs = [base.read(), base.read(1), base.changes(1), full.read(), inc.read()]
+        assert _jobs(spark, "read-guard") == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert [df.count() for df in dfs] == [6, 4, 2, 6, 6]
 
 
 @pytest.mark.parametrize("ts_type", ["INT96", "TIMESTAMP_MICROS"])
@@ -229,7 +326,72 @@ def test_spark_written_file_keeps_spark_types(spark, tmp_path, ts_type):
         spark.conf.set(key, before)
     (part,) = glob.glob(os.path.join(path, "part-*.parquet"))
     inferred = spark.read.parquet(part).schema  # from the row metadata
-    assert _footer_schema(spark, part) == inferred
+    assert _footer_schema(spark, part) == (inferred, set())
     loaded = load_table(spark, part)
     assert loaded.schema == inferred
     assert loaded.first()["ts"] == ts
+
+
+def test_get_spark_builder_confs(spark, monkeypatch):
+    """get_spark states each conf once; the set it builds is fixed."""
+    built = {}
+
+    def capture(builder):
+        built.update(builder._options)
+        return spark
+
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", capture)
+    assert get_spark("confs") is spark
+    cpus = _default_parallelism()
+    mib = 1024 * 1024
+    assert built == {
+        "spark.app.name": "confs",
+        "spark.master": f"local[{cpus}]",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.shuffle.partitions": str(cpus),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum":
+            os.environ.get("SPARK_GRAFT_INITIAL_PARTITIONS", str(8 * cpus)),
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.cbo.enabled": "true",
+        "spark.sql.cteRecursionLevelLimit": "100000",
+        "spark.sql.cteRecursionRowLimit": "10000000",
+        "spark.sql.cbo.joinReorder.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
+        "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+        "spark.sql.storeAssignmentPolicy": "LEGACY",
+        "spark.sql.mapKeyDedupPolicy": "LAST_WIN",
+        "spark.sql.autoBroadcastJoinThreshold": str(4 * mib),
+        "spark.sql.adaptive.autoBroadcastJoinThreshold": str(64 * mib),
+        "spark.sql.join.preferSortMergeJoin": "false",
+        "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": str(64 * mib),
+        "spark.sql.variable.substitute": "false",
+        CODEGEN_CACHE_CONF: str(CODEGEN_CACHE_ENTRIES),
+        "spark.ui.enabled": "false",
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+        "spark.executorEnv.PYTHONPATH": REPO,
+    }
+
+
+def test_python_workers_import_the_engine(tmp_path):
+    """Helper UDFs are pickled by module reference, so a program that puts
+    the package on sys.path by hand and runs from another directory must
+    still leave its Python workers able to import it."""
+    script = (
+        "import sys\n"
+        f"sys.path.insert(0, {REPO!r})\n"
+        "from databend_spark.session import SessionContext, get_spark\n"
+        "ctx = SessionContext(get_spark('worker-import'))\n"
+        # split_part runs as the __split_part Python helper
+        "print(ctx.sql(\"SELECT split_part('a,b,c', ',', 2) AS v\").first()['v'])\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="1", SPARK_GRAFT_DRIVER_MEM="1g")
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert out.stdout.split() == ["b"]

@@ -47,6 +47,39 @@ def test_infer_schema(spark, sample, tmp_path):
     assert rows == {("id", "int"), ("name", "string"), ("score", "double")}
 
 
+def test_register_methods_keep_reader_defaults(spark, tmp_path):
+    """register_csv/json/orc read through read_stage with the defaults
+    they set themselves before: a header and inferred types for CSV,
+    one object per line for JSON."""
+    from databend_spark.session import SessionContext
+
+    ctx = SessionContext(spark)
+    df = spark.sql(
+        "SELECT 1 AS i, 'x' AS s, 1.5 AS d, DATE'2024-01-01' AS dt,"
+        " TIMESTAMP'2024-01-01 00:00:01' AS ts"
+    )
+    csv, js, orc = (str(tmp_path / f) for f in ("c", "j", "o"))
+    df.write.option("header", "true").csv(csv)
+    df.write.json(js)
+    df.write.orc(orc)
+    got = ctx.register_csv("reg_csv", csv).dtypes
+    assert got == [
+        ("i", "int"), ("s", "string"), ("d", "double"), ("dt", "date"),
+        ("ts", "timestamp"),
+    ]
+    assert got == spark.read.options(header="true", inferSchema="true").csv(csv).dtypes
+    got = ctx.register_json("reg_json", js).dtypes
+    assert got == [
+        ("d", "double"), ("dt", "string"), ("i", "bigint"), ("s", "string"),
+        ("ts", "string"),
+    ]
+    assert got == spark.read.json(js).dtypes
+    got = ctx.register_json("reg_json", js, schema="i int, dt date").dtypes
+    assert got == [("i", "int"), ("dt", "date")]
+    assert ctx.register_orc("reg_orc", orc).dtypes == df.dtypes
+    assert ctx.sql("SELECT count(*) AS n FROM reg_orc").first().n == 1
+
+
 def test_copy_into_dedups_file_history(ctx, spark, sample, tmp_path):
     p1, p2 = str(tmp_path / "f1"), str(tmp_path / "f2")
     sample.write.parquet(p1)
