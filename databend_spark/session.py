@@ -665,9 +665,11 @@ class SessionContext:
         fresh = [p for p in paths if p not in seen]
         if not fresh:
             return 0
-        reader = self.spark.read.options(**options)
-        df = getattr(reader, fmt)(*fresh)
-        if table in self.tables():
+        if fmt == "parquet" and not options:
+            df = load_table(self.spark, *fresh)
+        else:
+            df = getattr(self.spark.read.options(**options), fmt)(*fresh)
+        if self.spark.catalog.tableExists(table):
             df.write.insertInto(table)
         else:
             df.write.saveAsTable(table)

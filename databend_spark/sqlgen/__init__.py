@@ -195,47 +195,66 @@ _NUMBERS_TVF = re.compile(
 )
 
 # type-name aliases (Databend unsigned/width names + common dialect
-# spellings) → Spark types; unsigned widen per SURVEY §1.2
+# spellings) → Spark types; unsigned widen per SURVEY §1.2. The names
+# below rewrite both as bare type names and in cast position.
+_TYPE_NAMES = {
+    "UTINYINT": "SMALLINT", "USMALLINT": "INT", "UINTEGER": "BIGINT",
+    "UBIGINT": "DECIMAL(20,0)", "UINT8": "SMALLINT", "UINT16": "INT",
+    "UINT32": "BIGINT", "UINT64": "DECIMAL(20,0)", "INT8": "BIGINT",
+    "INT4": "INT", "INT2": "SMALLINT", "INT1": "TINYINT",
+    "INT16": "SMALLINT", "INT32": "INT", "INT64": "BIGINT",
+    "FLOAT32": "FLOAT", "FLOAT64": "DOUBLE", "HUGEINT": "DECIMAL(38,0)",
+    "FLOAT4": "FLOAT", "FLOAT8": "DOUBLE", "BOOL": "BOOLEAN",
+    "BYTEA": "BINARY",
+    # our Variant model is JSON-as-string (functions.registry
+    # parse_json_variant); Spark 4's native VARIANT lacks most accessors
+    "VARIANT": "STRING",
+}
+
+
+def _bare_type(name: str, spark_type: str | None = None):
+    # not quoted or qualified, and not followed by an identifier
+    # (``int8 BIGINT`` declares a column named int8)
+    pat = (rf"(?<![`.\w]){name}\b(?!\s*`)(?!\s+(?!NOT\b|NULL\b|DEFAULT\b"
+           r"|COMMENT\b|UNSIGNED\b|AS\b)[A-Za-z_])")
+    return re.compile(pat, re.I), spark_type or _TYPE_NAMES[name]
+
+
 _TYPE_ALIASES = [
-    (re.compile(r"(?<![`.\w])UTINYINT\b(?!\s*`)(?!\s+(?!NOT\b|NULL\b|DEFAULT\b|COMMENT\b|UNSIGNED\b|AS\b)[A-Za-z_])", re.I), "SMALLINT"),
-    (re.compile(r"(?<![`.\w])USMALLINT\b(?!\s*`)(?!\s+(?!NOT\b|NULL\b|DEFAULT\b|COMMENT\b|UNSIGNED\b|AS\b)[A-Za-z_])", re.I), "INT"),
-    (re.compile(r"(?<![`.\w])UINTEGER\b(?!\s*`)(?!\s+(?!NOT\b|NULL\b|DEFAULT\b|COMMENT\b|UNSIGNED\b|AS\b)[A-Za-z_])", re.I), "BIGINT"),
-    (re.compile(r"(?<![`.\w])UBIGINT\b(?!\s*`)(?!\s+(?!NOT\b|NULL\b|DEFAULT\b|COMMENT\b|UNSIGNED\b|AS\b)[A-Za-z_])", re.I), "DECIMAL(20,0)"),
-    (re.compile(r"(?<![`.\w])UINT8\b(?!\s*`)(?!\s+(?!NOT\b|NULL\b|DEFAULT\b|COMMENT\b|UNSIGNED\b|AS\b)[A-Za-z_])", re.I), "SMALLINT"),
-    (re.compile(r"(?<![`.\w])UINT16\b(?!\s*`)(?!\s+(?!NOT\b|NULL\b|DEFAULT\b|COMMENT\b|UNSIGNED\b|AS\b)[A-Za-z_])", re.I), "INT"),
-    (re.compile(r"(?<![`.\w])UINT32\b(?!\s*`)(?!\s+(?!NOT\b|NULL\b|DEFAULT\b|COMMENT\b|UNSIGNED\b|AS\b)[A-Za-z_])", re.I), "BIGINT"),
-    (re.compile(r"(?<![`.\w])UINT64\b(?!\s*`)(?!\s+(?!NOT\b|NULL\b|DEFAULT\b|COMMENT\b|UNSIGNED\b|AS\b)[A-Za-z_])", re.I), "DECIMAL(20,0)"),
-    (re.compile(r"(?<![`.\w])INT8\b(?!\s*`)(?!\s+(?!NOT\b|NULL\b|DEFAULT\b|COMMENT\b|UNSIGNED\b|AS\b)[A-Za-z_])", re.I), "BIGINT"),
-    (re.compile(r"(?<![`.\w])INT4\b(?!\s*`)(?!\s+(?!NOT\b|NULL\b|DEFAULT\b|COMMENT\b|UNSIGNED\b|AS\b)[A-Za-z_])", re.I), "INT"),
-    (re.compile(r"(?<![`.\w])INT2\b(?!\s*`)(?!\s+(?!NOT\b|NULL\b|DEFAULT\b|COMMENT\b|UNSIGNED\b|AS\b)[A-Za-z_])", re.I), "SMALLINT"),
-    (re.compile(r"(?<![`.\w])INT1\b(?!\s*`)(?!\s+(?!NOT\b|NULL\b|DEFAULT\b|COMMENT\b|UNSIGNED\b|AS\b)[A-Za-z_])", re.I), "TINYINT"),
-    (re.compile(r"(?<![`.\w])INT16\b(?!\s*`)(?!\s+(?!NOT\b|NULL\b|DEFAULT\b|COMMENT\b|UNSIGNED\b|AS\b)[A-Za-z_])", re.I), "SMALLINT"),
-    (re.compile(r"(?<![`.\w])INT32\b(?!\s*`)(?!\s+(?!NOT\b|NULL\b|DEFAULT\b|COMMENT\b|UNSIGNED\b|AS\b)[A-Za-z_])", re.I), "INT"),
-    (re.compile(r"(?<![`.\w])INT64\b(?!\s*`)(?!\s+(?!NOT\b|NULL\b|DEFAULT\b|COMMENT\b|UNSIGNED\b|AS\b)[A-Za-z_])", re.I), "BIGINT"),
-    (re.compile(r"(?<![`.\w])FLOAT32\b(?!\s*`)(?!\s+(?!NOT\b|NULL\b|DEFAULT\b|COMMENT\b|UNSIGNED\b|AS\b)[A-Za-z_])", re.I), "FLOAT"),
-    (re.compile(r"(?<![`.\w])FLOAT64\b(?!\s*`)(?!\s+(?!NOT\b|NULL\b|DEFAULT\b|COMMENT\b|UNSIGNED\b|AS\b)[A-Za-z_])", re.I), "DOUBLE"),
-    (re.compile(r"(?<![`.\w])HUGEINT\b(?!\s*`)(?!\s+(?!NOT\b|NULL\b|DEFAULT\b|COMMENT\b|UNSIGNED\b|AS\b)[A-Za-z_])", re.I), "DECIMAL(38,0)"),
+    # postfix-cast occurrences (`x::Int64 alias`) must rewrite even when
+    # an identifier follows — the bare-name lookahead only protects bare
+    # column positions (select_orc reads columns literally named int8)
+    *(
+        (re.compile(rf"(?<=::)\s*{nm}\b(?!\s*`)", re.I), rep)
+        for nm, rep in _TYPE_NAMES.items()
+    ),
+    *(
+        (re.compile(rf"(\bAS\s+){nm}\b(?=\s*[,)\s])", re.I), rf"\g<1>{rep}")
+        for nm, rep in _TYPE_NAMES.items()
+    ),
+    *map(_bare_type, (
+        "UTINYINT USMALLINT UINTEGER UBIGINT UINT8 UINT16 UINT32 UINT64 "
+        "INT8 INT4 INT2 INT1 INT16 INT32 INT64 FLOAT32 FLOAT64 HUGEINT"
+    ).split()),
     (re.compile(r"\bDATETIME\s*\(\s*\d+\s*\)", re.I), "TIMESTAMP"),
     (re.compile(r"\bDATETIME\b", re.I), "TIMESTAMP"),
-    (re.compile(r"(?<![`.\w])FLOAT4\b(?!\s*`)(?!\s+(?!NOT\b|NULL\b|DEFAULT\b|COMMENT\b|UNSIGNED\b|AS\b)[A-Za-z_])", re.I), "FLOAT"),
-    (re.compile(r"(?<![`.\w])FLOAT8\b(?!\s*`)(?!\s+(?!NOT\b|NULL\b|DEFAULT\b|COMMENT\b|UNSIGNED\b|AS\b)[A-Za-z_])", re.I), "DOUBLE"),
+    _bare_type("FLOAT4"),
+    _bare_type("FLOAT8"),
     (re.compile(r"\bVARCHAR\b(?!\s*\()", re.I), "STRING"),
     # CHAR only as a bare type name — char(97) is the code-point function
     (re.compile(r"\bCHAR\b(?!\s*\()", re.I), "STRING"),
-    (re.compile(r"(?<![`.\w])BOOL\b(?!\s*`)(?!\s+(?!NOT\b|NULL\b|DEFAULT\b|COMMENT\b|UNSIGNED\b|AS\b)[A-Za-z_])", re.I), "BOOLEAN"),
+    _bare_type("BOOL"),
     # TEXT only in type position (cast syntax) — `text` is a common
     # column name and must not be rewritten
     (re.compile(r"::\s*TEXT\b", re.I), "::STRING"),
     (re.compile(r"\bAS\s+TEXT\s*\)", re.I), "AS STRING)"),
-    (re.compile(r"(?<![`.\w])BYTEA\b(?!\s*`)(?!\s+(?!NOT\b|NULL\b|DEFAULT\b|COMMENT\b|UNSIGNED\b|AS\b)[A-Za-z_])", re.I), "BINARY"),
-    # our Variant model is JSON-as-string (functions.registry
-    # parse_json_variant); Spark 4's native VARIANT lacks most accessors
-    (re.compile(r"(?<![`.\w])VARIANT\b(?!\s*`)(?!\s+(?!NOT\b|NULL\b|DEFAULT\b|COMMENT\b|UNSIGNED\b|AS\b)[A-Za-z_])", re.I), "STRING"),
+    _bare_type("BYTEA"),
+    _bare_type("VARIANT"),
     # JSON as a declared type (not the json_* function family)
     (re.compile(r"\bJSON\b(?!\s*\()", re.I), "STRING"),
     # GEOMETRY/GEOGRAPHY columns hold EWKB bytes (functions/geom_kernel.py)
-    (re.compile(r"(?<![`.\w])GEOMETRY\b(?!\s*`)(?!\s+(?!NOT\b|NULL\b|DEFAULT\b|COMMENT\b|UNSIGNED\b|AS\b)[A-Za-z_])", re.I), "BINARY"),
-    (re.compile(r"(?<![`.\w])GEOGRAPHY\b(?!\s*`)(?!\s+(?!NOT\b|NULL\b|DEFAULT\b|COMMENT\b|UNSIGNED\b|AS\b)[A-Za-z_])", re.I), "BINARY"),
+    _bare_type("GEOMETRY", "BINARY"),
+    _bare_type("GEOGRAPHY", "BINARY"),
     # Vector(N) → float array (reference types/vector.rs)
     (re.compile(r"\bVECTOR\s*\(\s*\d+\s*\)", re.I), "ARRAY<FLOAT>"),
     # bitmap model: sorted array of distinct int64 (functions/bitmap.py)
@@ -249,26 +268,6 @@ _TYPE_ALIASES = [
     (re.compile(r"\bUNSIGNED\b", re.I), "BIGINT"),
     (re.compile(r"\bSIGNED\b", re.I), "BIGINT"),
 ]
-# postfix-cast occurrences (`x::Int64 alias`) must rewrite even when an
-# identifier follows — the name-vs-type lookahead above only protects
-# bare column positions (select_orc reads columns literally named int8)
-_POSTFIX_CASTS = [
-    ("UTINYINT", "SMALLINT"), ("USMALLINT", "INT"), ("UINTEGER", "BIGINT"),
-    ("UBIGINT", "DECIMAL(20,0)"), ("UINT8", "SMALLINT"), ("UINT16", "INT"),
-    ("UINT32", "BIGINT"), ("UINT64", "DECIMAL(20,0)"), ("INT8", "BIGINT"),
-    ("INT4", "INT"), ("INT2", "SMALLINT"), ("INT1", "TINYINT"),
-    ("INT16", "SMALLINT"), ("INT32", "INT"), ("INT64", "BIGINT"),
-    ("FLOAT32", "FLOAT"), ("FLOAT64", "DOUBLE"), ("HUGEINT", "DECIMAL(38,0)"),
-    ("FLOAT4", "FLOAT"), ("FLOAT8", "DOUBLE"), ("BOOL", "BOOLEAN"),
-    ("BYTEA", "BINARY"), ("VARIANT", "STRING"),
-]
-_TYPE_ALIASES = [
-    (re.compile(rf"(?<=::)\s*{nm}\b(?!\s*`)", re.I), rep)
-    for nm, rep in _POSTFIX_CASTS
-] + [
-    (re.compile(rf"(\bAS\s+){nm}\b(?=\s*[,)\s])", re.I), rf"\g<1>{rep}")
-    for nm, rep in _POSTFIX_CASTS
-] + _TYPE_ALIASES
 
 _DDL_TEXT = re.compile(r"\bTEXT\b", re.I)
 
@@ -5450,7 +5449,7 @@ def has_qualify(sql: str) -> bool:
 
 
 _WHERE_KW = re.compile(r"\bWHERE\b", re.I)
-_CLAUSE_END = re.compile(
+_WHERE_END = re.compile(
     r"\b(GROUP|ORDER|LIMIT|HAVING|WINDOW|UNION|INTERSECT|EXCEPT|QUALIFY)\b",
     re.I,
 )
@@ -5478,7 +5477,7 @@ def wrap_where_boolean(sql: str) -> str:
                     break
                 depth -= 1
             elif depth == 0:
-                km = _CLAUSE_END.match(out, i)
+                km = _WHERE_END.match(out, i)
                 if km and not out[i - 1].isalnum():
                     end = i
                     break

@@ -6,8 +6,9 @@ column types are known: a VARIANT column that reads like an array, an
 integer used as a boolean, a lateral alias inside a window. Each
 ``Fallback`` names one such case. Its error predicate looks at the
 failed attempt; its candidates are Databend SQL texts (rewritten under
-the entry's ``RewriteOptions``; one that rewrites to the failed text
-is skipped) or thunks that return a DataFrame, or None to decline.
+the caller's ``RewriteOptions`` with the entry's flags set; one that
+rewrites to the failed text is skipped) or thunks that return a
+DataFrame, or None to decline.
 ``execute`` tries the entries in table order and returns the first
 success with the entry's name; when nothing succeeds the first
 attempt's error is raised. Before a Spark text runs, the Python
@@ -49,6 +50,7 @@ class Failure:
     rewritten: str  # the Spark text that failed
     msg: str  # its error message
     resubmit: Callable[[str], Any]  # runs a new text through the whole path
+    opts: RewriteOptions = DEFAULT  # the caller's; candidates add theirs
 
 
 @dataclasses.dataclass(frozen=True)
@@ -80,7 +82,7 @@ def execute(
     """Run Databend ``sql``; return ``(DataFrame, fallback name or
     None)``. ``rewritten`` overrides the first attempt's Spark text;
     ``resubmit`` is what the chaining fallbacks call (default: this
-    function)."""
+    function, with ``opts``); candidates add their entry's flags."""
     table = FALLBACKS if table is None else table
     if rewritten is None:
         rewritten = rewrite_databend_sql(sql, opts)
@@ -90,7 +92,8 @@ def execute(
     except Exception as e:  # noqa: BLE001
         f = Failure(
             spark, sql, rewritten, str(e),
-            resubmit or (lambda s: execute(spark, s, table=table)[0]),
+            resubmit or (lambda s: execute(spark, s, opts, table=table)[0]),
+            opts,
         )
         for fb in table:
             hit = fb.when(f)
@@ -102,6 +105,8 @@ def execute(
 
 
 def _attempt(fb: Fallback, f: Failure, hit):
+    flags = {k: True for k, v in dataclasses.asdict(fb.opts).items() if v}
+    opts = dataclasses.replace(f.opts, **flags)
     gen, err = iter(fb.candidates(f, hit)), None
     while True:
         try:
@@ -113,7 +118,7 @@ def _attempt(fb: Fallback, f: Failure, hit):
             run = cand
         else:
             try:
-                text = rewrite_databend_sql(cand, fb.opts)
+                text = rewrite_databend_sql(cand, opts)
             except Exception as e:  # noqa: BLE001
                 if not fb.catch_rewrite:
                     raise

@@ -6,8 +6,8 @@ Reference semantics being reproduced (file:line in /root/reference):
     immutable data files. Here: parquet files + ``_snapshots.json``.
   * STREAM: ``src/query/storages/stream/src/stream_table.rs:59-130`` —
     a stream is a view over a base table's change range; consuming it
-    transactionally advances its offset. Append-only mode implemented
-    (standard mode with deletes needs a merge-on-read format — noted).
+    transactionally advances its offset. Append-only and standard
+    (INSERT/DELETE rows) modes.
   * TASK: ``src/query/ast/src/ast/statements/task.rs:67-80`` — cron
     SQL with AFTER dependencies and ``WHEN stream_has_data()``.
   * DYNAMIC TABLE: ``ast/statements/dynamic_table.rs:32-104`` —
@@ -35,8 +35,30 @@ from pyspark.sql import DataFrame, SparkSession
 from databend_spark.session import load_table
 
 
+def _write_json(path: str, obj) -> None:
+    """Replace ``path`` with ``obj`` as JSON by one atomic rename (the
+    meta-service commit analog)."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+    os.replace(tmp, path)
+
+
+def _head(log: list[dict]) -> int:
+    return log[-1]["version"] if log else 0
+
+
+def _live(log: list[dict], version: int) -> list[dict]:
+    """The entries whose data makes up ``version``: the last overwrite
+    at or before it plus every append after it."""
+    entries = [e for e in log if e["version"] <= version]
+    overwrites = [i for i, e in enumerate(entries) if e.get("mode") == "overwrite"]
+    return entries[overwrites[-1] if overwrites else 0 :]
+
+
 class VersionedTable:
-    """Append-only snapshot-versioned parquet table."""
+    """Snapshot-versioned parquet table. Each operation reads the log
+    once and takes every version's data dirs from that read (``_live``)."""
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
@@ -53,20 +75,13 @@ class VersionedTable:
         with open(self._log_path) as f:
             return json.load(f)
 
-    def _write_log(self, log: list[dict]) -> None:
-        tmp = self._log_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(log, f)
-        os.replace(tmp, self._log_path)  # atomic commit (meta-service analog)
-
     @property
     def version(self) -> int:
-        log = self._read_log()
-        return log[-1]["version"] if log else 0
+        return _head(self._read_log())
 
     def append(self, df: DataFrame) -> int:
         """Write a new snapshot: immutable data dir + log entry."""
-        return self._commit(df, mode="append")
+        return self._commit(self._read_log(), df, mode="append")
 
     def overwrite(self, df: DataFrame) -> int:
         """Commit a full-rewrite snapshot (mutation commit: UPDATE /
@@ -74,63 +89,58 @@ class VersionedTable:
         reference's mutation blocks + commit,
         ``storages/fuse/src/operations/commit.rs``). Earlier versions
         stay readable via time travel."""
-        return self._commit(df, mode="overwrite")
+        return self._commit(self._read_log(), df, mode="overwrite")
 
-    def _commit(self, df: DataFrame, mode: str) -> int:
-        log = self._read_log()
-        version = (log[-1]["version"] + 1) if log else 1
+    def _commit(self, log: list[dict], df: DataFrame, mode: str) -> int:
+        version = _head(log) + 1
         data_dir = os.path.join(self.path, f"v{version}_{uuid.uuid4().hex[:8]}")
         df.write.mode("errorifexists").parquet(data_dir)
-        log.append(
-            {"version": version, "dir": data_dir, "ts": time.time(), "mode": mode}
-        )
-        self._write_log(log)
+        entry = {"version": version, "dir": data_dir, "ts": time.time(), "mode": mode}
+        _write_json(self._log_path, [*log, entry])
         return version
 
-    def _dirs(
-        self, from_v: int, to_v: int, as_changes: bool = False
-    ) -> list[str]:
-        """Data dirs composing version ``to_v``, excluding data already
-        present at ``from_v``. A read (``as_changes=False``) starts from
-        the last overwrite commit; a change range (``as_changes=True``)
-        that crosses an overwrite cannot be represented as appended rows
-        and raises."""
-        entries = [e for e in self._read_log() if e["version"] <= to_v]
-        last_overwrite = 0  # version of the most recent overwrite commit
-        for e in entries:
-            if e.get("mode", "append") == "overwrite":
-                last_overwrite = e["version"]
-        if as_changes and last_overwrite > from_v:
-            raise ValueError(
-                "change range crosses an overwrite commit — append-only "
-                "stream semantics cannot represent it (reference standard-"
-                "mode streams require merge-on-read; out of scope)"
-            )
-        start = max(from_v, last_overwrite - 1)
-        return [e["dir"] for e in entries if start < e["version"]]
+    def _at(self, log: list[dict], version: int) -> DataFrame:
+        """The table at ``version``, as ``log`` records it."""
+        live = _live(log, version)
+        if not live:
+            raise ValueError(f"table {self.path} empty at version {version}")
+        return load_table(self.spark, *(e["dir"] for e in live))
+
+    def _appended(self, log: list[dict], from_v: int, to_v: int) -> DataFrame | None:
+        """Rows appended in (from_v, to_v]; None when the range crosses
+        an overwrite commit, which appended rows cannot represent."""
+        live = _live(log, to_v)
+        if live and live[0].get("mode") == "overwrite" and live[0]["version"] > from_v:
+            return None
+        dirs = [e["dir"] for e in live if e["version"] > from_v]
+        if not dirs:
+            return self._at(log, _head(log)).limit(0)
+        return load_table(self.spark, *dirs)
 
     def read(self, version: int | None = None) -> DataFrame:
         """Read the table AT a version (time travel); latest by default."""
-        v = self.version if version is None else version
-        dirs = self._dirs(0, v)
-        if not dirs:
-            raise ValueError(f"table {self.path} empty at version {v}")
-        return load_table(self.spark, *dirs)
+        log = self._read_log()
+        return self._at(log, _head(log) if version is None else version)
 
     def read_at_timestamp(self, ts: float) -> DataFrame:
         """AT (TIMESTAMP => ...) — last version committed ≤ ts."""
-        versions = [e["version"] for e in self._read_log() if e["ts"] <= ts]
+        log = self._read_log()
+        versions = [e["version"] for e in log if e["ts"] <= ts]
         if not versions:
             raise ValueError(f"no snapshot at or before {ts}")
-        return self.read(max(versions))
+        return self._at(log, max(versions))
 
     def changes(self, from_version: int, to_version: int | None = None) -> DataFrame:
         """CHANGES(...) — appended rows in (from_version, to_version]."""
-        to_v = self.version if to_version is None else to_version
-        dirs = self._dirs(from_version, to_v, as_changes=True)
-        if not dirs:
-            return self.read(self.version).limit(0)
-        return load_table(self.spark, *dirs)
+        log = self._read_log()
+        to_v = _head(log) if to_version is None else to_version
+        df = self._appended(log, from_version, to_v)
+        if df is None:
+            raise ValueError(
+                "change range crosses an overwrite commit — appended rows "
+                "cannot represent it (changes_standard can)"
+            )
+        return df
 
     def changes_standard(
         self, from_version: int, to_version: int | None = None
@@ -151,39 +161,28 @@ class VersionedTable:
         like the reference's hidden stream columns."""
         from pyspark.sql import functions as F
 
-        to_v = self.version if to_version is None else to_version
-        new = self.read(to_v) if to_v > 0 else None
-        old = self.read(from_version) if from_version > 0 else None
-        crosses = False
-        for e in self._read_log():
-            if (
-                from_version < e["version"] <= to_v
-                and e.get("mode", "append") == "overwrite"
-            ):
-                crosses = True
-
         def _tag(df: DataFrame, action: str) -> DataFrame:
             return df.select(
                 "*",
                 F.lit(action).alias("change$action"),
                 F.lit(False).alias("change$is_update"),
-                F.lower(F.hex(F.xxhash64(F.struct("*")))).alias(
-                    "change$row_id"
-                ),
+                F.lower(F.hex(F.xxhash64(F.struct("*")))).alias("change$row_id"),
             )
 
-        if not crosses:
-            # append-only fast path: only the appended files are read
-            return _tag(self.changes(from_version, to_v), "INSERT")
-        inserts = new.exceptAll(old) if old is not None else new
-        deletes = old.exceptAll(new) if new is not None else old
-        out = None
-        if inserts is not None:
-            out = _tag(inserts, "INSERT")
-        if deletes is not None:
-            d = _tag(deletes, "DELETE")
-            out = d if out is None else out.unionAll(d)
-        return out
+        log = self._read_log()
+        to_v = _head(log) if to_version is None else to_version
+        appended = self._appended(log, from_version, to_v)
+        if appended is not None:
+            # append-only range: only the appended files are read
+            return _tag(appended, "INSERT")
+        # the range crosses an overwrite, so to_v holds at least one commit
+        new = self._at(log, to_v)
+        if from_version == 0:
+            return _tag(new, "INSERT")
+        old = self._at(log, from_version)
+        return _tag(new.exceptAll(old), "INSERT").unionAll(
+            _tag(old.exceptAll(new), "DELETE")
+        )
 
     # -- maintenance (reference storages/fuse/src/operations/{compact.rs,
     # recluster, gc.rs}; CommitSink analog = the atomic log replace) --------
@@ -212,12 +211,13 @@ class VersionedTable:
         compaction lose the appended-rows representation (our model has
         no row-level change tracking), so ``changes()`` across a compact
         raises — consume streams before compacting."""
-        df = self.read()
+        log = self._read_log()
+        df = self._at(log, _head(log))
         if cluster_by:
             df = df.repartitionByRange(
                 self.spark.sparkContext.defaultParallelism, *cluster_by
             ).sortWithinPartitions(*cluster_by)
-        return self._commit(df, mode="overwrite")
+        return self._commit(log, df, mode="overwrite")
 
     def vacuum(self, retain_last: int = 1) -> list[str]:
         """VACUUM analog (``operations/gc.rs``): drop data dirs that no
@@ -230,15 +230,14 @@ class VersionedTable:
         log = self._read_log()
         if not log:
             return []
-        head = log[-1]["version"]
-        cutoff = max(0, head - max(1, retain_last))
-        needed: set[str] = set()
-        for e in log:
-            if e["version"] > cutoff:
-                needed.update(self._dirs(0, e["version"]))
-        removed = [e["dir"] for e in log if e["dir"] not in needed]
-        kept = [e for e in log if e["dir"] in needed]
-        self._write_log(kept)  # atomic commit before touching data
+        cutoff = _head(log) - max(1, retain_last)
+        oldest = next(e["version"] for e in log if e["version"] > cutoff)
+        # a later retained version reads from the same overwrite or a
+        # later one, so the oldest retained version reaches back furthest
+        keep_from = _live(log, oldest)[0]["version"]
+        removed = [e["dir"] for e in log if e["version"] < keep_from]
+        # atomic commit before touching data
+        _write_json(self._log_path, [e for e in log if e["version"] >= keep_from])
         for d in removed:
             shutil.rmtree(d, ignore_errors=True)
         return removed
@@ -278,10 +277,7 @@ class Stream:
             self._write_offset(initial)
 
     def _write_offset(self, offset: int) -> None:
-        tmp = self._offset_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"offset": offset}, f)
-        os.replace(tmp, self._offset_path)
+        _write_json(self._offset_path, {"offset": offset})
 
     @property
     def offset(self) -> int:
@@ -364,7 +360,10 @@ class DynamicTable:
     ``query`` builds the target from the base table's DataFrame. In
     incremental mode the query runs only over the stream's change range
     and appends (valid for distributive aggregations/projections —
-    caller asserts that, as in the reference's incremental refresh).
+    caller asserts that, as in the reference's incremental refresh). In
+    full mode it runs over the whole base and each refresh commits an
+    overwrite, so ``target.read(version=k)`` is the k-th recompute and
+    ``target.vacuum`` frees superseded ones.
     """
 
     def __init__(
@@ -397,19 +396,13 @@ class DynamicTable:
         if self.mode == "incremental":
             self._stream.consume(lambda ch: self.target.append(self.query(ch)))
         else:
+            # a full recompute reads no change range, so the offset
+            # advances without one (a range may cross a base overwrite)
             head = self.base.version
-            self._stream.consume(lambda _ch: None)  # advance offset
-            # full recompute → new snapshot chain (old versions remain
-            # readable: the MV itself is time-travelable)
-            self.target.append(self.query(self.base.read(head)))
+            self.target.overwrite(self.query(self.base.read(head)))
+            self._stream._write_offset(head)
         self._last_refresh = time.time()
         return True
 
     def read(self) -> DataFrame:
-        if self.mode == "incremental":
-            return self.target.read()
-        # full mode: latest snapshot only
-        log = self.target._read_log()
-        if not log:
-            raise ValueError("dynamic table never refreshed")
-        return load_table(self.spark, log[-1]["dir"])
+        return self.target.read()

@@ -10924,12 +10924,10 @@ def run_slt_file(
                     _dt_strict = _dv == "1"
                 elif _dk.lower() == "enable_auto_detect_datetime_format":
                     _dt_auto = _dv == "1"
-        rewritten = rewrite_databend_sql(
-            sql,
-            RewriteOptions(
-                vector_f32=_vec_f32, dt_strict=_dt_strict, dt_auto=_dt_auto
-            ),
+        rw_opts = RewriteOptions(
+            vector_f32=_vec_f32, dt_strict=_dt_strict, dt_auto=_dt_auto
         )
+        rewritten = rewrite_databend_sql(sql, rw_opts)
         if _stmt_tz and "current_timezone()" in rewritten:
             rewritten = rewritten.replace(
                 "current_timezone()", f"'{_stmt_tz}'"
@@ -10965,7 +10963,7 @@ def run_slt_file(
             r"^\s*TRUNCATE\s+(?:TABLE\s+)?([\w.`]+)", sql, re.I
         )
         res, fallback = execute(
-            spark, sql, rewritten=rewritten, table=runner_fallbacks,
+            spark, sql, rw_opts, rewritten=rewritten, table=runner_fallbacks,
             resubmit=run_sql,
         )
         if fallback is None:

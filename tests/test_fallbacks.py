@@ -246,3 +246,37 @@ def test_runner_walks_the_moved_entries(spark, sf_dir, tmp_path, spy):
     raised = [m for name, outcome, m in spy
               if name == "inline_select_aliases" and outcome == "raised"]
     assert raised and "nosuch" in raised[0]
+
+
+def test_candidates_keep_the_callers_options(spark, monkeypatch):
+    """A candidate is rewritten under the caller's options with its
+    entry's flag set on top, and the default resubmit keeps them."""
+    seen = []
+    rewrite = fallbacks.rewrite_databend_sql
+
+    def recording(sql, opts):
+        seen.append((sql, opts))
+        return rewrite(sql, opts)
+
+    monkeypatch.setattr(fallbacks, "rewrite_databend_sql", recording)
+    entry = fallbacks.Fallback(
+        "probe", lambda f: True, lambda f, _: ["SELECT 1 AS x"],
+        opts=RewriteOptions(lambda_safe=True),
+    )
+    caller = RewriteOptions(vector_f32=True)
+    df, name = fallbacks.execute(
+        spark, "SELECT fb_no_such_column", caller, table=(entry,)
+    )
+    assert (name, df.first().x) == ("probe", 1)
+    assert seen[-1] == (
+        "SELECT 1 AS x", RewriteOptions(vector_f32=True, lambda_safe=True)
+    )
+    resubmitting = fallbacks.Fallback(
+        "resubmit", lambda f: True,
+        lambda f, _: [lambda: f.resubmit("SELECT 2 AS x")],
+    )
+    df, _ = fallbacks.execute(
+        spark, "SELECT fb_no_such_column", caller, table=(resubmitting,)
+    )
+    assert df.first().x == 2
+    assert seen[-1] == ("SELECT 2 AS x", caller)

@@ -308,6 +308,31 @@ def test_engine_reads_start_no_job(spark, tmp_path):
     assert [df.count() for df in dfs] == [6, 4, 2, 6, 6]
 
 
+def test_copy_into_starts_only_its_insert_jobs(ctx, spark, tmp_path):
+    """A parquet COPY reads through ``load_table`` and looks its target
+    up in the catalog, so it starts the jobs of its write and no more."""
+    paths = []
+    for i in range(3):
+        paths.append(str(tmp_path / f"batch{i}.parquet"))
+        pq.write_table(pa.table({"k": [i, i + 10], "v": [1.5, 2.5]}), paths[-1])
+    table = "copy_jobs_test"
+    sc = spark.sparkContext
+    try:
+        jobs = []
+        for i, path in enumerate(paths[:2]):  # creates, then inserts
+            sc.setJobGroup(f"copy-guard{i}", "copy_into")
+            assert ctx.copy_into(table, [path]) == 1
+            jobs.append(_jobs(spark, f"copy-guard{i}"))
+        sc.setJobGroup("insert-guard", "the same insert, by hand")
+        load_table(spark, paths[2]).write.insertInto(table)
+        assert jobs == [_jobs(spark, "insert-guard")] * 2
+        assert spark.table(table).count() == 6
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
 @pytest.mark.parametrize("ts_type", ["INT96", "TIMESTAMP_MICROS"])
 def test_spark_written_file_keeps_spark_types(spark, tmp_path, ts_type):
     ts = datetime.datetime(2024, 1, 1, 0, 0, 1, 5)

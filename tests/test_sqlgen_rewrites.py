@@ -1,6 +1,8 @@
-"""Text-level assertions for the dialect rewrites added for the
+"""Assertions for the dialect rewrites added for the
 reference SLT sweep (QUALIFY, scalar HAVING, multi-arg GROUPING, ASOF
 JOIN, comment/Nullable/quoted-alias cleanup)."""
+
+import pytest
 
 from databend_spark.sqlgen import (
     auto_alias_view_body,
@@ -180,3 +182,55 @@ def test_any_join_derived_table_probe():
         "ON p.id = t2.id"
     )
     assert "FROM (SELECT * FROM t0) p GROUP BY" in out2
+
+
+_ASOF_ON = "ON p.pk = b.bk AND p.pt >= b.bt"
+_JOINS = {
+    "asof": f"SELECT * FROM p ASOF JOIN b {_ASOF_ON}",
+    "asof_left": f"SELECT * FROM p ASOF LEFT JOIN b {_ASOF_ON}",
+    "asof_right": f"SELECT * FROM p ASOF RIGHT JOIN b {_ASOF_ON}",
+    "any": "SELECT * FROM p ANY JOIN b ON p.pk = b.bk",
+}
+# clause after the join → the same clause over the bare join's result
+_TAILS = {
+    "where": ("WHERE p.x > 1", "SELECT * FROM ({}) s WHERE x > 1"),
+    "join": (
+        "JOIN c ON c.ck = p.pk",
+        "SELECT * FROM ({}) s JOIN c ON c.ck = s.pk",
+    ),
+    "order_by": (
+        "ORDER BY p.pk, p.pt, b.bk, b.bt",
+        "SELECT * FROM ({}) s ORDER BY pk NULLS LAST, pt NULLS LAST,"
+        " bk NULLS LAST, bt NULLS LAST",
+    ),
+}
+
+
+@pytest.fixture(scope="module")
+def join_views(spark):
+    for name, rows in {
+        "p": "(1, 10, 0), (1, 20, 2), (2, 15, 3), (3, 5, 1) AS t(pk, pt, x)",
+        "b": "(1, 5, 'a'), (1, 15, 'b'), (2, 20, 'c'), (2, 10, 'd'),"
+        " (4, 1, 'e') AS t(bk, bt, v)",
+        "c": "(1, 'c1'), (2, 'c2'), (3, 'c3') AS t(ck, w)",
+    }.items():
+        spark.sql(f"CREATE OR REPLACE TEMP VIEW {name} AS SELECT * FROM VALUES {rows}")
+
+
+@pytest.mark.parametrize("tail", list(_TAILS))
+@pytest.mark.parametrize("join", list(_JOINS))
+def test_join_rewrite_stops_at_the_next_clause(spark, join_views, join, tail):
+    """An ASOF or ANY JOIN's ON condition ends where WHERE, a second
+    JOIN or ORDER BY starts: the clause stays outside the rewritten
+    join and applies to its result."""
+    clause, over_bare = _TAILS[tail]
+    out = R(f"{_JOINS[join]} {clause}")
+    bare = R(_JOINS[join])
+    assert out.startswith(bare.rstrip())
+    got = spark.sql(out).collect()
+    want = spark.sql(over_bare.format(bare)).collect()
+    if tail == "order_by":
+        assert got == want
+    else:
+        assert sorted(got, key=repr) == sorted(want, key=repr)
+    assert got

@@ -1,7 +1,9 @@
 """Incremental layer (streams/tasks/dynamic tables/time travel) and
 Structured Streaming tests."""
 
+import os
 import time
+from urllib.parse import urlparse
 
 import pytest
 from pyspark.sql import functions as F
@@ -196,8 +198,6 @@ def test_stream_tracks_from_creation_point(spark, vt):
 
 
 def test_compact_collapses_append_chain(spark, vt):
-    import os
-
     for i in range(4):
         vt.append(_df(spark, [(i, f"r{i}")]))
     assert vt.read().count() == 4
@@ -207,7 +207,10 @@ def test_compact_collapses_append_chain(spark, vt):
     # reads now touch only the compacted dir
     log = vt._read_log()
     assert log[-1]["mode"] == "overwrite"
-    assert vt._dirs(0, v) == [log[-1]["dir"]]
+    files = vt.read().inputFiles()
+    assert files and all(
+        urlparse(f).path.startswith(log[-1]["dir"] + "/") for f in files
+    )
     # snapshots table function shows the full chain
     snaps = vt.snapshots()
     assert snaps.count() == 5
@@ -224,8 +227,6 @@ def test_compact_recluster_sorts_files(spark, vt):
 
 
 def test_vacuum_frees_superseded_dirs_keeps_head(spark, vt):
-    import os
-
     vt.append(_df(spark, [(1, "a")]))
     vt.append(_df(spark, [(2, "b")]))
     old_dirs = [e["dir"] for e in vt._read_log()]
@@ -249,7 +250,6 @@ def test_vacuum_append_only_removes_nothing(spark, vt):
 def test_stateful_user_stats_accumulates_across_batches(spark, sf_dir, tmp_path):
     """applyInPandasWithState carries per-user state across micro-batches:
     final counts equal the batch groupBy, proving state survival."""
-    import os
     import shutil
 
     from databend_spark.session import load_table
@@ -283,3 +283,120 @@ def test_stateful_user_stats_accumulates_across_batches(spark, sf_dir, tmp_path)
         for r in events.groupBy("user_id").agg(F.count("*").alias("n")).collect()
     }
     assert got == want and len(want) > 0
+
+
+def test_full_dynamic_table_commits_each_recompute_as_overwrite(
+    spark, vt, tmp_path
+):
+    """A full refresh replaces the target: the target reads as the
+    dynamic table does, version k is the k-th recompute, and VACUUM
+    frees the superseded recomputes."""
+    from databend_spark.streaming import DynamicTable
+
+    dyn = DynamicTable(
+        spark,
+        vt,
+        str(tmp_path / "mv3"),
+        query=lambda df: df.groupBy().agg(F.count("*").alias("n")),
+        mode="full",
+    )
+    for i in range(3):
+        vt.append(_df(spark, [(i, "x")]))
+        assert dyn.refresh()
+    assert dyn.target.read().collect() == dyn.read().collect()
+    assert [dyn.target.read(k).first().n for k in (1, 2, 3)] == [1, 2, 3]
+    superseded = [
+        r.dir for r in dyn.target.snapshots().filter("version < 3").collect()
+    ]
+    assert len(superseded) == 2
+    assert sorted(dyn.target.vacuum(retain_last=1)) == sorted(superseded)
+    assert dyn.read().first().n == 3
+
+
+def test_full_dynamic_table_refreshes_after_base_overwrite(spark, vt, tmp_path):
+    """A full recompute needs no change range, so a base overwrite (a
+    DELETE or UPDATE commit) does not stop the refresh."""
+    from databend_spark.streaming import DynamicTable
+
+    dyn = DynamicTable(
+        spark,
+        vt,
+        str(tmp_path / "mv4"),
+        query=lambda df: df.groupBy().agg(F.count("*").alias("n")),
+        mode="full",
+    )
+    vt.append(_df(spark, [(1, "a"), (2, "b")]))
+    assert dyn.refresh()
+    vt.overwrite(_df(spark, [(1, "a")]))
+    assert dyn.refresh()
+    assert dyn.read().first().n == 1
+
+
+def test_each_operation_reads_the_log_once(spark, vt, monkeypatch):
+    from databend_spark.streaming import VersionedTable
+
+    vt.append(_df(spark, [(1, "a")]))
+    vt.overwrite(_df(spark, [(1, "a"), (2, "b")]))
+    vt.append(_df(spark, [(3, "c")]))
+    calls = []
+    read_log = VersionedTable._read_log
+
+    def counting(self):
+        calls.append(self.path)
+        return read_log(self)
+
+    monkeypatch.setattr(VersionedTable, "_read_log", counting)
+    ops = {
+        "read": vt.read,
+        "changes": lambda: vt.changes(2),
+        "changes_standard": lambda: vt.changes_standard(1),
+        "vacuum": lambda: vt.vacuum(retain_last=2),  # last: it drops v1
+    }
+    reads = {}
+    for name, op in ops.items():
+        calls.clear()
+        op()
+        reads[name] = len(calls)
+    assert reads == dict.fromkeys(ops, 1)
+
+
+def test_standard_changes_of_appends_load_only_appended_dirs(
+    spark, vt, monkeypatch
+):
+    import databend_spark.streaming.incremental as incremental
+
+    for i in range(3):
+        vt.append(_df(spark, [(i, f"r{i}")]))
+    dirs = {r.version: r.dir for r in vt.snapshots().collect()}
+    loads = []
+    load_table = incremental.load_table
+
+    def recording(spark, *paths):
+        loads.append(paths)
+        return load_table(spark, *paths)
+
+    monkeypatch.setattr(incremental, "load_table", recording)
+    df = vt.changes_standard(1)
+    assert loads == [(dirs[2], dirs[3])]
+    rows = {(r.id, r["change$action"]) for r in df.collect()}
+    assert rows == {(1, "INSERT"), (2, "INSERT")}
+
+
+@pytest.mark.parametrize(
+    "retain_last, removed", [(1, [1, 2, 3, 4]), (2, [1, 2, 3, 4]), (3, [1])]
+)
+def test_vacuum_mixed_chain(spark, vt, retain_last, removed):
+    """VACUUM keeps every dir a retained version reads, across appends,
+    an overwrite and a compaction."""
+    vt.append(_df(spark, [(1, "a")]))  # v1
+    vt.overwrite(_df(spark, [(1, "a"), (2, "b")]))  # v2
+    vt.append(_df(spark, [(3, "c")]))  # v3
+    vt.append(_df(spark, [(4, "d")]))  # v4
+    vt.compact()  # v5
+    vt.append(_df(spark, [(5, "e")]))  # v6
+    dirs = {r.version: r.dir for r in vt.snapshots().collect()}
+    retained = range(7 - retain_last, 7)
+    counts = {v: vt.read(v).count() for v in retained}
+    assert vt.vacuum(retain_last=retain_last) == [dirs[v] for v in removed]
+    assert {v for v, d in dirs.items() if not os.path.exists(d)} == set(removed)
+    assert {v: vt.read(v).count() for v in retained} == counts
