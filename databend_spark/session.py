@@ -187,6 +187,9 @@ class SessionState:
     )
     # table → sf_dir of the temp view register_tables registered last
     viewed: dict[str, str] = dataclasses.field(default_factory=dict)
+    # the JVM statics _footer_schema calls, looked up once (each lookup
+    # through py4j's JavaClass is a reflection round trip)
+    footer_statics: tuple | None = None
 
 
 def session_state(spark: SparkSession) -> SessionState:
@@ -335,18 +338,22 @@ def _footer_schema(spark: SparkSession, *paths: str) -> tuple[StructType, set[st
     tests/test_session_setup.py compares the result with inference, so a
     change in them shows there."""
     parquet = "org.apache.spark.sql.execution.datasources.parquet."
+    st = session_state(spark)
+    if st.footer_statics is None:
+        st.footer_statics = (
+            _jclass(spark, parquet + "ParquetFooterReader").readFooter,
+            _jclass(spark, "org.apache.parquet.hadoop.util.HadoopInputFile").fromPath,
+            _jclass(
+                spark, "org.apache.parquet.format.converter.ParquetMetadataConverter"
+            ).SKIP_ROW_GROUPS,
+            _jclass(spark, parquet + "ParquetFileFormat").readSchemaFromFooter,
+        )
+    read_footer, from_path, skip_row_groups, read_schema = st.footer_statics
     state = spark._jsparkSession.sessionState()
     conf = state.newHadoopConf()
     hpath = _first_data_file(spark, conf, paths)
-    meta = _jclass(spark, parquet + "ParquetFooterReader").readFooter(
-        _jclass(spark, "org.apache.parquet.hadoop.util.HadoopInputFile").fromPath(
-            hpath, conf
-        ),
-        _jclass(
-            spark, "org.apache.parquet.format.converter.ParquetMetadataConverter"
-        ).SKIP_ROW_GROUPS,
-    )
-    schema = _jclass(spark, parquet + "ParquetFileFormat").readSchemaFromFooter(
+    meta = read_footer(from_path(hpath, conf), skip_row_groups)
+    schema = read_schema(
         _jclass(spark, "org.apache.parquet.hadoop.Footer")(hpath, meta),
         _jclass(spark, parquet + "ParquetToSparkSchemaConverter")(state.conf()),
     )

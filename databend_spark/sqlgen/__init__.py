@@ -17,6 +17,22 @@ from __future__ import annotations
 import json
 import re
 
+from databend_spark.sqlgen.lexer import (
+    clause_end,
+    close_bracket,
+    enclosing_open,
+    expr_start,
+    find_top,
+    mask,
+    open_bracket,
+    operand_end,
+    relation_before,
+    scan,
+    split_top,
+    table_ref,
+    tokens,
+    unmask,
+)
 from databend_spark.sqlgen.options import (
     _CURRENT,
     DEFAULT,
@@ -79,14 +95,14 @@ def variant_paths_to_json(sql: str) -> str:
     STRING), '$.a[''k.x''][0].b') — the fallback when the column stores
     JSON text (Spark's native `:` demands true VARIANT). Applied on
     retry by the runner / SessionContext."""
-    masked, lits = _mask_strings(sql)
+    masked, lits = mask(sql)
 
     def repl(m: re.Match) -> str:
         path = _variant_path_text(m.group(2), lits)
         path_lit = "'$." + path.replace("'", "''") + "'"
         return f"get_json_object(CAST({m.group(1)} AS STRING), {path_lit})"
 
-    return _unmask_strings(_VARIANT_PATH.sub(repl, masked), lits)
+    return unmask(_VARIANT_PATH.sub(repl, masked), lits)
 
 
 def variant_paths_to_access(sql: str) -> str:
@@ -96,7 +112,7 @@ def variant_paths_to_access(sql: str) -> str:
     text mode; accessors feeding a comparison keep get_json_object
     semantics elsewhere, so this rewrite only touches accessors NOT
     immediately followed by a comparison operator."""
-    masked, lits = _mask_strings(sql)
+    masked, lits = mask(sql)
 
     def repl(m: re.Match) -> str:
         tail = masked[m.end() :]
@@ -122,7 +138,7 @@ def variant_paths_to_access(sql: str) -> str:
     # \x04 marks a folded ::STRING cast — drop the cast text
     out = re.sub("\x04\\s*::\\s*(STRING|VARCHAR|TEXT)\\b", "", out, flags=re.I)
     out = out.replace("\x04", "")
-    return _unmask_strings(out, lits)
+    return unmask(out, lits)
 
 
 def variant_paths_to_struct(sql: str) -> str:
@@ -134,7 +150,7 @@ def variant_paths_to_struct(sql: str) -> str:
     resolves output names before input columns, so ``select d:a …
     order by a`` would silently sort by the struct field instead of the
     table column (the reference names the output ``d:a`` — no clash)."""
-    masked, lits = _mask_strings(sql)
+    masked, lits = mask(sql)
 
     def repl(m: re.Match) -> str:
         if "[" in m.group(2):  # bracket segs are json-only territory
@@ -151,19 +167,8 @@ def variant_paths_to_struct(sql: str) -> str:
 
     sel = re.match(r"(\s*SELECT\s+)(.*?)(\s+FROM\b.*)$", masked, re.I | re.S)
     if sel:
-        body = sel.group(2)
-        items, depth, start = [], 0, 0
-        for i, ch in enumerate(body):
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif ch == "," and depth == 0:
-                items.append(body[start:i])
-                start = i + 1
-        items.append(body[start:])
         out_items = []
-        for it in items:
+        for it in split_top(sel.group(2)):
             mm = _VARIANT_PATH.fullmatch(it.strip())
             if mm and "[" not in mm.group(2):
                 # double quotes dropped: a later pass rewrites "x" →
@@ -179,7 +184,7 @@ def variant_paths_to_struct(sql: str) -> str:
         )
     else:
         masked = _VARIANT_PATH.sub(repl, masked)
-    return _unmask_strings(masked, lits)
+    return unmask(masked, lits)
 
 _QUALIFY = re.compile(r"\bQUALIFY\b", re.I)
 _DROP_TABLE_ALL = re.compile(
@@ -465,27 +470,6 @@ def _dt_fmt_repl(m: re.Match) -> str:
     return f"{m.group(1)}({m.group(2)}, '{convert_dt_format(fmt)}')"
 
 
-_STRING_LIT = re.compile(r"'(?:[^']|'')*'")
-
-
-def _mask_strings(sql: str) -> tuple[str, list[str]]:
-    """Replace string literals with placeholders so regex rewrites never
-    touch literal content."""
-    literals: list[str] = []
-
-    def stash(m: re.Match) -> str:
-        literals.append(m.group(0))
-        return f"\x00{len(literals) - 1}\x00"
-
-    return _STRING_LIT.sub(stash, sql), literals
-
-
-def _unmask_strings(sql: str, literals: list[str]) -> str:
-    for i, lit in enumerate(literals):
-        sql = sql.replace(f"\x00{i}\x00", lit)
-    return sql
-
-
 # identifier-ish chars for receiver scans (\x00 = masked string literal)
 _IDENT_CHARS = frozenset(
     "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789_.`$\x00"
@@ -567,29 +551,20 @@ def _rewrite_map_literals(s: str) -> str:
         body = m.group(1)
         # depth-0 colons become commas; '::' cast operators inside the
         # values pass through untouched
-        out = []
-        depth = 0
-        i = 0
         keys: list[str] = []
-        seg_start = 0
-        while i < len(body):
-            ch = body[i]
-            if ch in "([":
-                depth += 1
-            elif ch in ")]":
-                depth -= 1
-            if ch == "," and depth == 0:
+        out, last, seg_start, cast_at = [], 0, 0, -1
+        for i, ch, depth in scan(body, pairs="()[]", chars=",:"):
+            if depth != 0 or ch not in ",:" or i == cast_at:
+                continue
+            if ch == ",":
                 seg_start = i + 1
-            if ch == ":" and depth == 0:
-                if i + 1 < len(body) and body[i + 1] == ":":
-                    out.append("::")
-                    i += 2
-                    continue
-                keys.append(body[seg_start:i].strip())
-                out.append(", ")
+            elif body[i + 1 : i + 2] == ":":
+                cast_at = i + 1
             else:
-                out.append(ch)
-            i += 1
+                keys.append(body[seg_start:i].strip())
+                out.append(body[last:i] + ", ")
+                last = i + 1
+        out.append(body[last:])
         # literal duplicate keys error in the reference (map semantics)
         lit_keys = [k for k in keys if re.fullmatch(r"[\x00\d.\w-]+", k)]
         if len(lit_keys) != len(set(lit_keys)):
@@ -628,22 +603,6 @@ def _rewrite_ddl_nested_types(s: str) -> str:
     def strip_null(t: str) -> str:
         return re.sub(r"\s*(NOT\s+)?NULL\b", "", t, flags=re.I).strip()
 
-    def split_top(body: str) -> list[str]:
-        parts, buf, depth = [], [], 0
-        for ch in body:
-            if ch in "(<":
-                depth += 1
-            elif ch in ")>":
-                depth -= 1
-            if ch == "," and depth == 0:
-                parts.append("".join(buf).strip())
-                buf = []
-            else:
-                buf.append(ch)
-        if buf or parts:
-            parts.append("".join(buf).strip())
-        return parts
-
     def conv_type(t: str) -> str:
         t = strip_null(t)
         m = re.match(r"^(TUPLE|ARRAY|MAP|NULLABLE)\s*\((.*)\)$", t, re.I | re.S)
@@ -653,7 +612,7 @@ def _rewrite_ddl_nested_types(s: str) -> str:
         body = m.group(2)
         if kind == "NULLABLE":
             return conv_type(body)
-        parts = split_top(body)
+        parts = [p.strip() for p in split_top(body, pairs="()<>")]
         if kind == "ARRAY":
             return f"ARRAY<{conv_type(parts[0])}>"
         if kind == "MAP":
@@ -689,13 +648,9 @@ def _rewrite_ddl_nested_types(s: str) -> str:
             out.append(s[i:])
             break
         out.append(s[i : m.start()])
-        depth, j = 0, m.end() - 1
-        while j < n:
-            depth += s[j] == "("
-            depth -= s[j] == ")"
-            if depth == 0:
-                break
-            j += 1
+        j = close_bracket(s, m.end() - 1)
+        if j == -1:
+            j = n
         seg = s[m.start() : j + 1]
         out.append(conv_type(seg))
         i = j + 1
@@ -713,21 +668,10 @@ _NEG_OP = {"<": ">=", "<=": ">", ">": "<=", ">=": "<"}
 def _rewrite_ctas_null_items(s: str, sel_end: int) -> str:
     """Top-level bare NULL items in a CTAS select list →
     CAST(NULL AS STRING)."""
-    f = _find_depth0(s, "FROM", sel_end)
+    f = find_top(s, "FROM", sel_end)
     end = f if f != -1 else len(s)
-    seg = s[sel_end:end]
-    items, depth, last = [], 0, 0
-    for i, c in enumerate(seg):
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif c == "," and depth == 0:
-            items.append(seg[last:i])
-            last = i + 1
-    items.append(seg[last:])
     out = []
-    for it in items:
+    for it in split_top(s[sel_end:end]):
         m = re.fullmatch(r"(\s*)NULL(\s*(?:AS\s+[\w`]+)?\s*)", it, re.I)
         if m:
             out.append(f"{m.group(1)}CAST(NULL AS STRING){m.group(2)}")
@@ -1029,16 +973,8 @@ def _scan_relation_fwd(s: str, pos: int) -> int | None:
     if pos >= len(s):
         return None
     if s[pos] == "(":
-        depth = 0
-        while pos < len(s):
-            if s[pos] == "(":
-                depth += 1
-            elif s[pos] == ")":
-                depth -= 1
-                if depth == 0:
-                    break
-            pos += 1
-        pos += 1
+        j = close_bracket(s, pos)
+        pos = (j if j != -1 else len(s)) + 1
     else:
         while pos < len(s) and s[pos] in _OPERAND_CHARS:
             pos += 1
@@ -1106,30 +1042,13 @@ def _rewrite_empty_window_frames(s: str) -> str:
         if fm is None:
             return s
         # enclosing OVER( ... ) span
-        depth, start_paren = 0, None
-        for i in range(fm.start() - 1, -1, -1):
-            c = s[i]
-            if c == ")":
-                depth += 1
-            elif c == "(":
-                if depth == 0:
-                    start_paren = i
-                    break
-                depth -= 1
-        if start_paren is None or not re.search(
+        start_paren = enclosing_open(s, fm.start())
+        if start_paren == -1 or not re.search(
             r"\bOVER\s*$", s[:start_paren], re.I
         ):
             return s  # not inside an OVER — give up (shouldn't happen)
-        depth, end_paren = 0, None
-        for i in range(start_paren, len(s)):
-            if s[i] == "(":
-                depth += 1
-            elif s[i] == ")":
-                depth -= 1
-                if depth == 0:
-                    end_paren = i
-                    break
-        if end_paren is None:
+        end_paren = close_bracket(s, start_paren)
+        if end_paren == -1:
             return s
         om = re.search(r"\bOVER\s*$", s[:start_paren], re.I)
         k = om.start() - 1
@@ -1212,53 +1131,13 @@ def _rewrite_order_by_nulls(s: str) -> str:
     defaults in the binder; SURVEY §7.4). Window ORDER BY (inside
     OVER(...) parens) keeps engine defaults."""
     for m in reversed(list(re.finditer(r"\bORDER\s+BY\b", s, re.I))):
-        # enclosing open paren, if any
-        depth, p = 0, None
-        for i in range(m.start() - 1, -1, -1):
-            c = s[i]
-            if c == ")":
-                depth += 1
-            elif c == "(":
-                if depth == 0:
-                    p = i
-                    break
-                depth -= 1
-        if p is not None and re.search(r"\bOVER\s*$", s[:p], re.I):
+        p = enclosing_open(s, m.start())
+        if p != -1 and re.search(r"\bOVER\s*$", s[:p], re.I):
             continue
         start = m.end()
-        end, depth = len(s), 0
-        j = start
-        while j < len(s):
-            c = s[j]
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                if depth == 0:
-                    end = j
-                    break
-                depth -= 1
-            elif c == ";" and depth == 0:
-                end = j
-                break
-            elif depth == 0:
-                km = _OB_END_KW.match(s, j)
-                if km and not (s[j - 1].isalnum() or s[j - 1] in "_`"):
-                    end = j
-                    break
-            j += 1
-        seg = s[start:end]
-        items, depth, last = [], 0, 0
-        for i, c in enumerate(seg):
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-            elif c == "," and depth == 0:
-                items.append(seg[last:i])
-                last = i + 1
-        items.append(seg[last:])
+        end = clause_end(s, start, _OB_END_KW, chars=";")
         out = []
-        for it in items:
+        for it in split_top(s[start:end]):
             body = it.rstrip(" \n\t")
             tail = it[len(body):]
             if not body.strip() or re.search(
@@ -1282,30 +1161,18 @@ _CTX_KW = re.compile(
 def _in_select_list_context(s: str, pos: int) -> bool:
     """True when position ``pos`` sits in a SELECT list (scanning back
     at the current nesting level, popping out of subexpressions)."""
-    d = 0
-    k = pos - 1
-    while k >= 0:
-        c = s[k]
-        if c == ")":
-            d += 1
-        elif c == "(":
-            d -= 1
-            if d < 0:
-                d = 0  # left a subexpression — continue in outer scope
-            k -= 1
-            continue
-        if d == 0 and (c.isalpha() or c == "_"):
-            j = k
-            while j >= 0 and (s[j].isalnum() or s[j] == "_"):
-                j -= 1
-            word = s[j + 1 : k + 1]
-            if _CTX_KW.fullmatch(word) and (
-                j < 0 or not (s[j].isalnum() or s[j] in "_.`")
-            ):
-                return word.upper() == "SELECT"
-            k = j
-            continue
-        k -= 1
+    toks = tokens(s, 0, pos)
+    level = toks[-1].depth if toks else 0
+    for t in reversed(toks):
+        if t.text == "(":
+            level = min(level, t.depth)  # left a subexpression
+        elif (
+            t.depth <= level
+            and t.kind == "word"
+            and _CTX_KW.fullmatch(t.text)
+            and s[t.start - 1 : t.start] not in (".", "`")
+        ):
+            return t.text.upper() == "SELECT"
     return False
 
 
@@ -1313,23 +1180,11 @@ def _single_column_subquery(q: str) -> bool:
     m = re.match(r"\s*SELECT\s+(DISTINCT\s+)?", q, re.I)
     if not m:
         return False
-    depth = 0
-    for i in range(m.end(), len(q)):
-        c = q[i]
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif depth == 0:
-            if c == ",":
-                return False
-            if c == "*":
-                return False
-            if q[i : i + 5].upper() == "FROM " and not (
-                i > 0 and (q[i - 1].isalnum() or q[i - 1] in "_.`")
-            ):
-                return True
-    return True  # SELECT without FROM — single expr
+    f = find_top(q, "FROM", m.end())
+    return not any(  # SELECT without FROM — single expr
+        depth == 0 and ch in ",*"
+        for _, ch, depth in scan(q, m.end(), f if f != -1 else None, chars=",*")
+    )
 
 
 def _rewrite_projected_in_subquery(s: str) -> str:
@@ -1343,15 +1198,8 @@ def _rewrite_projected_in_subquery(s: str) -> str:
         m = _IN_SUB.search(s, pos)
         if not m:
             return s
-        depth, i = 0, s.index("(", m.start())
-        for i in range(i, len(s)):
-            if s[i] == "(":
-                depth += 1
-            elif s[i] == ")":
-                depth -= 1
-                if depth == 0:
-                    break
-        else:
+        i = close_bracket(s, s.index("(", m.start()))
+        if i == -1:
             return s
         q = s[s.index("(", m.start()) + 1 : i]
         if not _single_column_subquery(q) or not _in_select_list_context(
@@ -1403,15 +1251,8 @@ def _rewrite_quantified_comparisons(s: str) -> str:
             out.append(s[pos:])
             return "".join(out)
         # balanced subquery span starting at the '('
-        depth, i = 0, m.end() - 1
-        for i in range(m.end() - 1, len(s)):
-            if s[i] == "(":
-                depth += 1
-            elif s[i] == ")":
-                depth -= 1
-                if depth == 0:
-                    break
-        else:
+        i = close_bracket(s, m.end() - 1)
+        if i == -1:
             out.append(s[pos:])
             return "".join(out)
         q = s[m.end() : i]
@@ -1497,15 +1338,8 @@ def _rewrite_values_relation_alias(s: str) -> str:
         if not re.search(r"(?:\bFROM|\bJOIN)$", before, re.I):
             pos = m.end()
             continue
-        depth, i = 0, m.start()
-        for i in range(m.start(), len(s)):
-            if s[i] == "(":
-                depth += 1
-            elif s[i] == ")":
-                depth -= 1
-                if depth == 0:
-                    break
-        else:
+        i = close_bracket(s, m.start())
+        if i == -1:
             return s
         after = s[i + 1 :].lstrip()
         if re.match(r"(AS\b|[A-Za-z_])", after):
@@ -1513,16 +1347,7 @@ def _rewrite_values_relation_alias(s: str) -> str:
             continue
         # column count from the first row group
         row = re.search(r"\(((?:[^()]|\([^()]*\))*)\)", s[m.end() - 1 : i])
-        ncols = 1
-        if row:
-            depth2 = 0
-            for ch in row.group(1):
-                if ch in "([":
-                    depth2 += 1
-                elif ch in ")]":
-                    depth2 -= 1
-                elif ch == "," and depth2 == 0:
-                    ncols += 1
+        ncols = len(split_top(row.group(1), pairs="()[]")) if row else 1
         cols = ", ".join(f"col{j}" for j in range(ncols))
         s = s[: i + 1] + f" AS __vals({cols})" + s[i + 1 :]
         pos = i + 1
@@ -1551,21 +1376,12 @@ def _rewrite_insert_values_with_exprs(s: str, force: bool = False) -> str:
     if not force and not (_HAS_CALL.search(body) or "::" in body):
         return s
     # split top-level (...) row groups
-    rows, depth, start = [], 0, None
-    for i, ch in enumerate(body):
-        if ch == "(":
-            if depth == 0:
-                start = i
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0 and start is not None:
-                rows.append(body[start + 1 : i])
-                start = None
-        elif depth == 0 and ch not in ", \t\n":
+    rows = []
+    for row in split_top(body):
+        row = row.strip(" \t\n")
+        if not (row.startswith("(") and close_bracket(row, 0) == len(row) - 1):
             return s  # unexpected trailing syntax — leave untouched
-    if not rows or depth != 0:
-        return s
+        rows.append(row[1:-1])
     selects = " UNION ALL ".join(f"SELECT {r}" for r in rows)
     # COALESCE(1) keeps the written row order = VALUES order, which
     # insertion-order-sensitive aggregates (any/first) observe
@@ -1610,7 +1426,7 @@ def _rewrite_brackets(s: str) -> str:
     # pass 1: array literals (stack matches each ']' to its '[' kind)
     out = list(s)
     stack: list[bool] = []
-    for i, ch in enumerate(s):
+    for i, ch, _ in scan(s, pairs="[]"):
         if ch == "[":
             lit = is_literal_open(i)
             stack.append(lit)
@@ -1626,33 +1442,15 @@ def _rewrite_brackets(s: str) -> str:
         i = s.find("[")
         if i == -1:
             return s
-        depth, j = 0, i
-        for j in range(i, len(s)):
-            if s[j] == "[":
-                depth += 1
-            elif s[j] == "]":
-                depth -= 1
-                if depth == 0:
-                    break
-        else:
+        j = close_bracket(s, i, "[]")
+        if j == -1:
             return s  # unbalanced — leave untouched
         # receiver: identifier chain, optionally behind call/subscript parens
         k = prev_nonspace(i)
         end = k
         while k >= 0:
             if s[k] in ")]":
-                close = s[k]
-                opener = "(" if close == ")" else "["
-                d = 0
-                while k >= 0:
-                    if s[k] == close:
-                        d += 1
-                    elif s[k] == opener:
-                        d -= 1
-                        if d == 0:
-                            break
-                    k -= 1
-                k -= 1
+                k = open_bracket(s, k, "()" if s[k] == ")" else "[]") - 1
             elif s[k] in _IDENT_CHARS:
                 while k >= 0 and s[k] in _IDENT_CHARS:
                     k -= 1
@@ -1669,31 +1467,6 @@ def _rewrite_brackets(s: str) -> str:
             repl = f"try_element_at({recv}, {idx})"
         s = s[:start] + repl + s[j + 1 :]
     return s
-
-
-def _find_depth0(s: str, word: str, start: int = 0) -> int:
-    """Index of the first ``word`` at paren depth 0, or -1. ``word`` may
-    contain a space (e.g. "GROUP BY" — matched with flexible whitespace)."""
-    pat = re.compile(r"\b" + r"\s+".join(map(re.escape, word.split())) + r"\b", re.I)
-    depth = 0
-    for m in pat.finditer(s, start):
-        depth = s.count("(", 0, m.start()) - s.count(")", 0, m.start())
-        if depth == 0:
-            return m.start()
-    return -1
-
-
-def _balanced_call(s: str, open_idx: int) -> int:
-    """End index (exclusive) of the paren group opening at ``open_idx``."""
-    depth = 0
-    for j in range(open_idx, len(s)):
-        if s[j] == "(":
-            depth += 1
-        elif s[j] == ")":
-            depth -= 1
-            if depth == 0:
-                return j + 1
-    return -1
 
 
 def _rewrite_srf_post(s: str) -> str:
@@ -1717,9 +1490,9 @@ def _rewrite_srf_post(s: str) -> str:
             out.append(s[i:])
             break
         arg_open = i + m.start(1)
-        arg_end = _balanced_call(s, arg_open)
+        arg_end = close_bracket(s, arg_open) + 1
         close = s.find(")", arg_end)
-        if arg_end == -1 or close == -1 or s[arg_end:close].strip():
+        if arg_end == 0 or close == -1 or s[arg_end:close].strip():
             out.append(s[i : i + m.end()])
             i += m.end()
             continue
@@ -1733,19 +1506,8 @@ def _rewrite_srf_post(s: str) -> str:
     sel = re.match(r"^\s*SELECT\s+", s, re.I)
     if not sel:
         return s
-    f = _find_depth0(s, "FROM")
-    body = s[sel.end() : f] if f != -1 else s[sel.end() :]
-    # split on depth-0 commas
-    items, depth, start = [], 0, 0
-    for j, ch in enumerate(body):
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            items.append(body[start:j])
-            start = j + 1
-    items.append(body[start:])
+    f = find_top(s, "FROM")
+    items = split_top(s[sel.end() : f] if f != -1 else s[sel.end() :])
     srf_args: list[tuple[int, str, str]] = []  # (item idx, arg, alias)
     for idx, it in enumerate(items):
         m = re.match(
@@ -1753,8 +1515,8 @@ def _rewrite_srf_post(s: str) -> str:
         )
         if not m:
             continue
-        end = _balanced_call(it, m.start(1))
-        if end == -1:
+        end = close_bracket(it, m.start(1)) + 1
+        if end == 0:
             continue
         rest = it[end:].strip()
         ma = re.match(r"^(?:AS\s+)?([A-Za-z_]\w*)?\s*$", rest, re.I)
@@ -1807,8 +1569,8 @@ def _rewrite_scalar_having(s: str) -> str:
     * plain row filter (``SELECT a … WHERE a=13 HAVING a > 11``) — HAVING
       acts as a second WHERE → merge into the WHERE clause.
     """
-    h = _find_depth0(s, "HAVING")
-    if h == -1 or _find_depth0(s, "GROUP BY") != -1:
+    h = find_top(s, "HAVING")
+    if h == -1 or find_top(s, "GROUP BY") != -1:
         return s
     # does the query aggregate? look at the select list and HAVING cond
     if _AGG_CALL.search(s):
@@ -1817,11 +1579,11 @@ def _rewrite_scalar_having(s: str) -> str:
     cond_start = h + len("HAVING")
     tail_at = len(s)
     for kw in ("ORDER BY", "LIMIT", "OFFSET", "UNION", "EXCEPT", "INTERSECT"):
-        k = _find_depth0(s, kw, cond_start)
+        k = find_top(s, kw, cond_start)
         if k != -1:
             tail_at = min(tail_at, k)
     h_cond = _subst_select_aliases(s, s[cond_start:tail_at].strip())
-    w = _find_depth0(s, "WHERE")
+    w = find_top(s, "WHERE")
     if w == -1:
         return s[:h] + f"WHERE {h_cond} " + s[tail_at:]
     # merge: WHERE (w_cond) AND (h_cond)
@@ -1841,21 +1603,10 @@ def _subst_select_aliases(s: str, cond: str) -> str:
     sel = re.search(r"\bSELECT\s+(?:DISTINCT\s+)?", s, re.I)
     if not sel:
         return cond
-    f = _find_depth0(s, "FROM", sel.end())
+    f = find_top(s, "FROM", sel.end())
     if f == -1:
         return cond
-    items, depth, start = [], 0, sel.end()
-    for i in range(sel.end(), f):
-        c = s[i]
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif c == "," and depth == 0:
-            items.append(s[start:i])
-            start = i + 1
-    items.append(s[start:f])
-    for item in items:
+    for item in split_top(s[sel.end() : f]):
         m = re.match(r"^\s*(.+?)\s+AS\s+([\w`]+)\s*$", item, re.I | re.S)
         if not m:
             continue
@@ -1878,10 +1629,10 @@ def _rewrite_unnest_hoist(s: str, literals: list[str] | None = None) -> str:
     sel = re.search(r"^\s*SELECT\b", s, re.I)
     if not sel:
         return s
-    f = _find_depth0(s, "FROM")
+    f = find_top(s, "FROM")
     if f == -1:
         return s
-    g = _find_depth0(s, "GROUP")
+    g = find_top(s, "GROUP")
     has_group = g != -1 and g > f
 
     def resolve(t: str) -> str:
@@ -1899,16 +1650,9 @@ def _rewrite_unnest_hoist(s: str, literals: list[str] | None = None) -> str:
     def find_calls(seg: str) -> list[tuple[int, int, str]]:
         out = []
         for m in re.finditer(r"\bunnest\s*\(", seg, re.I):
-            depth, j = 0, m.end() - 1
-            while j < len(seg):
-                if seg[j] == "(":
-                    depth += 1
-                elif seg[j] == ")":
-                    depth -= 1
-                    if depth == 0:
-                        out.append((m.start(), j + 1, seg[m.end() : j]))
-                        break
-                j += 1
+            j = close_bracket(seg, m.end() - 1)
+            if j != -1:
+                out.append((m.start(), j + 1, seg[m.end() : j]))
         return out
 
     body = s[sel.end() : f]
@@ -1965,23 +1709,12 @@ def _rewrite_groupby_alias_shadow(s: str) -> str:
     sel = re.search(r"^\s*SELECT\b", s, re.I)
     if not sel:
         return s
-    f = _find_depth0(s, "FROM")
-    g = _find_depth0(s, "GROUP")
+    f = find_top(s, "FROM")
+    g = find_top(s, "GROUP")
     if f == -1 or g == -1 or g < f:
         return s
-    body = s[sel.end() : f]
-    items, depth, start = [], 0, 0
-    for i, ch in enumerate(body):
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            items.append(body[start:i])
-            start = i + 1
-    items.append(body[start:])
     shadows = {}
-    for it in items:
+    for it in split_top(s[sel.end() : f]):
         m = re.match(r"^(.*?)\s+AS\s+([A-Za-z_]\w*)\s*$", it, re.I | re.S)
         if not m:
             continue
@@ -2013,18 +1746,8 @@ def _rewrite_groupby_alias_shadow(s: str) -> str:
     # (GROUP BY CASE WHEN i = 1 …) bind to the source column in the
     # reference too (r3 regression: substituting inside the CASE made
     # the group key diverge from the select expression)
-    kitems, depth, kstart = [], 0, 0
-    for i, ch in enumerate(keys):
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            kitems.append(keys[kstart:i])
-            kstart = i + 1
-    kitems.append(keys[kstart:])
     out_items = []
-    for it in kitems:
+    for it in split_top(keys):
         bare = it.strip().strip("`")
         if bare in shadows:
             lead = it[: len(it) - len(it.lstrip())]
@@ -2055,20 +1778,20 @@ def _rewrite_qualify(s: str) -> str:
 
     Projecting (not re-evaluating outside) keeps GROUPING()/window calls
     in the scope that defines them."""
-    q = _find_depth0(s, "QUALIFY")
+    q = find_top(s, "QUALIFY")
     if q == -1:
         return s
     head = s[:q].rstrip()
     rest = s[q + len("QUALIFY") :]
     tail_at = len(rest)
     for kw in ("ORDER BY", "LIMIT", "OFFSET"):
-        k = _find_depth0(rest, kw)
+        k = find_top(rest, kw)
         if k != -1:
             tail_at = min(tail_at, k)
     cond = rest[:tail_at].strip()
     tail = rest[tail_at:]
     # insert the hidden column just before the main select's FROM
-    f = _find_depth0(head, "FROM")
+    f = find_top(head, "FROM")
     if f == -1:
         return s
     inner = head[:f].rstrip() + f", ({cond}) AS __qualify " + head[f:]
@@ -2088,22 +1811,11 @@ def _rewrite_grouping_multi(s: str) -> str:
     pat = re.compile(r"\bgrouping\s*\(", re.I)
     while True:
         m = pat.search(s, pos)
-        if not m:
+        i = close_bracket(s, m.end() - 1) if m else -1
+        if i == -1:
             out.append(s[pos:])
             return "".join(out)
-        depth, i = 0, m.end() - 1
-        args, start = [], m.end()
-        for i in range(m.end() - 1, len(s)):
-            if s[i] == "(":
-                depth += 1
-            elif s[i] == ")":
-                depth -= 1
-                if depth == 0:
-                    args.append(s[start:i])
-                    break
-            elif s[i] == "," and depth == 1:
-                args.append(s[start:i])
-                start = i + 1
+        args = split_top(s[m.end() : i])
         out.append(s[pos : m.start()])
         if len(args) <= 1:
             out.append(s[m.start() : i + 1])
@@ -2138,11 +1850,9 @@ def _rewrite_named_windows(s: str) -> str:
         nm = re.match(r"\s*([A-Za-z_]\w*)\s+AS\s*\(", s[i:], re.I)
         if not nm:
             break
-        depth, j = 0, i + nm.end() - 1
-        for j in range(i + nm.end() - 1, len(s)):
-            depth += (s[j] == "(") - (s[j] == ")")
-            if depth == 0:
-                break
+        j = close_bracket(s, i + nm.end() - 1)
+        if j == -1:
+            j = len(s) - 1
         spec = s[i + nm.end() : j].strip()
         if nm.group(1).lower() in {k.lower() for k in defs}:
             raise UnsupportedSQL(
@@ -2208,6 +1918,11 @@ _CLAUSE_END = re.compile(
 _INEQ = re.compile(r"(.+?)\s*(>=|<=|>|<)\s*(.+)", re.S)
 
 
+def _and_terms(cond: str) -> list[str]:
+    """The top-level AND terms of a join condition."""
+    return [t.strip() for t in split_top(cond, "AND")]
+
+
 def _rewrite_asof_join(s: str) -> str:
     """``probe p ASOF [LEFT] JOIN build b ON eqs AND p.t >= b.t`` →
     ``probe p [LEFT JOIN] LATERAL (SELECT * FROM build b WHERE <cond>
@@ -2227,54 +1942,26 @@ def _rewrite_asof_join(s: str) -> str:
         if not m:
             return s
         kind = (m.group(1) or "").strip().upper()
-        i = m.end()
-        # --- parse build relation: ident[(args)] | (subquery), then
-        # optional alias [(cols)]
-        while i < len(s) and s[i] in " \t\n":
-            i += 1
-        rel_start = i
-        if i < len(s) and s[i] == "(":
-            depth = 0
-            for i in range(i, len(s)):
-                depth += (s[i] == "(") - (s[i] == ")")
-                if depth == 0:
-                    break
-            i += 1
-        else:
-            while i < len(s) and (s[i].isalnum() or s[i] in "._`"):
-                i += 1
-            j = i
-            while j < len(s) and s[j] in " \t\n":
-                j += 1
-            if j < len(s) and s[j] == "(":  # table function args
-                depth = 0
-                for i in range(j, len(s)):
-                    depth += (s[i] == "(") - (s[i] == ")")
-                    if depth == 0:
-                        break
-                i += 1
-        rel = s[rel_start:i]
-        am = re.match(
-            r"\s*(?:AS\s+)?([A-Za-z_]\w*)(\s*\([^)]*\))?", s[i:], re.I
-        )
-        alias = None
-        if am and am.group(1).upper() != "ON":
-            alias = am.group(1) + (am.group(2) or "")
-            i += am.end()
+        # --- build relation: ident[(args)] | (subquery), then optional
+        # alias [(cols)]
+        ref = table_ref(s, m.end())
+        if ref is None:
+            raise UnsupportedSQL("ASOF JOIN without ON condition")
+        rel, alias, i = ref
         on = re.match(r"\s*ON\b", s[i:], re.I)
         um = re.match(r"\s*USING\s*\(([^)]*)\)", s[i:], re.I)
         if kind in ("RIGHT", "FULL"):
-            s = _rewrite_asof_outer(s, m, kind, rel, alias, i, on, um)
+            s = _rewrite_asof_outer(s, m, kind, rel, alias, i, on)
             continue
         if um:
             # USING (k…, t): leading columns are equalities, the last is
             # the `probe.t >= build.t` range key; build's copies of the
             # USING columns are dropped so SELECT * matches USING-join
             # output (probe columns first, once).
-            pm = re.search(r"([A-Za-z_]\w*)\s*$", s[: m.start()])
-            if not pm:
+            pref = relation_before(s, m.start())
+            if pref is None:
                 raise UnsupportedSQL("ASOF USING: probe relation not found")
-            probe = pm.group(1)
+            probe = pref[1] or pref[0].split(".")[-1].strip("`")
             balias_name = (alias or rel).split("(")[0].strip().strip("`")
             cols = [c.strip().strip("`") for c in um.group(1).split(",")]
             eqs = [f"{probe}.`{c}` = {balias_name}.`{c}`" for c in cols[:-1]]
@@ -2299,42 +1986,10 @@ def _rewrite_asof_join(s: str) -> str:
             raise UnsupportedSQL("ASOF JOIN without ON condition")
         cond_start = i + on.end()
         # --- condition runs to the next depth-0 clause keyword / comma
-        depth, end = 0, len(s)
-        k = cond_start
-        while k < len(s):
-            ch = s[k]
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                if depth == 0:
-                    end = k
-                    break
-                depth -= 1
-            elif depth == 0:
-                if ch in ",;":
-                    end = k
-                    break
-                cm = _CLAUSE_END.match(s, k)
-                if cm and (k == 0 or not (s[k - 1].isalnum() or s[k - 1] in "_`")):
-                    end = k
-                    break
-            k += 1
+        end = clause_end(s, cond_start, _CLAUSE_END, chars=",;")
         cond = s[cond_start:end].strip()
         # --- find the single inequality among top-level AND terms
-        terms, depth, start = [], 0, 0
-        for x, ch in enumerate(cond + " "):
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-        terms = re.split(r"\bAND\b", cond, flags=re.I)  # re-split simply
-        # re-assemble terms broken inside parens
-        fixed, buf = [], ""
-        for t in terms:
-            buf = t if not buf else buf + " AND " + t
-            if buf.count("(") == buf.count(")"):
-                fixed.append(buf.strip())
-                buf = ""
+        fixed = _and_terms(cond)
         ineqs = [
             t
             for t in fixed
@@ -2394,58 +2049,17 @@ def _rewrite_any_join(s: str) -> str:
         if not m:
             return s
         kind = (m.group(1) or "INNER").upper()
-        i = m.end()
-        while i < len(s) and s[i] in " \t\n":
-            i += 1
-        rel_start = i
-        if i < len(s) and s[i] == "(":
-            depth = 0
-            for i in range(i, len(s)):
-                depth += (s[i] == "(") - (s[i] == ")")
-                if depth == 0:
-                    break
-            i += 1
-        else:
-            while i < len(s) and (s[i].isalnum() or s[i] in "._`"):
-                i += 1
-        rel = s[rel_start:i]
-        am = re.match(
-            r"\s*(?:AS\s+)?([A-Za-z_]\w*)", s[i:], re.I
-        )
-        alias = None
-        if am and am.group(1).upper() not in ("ON", "USING", "WHERE"):
-            alias = am.group(1)
-            i += am.end()
+        build = table_ref(s, m.end())
+        # the probe is the FROM item before the join: a table or a
+        # derived table, with or without an alias
+        probe = relation_before(s, m.start())
+        if build is None or probe is None:
+            raise UnsupportedSQL("ANY JOIN: relation not found")
+        rel, alias, i = build
         bname = (alias or rel).strip().strip("`").split(".")[-1]
-        pm = re.search(r"([A-Za-z_][\w.`]*)\s*$", s[: m.start()])
-        if not pm:
-            raise UnsupportedSQL("ANY JOIN: probe relation not found")
-        probe_txt = pm.group(1)
-        pname = probe_txt.strip().strip("`").split(".")[-1]
-        # derived-table probe — ``FROM (SELECT ...) p ANY JOIN`` — the
-        # bare token is only the alias; walk back over the matching
-        # parens so the dedup subquery references the full relation,
-        # not an unresolvable alias (r8 ADVICE)
-        probe_cut = pm.start()
-        probe_plain = probe_txt
-        before = s[: pm.start()].rstrip()
-        asym = re.search(r"(?i)\bAS$", before)
-        base = before[: asym.start()].rstrip() if asym else before
-        if base.endswith(")"):
-            depth2, j = 0, len(base) - 1
-            while j >= 0:
-                if base[j] == ")":
-                    depth2 += 1
-                elif base[j] == "(":
-                    depth2 -= 1
-                    if depth2 == 0:
-                        break
-                j -= 1
-            if j < 0:
-                raise UnsupportedSQL("ANY JOIN: unbalanced probe relation")
-            probe_cut = j
-            probe_txt = base[j:]
-            probe_plain = f"{probe_txt} {pname}"
+        probe_txt, palias, probe_cut = probe
+        pname = (palias or probe_txt).strip("`").split(".")[-1]
+        probe_plain = probe_txt + (f" {palias}" if palias else "")
         um = re.match(r"\s*USING\s*\(([^)]*)\)", s[i:], re.I)
         on = re.match(r"\s*ON\b", s[i:], re.I)
 
@@ -2482,34 +2096,9 @@ def _rewrite_any_join(s: str) -> str:
         if not on:
             raise ValueError("[1065] ANY JOIN requires an ON or USING clause")
         cond_start = i + on.end()
-        depth, end = 0, len(s)
-        k = cond_start
-        while k < len(s):
-            ch = s[k]
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                if depth == 0:
-                    end = k
-                    break
-                depth -= 1
-            elif depth == 0:
-                if ch in ",;":
-                    end = k
-                    break
-                cm = _CLAUSE_END.match(s, k)
-                if cm and not (s[k - 1].isalnum() or s[k - 1] in "_`"):
-                    end = k
-                    break
-            k += 1
+        end = clause_end(s, cond_start, _CLAUSE_END, chars=",;")
         cond = s[cond_start:end].strip()
-        terms = re.split(r"\bAND\b", cond, flags=re.I)
-        fixed, buf = [], ""
-        for t in terms:
-            buf = t if not buf else buf + " AND " + t
-            if buf.count("(") == buf.count(")"):
-                fixed.append(buf.strip())
-                buf = ""
+        fixed = _and_terms(cond)
 
         def _aliases(txt: str) -> set[str]:
             return {
@@ -2581,17 +2170,7 @@ def _scan_operand_back(s: str, k: int) -> int | None:
     ``::type`` cast chain of those."""
     while True:
         if s[k] in ")]":
-            close = s[k]
-            opn = "(" if close == ")" else "["
-            depth = 0
-            while k >= 0:
-                if s[k] == close:
-                    depth += 1
-                elif s[k] == opn:
-                    depth -= 1
-                    if depth == 0:
-                        break
-                k -= 1
+            k = open_bracket(s, k, "()" if s[k] == ")" else "[]")
             if k < 0:
                 return None
             start = k
@@ -2684,16 +2263,8 @@ def _scan_rhs(s: str, j: int) -> tuple[str, int] | None:
     while k < len(s) and s[k] in " \t\n":
         k += 1
     if s[k : k + 1] == "(":
-        depth = 0
-        while k < len(s):
-            if s[k] == "(":
-                depth += 1
-            elif s[k] == ")":
-                depth -= 1
-                if depth == 0:
-                    return s[j : k + 1], k + 1
-            k += 1
-        return None
+        k = close_bracket(s, k)
+        return (s[j : k + 1], k + 1) if k != -1 else None
     return s[j:e], e
 _PJ_MINUS = re.compile(r"(?<![\w$])((?:try_)?parse_json)\s*\(", re.I)
 
@@ -2723,16 +2294,8 @@ def _rewrite_jsonb_ops(s: str) -> str:
             j += 1
         if op in ("?|", "?&"):
             if s[j : j + 1] == "[":
-                depth, e = 0, j
-                while e < len(s):
-                    if s[e] == "[":
-                        depth += 1
-                    elif s[e] == "]":
-                        depth -= 1
-                        if depth == 0:
-                            break
-                    e += 1
-                if e >= len(s):
+                e = close_bracket(s, j, "[]")
+                if e == -1:
                     pos = m.end()
                     continue
                 rhs_sql, rhs_end = f"to_json(array({s[j + 1 : e]}))", e + 1
@@ -2783,16 +2346,8 @@ def _rewrite_jsonb_ops(s: str) -> str:
         m = _PJ_MINUS.search(s, pos)
         if not m:
             break
-        depth, e = 0, m.end() - 1
-        while e < len(s):
-            if s[e] == "(":
-                depth += 1
-            elif s[e] == ")":
-                depth -= 1
-                if depth == 0:
-                    break
-            e += 1
-        if e >= len(s):
+        e = close_bracket(s, m.end() - 1)
+        if e == -1:
             break
         recv = s[m.start() : e + 1]
         j = e + 1
@@ -2857,16 +2412,8 @@ def _strip_nullable_wrappers(t: str) -> str:
         m = pat.search(t)
         if not m:
             return t
-        depth, j = 0, m.end() - 1
-        while j < len(t):
-            if t[j] == "(":
-                depth += 1
-            elif t[j] == ")":
-                depth -= 1
-                if depth == 0:
-                    break
-            j += 1
-        if j >= len(t):
+        j = close_bracket(t, m.end() - 1)
+        if j == -1:
             return t
         t = t[: m.start()] + t[m.end() : j] + t[j + 1 :]
 
@@ -2882,19 +2429,10 @@ def _scan_postfix_expr_start(s: str, end: int) -> int:
     """Scan backward from `end` over the primary expression a postfix
     cast applies to (identifier chain, call, masked literal, parens)."""
     i = end
-    depth = 0
     while i > 0:
         ch = s[i - 1]
         if ch in ")]":
-            depth += 1
-            i -= 1
-        elif ch in "([":
-            if depth == 0:
-                break
-            depth -= 1
-            i -= 1
-        elif depth > 0:
-            i -= 1
+            i = max(open_bracket(s, i - 1, "()[]"), 0)
         elif ch.isalnum() or ch in "_.$`\x00":
             i -= 1
         else:
@@ -2934,25 +2472,7 @@ def _rewrite_wide_decimal_postfix(s: str) -> str:
                 break
         if m is None:
             return s
-        # scan backward over the preceding primary expression
-        i = m.start()
-        depth = 0
-        while i > 0:
-            ch = s[i - 1]
-            if ch in ")]":
-                depth += 1
-                i -= 1
-            elif ch in "([":
-                if depth == 0:
-                    break
-                depth -= 1
-                i -= 1
-            elif depth > 0:
-                i -= 1
-            elif ch.isalnum() or ch in "_.$`\x00":
-                i -= 1
-            else:
-                break
+        i = _scan_postfix_expr_start(s, m.start())
         expr = s[i : m.start()]
         if not expr.strip():
             return s
@@ -2983,16 +2503,8 @@ def _rewrite_cast_paren_types(s: str) -> str:
         m = _CAST_PAREN_T.search(s, pos)
         if not m:
             return s
-        depth, j = 0, m.end() - 1
-        while j < len(s):
-            if s[j] == "(":
-                depth += 1
-            elif s[j] == ")":
-                depth -= 1
-                if depth == 0:
-                    break
-            j += 1
-        if j >= len(s):
+        j = close_bracket(s, m.end() - 1)
+        if j == -1:
             return s
         typ = s[m.start(2) : j + 1]
         conv = _rewrite_ddl_nested_types(_strip_nullable_wrappers(typ))
@@ -3103,28 +2615,16 @@ def _rewrite_unpivot_labels(s: str, literals: list[str] | None) -> str:
     backtick them (inside the UNPIVOT IN(…) span only; a bare
     ``DATE '…'`` elsewhere must not be touched)."""
     for um in list(re.finditer(r"\bUNPIVOT\s*\(", s, re.I))[::-1]:
-        depth, j = 0, um.end() - 1
-        while j < len(s):
-            if s[j] == "(":
-                depth += 1
-            elif s[j] == ")":
-                depth -= 1
-                if depth == 0:
-                    break
-            j += 1
+        j = close_bracket(s, um.end() - 1)
+        if j == -1:
+            j = len(s)
         body = s[um.end() : j]
         im = re.search(r"\bIN\s*\(", body, re.I)
         if not im:
             continue
-        k, depth = im.end() - 1, 0
-        while k < len(body):
-            if body[k] == "(":
-                depth += 1
-            elif body[k] == ")":
-                depth -= 1
-                if depth == 0:
-                    break
-            k += 1
+        k = close_bracket(body, im.end() - 1)
+        if k == -1:
+            k = len(body)
         inner = body[im.end() : k]
 
         def fix_item(item: str) -> str:
@@ -3355,10 +2855,10 @@ def _rewrite_variant_ext(s: str) -> str:
         verb = m.group(1).lower()
         want = m.group(2).lower()
         outer_open = out.index("(", m.start() + len(m.group(1)) + 1 + len(m.group(2)))
-        outer_end = _balanced_call(out, outer_open)
+        outer_end = close_bracket(out, outer_open) + 1
         inner_open = m.start(3) + len(m.group(3)) - 1
-        inner_end = _balanced_call(out, inner_open)
-        if outer_end == -1 or inner_end == -1:
+        inner_end = close_bracket(out, inner_open) + 1
+        if outer_end == 0 or inner_end == 0:
             break
         inner_fn = m.group(3)[:-1].strip().lower()
         inner = out[m.start(3) : inner_end]
@@ -3386,8 +2886,8 @@ def _rewrite_variant_ext(s: str) -> str:
         if not m:
             res.append(out[pos:])
             break
-        end = _balanced_call(out, m.end() - 1)
-        if end == -1:
+        end = close_bracket(out, m.end() - 1) + 1
+        if end == 0:
             res.append(out[pos : m.end()])
             pos = m.end()
             continue
@@ -3419,8 +2919,8 @@ def _rewrite_variant_ext(s: str) -> str:
         if not m:
             break
         pj_open = m.start(2) + len(m.group(2)) - 1
-        pj_end = _balanced_call(out, pj_open)
-        if pj_end == -1:
+        pj_end = close_bracket(out, pj_open) + 1
+        if pj_end == 0:
             break
         pj = out[m.start(2) : pj_end]
         unq = f"__variant_access(CAST({pj} AS STRING), '', '', true)"
@@ -3531,7 +3031,7 @@ def _rewrite_variant_subscripts(s: str) -> str:
     return s
 
 
-def _rewrite_asof_outer(s, m, kind, rel, alias, i, on, um):
+def _rewrite_asof_outer(s, m, kind, rel, alias, i, on):
     """ASOF RIGHT/FULL JOIN (reference plans/join.rs:74-75; RightAsof is
     bound as LeftAsof with sides swapped, join.rs:93).
 
@@ -3549,85 +3049,34 @@ def _rewrite_asof_outer(s, m, kind, rel, alias, i, on, um):
     reference); asof inputs are keyed in practice."""
     balias_name = (alias or rel).split("(")[0].strip().strip("`").split(".")[-1]
     # --- probe relation = the FROM item immediately before ASOF
-    pm = re.search(
-        r"([\w.`$\x00]+(?:\s+(?:AS\s+)?(?![Aa][Ss][Oo][Ff]\b)[A-Za-z_]\w*)?)"
-        r"\s*$",
-        s[: m.start()],
-    )
-    if not pm:
+    probe = relation_before(s, m.start())
+    if probe is None:
         raise UnsupportedSQL(f"ASOF {kind} JOIN: probe relation not found")
-    probe_txt = pm.group(1)
-    probe_start = pm.start(1)
-    # an alias-less probe makes the regex swallow the preceding keyword
-    # ("FROM p" → rel FROM, alias p) — drop leading SQL keywords
-    _kw = {"FROM", "JOIN", "ON", "WHERE", "AND", "OR", "AS", "LATERAL"}
-    parts = probe_txt.split()
-    while len(parts) > 1 and parts[0].upper() in _kw:
-        cut = probe_txt.index(parts[1])
-        probe_txt = probe_txt[cut:]
-        probe_start += cut
-        parts = parts[1:]
-    prel = parts[0]
-    palias = (
-        parts[-1].strip("`")
-        if len(parts) > 1 and parts[-1].upper() != "AS"
-        else prel.split(".")[-1].strip("`")
-    )
-    # --- condition: ON <cond> or USING (eqs..., range_key)
-    if um:
-        cols = [c.strip().strip("`") for c in um.group(1).split(",")]
-        eq_terms = [f"{palias}.`{c}` = {balias_name}.`{c}`" for c in cols[:-1]]
-        ineq = f"{palias}.`{cols[-1]}` >= {balias_name}.`{cols[-1]}`"
-        cond = " AND ".join(eq_terms + [ineq])
-        end = i + um.end()
-    elif on:
-        cond_start = i + on.end()
-        depth, end, k = 0, len(s), cond_start
-        while k < len(s):
-            ch = s[k]
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                if depth == 0:
-                    end = k
-                    break
-                depth -= 1
-            elif depth == 0:
-                if ch in ",;":
-                    end = k
-                    break
-                cm = _CLAUSE_END.match(s, k)
-                if cm and (
-                    k == 0 or not (s[k - 1].isalnum() or s[k - 1] in "_`")
-                ):
-                    end = k
-                    break
-            k += 1
-        cond = s[cond_start:end].strip()
-        terms = re.split(r"\bAND\b", cond, flags=re.I)
-        fixed, buf = [], ""
-        for t in terms:
-            buf = t if not buf else buf + " AND " + t
-            if buf.count("(") == buf.count(")"):
-                fixed.append(buf.strip())
-                buf = ""
-        ineqs = [
-            t
-            for t in fixed
-            if re.search(r"(?<![<>!=])(>=|<=|(?<!<)>(?!=)|<(?![=>]))", t)
-            and "<>" not in t
-            and "!=" not in t
-        ]
-        if len(ineqs) != 1:
-            raise UnsupportedSQL(
-                "ASOF JOIN: Missing inequality condition!"
-                if not ineqs
-                else "ASOF JOIN: multiple inequality conditions"
-            )
-        ineq = ineqs[0]
-        eq_terms = [t for t in fixed if t != ineq]
-    else:
+    prel, palias, probe_start = probe
+    palias = palias or prel.split(".")[-1].strip("`")
+    # --- condition: ON <cond> (an outer USING join merges the key
+    # columns, which this shape does not reproduce)
+    if not on:
         raise UnsupportedSQL("ASOF JOIN without ON condition")
+    cond_start = i + on.end()
+    end = clause_end(s, cond_start, _CLAUSE_END, chars=",;")
+    cond = s[cond_start:end].strip()
+    fixed = _and_terms(cond)
+    ineqs = [
+        t
+        for t in fixed
+        if re.search(r"(?<![<>!=])(>=|<=|(?<!<)>(?!=)|<(?![=>]))", t)
+        and "<>" not in t
+        and "!=" not in t
+    ]
+    if len(ineqs) != 1:
+        raise UnsupportedSQL(
+            "ASOF JOIN: Missing inequality condition!"
+            if not ineqs
+            else "ASOF JOIN: multiple inequality conditions"
+        )
+    ineq = ineqs[0]
+    eq_terms = [t for t in fixed if t != ineq]
     im = _INEQ.match(ineq)
     lhs, op, rhs = im.group(1).strip(), im.group(2), im.group(3).strip()
     build_on_left = bool(re.search(rf"\b{re.escape(balias_name)}\s*\.", lhs))
@@ -3646,7 +3095,38 @@ def _rewrite_asof_outer(s, m, kind, rel, alias, i, on, um):
         f" {aug} {kind} JOIN {rel}{' ' + alias if alias else ''} "
         f"ON ({' AND '.join(join_terms)}) "
     )
-    return s[:probe_start] + repl + s[end:]
+    return _except_pick(s[:probe_start] + repl + s[end:], probe_start, palias)
+
+
+_FROM_KW = re.compile(r"\bFROM\b")
+
+
+def _except_pick(s: str, at: int, palias: str) -> str:
+    """``*`` and ``palias.*`` items of the SELECT whose FROM clause holds
+    ``at`` → ``… EXCEPT (palias.__pick)``: the helper column the outer
+    ASOF join adds to its probe stays out of the result."""
+    toks = tokens(s, 0, at)
+    level = toks[-1].depth if toks else 0
+    sel = next(
+        (
+            t
+            for t in reversed(toks)
+            if t.depth < level or (t.depth == level and t.text.upper() == "SELECT")
+        ),
+        None,
+    )
+    if sel is None or sel.depth < level:
+        return s
+    end = clause_end(s, sel.end, _FROM_KW)
+    items = []
+    for it in split_top(s[sel.end : end]):
+        sm = re.fullmatch(
+            rf"(\s*(?:DISTINCT\s+)?)(\*|{re.escape(palias)}\.\*)(\s*)", it, re.I
+        )
+        if sm:
+            it = f"{sm.group(1)}{sm.group(2)} EXCEPT ({palias}.__pick){sm.group(3)}"
+        items.append(it)
+    return s[: sel.end] + ",".join(items) + s[end:]
 
 
 def _fmt_matches(value: str, fmt: str) -> bool:
@@ -3705,46 +3185,19 @@ def _rewrite_to_decimal(sql: str) -> str:
             out.append(sql[i:])
             break
         is_try = bool(m.group(1))
-        j, depth = m.end() - 1, 0
-        while j < n:
-            ch = sql[j]
-            if ch == "'":
-                j += 1
-                while j < n and sql[j] != "'":
-                    j += 1
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    break
-            j += 1
+        j = close_bracket(sql, m.end() - 1)
+        if j == -1:
+            j = n
         inner = sql[m.end() : j]
         after = sql[j + 1 :].lstrip()
         if after.startswith("(") and not inner.lstrip().startswith("'"):
             out.append(sql[i : j + 1])
             i = j + 1
             continue
-        args, buf, d2, k = [], [], 0, 0
-        while k < len(inner):
-            ch = inner[k]
-            if ch == "'":
-                e = k + 1
-                while e < len(inner) and inner[e] != "'":
-                    e += 1
-                buf.append(inner[k : e + 1])
-                k = e + 1
-                continue
-            d2 += ch == "("
-            d2 -= ch == ")"
-            if ch == "," and d2 == 0:
-                args.append("".join(buf).strip())
-                buf = []
-            else:
-                buf.append(ch)
-            k += 1
-        if buf:
-            args.append("".join(buf).strip())
+        args = split_top(inner)
+        if args[-1] == "":
+            args.pop()
+        args = [a.strip() for a in args]
         expr = args[0] if args else "NULL"
         fmt = ""
         p_, s_ = "38", "0"
@@ -3784,7 +3237,7 @@ def _rewrite_from_parts(sql: str) -> str:
 
     def repl(m):
         fn = m.group(1).lower()
-        args = [a.strip() for a in _split_top_commas(m.group(2))]
+        args = [a.strip() for a in split_top(m.group(2))]
         tz = None
         if fn == "timestamp_tz_from_parts" and args and args[-1].lstrip(
         ).startswith("'"):
@@ -3805,30 +3258,6 @@ def _rewrite_from_parts(sql: str) -> str:
         sql,
         flags=re.I,
     )
-
-
-def _split_top_commas(text: str) -> list[str]:
-    parts, buf, depth, i, n = [], [], 0, 0, len(text)
-    while i < n:
-        ch = text[i]
-        if ch == "'":
-            j = i + 1
-            while j < n and text[j] != "'":
-                j += 1
-            buf.append(text[i : j + 1])
-            i = j + 1
-            continue
-        depth += ch == "("
-        depth -= ch == ")"
-        if ch == "," and depth == 0:
-            parts.append("".join(buf))
-            buf = []
-        else:
-            buf.append(ch)
-        i += 1
-    if buf or parts:
-        parts.append("".join(buf))
-    return parts
 
 
 def rewrite_databend_sql(sql: str, opts: RewriteOptions = DEFAULT) -> str:
@@ -4180,7 +3609,10 @@ def _rewrite(sql: str) -> str:
                 + sql[_mv.end():]
             )
             break
-    masked, literals = _mask_strings(sql)
+    # DATE - DATE is an INT day count in the reference
+    if _DATE_MINUS.search(sql):
+        sql = rewrite_date_minus(sql, dates_only=True)
+    masked, literals = mask(sql)
     # line comments (safe post-masking; `--` can't appear in a literal)
     masked = re.sub(r"--[^\n]*", "", masked)
     masked = masked.rstrip()
@@ -4437,14 +3869,7 @@ def _rewrite(sql: str) -> str:
     # left-associatively. Parenthesize comma segments with join chains.
     if re.search(r",[^,()]*\bJOIN\b", masked, re.I):
         def _wrap_comma_joins(mm: re.Match) -> str:
-            head, body = mm.group(1), mm.group(2)
-            segs, depth, start = [], 0, 0
-            for k, ch in enumerate(body):
-                depth += {"(": 1, ")": -1}.get(ch, 0)
-                if ch == "," and depth == 0:
-                    segs.append(body[start:k])
-                    start = k + 1
-            segs.append(body[start:])
+            head, segs = mm.group(1), split_top(mm.group(2))
             if len(segs) < 2:
                 return mm.group(0)
             out = []
@@ -4470,14 +3895,7 @@ def _rewrite(sql: str) -> str:
     # column `generate_series` (srfs); numeric steps over temporal
     # bounds are MICROSECONDS (timestamp) / DAYS (date) counts
     def _gen_series_tvf(mm: re.Match) -> str:
-        args = mm.group(2)
-        parts, depth, start = [], 0, 0
-        for k, ch in enumerate(args):
-            depth += {"(": 1, ")": -1}.get(ch, 0)
-            if ch == "," and depth == 0:
-                parts.append(args[start:k])
-                start = k + 1
-        parts.append(args[start:])
+        parts = split_top(mm.group(2))
         if len(parts) == 3 and re.match(r"\s*-?\d+\s*$", parts[2]):
             low0 = parts[0].lower()
             if "timestamp" in low0 or "now(" in low0:
@@ -4514,13 +3932,7 @@ def _rewrite(sql: str) -> str:
         if before.endswith("as number ") or before.endswith("as `range` "):
             return mm.group(0)
         args = mm.group(2)
-        parts, depth, start = [], 0, 0
-        for k, ch in enumerate(args):
-            depth += {"(": 1, ")": -1}.get(ch, 0)
-            if ch == "," and depth == 0:
-                parts.append(args[start:k])
-                start = k + 1
-        parts.append(args[start:])
+        parts = split_top(args)
         if all(re.match(r"\s*-?\d+\s*$", p) for p in parts):
             # literal args: native Spark range, reference column name
             return (
@@ -4625,14 +4037,7 @@ def _rewrite(sql: str) -> str:
     if ctas_vals and _CREATE_TABLE.match(masked):
         body = masked[ctas_vals.end() - 1 :]
         row = re.search(r"\(((?:[^()]|\([^()]*\))*)\)", body)
-        ncols, depth = 1, 0
-        for ch in row.group(1) if row else "":
-            if ch in "([":
-                depth += 1
-            elif ch in ")]":
-                depth -= 1
-            elif ch == "," and depth == 0:
-                ncols += 1
+        ncols = len(split_top(row.group(1), pairs="()[]")) if row else 1
         cols = ", ".join(f"col{j}" for j in range(ncols))
         masked = (
             masked[: ctas_vals.start()]
@@ -5009,7 +4414,7 @@ def _rewrite(sql: str) -> str:
         masked = _rewrite_vector_operators(masked)
     if re.search(r"get_json_object|__variant_access", masked):
         masked = _rewrite_variant_equality(masked, literals)
-    return _unmask_strings(masked, literals)
+    return unmask(masked, literals)
 
 
 def _rewrite_variant_equality(masked: str, lits: list[str]) -> str:
@@ -5069,7 +4474,7 @@ def _ordered_agg(x_text: str, keys_text: str, over: str = "") -> str:
     stable TimSort, so ties keep the frame (OVER ORDER BY) order the
     reference produces (within_group_window.test)."""
     keys = []
-    for part in _split_top_commas(keys_text):
+    for part in split_top(keys_text):
         mm = re.match(
             r"^(.*?)(?:\s+(ASC|DESC))?(?:\s+NULLS\s+(FIRST|LAST))?\s*$",
             part.strip(),
@@ -5114,7 +4519,7 @@ def _rewrite_ordered_aggs(masked: str) -> str:
     paren = r"(?:[^()]|\([^()]*\))*"
 
     def win_listagg(m: re.Match) -> str:
-        args = _split_top_commas(m.group(2))
+        args = split_top(m.group(2))
         x = args[0].strip()
         sep = args[1].strip() if len(args) > 1 else "''"
         arr = _ordered_agg(x, m.group(3), over=f"OVER ({m.group(4)})")
@@ -5289,13 +4694,59 @@ def _rewrite_interval_algebra(masked: str) -> str:
     return masked
 
 
+_DATE_CALL = re.compile(
+    r"(?:today|yesterday|tomorrow|current_date)\s*\(\s*\)"
+    r"|to_date\s*\([^()]*\)|DATE\s*'[^']*'",
+    re.I,
+)
+_DATE_SYNTAX = re.compile(
+    r"(?:to_date\s*\(.*\)|CAST\s*\(.*\s+AS\s+DATE\s*\)|.*::\s*DATE"
+    r"|DATE\s*'[^']*'|today\s*\(\s*\)|current_date(?:\s*\(\s*\))?)",
+    re.I | re.S,
+)
+_DATE_MINUS = re.compile(  # a '-' that may have a date on its right
+    r"-(?=\s*(?:to_date|DATE|CAST|today|yesterday|tomorrow|current_date"
+    r"|(?:'[^']*'|[\w.`]+)\s*::\s*DATE)\b)",
+    re.I,
+)
+
+
+def rewrite_date_minus(sql: str, dates_only: bool = False) -> str:
+    """``A - <date>`` → ``datediff(A, <date>)``: the reference types
+    date minus date as an INT day count, Spark as an interval. The left
+    operand runs back to the nearest expression boundary (depth-0
+    comma, open paren or clause keyword). The right operand is a date
+    call or literal; with ``dates_only`` both operands must be dates by
+    syntax (``to_date(…)``, ``DATE '…'``, ``CAST(… AS DATE)``,
+    ``…::DATE``, ``today()``, ``current_date``)."""
+    out, minus_at = sql, None
+    # right-to-left so earlier indexes stay valid
+    for m in reversed(list(_DATE_MINUS.finditer(sql))):
+        at = m.start()
+        end = operand_end(sql, at + 1)
+        right = sql[at + 1 : end].strip()
+        if not (_DATE_SYNTAX if dates_only else _DATE_CALL).fullmatch(right):
+            continue
+        if minus_at is None:  # the '-' signs outside strings and comments
+            minus_at = {t.start for t in tokens(sql) if t.text == "-"}
+        if at not in minus_at:
+            continue
+        j = expr_start(sql, at)
+        left = sql[j:at].strip()
+        if left and not (dates_only and (
+            operand_end(left, 0) != len(left) or not _DATE_SYNTAX.fullmatch(left)
+        )):
+            out = out[:j] + f" datediff({left}, {right}) " + out[end:]
+    return out
+
+
 def inline_select_aliases(sql: str) -> str:
     """Inline ``expr AS name`` select-list aliases wherever ``name`` is
     referenced elsewhere in the same select list. DuckDB/Databend bind a
     later ``SUM(k)`` to the alias ``k``'s expression; Spark refuses a
     lateral alias inside an aggregate — used as an error-driven retry for
     LATERAL_COLUMN_ALIAS_IN_AGGREGATE_FUNC."""
-    masked, literals = _mask_strings(sql)
+    masked, literals = mask(sql)
     # skip a WITH prefix — the aliases to inline live in the MAIN select,
     # not the first CTE body
     scan_from = 0
@@ -5311,33 +4762,16 @@ def inline_select_aliases(sql: str) -> str:
             mc = cte_head.match(masked, i)
             if not mc:
                 break
-            depth, j = 1, mc.end()
-            while j < len(masked) and depth:
-                if masked[j] == "(":
-                    depth += 1
-                elif masked[j] == ")":
-                    depth -= 1
-                j += 1
-            i = j
+            i = close_bracket(masked, mc.end() - 1) + 1 or len(masked)
         scan_from = i
     sel = re.compile(r"\bSELECT\b", re.I).search(masked, scan_from)
     if not sel:
         return sql
-    f = _find_depth0(masked, "FROM", sel.end())
+    f = find_top(masked, "FROM", sel.end())
     if f == -1:
         f = len(masked)  # SELECT with no FROM still resolves aliases
-    head, body, tail = masked[: sel.end()], masked[sel.end() : f], masked[f:]
-    # split select list on depth-0 commas
-    items, depth, start = [], 0, 0
-    for i, ch in enumerate(body):
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            items.append(body[start:i])
-            start = i + 1
-    items.append(body[start:])
+    head, tail = masked[: sel.end()], masked[f:]
+    items = split_top(masked[sel.end() : f])
     aliases = {}
     for it in items:
         m = re.match(r"^(.*?)\s+AS\s+([A-Za-z_]\w*)\s*$", it, re.I | re.S)
@@ -5377,18 +4811,18 @@ def inline_select_aliases(sql: str) -> str:
         new_items.append(expr + suffix)
     # Databend also resolves select aliases in WHERE (Spark doesn't);
     # substitute there too — GROUP/ORDER BY keep the alias (Spark allows)
-    w = _find_depth0(tail, "WHERE")
+    w = find_top(tail, "WHERE")
     if w != -1:
         w_end = len(tail)
         for kw in ("GROUP BY", "HAVING", "ORDER BY", "LIMIT", "OFFSET"):
-            k = _find_depth0(tail, kw, w)
+            k = find_top(tail, kw, w)
             if k != -1:
                 w_end = min(w_end, k)
         wc = tail[w:w_end]
         for name, repl in aliases.items():
             wc = re.sub(rf"\b{re.escape(name)}\b", f"({repl})", wc)
         tail = tail[:w] + wc + tail[w_end:]
-    return _unmask_strings(head + ",".join(new_items) + tail, literals)
+    return unmask(head + ",".join(new_items) + tail, literals)
 
 
 def auto_alias_view_body(sql: str) -> str:
@@ -5396,25 +4830,14 @@ def auto_alias_view_body(sql: str) -> str:
     refuses permanent views with auto-generated column names
     (CREATE_PERMANENT_VIEW_WITHOUT_ALIAS) while Databend/DuckDB name the
     column after the expression (``avg(number)``)."""
-    masked, literals = _mask_strings(sql)
+    masked, literals = mask(sql)
     sel = re.search(r"\bAS\s+SELECT\b", masked, re.I)
     if not sel:
         return sql
-    f = _find_depth0(masked, "FROM", sel.end())
+    f = find_top(masked, "FROM", sel.end())
     stop = f if f != -1 else len(masked)
-    body = masked[sel.end() : stop]
-    items, depth, start = [], 0, 0
-    for i, ch in enumerate(body):
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            items.append(body[start:i])
-            start = i + 1
-    items.append(body[start:])
     out_items = []
-    for it in items:
+    for it in split_top(masked[sel.end() : stop]):
         t = it.strip()
         if (
             re.match(r"^[A-Za-z_][\w.]*$", t)  # bare column
@@ -5425,9 +4848,9 @@ def auto_alias_view_body(sql: str) -> str:
         ):
             out_items.append(it)
         else:
-            label = _unmask_strings(t, literals).replace("`", "")
+            label = unmask(t, literals).replace("`", "")
             out_items.append(f"{t} AS `{label}`")
-    return _unmask_strings(
+    return unmask(
         masked[: sel.end()] + " " + ", ".join(out_items) + " " + masked[stop:],
         literals,
     )
@@ -5436,12 +4859,12 @@ def auto_alias_view_body(sql: str) -> str:
 def rewrite_values_as_select(sql: str) -> str:
     """Force-convert INSERT … VALUES to INSERT … SELECT … UNION ALL
     (retry path for INVALID_INLINE_TABLE errors)."""
-    masked, literals = _mask_strings(sql)
+    masked, literals = mask(sql)
     masked = masked.rstrip()
     while masked.endswith(";"):
         masked = masked[:-1].rstrip()
     masked = _rewrite_insert_values_with_exprs(masked, force=True)
-    return _unmask_strings(masked, literals)
+    return unmask(masked, literals)
 
 
 def has_qualify(sql: str) -> bool:
@@ -5460,28 +4883,12 @@ def wrap_where_boolean(sql: str) -> str:
     coerces numeric filters (non-zero = true) where Spark demands a
     boolean. Applied on FILTER_NOT_BOOLEAN retry; a no-op for filters
     that are already boolean."""
-    masked, lits = _mask_strings(sql)
+    masked, lits = mask(sql)
     out = masked
     # process right-to-left so earlier offsets stay valid
     for m in reversed(list(_WHERE_KW.finditer(masked))):
         start = m.end()
-        depth, end = 0, len(out)
-        i = start
-        while i < len(out):
-            c = out[i]
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                if depth == 0:
-                    end = i
-                    break
-                depth -= 1
-            elif depth == 0:
-                km = _WHERE_END.match(out, i)
-                if km and not out[i - 1].isalnum():
-                    end = i
-                    break
-            i += 1
+        end = clause_end(out, start, _WHERE_END)
         clause = out[start:end].strip().rstrip(";").strip()
         if not clause:
             continue
@@ -5502,4 +4909,4 @@ def wrap_where_boolean(sql: str) -> str:
             + f"WHERE CAST(({clause}) AS BOOLEAN) "
             + out[end:]
         )
-    return _unmask_strings(out, lits)
+    return unmask(out, lits)

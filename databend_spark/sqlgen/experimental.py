@@ -14,26 +14,18 @@ from __future__ import annotations
 
 import re
 
-from databend_spark.sqlgen import _mask_strings, _unmask_strings
+from databend_spark.sqlgen.lexer import close_bracket, mask, open_bracket, unmask
 
 _METHOD = re.compile(r"\.\s*([A-Za-z_]\w*)\s*\(")
 _TOKEN_BACK = re.compile(r"[\w`\x00]$")
 
 
+_PAIRS = {"(": "()", "[": "[]", "{": "{}", ")": "()", "]": "[]", "}": "{}"}
+
+
 def _balanced_fwd(s: str, i: int) -> int:
-    """Index just past the closer matching the opener at s[i]."""
-    pairs = {"(": ")", "[": "]", "{": "}"}
-    close = pairs[s[i]]
-    opener = s[i]
-    depth = 0
-    for j in range(i, len(s)):
-        if s[j] == opener:
-            depth += 1
-        elif s[j] == close:
-            depth -= 1
-            if depth == 0:
-                return j + 1
-    return -1
+    """Index just past the closer matching the opener at s[i], or 0."""
+    return close_bracket(s, i, _PAIRS[s[i]]) + 1
 
 
 def _operand_back(s: str, end: int) -> int:
@@ -48,17 +40,7 @@ def _operand_back(s: str, end: int) -> int:
             return i
         c = s[i - 1]
         if c in ")]}":
-            opens = {")": "(", "]": "[", "}": "{"}
-            depth = 0
-            j = i - 1
-            while j >= 0:
-                if s[j] == c:
-                    depth += 1
-                elif s[j] == opens[c]:
-                    depth -= 1
-                    if depth == 0:
-                        break
-                j -= 1
+            j = open_bracket(s, i - 1, _PAIRS[c])
             if j < 0:
                 return i
             # include a function name directly before '('
@@ -97,7 +79,7 @@ def _rewrite_methods(s: str) -> str:
             if not recv:
                 continue
             close = _balanced_fwd(s, m.end() - 1)
-            if close == -1:
+            if close == 0:
                 continue
             args = s[m.end() : close - 1].strip()
             call = f"{m.group(1)}({recv}" + (f", {args}" if args else "") + ")"
@@ -114,7 +96,7 @@ def _rewrite_comprehensions(s: str) -> str:
         found = None
         for m in re.finditer(r"\[", s):
             end = _balanced_fwd(s, m.start())
-            if end == -1:
+            if end == 0:
                 continue
             inner = s[m.start() + 1 : end - 1]
             mf = re.search(
@@ -147,7 +129,7 @@ def _rewrite_comprehensions(s: str) -> str:
 
 
 def rewrite_experimental(sql: str) -> str:
-    masked, lits = _mask_strings(sql)
+    masked, lits = mask(sql)
     # readability underscores in numbers
     masked = re.sub(
         r"\b\d+(?:_\d+)+\b", lambda m: m.group(0).replace("_", ""), masked
@@ -173,4 +155,4 @@ def rewrite_experimental(sql: str) -> str:
         masked,
     )
     masked = _rewrite_methods(masked)
-    return _unmask_strings(masked, lits)
+    return unmask(masked, lits)

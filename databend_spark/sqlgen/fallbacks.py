@@ -33,12 +33,14 @@ from databend_spark.sqlgen import (
     auto_alias_view_body,
     inline_select_aliases,
     rewrite_databend_sql,
+    rewrite_date_minus,
     rewrite_values_as_select,
     variant_paths_to_access,
     variant_paths_to_json,
     variant_paths_to_struct,
     wrap_where_boolean,
 )
+from databend_spark.sqlgen.lexer import close_bracket, find_top, split_top
 
 
 @dataclasses.dataclass
@@ -153,21 +155,9 @@ def splice(table, before=None, candidates=None) -> tuple[Fallback, ...]:
 
 
 def split_top_level(text: str) -> list[str]:
-    """Split an argument/type list on depth-0 commas."""
-    parts, buf, depth = [], [], 0
-    for ch in text:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append("".join(buf))
-            buf = []
-        else:
-            buf.append(ch)
-    if buf or parts:
-        parts.append("".join(buf))
-    return parts
+    """Split an argument/type list on depth-0 commas (none in an empty
+    text)."""
+    return split_top(text) if text else []
 
 
 def _when(*needles, sql=None, msg=None) -> Callable[[Failure], Any]:
@@ -264,11 +254,9 @@ def _window_in_order_by(f, _):
     # DEPTH-0 ORDER BY (one inside an OVER spec must not split the
     # statement)
     s0 = f.sql.rstrip().rstrip(";")
-    depth, ob_at = 0, -1
-    for k in range(len(s0)):
-        depth += {"(": 1, ")": -1}.get(s0[k], 0)
-        if depth == 0 and re.match(r"ORDER\s+BY\s", s0[k:], re.I):
-            ob_at = k
+    ob_at, k = -1, find_top(s0, "ORDER BY")
+    while k != -1:
+        ob_at, k = k, find_top(s0, "ORDER BY", k + 1)
     ms0 = re.match(r"^\s*SELECT\s+", s0, re.I)
     if not (ob_at > 0 and ms0):
         return
@@ -289,12 +277,8 @@ def _window_in_order_by(f, _):
             new_ob.append(it.strip())
     # insert hoisted exprs into the SELECT list (before the depth-0
     # FROM), not after the query tail
-    body, depth, fat = s0[ms0.end():ob_at].rstrip(), 0, -1
-    for k in range(len(body)):
-        depth += {"(": 1, ")": -1}.get(body[k], 0)
-        if depth == 0 and body[k : k + 5].upper() == "FROM ":
-            fat = k
-            break
+    body = s0[ms0.end():ob_at].rstrip()
+    fat = find_top(body, "FROM")
     if hoisted and fat > 0:
         excl = ", ".join(f"__slt_o{k}" for k in range(aux))
         yield (
@@ -546,12 +530,7 @@ def _arrays_zip_broadcast(f, _):
     m = re.search(r"\barrays_zip\s*(\()", sql, re.I)
     if not m:
         return ()
-    depth, j = 0, m.start(1)
-    while j < len(sql):
-        depth += {"(": 1, ")": -1}.get(sql[j], 0)
-        j += 1
-        if depth == 0:
-            break
+    j = close_bracket(sql, m.start(1)) + 1 or len(sql)
     args = split_top_level(sql[m.start(1) + 1 : j - 1])
     mf = re.search(r"\bFROM\b.*$", sql, re.I | re.S)
     fseg = mf.group(0).rstrip("; \n") if mf else ""
@@ -935,69 +914,6 @@ def _numeric_bool_compare(f, _):
     return _if_changed(f, alt)
 
 
-_DATE_CALL = re.compile(
-    r"-\s*(today\s*\(\s*\)|yesterday\s*\(\s*\)|tomorrow\s*\(\s*\)"
-    r"|current_date\s*\(\s*\)|to_date\s*\([^()]*\)|DATE\s*'[^']*')",
-    re.I,
-)
-
-
-def rewrite_date_minus(sql: str) -> str:
-    """``A - <date expr>`` → ``datediff(A, <date expr>)`` (the reference
-    types date-minus-date as an INT day count; Spark yields an
-    interval). The left operand is scanned back to the nearest
-    expression boundary (depth-0 comma/paren/keyword)."""
-    out = sql
-    # right-to-left so earlier indexes stay valid
-    for m in reversed(list(_DATE_CALL.finditer(sql))):
-        i = m.start()
-        j = i
-        while j > 0:
-            k = j - 1
-            while k >= 0 and sql[k].isspace():
-                k -= 1
-            if k < 0:
-                break
-            c = sql[k]
-            if c == ")":
-                depth = 0
-                while k >= 0:
-                    if sql[k] == ")":
-                        depth += 1
-                    elif sql[k] == "(":
-                        depth -= 1
-                        if depth == 0:
-                            break
-                    k -= 1
-                # include a function name before the paren group
-                e = k
-                while e > 0 and (sql[e - 1].isalnum() or sql[e - 1] in "_."):
-                    e -= 1
-                j = e
-            elif c.isalnum() or c in "_.'`":
-                e = k
-                if c == "'":
-                    e -= 1
-                    while e >= 0 and sql[e] != "'":
-                        e -= 1
-                while e > 0 and (sql[e - 1].isalnum() or sql[e - 1] in "_.'`"):
-                    e -= 1
-                word = sql[e : k + 1].upper()
-                if word in ("SELECT", "WHERE", "AND", "OR", "BY", "THEN",
-                            "ELSE", "WHEN", "AS", "ON", "FROM", "SET"):
-                    break
-                j = e
-            elif c in "+-*/":
-                j = k
-            else:
-                break
-        a = sql[j:i].strip()
-        if not a:
-            continue
-        out = out[:j] + f" datediff({a}, {m.group(1)}) " + out[m.end():]
-    return out
-
-
 def _date_add_bigint_column(f, _):
     # date + bigint column: Spark's date_add wants INT
     md = re.search(r'however "([\w.`]+)" has the type "BIGINT"', f.msg)
@@ -1087,13 +1003,7 @@ def decorrelate_join_on(sql: str) -> str | None:
         if not ms:
             break
         start = i + ms.start()
-        depth, j = 1, start + 1
-        while j < len(cond) and depth:
-            if cond[j] == "(":
-                depth += 1
-            elif cond[j] == ")":
-                depth -= 1
-            j += 1
+        j = close_bracket(cond, start) + 1 or len(cond)
         subs.append(cond[start:j])
         i = j
     if not subs:

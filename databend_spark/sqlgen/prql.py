@@ -11,32 +11,12 @@ from __future__ import annotations
 
 import re
 
+from databend_spark.sqlgen.lexer import split_top
+
+_PAIRS = "()[]{}"  # brackets that nest in a PRQL pipeline
 _AGG_FNS = (
     "sum", "average", "avg", "min", "max", "count", "stddev", "count_distinct"
 )
-
-
-def _split_top(text: str, sep: str) -> list[str]:
-    """Split on a separator at zero paren/brace/bracket/quote depth."""
-    parts, depth, start, i = [], 0, 0, 0
-    in_str: str | None = None
-    while i < len(text):
-        ch = text[i]
-        if in_str:
-            if ch == in_str:
-                in_str = None
-        elif ch in "'\"":
-            in_str = ch
-        elif ch in "([{":
-            depth += 1
-        elif ch in ")]}":
-            depth -= 1
-        elif ch == sep and depth == 0:
-            parts.append(text[start:i])
-            start = i + 1
-        i += 1
-    parts.append(text[start:])
-    return parts
 
 
 def _expr(e: str) -> str:
@@ -66,7 +46,7 @@ def _items(body: str) -> list[str]:
     body = body.strip()
     if body.startswith("{") and body.endswith("}"):
         body = body[1:-1]
-    return [p.strip() for p in _split_top(body, ",") if p.strip()]
+    return [p.strip() for p in split_top(body, ",", _PAIRS) if p.strip()]
 
 
 def _named(items: list[str]) -> list[str]:
@@ -87,7 +67,7 @@ def prql_to_sql(pipeline: str) -> str:
     ONE projection over the current relation (so a derive after a
     narrowing select can still reference base-table columns), with
     derived aliases substituted into later selections."""
-    stages = [s.strip() for s in _split_top(pipeline, "|") if s.strip()]
+    stages = [s.strip() for s in split_top(pipeline, "|", _PAIRS) if s.strip()]
     if not stages or not re.match(r"^from\b", stages[0], re.I):
         raise ValueError("[1005] PRQL parse error: pipeline must start with `from`")
     rel = stages[0][4:].strip().rstrip(";")

@@ -1037,7 +1037,10 @@ def run_slt_file(
         # mask string literals first: a comma (or '=') inside a literal
         # value — e.g. SET data = '{"id":1, "likes": 100}' — must not
         # split the assignment list
-        from databend_spark.sqlgen import _mask_strings, _unmask_strings
+        from databend_spark.sqlgen.lexer import (
+            mask as _mask_strings,
+            unmask as _unmask_strings,
+        )
 
         masked, lits = _mask_strings(body)
         parts, depth, start = [], 0, 0
@@ -3183,7 +3186,10 @@ def run_slt_file(
         filtered INSERT…SELECT so Catalyst handles each write as a plain
         insert. FIRST routes a row to the first matching branch (later
         branches exclude earlier conditions), ALL to every match."""
-        from databend_spark.sqlgen import _mask_strings, _unmask_strings
+        from databend_spark.sqlgen.lexer import (
+            mask as _mask_strings,
+            unmask as _unmask_strings,
+        )
 
         masked, lits = _mask_strings(rest)
         # source = first depth-0 SELECT/WITH/FROM keyword
@@ -3419,10 +3425,10 @@ def run_slt_file(
         (operators/recursive_cte.py — anchor = all non-self-referencing
         branches, one step = UNION ALL of the self-referencing ones)."""
         from databend_spark.operators.recursive_cte import recursive_cte
-        from databend_spark.sqlgen import (
-            _balanced_call,
-            _mask_strings,
-            _unmask_strings,
+        from databend_spark.sqlgen.lexer import (
+            close_bracket,
+            mask as _mask_strings,
+            unmask as _unmask_strings,
         )
 
         head = re.match(r"^\s*WITH\s+RECURSIVE\s+", sql, re.I)
@@ -3445,8 +3451,8 @@ def run_slt_file(
                 if c.strip()
             ]
             open_idx = pos + m.end() - 1
-            end = _balanced_call(sql, open_idx)
-            if end < 0:
+            end = close_bracket(sql, open_idx) + 1
+            if end == 0:
                 return None
             ctes.append((name, cols, sql[open_idx + 1 : end - 1]))
             rest = sql[end:]
@@ -3810,7 +3816,10 @@ def run_slt_file(
         """Positional column refs ``$N`` / ``alias.$N`` (reference
         bind_select: SELECT $1 = first column of the FROM relation) —
         resolve against the relation's schema and substitute names."""
-        from databend_spark.sqlgen import _mask_strings, _unmask_strings
+        from databend_spark.sqlgen.lexer import (
+            mask as _mask_strings,
+            unmask as _unmask_strings,
+        )
         from databend_spark.sqlgen import rewrite_databend_sql as _rwd
 
         masked, _lits = _mask_strings(sql)
@@ -4020,7 +4029,10 @@ def run_slt_file(
         non-foldable expressions (e.g. wide-decimal cast UDFs) — Spark
         inline tables only take foldable rows; rewrite to a UNION ALL
         derived table with the alias column names."""
-        from databend_spark.sqlgen import _mask_strings, _unmask_strings
+        from databend_spark.sqlgen.lexer import (
+            mask as _mask_strings,
+            unmask as _unmask_strings,
+        )
 
         sql, _vlits = _mask_strings(sql)
         m = re.search(r"\(\s*VALUES\s*\(", sql, re.I)
@@ -4295,9 +4307,9 @@ def run_slt_file(
                     for f in spark.table(mins.group(1)).schema
                 ]
             )
-            from databend_spark.sqlgen import (
-                _mask_strings,
-                _unmask_strings,
+            from databend_spark.sqlgen.lexer import (
+                mask as _mask_strings,
+                unmask as _unmask_strings,
             )
 
             bodyi, litsi = _mask_strings(
@@ -4898,10 +4910,7 @@ def run_slt_file(
         ):
             # wrap every FROM/JOIN reference of a governed table in the
             # policy derived table (row predicate + masking projection)
-            from databend_spark.sqlgen import (
-                _mask_strings as _pms2,
-                _unmask_strings as _pus2,
-            )
+            from databend_spark.sqlgen.lexer import mask as _pms2, unmask as _pus2
 
             _gm, _gl = _pms2(sql)
             _kw_stop = (
@@ -5260,10 +5269,7 @@ def run_slt_file(
                 # swap the proxy name only in table-reference position
                 # (after FROM/JOIN), on masked text so string literals
                 # and same-named column identifiers are untouched
-                from databend_spark.sqlgen import (
-                    _mask_strings as _pms,
-                    _unmask_strings as _pums,
-                )
+                from databend_spark.sqlgen.lexer import mask as _pms, unmask as _pums
 
                 _pm, _pl = _pms(sql)
                 _pm = re.sub(
@@ -5794,9 +5800,9 @@ def run_slt_file(
         if re.search(r"(?<![\w.`'])default\.(?=[\w`])", sql, re.I):
             _cur = _iso_db
             if _cur.startswith("slt_"):
-                from databend_spark.sqlgen import (
-                    _mask_strings,
-                    _unmask_strings,
+                from databend_spark.sqlgen.lexer import (
+                    mask as _mask_strings,
+                    unmask as _unmask_strings,
                 )
 
                 _mk, _ls = _mask_strings(sql)
@@ -6092,7 +6098,10 @@ def run_slt_file(
         # (consistently across DDL and references, literals masked).
         # Runs after the RBAC layer — dashed role/user names stay literal.
         if re.search(r"`[\w]+(?:-[\w-]*)+`", sql):
-            from databend_spark.sqlgen import _mask_strings, _unmask_strings
+            from databend_spark.sqlgen.lexer import (
+                mask as _mask_strings,
+                unmask as _unmask_strings,
+            )
 
             _mk, _ls = _mask_strings(sql)
             _mk = re.sub(
@@ -6110,7 +6119,7 @@ def run_slt_file(
             # error in the reference (the inner parens make it a scalar)
             raise ValueError("[1005] ORDER BY on a parenthesized query")
         if re.match(r"^\s*(SELECT|WITH)\b", sql, re.I):
-            from databend_spark.sqlgen import _mask_strings as _msk
+            from databend_spark.sqlgen.lexer import mask as _msk
 
             _g, _ = _msk(sql)
             # tuple IN <subquery> is unsupported in the reference
@@ -6311,7 +6320,7 @@ def run_slt_file(
             temp_files_n[0] = 2 if cap < 100 else 0
             _refresh_temp_files()
         if re.match(r"^\s*(SELECT|WITH|INSERT)\b", sql, re.I):
-            from databend_spark.sqlgen import _mask_strings as _dzm
+            from databend_spark.sqlgen.lexer import mask as _dzm
 
             _dz, _ = _dzm(sql)
             if re.search(r"/\s*0(?![\d.\w])", _dz) and not re.search(
@@ -6777,7 +6786,10 @@ def run_slt_file(
         if mdk and re.search(
             r"(?<![\w`])default(?![\w`(])", mdk.group(3), re.I
         ):
-            from databend_spark.sqlgen import _mask_strings, _unmask_strings
+            from databend_spark.sqlgen.lexer import (
+                mask as _mask_strings,
+                unmask as _unmask_strings,
+            )
 
             _tk4 = mdk.group(1).split(".")[-1].strip("`").lower()
             cols4 = (
@@ -6877,10 +6889,7 @@ def run_slt_file(
                     else list(ddl_decl_types.get(_tk5, {}).keys())
                 )
                 _dec5 = ddl_decl_types.get(_tk5, {})
-                from databend_spark.sqlgen import (
-                    _mask_strings as _ms5,
-                    _unmask_strings as _us5,
-                )
+                from databend_spark.sqlgen.lexer import mask as _ms5, unmask as _us5
 
                 _body5, _lits5 = _ms5(_ivm.group(3).rstrip().rstrip(";"))
                 _tuples5, _vals5, _dep5, _st5 = [], [], 0, 0
@@ -7073,7 +7082,10 @@ def run_slt_file(
                 # UNION ALL of SELECTs, not FROM (VALUES ...): the values
                 # may contain UDF calls (ST_GEOMFROMWKT …) which Spark's
                 # inline tables reject
-                from databend_spark.sqlgen import _mask_strings, _unmask_strings
+                from databend_spark.sqlgen.lexer import (
+                    mask as _mask_strings,
+                    unmask as _unmask_strings,
+                )
 
                 _gvals = mgi.group(3).rstrip().rstrip(";")
                 _gm, _glits = _mask_strings(_gvals)
@@ -8790,10 +8802,7 @@ def run_slt_file(
             # double-quoted identifiers (DuckDB style) → bare — on
             # masked text, so `"id"` inside a '{"id":13}' JSON literal
             # keeps its quotes
-            from databend_spark.sqlgen import (
-                _mask_strings as _mms,
-                _unmask_strings as _mus,
-            )
+            from databend_spark.sqlgen.lexer import mask as _mms, unmask as _mus
 
             _mm, _ml = _mms(sql)
             sql = _mus(re.sub(r'"(\w+)"', r"\1", _mm), _ml)
@@ -8978,10 +8987,10 @@ def run_slt_file(
             # bracket syntax must be resolved at registration — macro
             # expansion happens after the query-level bracket rewrite
             if "[" in body:
-                from databend_spark.sqlgen import (
-                    _mask_strings,
-                    _rewrite_brackets,
-                    _unmask_strings,
+                from databend_spark.sqlgen import _rewrite_brackets
+                from databend_spark.sqlgen.lexer import (
+                    mask as _mask_strings,
+                    unmask as _unmask_strings,
                 )
 
                 _bk, _bl = _mask_strings(body)
@@ -9488,7 +9497,10 @@ def run_slt_file(
             return spark.createDataFrame([(n,)], "count bigint")
         mf = _update_head.match(sql)
         if mf:
-            from databend_spark.sqlgen import _mask_strings, _unmask_strings
+            from databend_spark.sqlgen.lexer import (
+                mask as _mask_strings,
+                unmask as _unmask_strings,
+            )
 
             t, alias, tail = mf.group(1), mf.group(2) or mf.group(1), mf.group(3)
             # scan a string-masked copy: a literal like 'hello from x'
@@ -10461,10 +10473,7 @@ def run_slt_file(
                     )
                     for c in _cols6
                 ):
-                    from databend_spark.sqlgen import (
-                        _mask_strings as _ms6,
-                        _unmask_strings as _us6,
-                    )
+                    from databend_spark.sqlgen.lexer import mask as _ms6, unmask as _us6
 
                     _body6, _lits6 = _ms6(
                         _vim.group(3).rstrip().rstrip(";")
@@ -10665,7 +10674,7 @@ def run_slt_file(
                         if c.lower() not in _cc
                     ]
                     mv = re.search(r"\bVALUES\s*\(", sql, re.I)
-                    from databend_spark.sqlgen import _mask_strings as _cms
+                    from databend_spark.sqlgen.lexer import mask as _cms
 
                     msql, _ = _cms(sql[mv.end() - 1 :])
                     depth, nvals = 0, 1

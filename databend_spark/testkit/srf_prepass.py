@@ -96,7 +96,10 @@ def rewrite_select_srfs(sql: str, probe) -> str:
     when analysis fails (leave untouched). Raises ValueError on a
     non-array, non-variant argument that the rewrite can't defer to
     Spark's own error."""
-    from databend_spark.sqlgen import _mask_strings, _unmask_strings
+    from databend_spark.sqlgen.lexer import (
+        mask as _mask_strings,
+        unmask as _unmask_strings,
+    )
 
     body, _lits = _mask_strings(sql.strip().rstrip(";"))
     # table-factor form over a standalone argument: SELECT * FROM

@@ -420,3 +420,29 @@ def test_python_workers_import_the_engine(tmp_path):
     )
     assert out.returncode == 0, out.stderr[-3000:]
     assert out.stdout.split() == ["b"]
+
+
+@pytest.mark.skipif(not os.path.isdir(SF001), reason=f"{SF001} missing")
+def test_footer_statics_are_looked_up_once_per_session(spark, monkeypatch):
+    """The footer reader's four JVM statics are looked up once per
+    session and kept in its state, so the second load_table sends four
+    fewer py4j commands than the first. (A warm-up load pays the rest of
+    the session's first-use set-up; the statics are then dropped.)"""
+    session = spark.newSession()
+    load_table(session, os.path.join(SF001, "nation.parquet"))
+    session_state(session).footer_statics = None
+    client = session._jvm._gateway_client
+    send, sent = client.send_command, []
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith("m\nd\n"):  # not a py4j garbage collection
+            sent.append(command)
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    counts = []
+    for name in ("nation", "region"):
+        sent.clear()
+        load_table(session, os.path.join(SF001, f"{name}.parquet"))
+        counts.append(len(sent))
+    assert counts[0] - counts[1] == 4

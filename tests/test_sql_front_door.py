@@ -38,3 +38,11 @@ def test_front_door_matches_spark(ctx, sf_dir, name):
     # the SLT runner's per-file isolation may have dropped the views
     register_tables(ctx.spark, sf_dir)
     assert _hash(ctx.sql(text)) == _hash(ctx.spark.sql(text))
+
+
+def test_date_minus_date_is_an_int_day_count(ctx):
+    """The reference types DATE - DATE as INT days; Spark would give an
+    interval."""
+    df = ctx.sql("SELECT to_date('2024-01-10') - to_date('2024-01-01') AS d")
+    assert df.dtypes == [("d", "int")]
+    assert df.collect()[0].d == 9

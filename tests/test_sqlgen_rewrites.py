@@ -190,6 +190,8 @@ _JOINS = {
     "asof_left": f"SELECT * FROM p ASOF LEFT JOIN b {_ASOF_ON}",
     "asof_right": f"SELECT * FROM p ASOF RIGHT JOIN b {_ASOF_ON}",
     "any": "SELECT * FROM p ANY JOIN b ON p.pk = b.bk",
+    "any_alias": "SELECT * FROM p p ANY JOIN b b ON p.pk = b.bk",
+    "any_as": "SELECT * FROM p AS p ANY JOIN b AS b ON p.pk = b.bk",
 }
 # clause after the join → the same clause over the bare join's result
 _TAILS = {
@@ -222,15 +224,41 @@ def join_views(spark):
 def test_join_rewrite_stops_at_the_next_clause(spark, join_views, join, tail):
     """An ASOF or ANY JOIN's ON condition ends where WHERE, a second
     JOIN or ORDER BY starts: the clause stays outside the rewritten
-    join and applies to its result."""
+    join and applies to its result, which carries no helper column."""
     clause, over_bare = _TAILS[tail]
     out = R(f"{_JOINS[join]} {clause}")
     bare = R(_JOINS[join])
     assert out.startswith(bare.rstrip())
-    got = spark.sql(out).collect()
+    df = spark.sql(out)
+    assert "__pick" not in df.columns
+    got = df.collect()
     want = spark.sql(over_bare.format(bare)).collect()
     if tail == "order_by":
         assert got == want
     else:
         assert sorted(got, key=repr) == sorted(want, key=repr)
     assert got
+
+
+def test_asof_join_using_drops_the_build_keys(spark):
+    """``ASOF JOIN b USING (k, t)``: ``b`` is the build relation, not
+    ``b`` aliased ``USING``. The result is the ON form's with the build
+    side's copies of the USING columns dropped. The outer forms keep
+    their explicit error."""
+    from databend_spark.sqlgen import UnsupportedSQL
+
+    for name, rows in {
+        "pu": "(1, 10, 'a'), (1, 20, 'b'), (2, 5, 'c') AS t(k, t, x)",
+        "bu": "(1, 9, 100), (1, 15, 200), (2, 6, 300) AS t(k, t, v)",
+    }.items():
+        spark.sql(f"CREATE OR REPLACE TEMP VIEW {name} AS SELECT * FROM VALUES {rows}")
+    got = spark.sql(R("SELECT * FROM pu ASOF JOIN bu USING (k, t)"))
+    want = spark.sql(
+        R("SELECT pu.*, bu.v FROM pu ASOF JOIN bu ON pu.k = bu.k AND pu.t >= bu.t")
+    )
+    assert got.columns == ["k", "t", "x", "v"]
+    assert sorted(got.collect()) == sorted(want.collect()) == [
+        (1, 10, "a", 100), (1, 20, "b", 200),
+    ]
+    with pytest.raises(UnsupportedSQL, match="ON condition"):
+        R("SELECT * FROM pu ASOF RIGHT JOIN bu USING (k, t)")
