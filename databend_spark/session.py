@@ -392,6 +392,31 @@ def load_table(spark: SparkSession, *paths: str) -> DataFrame:
     return df.withColumns(fixed) if fixed else df
 
 
+def _list_files(
+    paths: list[str], files: list[str] | None, pattern: str | None
+) -> list[tuple[str, str]]:
+    """(name, path) of the data files under ``paths``: a directory lists
+    the files below it (Spark's ``_``/``.`` markers left out), named
+    relative to it; FILES and PATTERN select by that name."""
+    out = []
+    for root in paths:
+        if not os.path.isdir(root):
+            out.append((os.path.basename(root), root))
+            continue
+        for dirp, dirs, names in os.walk(root):
+            dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+            out += [
+                (os.path.relpath(os.path.join(dirp, f), root), os.path.join(dirp, f))
+                for f in sorted(names)
+                if not f.startswith(("_", "."))
+            ]
+    if files:
+        out = [f for f in out if f[0] in files]
+    if pattern is not None:
+        out = [f for f in out if re.fullmatch(pattern, f[0])]
+    return out
+
+
 class SessionContext:
     """bendpy-style facade over SparkSession.
 
@@ -402,7 +427,8 @@ class SessionContext:
 
     def __init__(self, spark: SparkSession | None = None):
         self.spark = spark or get_spark()
-        self._copy_history: dict[str, set[str]] = {}
+        # table -> {real path: (size, mtime)} of the files COPY loaded
+        self._copy_history: dict[str, dict[str, tuple]] = {}
         # system-catalog state (reference: src/query/storages/system/src/
         # {query_log,streams,tasks,stages}_table.rs)
         self._query_log: list[tuple] = []
@@ -664,21 +690,33 @@ class SessionContext:
     def copy_into(
         self, table: str, paths: list[str], fmt: str = "parquet", **options
     ) -> int:
-        """Bulk load with file-history dedup, like the reference's COPY
-        (``src/query/service/src/physical_plans/physical_copy_into_table.rs``
-        lists stage files and dedups against copy history). Returns number
-        of files actually loaded."""
-        seen = self._copy_history.setdefault(table, set())
-        fresh = [p for p in paths if p not in seen]
-        if not fresh:
-            return 0
+        """Load files into ``table`` like the SQL ``COPY INTO``:
+        ``options`` are the statement's options (``on_error``, ``force``,
+        ``pattern``, ``purge``, ...) and its FILE_FORMAT options
+        (``skip_header``, ``field_delimiter``, ...), under the names the
+        statement uses. A directory stands for the files under it. Files
+        loaded before, with the same size and mtime, are skipped. Parquet
+        without options reads through ``load_table`` (creating the table
+        if needed); every other load decodes each file in its own task
+        into the existing table. Returns the number of files loaded."""
+        from databend_spark.sources.copy_into import (
+            copy_into_table,
+            copy_options,
+            pick_files,
+        )
+        from databend_spark.sources.stage_format import resolve_format
+
+        co, format_opts = copy_options(options)
+        history = self._copy_history.setdefault(table, {})
         if fmt == "parquet" and not options:
-            df = load_table(self.spark, *fresh)
+            fmt_params, info, listed = None, None, [(p, p) for p in paths]
         else:
-            df = getattr(self.spark.read.options(**options), fmt)(*fresh)
-        if self.spark.catalog.tableExists(table):
-            df.write.insertInto(table)
-        else:
-            df.write.saveAsTable(table)
-        seen.update(fresh)
-        return len(fresh)
+            fmt_params = resolve_format({"type": fmt, **format_opts})
+            info = (self.spark.table(table).schema.fields, {}, {}, {})
+            listed = _list_files(paths, co.files, co.pattern)
+        loaded = copy_into_table(
+            self.spark, table, pick_files(listed, history, co), fmt_params, co,
+            info=info,
+        )
+        history.update(loaded.history)
+        return len(loaded.history)

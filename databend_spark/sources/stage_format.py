@@ -8,10 +8,10 @@ decoders under ``src/query/formats/src/field_decoder/``.
 Decoding operates one file at a time (bytes -> typed rows + row-level
 errors), which matches the reference's loader parallelism model: COPY
 INTO distributes at FILE granularity (one task per file / file split).
-The distributed path wraps :func:`decode_file` in an Arrow-batched
-``mapInPandas`` over the staged file list (``copy_into_distributed``);
-the SLT harness calls it driver-side for its KB-sized fixtures — the
-semantics are identical because each call only ever sees one file.
+``sources/copy_into.py`` runs :func:`decode_file` (text formats) and
+:func:`_decode_binary_fmt` (parquet / ORC / Avro / Arrow) in one task
+per staged file, and :func:`encode_rows` in one task per partition of
+an unload.
 """
 
 from __future__ import annotations
@@ -21,6 +21,7 @@ import binascii
 import io
 import json
 import math
+import os
 import re
 from dataclasses import dataclass, field, replace
 from datetime import date, datetime, timezone
@@ -1397,4 +1398,328 @@ def _jsonable(v, col: ColSpec):
         if math.isnan(v) or math.isinf(v):
             return None
         return v
+    return v
+
+
+# ---------------------------------------------------------------------------
+# parquet / ORC / Avro / Arrow decode (pyarrow)
+
+
+def _decode_binary_fmt(path, fmt, specs):
+    """parquet/orc/arrow load: pyarrow read + name-matched, option-
+    driven column mapping (missing_field_as, null_if, case rules)
+    with row-level errors for the ON_ERROR policy."""
+    if os.path.getsize(path) == 0:
+        return [], []
+    if fmt.type == "avro":
+        return _decode_avro(path, fmt, specs)
+    tbl = _read_arrow(path, fmt)
+    cols_lower = {c.lower(): c for c in tbl.column_names}
+    for spec in specs:
+        if spec.name.lower() not in cols_lower:
+            if fmt.missing_field_as == "error":
+                raise RuntimeError(
+                    f"[1046] file {os.path.basename(path)} missing "
+                    f"column {spec.name} (consider MISSING_FIELD_AS)"
+                )
+            if fmt.missing_field_as == "null" and not spec.nullable:
+                raise RuntimeError(
+                    f"[1046] missing field {spec.name} is NOT NULL"
+                )
+    recs = tbl.to_pylist()
+    rows, errors = [], []
+    for ln, rec in enumerate(recs, 1):
+        lower = {k.lower(): v for k, v in rec.items()}
+        out, err = [], None
+        for ci, spec in enumerate(specs):
+            key = spec.name.lower()
+            if key not in cols_lower:
+                out.append(
+                    None
+                    if fmt.missing_field_as == "null"
+                    else spec.type_default()
+                )
+                continue
+            try:
+                out.append(_arrow_cast(lower.get(key), spec, fmt))
+            except FieldError as e:
+                err = (
+                    ln,
+                    f"Invalid value {str(lower.get(key))[:60]!r} for "
+                    f"column {ci} ({spec.name} {spec.db_type}): {e}",
+                )
+                break
+        if err:
+            errors.append(err)
+        else:
+            rows.append(tuple(out))
+    return rows, errors
+
+
+def _decode_avro(path, fmt, specs):
+    """Avro loads bypass Arrow inference: records stay Python maps
+    so empty avro maps do not grow phantom struct keys."""
+    from databend_spark.sources.avro_reader import read_avro_records
+
+    records, _schema = read_avro_records(
+        open(path, "rb").read(), fmt.use_logic_type
+    )
+    rows, errors = [], []
+    for ln, rec in enumerate(records, 1):
+        lower = {k.lower(): v for k, v in rec.items()}
+        out = []
+        err = None
+        for ci, spec in enumerate(specs):
+            key = spec.name.lower()
+            if key not in lower:
+                if fmt.missing_field_as == "error":
+                    err = (
+                        ln,
+                        f"Missing value for column {ci} ({spec.name} "
+                        f"{spec.db_type}"
+                        + ("" if not spec.nullable else " NULL")
+                        + "). current FILE_FORMAT option: "
+                        "MISSING_FIELD_AS=ERROR",
+                    )
+                    break
+                out.append(
+                    None
+                    if fmt.missing_field_as == "null"
+                    else spec.type_default()
+                )
+                continue
+            out.append(_avro_cast(lower[key], spec))
+        if err:
+            errors.append(err)
+        else:
+            rows.append(tuple(out))
+    return rows, errors
+
+
+def _avro_json(rec) -> str:
+    """Canonical (sorted-key) JSON text of one Avro record — the stage
+    select surface exposes each record as a single variant column.
+    Hand-rolled so decimals emit full-precision raw number tokens
+    (json.dumps would quote or round them)."""
+    return _jdump(rec)
+
+
+def _jdump(v) -> str:
+    import datetime as _dt
+    import json as _json
+    from decimal import Decimal as _D
+
+    if v is None:
+        return "null"
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, _D):
+        return format(v, "f")
+    if isinstance(v, dict):
+        return "{" + ",".join(
+            f"{_json.dumps(str(k), ensure_ascii=False)}:{_jdump(x)}"
+            for k, x in sorted(v.items(), key=lambda kv: str(kv[0]))
+        ) + "}"
+    if isinstance(v, (list, tuple)):
+        # pyarrow MAP columns arrive as lists of (key, value) 2-TUPLES
+        # (list/struct children arrive as dicts) — render as a JSON
+        # object with sorted keys like the reference's jsonb
+        if v and all(isinstance(x, tuple) and len(x) == 2 for x in v):
+            return "{" + ",".join(
+                f"{_json.dumps(str(k), ensure_ascii=False)}:{_jdump(x)}"
+                for k, x in sorted(v, key=lambda kv: str(kv[0]))
+            ) + "}"
+        return "[" + ",".join(_jdump(x) for x in v) + "]"
+    if isinstance(v, _dt.datetime):
+        return _json.dumps(v.strftime("%Y-%m-%d %H:%M:%S.%f"))
+    if isinstance(v, _dt.date):
+        return _json.dumps(v.isoformat())
+    if isinstance(v, (bytes, bytearray)):
+        return _json.dumps(bytes(v).hex().upper())
+    if isinstance(v, float):
+        if v != v or v in (float("inf"), float("-inf")):
+            return "null"
+        return _json.dumps(v)
+    if isinstance(v, int):
+        return str(v)
+    return _json.dumps(v, ensure_ascii=False)
+
+
+def _avro_jsonable(v):
+    import datetime as _dt
+    from decimal import Decimal as _D
+
+    if isinstance(v, dict):
+        return {k: _avro_jsonable(x) for k, x in v.items()}
+    if isinstance(v, (list, tuple)):
+        return [_avro_jsonable(x) for x in v]
+    if isinstance(v, _D):
+        return float(v) if v == v.to_integral_value() and abs(v) < 10**15 else str(v)
+    if isinstance(v, _dt.datetime):
+        return v.strftime("%Y-%m-%d %H:%M:%S.%f")
+    if isinstance(v, _dt.date):
+        return v.isoformat()
+    if isinstance(v, (bytes, bytearray)):
+        return bytes(v).hex().upper()
+    if isinstance(v, float):
+        if v != v or v in (float("inf"), float("-inf")):
+            return None
+        return v
+    return v
+
+
+def _avro_cast(v, spec: ColSpec):
+    """Avro value -> target column python value."""
+    import json as _json
+
+    if v is None:
+        return None
+    k = spec.kind
+    if k == "variant":
+        return _json.dumps(
+            _avro_jsonable(v), sort_keys=True, separators=(",", ":"),
+            ensure_ascii=False,
+        )
+    if k == "map" and isinstance(v, dict):
+        return {kk: _avro_cast(x, spec.elem) if spec.elem else x
+                for kk, x in v.items()}
+    if k == "map" and isinstance(v, list):
+        return {kk: _avro_cast(x, spec.elem) if spec.elem else x
+                for kk, x in v}
+    if k == "array" and isinstance(v, list):
+        return [_avro_cast(x, spec.elem) if spec.elem else x for x in v]
+    if k == "tuple" and isinstance(v, dict):
+        lower = {kk.lower().lstrip("_"): x for kk, x in v.items()}
+        subs = spec.subs or []
+        if any(sub.name.lower().lstrip("_") in lower for sub in subs):
+            return tuple(
+                _avro_cast(lower.get(sub.name.lower().lstrip("_")), sub)
+                for sub in subs
+            )
+        return tuple(
+            _avro_cast(x, sub) for x, sub in zip(v.values(), subs)
+        )
+    if k == "int" and not isinstance(v, int):
+        return int(v)
+    if k == "float" and not isinstance(v, float):
+        return float(v)
+    if k == "string" and not isinstance(v, str):
+        return _json.dumps(_avro_jsonable(v), separators=(",", ":"))
+    return v
+
+
+def _read_arrow(path: str, fmt: FormatParams):
+    import pyarrow as pa
+
+    if fmt.type == "parquet":
+        import pyarrow.parquet as pq
+
+        tbl = pq.read_table(path)
+        if not fmt.use_logic_type:
+            # raw physical values: timestamps as epoch ints in their
+            # stored unit, date32 as day numbers (use_logic_type.test)
+            cols = []
+            for i, f in enumerate(tbl.schema):
+                c = tbl.column(i)
+                if pa.types.is_timestamp(f.type):
+                    c = c.cast(pa.int64())
+                elif pa.types.is_date32(f.type):
+                    c = c.cast(pa.int32())
+                elif pa.types.is_date64(f.type):
+                    c = c.cast(pa.int64())
+                cols.append(c)
+            tbl = pa.Table.from_arrays(cols, names=tbl.column_names)
+        return tbl
+    if fmt.type == "orc":
+        import pyarrow.orc as po
+
+        return po.read_table(path)
+    if fmt.type == "arrow":
+        import pyarrow.feather as pf
+
+        try:
+            return pf.read_table(path)
+        except Exception:
+            with pa.ipc.open_stream(path) as rd:
+                return rd.read_all()
+    if fmt.type == "avro":
+        from databend_spark.sources.avro_reader import read_avro_table
+
+        return read_avro_table(path)
+    raise ValueError(f"[2507] unsupported binary format {fmt.type}")
+
+
+def _arrow_cast(v, spec: ColSpec, fmt: FormatParams):
+    import datetime as _dt
+    import json as _json
+    from decimal import Decimal as _D
+
+    if v is None:
+        return None
+    if isinstance(v, str) and v in fmt.null_if:
+        return None
+    k = spec.kind
+    if k == "variant":
+        if isinstance(v, str):
+            # a parquet string loading into VARIANT must itself be JSON
+            try:
+                return _json.dumps(
+                    _json.loads(v), separators=(",", ":"),
+                    ensure_ascii=False,
+                )
+            except ValueError:
+                if fmt.variant_check:
+                    # variant-check failures abort the COPY even under
+                    # ON_ERROR=CONTINUE (parquet_field_types.test)
+                    raise RuntimeError(
+                        "[1006] invalid JSON text for VARIANT column "
+                        "(set DISABLE_VARIANT_CHECK to load as null)"
+                    ) from None
+                return "null"
+        return _json.dumps(_canon(v), separators=(",", ":"), ensure_ascii=False)
+    if k == "map" and isinstance(v, list):
+        # pyarrow maps surface as [key, value] pair lists
+        return {kk: _canon(x) for kk, x in v}
+    if k in ("array", "map", "tuple"):
+        return _canon(v)
+    if k == "int":
+        return int(v)
+    if k == "float":
+        return float(v)
+    if k == "decimal":
+        return v if isinstance(v, _D) else _D(str(v))
+    if k == "string":
+        if isinstance(v, (dict, list)):
+            return _json.dumps(v, separators=(",", ":"), ensure_ascii=False)
+        if isinstance(v, bool):
+            return "true" if v else "false"
+        if isinstance(v, (_dt.date, _dt.datetime)):
+            return v.isoformat(sep=" ")
+        return str(v)
+    if k == "timestamp":
+        if isinstance(v, _dt.date) and not isinstance(v, _dt.datetime):
+            return _dt.datetime(v.year, v.month, v.day)
+        if hasattr(v, "to_pydatetime"):
+            # pandas ns-resolution Timestamp -> plain datetime (µs)
+            return v.to_pydatetime()
+        return v
+    if k == "date" and isinstance(v, _dt.datetime):
+        return v.date()
+    return v
+
+
+def _canon(v):
+    import datetime as _dt
+    from decimal import Decimal as _D
+
+    if isinstance(v, dict):
+        return {k: _canon(x) for k, x in v.items()}
+    if isinstance(v, (list, tuple)):
+        return [_canon(x) for x in v]
+    if isinstance(v, _D):
+        return float(v)
+    if isinstance(v, (_dt.date, _dt.datetime)):
+        return v.isoformat(sep=" ")
+    if isinstance(v, (bytes, bytearray)):
+        return bytes(v).hex().upper()
     return v

@@ -1,7 +1,8 @@
 """COPY/stage format surface as oracle-checked queries (SURVEY §2.1).
 
 The round-trip proves the format layer end to end: rows leave through
-the unload encoder (``stage_format.encode_rows``), come back through
+the unload (``copy_into_location``, ``stage_format.encode_rows`` in one
+task per partition), come back through
 the distributed per-file decoder (``copy_into_distributed`` — the same
 ``mapInPandas`` shape a 1000-executor COPY uses), and must aggregate to
 exactly what the oracle computes from the original parquet.
@@ -32,19 +33,18 @@ from databend_spark.suite.base import register
     " physical_copy_into_table.rs file-granular parallelism)",
 )
 def stage_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from databend_spark.sources.copy_into import copy_into_distributed
-    from databend_spark.sources.stage_format import (
-        ColSpec,
-        encode_rows,
-        resolve_format,
+    from databend_spark.sources.copy_into import (
+        CopyOptions,
+        copy_into_distributed,
+        copy_into_location,
     )
+    from databend_spark.sources.stage_format import ColSpec, resolve_format
 
     src = (
         spark.table("orders")
         .where(F.col("o_orderkey") < 4096)
         .select("o_orderkey", "o_totalprice", "o_orderdate")
     )
-    rows = [tuple(r) for r in src.collect()]
     fmt = resolve_format({"type": "csv"})
     enc_specs = [
         ColSpec("o_orderkey", "int", bits=64),
@@ -53,14 +53,10 @@ def stage_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     tmp = tempfile.mkdtemp(prefix="stage_suite_")
     # several files so the decode genuinely fans out
-    nfiles = 8
-    per = max(1, (len(rows) + nfiles - 1) // nfiles)
-    files = []
-    for i in range(0, len(rows), per):
-        pth = os.path.join(tmp, f"part{i // per:04d}.csv")
-        with open(pth, "wb") as fh:
-            fh.write(encode_rows(rows[i : i + per], enc_specs, fmt))
-        files.append(pth)
+    copy_into_location(
+        src.repartition(8), tmp, fmt, CopyOptions(), qid="0", rel_root=tmp
+    )
+    files = sorted(os.path.join(tmp, f) for f in os.listdir(tmp))
 
     schema = T.StructType(
         [

@@ -1242,6 +1242,7 @@ def run_slt_file(
         table_options=lambda t: ddl_options.get(
             t.split(".")[-1].strip("`").lower(), {}
         ),
+        txn=lambda: txn_state,
     )
 
     # -- SQL scripting: session variables + stored procedures
@@ -2997,11 +2998,6 @@ def run_slt_file(
             out[key] = {"type": ty}
         return out
 
-    def _vc_location(k: tuple[str, str]) -> str | None:
-        """Local dir of the table's explicit fs:// location, if any."""
-        loc = virtual_cols.get(k, {}).get("loc")
-        return loc
-
     def _vc_merge(k: tuple[str, str], scanned=None) -> None:
         """Merge newly-seen paths into the registry — existing entries
         keep position (ids are positional: 3000000000 + index); new
@@ -3082,37 +3078,6 @@ def run_slt_file(
             del before
         except Exception:  # noqa: BLE001
             pass
-
-    def _cc_spark_expr(tbl_bare: str, expr: str) -> str:
-        """Databend computed-column expression → Spark SQL expression
-        (variant brackets/`:` paths through jsonb access, `::type`
-        casts through the dialect rewriter)."""
-        e = expr
-        decl = ddl_decl_types.get(tbl_bare, {})
-        vcols = [
-            c
-            for c, t in decl.items()
-            if str(t).lower().startswith(("variant", "json"))
-        ]
-        for vc in vcols:
-            e = re.sub(
-                rf"(?<![\w`:'])((?:[\w`]+\.)?{vc})\s*\[",
-                r"\1::json[",
-                e,
-                flags=re.I,
-            )
-            e = re.sub(
-                rf"(?<![\w`:'.]){vc}((?::\w+)+)(?!:)",
-                lambda m, c=vc: c
-                + "".join(
-                    f"::json['{p}']" for p in m.group(1)[1:].split(":")
-                ),
-                e,
-                flags=re.I,
-            )
-        out = rewrite_databend_sql(f"SELECT ({e}) AS __cc FROM __cct")
-        m = re.match(r"^\s*SELECT\s*\((.*)\)\s*AS\s+__cc\s+FROM\s+__cct", out, re.S | re.I)
-        return m.group(1) if m else e
 
     def _cc_on_write(tbl: str) -> None:
         """Recompute generated columns from the base columns after a

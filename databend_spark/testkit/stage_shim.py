@@ -13,11 +13,9 @@ test fixtures bucket (s3://testbucket, seeded from ``tests/data``) maps
 read-only onto ``/root/reference/tests/data`` so the ``@data`` /
 connection-based suites run against the same bytes.
 
-Scale note: the harness decodes driver-side because SLT fixtures are
-KB-sized. The engine path for real data wraps the same per-file
-``decode_file`` in an Arrow-batched ``mapInPandas`` over the listed
-files (COPY parallelism is per-file in the reference too); see
-``tests/test_sources.py::test_distributed_copy_decode``.
+Loads and unloads run through ``databend_spark.sources.copy_into``:
+this module parses the statement, resolves the stage and lists its
+files; the decode and encode run in Spark tasks.
 """
 
 from __future__ import annotations
@@ -30,14 +28,20 @@ from dataclasses import dataclass, replace
 
 from pyspark.sql import types as T
 
+from databend_spark.sources.copy_into import (
+    COPY_RESULT_SCHEMA,
+    copy_into_location,
+    copy_into_table,
+    copy_options,
+    insert_into,
+    pick_files,
+)
 from databend_spark.sources.stage_format import (
-    ColSpec,
-    FieldError,
     FormatParams,
-    compress,
+    _avro_json,
+    _jdump,
+    _read_arrow,
     compression_suffix,
-    decode_file,
-    encode_rows,
     parse_option_list,
     resolve_format,
 )
@@ -96,16 +100,6 @@ def _data_farm() -> str:
 
 # s3 test buckets the reference's CI seeds from tests/data
 _BUCKET_MAP = {"testbucket": "/root/reference/tests"}
-
-_COPY_RESULT_SCHEMA = (
-    "`File` string, `Rows_loaded` bigint, `Errors_seen` bigint, "
-    "`First_error` string, `First_error_line` bigint"
-)
-_UNLOAD_SCHEMA = (
-    "`rows_unloaded` bigint, `input_bytes` bigint, `output_bytes` bigint"
-)
-_DETAILED_SCHEMA = "`file_name` string, `file_size` bigint, `row_count` bigint"
-
 
 @dataclass
 class Stage:
@@ -288,149 +282,6 @@ def _stage_meta_row(st: Stage) -> tuple:
         st.comment or "",
         "account_admin",
     )
-
-
-def _spark_kind(dt: T.DataType) -> tuple[str, dict]:
-    if isinstance(dt, (T.ByteType,)):
-        return "int", {"bits": 8}
-    if isinstance(dt, T.ShortType):
-        return "int", {"bits": 16}
-    if isinstance(dt, T.IntegerType):
-        return "int", {"bits": 32}
-    if isinstance(dt, T.LongType):
-        return "int", {"bits": 64}
-    if isinstance(dt, T.FloatType):
-        return "float", {}
-    if isinstance(dt, T.DoubleType):
-        return "float", {}
-    if isinstance(dt, T.DecimalType):
-        return "decimal", {"precision": dt.precision, "scale": dt.scale}
-    if isinstance(dt, T.BooleanType):
-        return "bool", {}
-    if isinstance(dt, T.DateType):
-        return "date", {}
-    if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
-        return "timestamp", {}
-    if isinstance(dt, T.BinaryType):
-        return "binary", {}
-    if isinstance(dt, T.ArrayType):
-        return "array", {}
-    if isinstance(dt, T.MapType):
-        return "map", {}
-    if isinstance(dt, T.StructType):
-        return "tuple", {}
-    return "string", {}
-
-
-_DB_TYPE_DISPLAY = {
-    "int8": "Int8", "tinyint": "Int8", "int16": "Int16", "smallint": "Int16",
-    "int32": "Int32", "int": "Int32", "integer": "Int32",
-    "int64": "Int64", "bigint": "Int64",
-    "uint8": "UInt8", "uint16": "UInt16", "uint32": "UInt32",
-    "uint64": "UInt64",
-    "float": "Float32", "float32": "Float32",
-    "double": "Float64", "float64": "Float64",
-    "string": "String", "varchar": "String", "text": "String",
-    "bool": "Boolean", "boolean": "Boolean",
-    "date": "Date", "datetime": "Timestamp", "timestamp": "Timestamp",
-    "binary": "Binary", "variant": "Variant", "json": "Variant",
-    "bitmap": "Bitmap", "geometry": "Geometry", "interval": "Interval",
-    "uuid": "String",
-}
-
-
-def build_colspecs(
-    fields: list[T.StructField],
-    decl_types: dict[str, str],
-    nullability: dict[str, bool],
-    defaults: dict[str, str],
-) -> list[ColSpec]:
-    """Target-table column specs for the decoder: Spark physical type
-    drives parsing, the DDL-declared Databend type drives error text."""
-    out = []
-    for f in fields:
-        kind, extra = _spark_kind(f.dataType)
-        decl = (decl_types.get(f.name.lower()) or "").lower()
-        base = re.sub(r"\(.*", "", decl)
-        if base in ("variant", "json"):
-            kind = "variant"
-        db = _DB_TYPE_DISPLAY.get(base)
-        if db is None:
-            db = {
-                "int": f"Int{extra.get('bits', 32)}",
-                "float": "Float64",
-                "decimal": "Decimal",
-                "bool": "Boolean",
-                "date": "Date",
-                "timestamp": "Timestamp",
-                "binary": "Binary",
-                "string": "String",
-                "variant": "Variant",
-            }.get(kind, kind.capitalize())
-        if db == "Decimal" or base == "decimal":
-            p = extra.get("precision", 38)
-            s = extra.get("scale", 0)
-            db = f"Decimal({p}, {s})"
-        nullable = nullability.get(f.name.lower(), True)
-        spec = ColSpec(
-            name=f.name, kind=kind, db_type=db, nullable=nullable, **extra
-        )
-        if isinstance(f.dataType, T.StructType):
-            spec.subs = [
-                _sub_spec(sf.name, sf.dataType) for sf in f.dataType.fields
-            ]
-        elif isinstance(f.dataType, T.ArrayType):
-            spec.elem = _sub_spec("elem", f.dataType.elementType)
-        elif isinstance(f.dataType, T.MapType):
-            spec.subs = [_sub_spec("key", f.dataType.keyType)]
-            spec.elem = _sub_spec("value", f.dataType.valueType)
-        dflt = defaults.get(f.name.lower())
-        if dflt is not None:
-            v = _literal_default(dflt, kind)
-            if v is not _NOPE:
-                spec.default = v
-            else:
-                spec.default_expr = dflt
-        out.append(spec)
-    return out
-
-
-def _sub_spec(name: str, dt: T.DataType) -> ColSpec:
-    kind, extra = _spark_kind(dt)
-    spec = ColSpec(name=name, kind=kind, db_type=kind.capitalize(), **extra)
-    if isinstance(dt, T.StructType):
-        spec.subs = [_sub_spec(sf.name, sf.dataType) for sf in dt.fields]
-    elif isinstance(dt, T.ArrayType):
-        spec.elem = _sub_spec("elem", dt.elementType)
-    elif isinstance(dt, T.MapType):
-        spec.subs = [_sub_spec("key", dt.keyType)]
-        spec.elem = _sub_spec("value", dt.valueType)
-    return spec
-
-
-_NOPE = object()
-
-
-def _literal_default(txt: str, kind: str):
-    t = txt.strip()
-    if t.upper() == "NULL":
-        return None
-    m = re.fullmatch(r"'((?:[^']|'')*)'", t)
-    if m:
-        s = m.group(1).replace("''", "'")
-        return s
-    try:
-        if kind == "int":
-            return int(t)
-        if kind == "float":
-            return float(t)
-        if kind == "bool":
-            return t.lower() == "true"
-        if re.fullmatch(r"-?\d+(\.\d+)?", t):
-            return float(t) if "." in t else int(t)
-    except ValueError:
-        pass
-    return _NOPE
 
 
 class StageManager:
@@ -661,7 +512,6 @@ class StageManager:
         subpath: str = "",
         pattern: str | None = None,
         files: list[str] | None = None,
-        exact_first: bool = True,
     ) -> list[tuple[str, str]]:
         """-> [(rel_name, abs_path)], rel to the stage's rel_root.
         Directory / exact-file / name-prefix resolution mirrors the
@@ -679,44 +529,36 @@ class StageManager:
                     raise ValueError(f"[1006] file {f} not found in stage")
         else:
             target = os.path.join(base, subpath) if subpath else base
-            if False:
-                pass
-            else:
-                # prefix semantics (reference list API): a non-slash
-                # path component matches every object whose name starts
-                # with it — `/ab` matches ab.csv, ab/cd.csv, ab2/x
-                if (not subpath) or subpath.endswith("/"):
-                    roots = [target]
-                    pfx = None
-                else:
-                    roots = [os.path.dirname(target)]
-                    pfx = os.path.basename(target)
-                for root in roots:
-                    if not os.path.isdir(root):
-                        continue
-                    for dirp, _dirs, fs in os.walk(root, followlinks=True):
-                        _dirs[:] = [
-                            d
-                            for d in _dirs
-                            if not d.startswith((".", "_temporary"))
-                        ]
-                        for f in fs:
-                            # skip Spark/Hadoop writer artifacts but NOT
-                            # every _-prefixed object: the reference
-                            # lists its _v_… verification key
-                            # (ee/03_ee_vacuum/03_0000_vacuum_ctas)
-                            if f.startswith(".") or f == "_SUCCESS" or f.startswith(
-                                ("_committed", "_started", "_temporary")
-                            ):
+            # prefix semantics (reference list API): a non-slash
+            # path component matches every object whose name starts
+            # with it — `/ab` matches ab.csv, ab/cd.csv, ab2/x
+            root, pfx = target, None
+            if subpath and not subpath.endswith("/"):
+                root, pfx = os.path.split(target)
+            if os.path.isdir(root):
+                for dirp, _dirs, fs in os.walk(root, followlinks=True):
+                    _dirs[:] = [
+                        d
+                        for d in _dirs
+                        if not d.startswith((".", "_temporary"))
+                    ]
+                    for f in fs:
+                        # skip Spark/Hadoop writer artifacts but NOT
+                        # every _-prefixed object: the reference
+                        # lists its _v_… verification key
+                        # (ee/03_ee_vacuum/03_0000_vacuum_ctas)
+                        if f.startswith(".") or f == "_SUCCESS" or f.startswith(
+                            ("_committed", "_started", "_temporary")
+                        ):
+                            continue
+                        p = os.path.join(dirp, f)
+                        if pfx is not None:
+                            rel_here = os.path.relpath(p, root)
+                            if not rel_here.startswith(pfx):
                                 continue
-                            p = os.path.join(dirp, f)
-                            if pfx is not None:
-                                rel_here = os.path.relpath(p, root)
-                                if not rel_here.startswith(pfx):
-                                    continue
-                            out.append(
-                                (os.path.relpath(p, stage.rel_root), p)
-                            )
+                        out.append(
+                            (os.path.relpath(p, stage.rel_root), p)
+                        )
         if pattern is not None and not files:
             try:
                 rx = re.compile(pattern)
@@ -738,16 +580,6 @@ class StageManager:
             out = [fp for fp in out if _m(fp[1])]
         out.sort()
         return out
-
-    def _next_name(self, fmt: FormatParams) -> str:
-        from databend_spark.sources.stage_format import FORMAT_SUFFIX
-
-        self._qid += 1
-        sfx = FORMAT_SUFFIX.get(fmt.type, ".dat")
-        return (
-            f"data_{self._qid:08x}_0000_00000000{sfx}"
-            + compression_suffix(fmt.compression)
-        )
 
     # ------------------------------------------------------------------
     # statement dispatch
@@ -962,7 +794,7 @@ class StageManager:
                 raise RuntimeError(f"[2501] stage {st.name} is read-only")
             pat = m.group(2).replace("''", "'") if m.group(2) else m.group(2)
             for _rel, p in self.list_files(
-                st, sub, pattern=pat, exact_first=False
+                st, sub, pattern=pat
             ):
                 try:
                     os.remove(p)
@@ -1080,7 +912,7 @@ class StageManager:
         import hashlib
 
         rows = []
-        for rel, p in self.list_files(st, sub, pattern=pattern, exact_first=False):
+        for rel, p in self.list_files(st, sub, pattern=pattern):
             size = os.path.getsize(p)
             mtime = _dt.datetime.utcfromtimestamp(os.path.getmtime(p))
             rows.append((rel, size, None, mtime, None))
@@ -1192,7 +1024,6 @@ class StageManager:
             )
 
     def _load(self, target: str, src: str, opts: dict, run_sql):
-        spark = self.spark
         # explicit column list: copy into t(a, b) from ...
         mcols = re.match(r"^([\w.`\"]+)\s*\(([^)]*)\)\s*$", target, re.S)
         col_list = None
@@ -1218,33 +1049,10 @@ class StageManager:
         else:
             stage_ref = src
         st, sub = self.resolve_location(stage_ref)
-
-        files_opt = opts.get("files")
-        if isinstance(files_opt, str):
-            files_opt = [files_opt]
-        pattern = opts.get("pattern")
-        listed = self.list_files(
-            st, sub,
-            pattern=str(pattern) if pattern is not None else None,
-            files=files_opt,
-        )
-        force = _tflag(opts.get("force"))
-        max_files = int(opts.get("max_files", 0) or 0)
-        on_error = str(opts.get("on_error", "abort")).lower()
-        return_failed_only = _tflag(opts.get("return_failed_only"))
-        purge = _tflag(opts.get("purge"))
-
+        co, _rest = copy_options(opts)
+        listed = self.list_files(st, sub, pattern=co.pattern, files=co.files)
         hist = self.copy_history.setdefault(table.lower(), {})
-        picked = []
-        for rel, p in listed:
-            stt = os.stat(p)
-            sig = (stt.st_size, int(stt.st_mtime))
-            key = os.path.realpath(p)
-            if not force and hist.get(key) == sig:
-                continue
-            picked.append((rel, p, sig))
-        if max_files:
-            picked = picked[:max_files]
+        picked = pick_files(listed, hist, co)
 
         _topts = {
             k.lower(): str(v).lower()
@@ -1254,122 +1062,47 @@ class StageManager:
             "enable_schema_evolution"
         ) in ("true", "1"):
             self._apply_schema_evolution(table, picked, opts)
-        fields, decl, nulls, defaults = self.table_info(table)
-        if col_list:
-            by_name = {f.name.lower(): f for f in fields}
-            fields = [by_name[c] for c in col_list]
-        specs = build_colspecs(fields, decl, nulls, defaults)
-        schema = T.StructType(
-            [T.StructField(f.name, f.dataType, True) for f in fields]
-        )
-
         fmt = self._fmt_for(
             opts.get("__file_format"), st, picked[0][1] if picked else None
         )
-        if _tflag(opts.get("disable_variant_check")):
-            fmt = replace(fmt, variant_check=False)
         if str(
             self.get_setting("enable_auto_detect_datetime_format", "0")
         ).lower() in ("1", "true"):
             fmt = replace(fmt, auto_detect_datetime=True)
-        numeric_cast = self.get_setting("numeric_cast_option", "rounding")
 
-        results = []
-        total_err_budget = None
-        skip_thresh = None
-        if m := re.fullmatch(r"abort_(\d+)", on_error):
-            total_err_budget = int(m.group(1))
-        elif on_error == "skip_file":
-            skip_thresh = 1
-        elif m := re.fullmatch(r"skip_file_(\d+)", on_error):
-            skip_thresh = int(m.group(1))
-        elif on_error not in ("abort", "continue"):
-            raise ValueError(f"[1005] invalid ON_ERROR option: {on_error}")
-        # abort_N accumulates ONE job-wide error counter across all
-        # picked files (reference error_handler.rs:26,56 AtomicU64)
-        cum_errors = 0
-
-        for rel, p, sig in picked:
-            if transform_sql is not None:
-                nrows = self._load_transform(
+        tx = self.txn()
+        if transform_sql is not None:
+            fields = self.table_info(table)[0]
+            results = [
+                (rel, self._load_transform(
                     transform_sql, stage_ref, st, rel, p, fmt, table,
                     fields, run_sql,
+                ), 0, None, None)
+                for rel, p, _sig in picked
+            ]
+            loaded = {os.path.realpath(p): sig for _r, p, sig in picked}
+        else:
+            res = copy_into_table(
+                self.spark, table, picked, fmt,
+                replace(co, purge=co.purge and not st.read_only),
+                info=self.table_info(table), columns=col_list,
+                numeric_cast=self.get_setting("numeric_cast_option", "rounding"),
+                # purge is durable only at COMMIT (copy_into_txn)
+                purge_later=tx.setdefault("stage_purges", [])
+                if tx.get("active") else None,
+            )
+            results, loaded = res.results, res.history
+        for key, sig in loaded.items():
+            # inside a txn, remember the prior value so ROLLBACK
+            # restores it (copy_into_txn.test)
+            if tx.get("active"):
+                tx.setdefault("stage_hist_undo", []).append(
+                    (table.lower(), key, hist.get(key))
                 )
-                results.append((rel, nrows, 0, None, None))
-                self._note_hist(table, hist, p, sig)
-                continue
-            raw = open(p, "rb").read()
-            try:
-                if fmt.type in ("parquet", "orc", "avro", "arrow"):
-                    rows, errors = self._decode_binary_fmt(
-                        p, fmt, specs, fields
-                    )
-                    seen = len(rows)
-                else:
-                    dec = decode_file(raw, rel, fmt, specs, numeric_cast)
-                    rows, errors = dec.rows, dec.errors
-                    seen = dec.seen
-            except Exception as fe:  # noqa: BLE001 whole-file failure
-                if (
-                    on_error != "continue" and skip_thresh is None
-                ) or "[1006]" in str(fe):
-                    raise
-                msg = re.sub(r"^\[\d+\]\s*", "", str(fe))
-                results.append((rel, 0, 1, msg, 1))
-                self._note_hist(table, hist, p, sig)
-                continue
-            if errors:
-                if on_error == "abort":
-                    ln, msg = errors[0]
-                    raise RuntimeError(
-                        f"[1046] error happens after fetched {len(rows)} "
-                        f"rows: {msg}\nat file '{rel}', line {ln}"
-                    )
-                if (
-                    total_err_budget is not None
-                    and cum_errors + len(errors) >= total_err_budget
-                ):
-                    ln, msg = errors[total_err_budget - cum_errors - 1]
-                    raise RuntimeError(
-                        f"[1046] abort after {total_err_budget} errors! "
-                        f"the last error: {msg}\nat file '{rel}', line {ln}"
-                    )
-                cum_errors += len(errors)
-                if skip_thresh is not None and len(errors) >= skip_thresh:
-                    # discard the whole file's rows (reference skips the
-                    # file once its error count reaches the threshold)
-                    ln, msg = errors[0]
-                    results.append((rel, 0, len(errors), msg, ln))
-                    self._note_hist(table, hist, p, sig)
-                    continue
-            if rows:
-                # one COPY file -> one block write (keeps the fuse block
-                # accounting sane and avoids 32 shards for tiny loads)
-                df = self.spark.createDataFrame(rows, schema).coalesce(1)
-                self._insert(df, table, fields)
-            self._note_hist(table, hist, p, sig)
-            if total_err_budget is not None:
-                if rows or errors or seen:
-                    results.append((rel, len(rows), 0, None, None))
-            elif rows or errors or seen:
-                first = errors[0] if errors else (None, None)
-                results.append(
-                    (rel, len(rows), len(errors), first[1], first[0])
-                )
-            if purge and not st.read_only:
-                if self.txn().get("active"):
-                    # purge is durable only at COMMIT (copy_into_txn)
-                    self.txn().setdefault("stage_purges", []).append(p)
-                else:
-                    try:
-                        os.remove(p)
-                    except OSError:
-                        pass
-        if return_failed_only:
+            hist[key] = sig
+        if co.return_failed_only:
             results = [r for r in results if r[2]]
-        if not results:
-            return spark.createDataFrame([], _COPY_RESULT_SCHEMA)
-        return spark.createDataFrame(results, _COPY_RESULT_SCHEMA)
+        return self.spark.createDataFrame(results, COPY_RESULT_SCHEMA)
 
     def _apply_schema_evolution(self, table, picked, opts):
         """COPY … SCHEMA_EVOLUTION=(sample_files=…, …): sample the
@@ -1466,106 +1199,6 @@ class StageManager:
                         else t.lower(),
                     )
 
-    def _decode_binary_fmt(self, path, fmt, specs, fields):
-        """parquet/orc/arrow load: pyarrow read + name-matched, option-
-        driven column mapping (missing_field_as, null_if, case rules)
-        with row-level errors for the ON_ERROR policy."""
-        if os.path.getsize(path) == 0:
-            return [], []
-        if fmt.type == "avro":
-            return self._decode_avro(path, fmt, specs)
-        tbl = _read_arrow(path, fmt)
-        cols_lower = {c.lower(): c for c in tbl.column_names}
-        for spec in specs:
-            if spec.name.lower() not in cols_lower:
-                if fmt.missing_field_as == "error":
-                    raise RuntimeError(
-                        f"[1046] file {os.path.basename(path)} missing "
-                        f"column {spec.name} (consider MISSING_FIELD_AS)"
-                    )
-                if fmt.missing_field_as == "null" and not spec.nullable:
-                    raise RuntimeError(
-                        f"[1046] missing field {spec.name} is NOT NULL"
-                    )
-        recs = tbl.to_pylist()
-        rows, errors = [], []
-        for ln, rec in enumerate(recs, 1):
-            lower = {k.lower(): v for k, v in rec.items()}
-            out, err = [], None
-            for ci, spec in enumerate(specs):
-                key = spec.name.lower()
-                if key not in cols_lower:
-                    out.append(
-                        None
-                        if fmt.missing_field_as == "null"
-                        else spec.type_default()
-                    )
-                    continue
-                try:
-                    out.append(_arrow_cast(lower.get(key), spec, fmt))
-                except FieldError as e:
-                    err = (
-                        ln,
-                        f"Invalid value {str(lower.get(key))[:60]!r} for "
-                        f"column {ci} ({spec.name} {spec.db_type}): {e}",
-                    )
-                    break
-            if err:
-                errors.append(err)
-            else:
-                rows.append(tuple(out))
-        return rows, errors
-
-    def _decode_avro(self, path, fmt, specs):
-        """Avro loads bypass Arrow inference: records stay Python maps
-        so empty avro maps do not grow phantom struct keys."""
-        from databend_spark.sources.avro_reader import read_avro_records
-
-        records, _schema = read_avro_records(
-            open(path, "rb").read(), fmt.use_logic_type
-        )
-        rows, errors = [], []
-        for ln, rec in enumerate(records, 1):
-            lower = {k.lower(): v for k, v in rec.items()}
-            out = []
-            err = None
-            for ci, spec in enumerate(specs):
-                key = spec.name.lower()
-                if key not in lower:
-                    if fmt.missing_field_as == "error":
-                        err = (
-                            ln,
-                            f"Missing value for column {ci} ({spec.name} "
-                            f"{spec.db_type}"
-                            + ("" if not spec.nullable else " NULL")
-                            + "). current FILE_FORMAT option: "
-                            "MISSING_FIELD_AS=ERROR",
-                        )
-                        break
-                    out.append(
-                        None
-                        if fmt.missing_field_as == "null"
-                        else spec.type_default()
-                    )
-                    continue
-                out.append(_avro_cast(lower[key], spec))
-            if err:
-                errors.append(err)
-            else:
-                rows.append(tuple(out))
-        return rows, errors
-
-    def _note_hist(self, table, hist, p, sig):
-        """Record COPY file history; inside a txn, remember the prior
-        value so ROLLBACK restores it (copy_into_txn.test)."""
-        hk = os.path.realpath(p)
-        tx = self.txn()
-        if tx.get("active"):
-            tx.setdefault("stage_hist_undo", []).append(
-                (table.lower(), hk, hist.get(hk))
-            )
-        hist[hk] = sig
-
     def _load_transform(
         self, inner_sql, stage_ref, st, rel, path, fmt, table, fields, run_sql
     ):
@@ -1610,39 +1243,15 @@ class StageManager:
                 if not decl.startswith(("variant", "json")):
                     c = F.regexp_replace(c, '^"|"$', "")
             sel.append(c.cast(f.dataType).alias(f.name))
-        self._insert(casted.select(*sel), table, fields)
+        insert_into(
+            self.spark, casted.select(*sel), table, fields,
+            self.table_info(table)[3] or {},
+        )
         return n
-
-    def _insert(self, df, table, fields):
-        full = self.spark.table(table)
-        if len(fields) == len(full.schema.fields):
-            df.write.insertInto(table)
-            return
-        from pyspark.sql import functions as F
-
-        given = {f.name.lower() for f in fields}
-        defaults = self.table_info(table)[3] or {}
-        sel = []
-        for f in full.schema.fields:
-            if f.name.lower() in given:
-                sel.append(F.col(f.name))
-            elif f.name.lower() in defaults:
-                # unspecified column takes its declared DEFAULT
-                sel.append(
-                    F.expr(str(defaults[f.name.lower()]))
-                    .cast(f.dataType)
-                    .alias(f.name)
-                )
-            else:
-                sel.append(F.lit(None).cast(f.dataType).alias(f.name))
-        df.select(
-            *[F.col(f.name) for f in fields]
-        ).select(*sel).write.insertInto(table)
 
     # -- unload --------------------------------------------------------
 
     def _unload(self, target: str, src: str, opts: dict, run_sql):
-        spark = self.spark
         st, sub = self.resolve_location(target.strip("'"))
         if st.read_only:
             raise RuntimeError(f"[2501] stage {st.name} is read-only")
@@ -1651,112 +1260,23 @@ class StageManager:
         else:
             df = run_sql(f"SELECT * FROM {src}")
         fmt = self._fmt_for(opts.get("__file_format"), st, None)
-        if fmt.type in ("csv", "tsv", "text") and fmt.compression in (
-            "snappy", "lzo", "brotli",
-        ):
-            raise RuntimeError(
-                f"[2507] compression {fmt.compression} not supported for "
-                f"{fmt.type} unload"
-            )
-        rows = [tuple(r) for r in df.collect()]
-        specs = build_colspecs(df.schema.fields, {}, {}, {})
-        single = _tflag(opts.get("single"))
-        detailed = _tflag(opts.get("detailed_output"))
-        if not rows:
-            # a zero-row unload writes NO file (reference
-            # copy_into_location: ee/06_ee_stream/06_0005 empty case)
-            if detailed:
-                return spark.createDataFrame([], _DETAILED_SCHEMA)
-            return spark.createDataFrame([(0, 0, 0)], _UNLOAD_SCHEMA)
-        overwrite = _tflag(opts.get("overwrite"))
-        raw_path = _tflag(opts.get("use_raw_path")) or (
-            single and bool(sub) and not sub.endswith("/")
-        )
-
+        co, _rest = copy_options(opts)
         # target path: raw-path mode writes exactly that file; any
         # other subpath is a DIRECTORY (05_0016: @s/a'b -> a'b/data_…)
         _require_sandboxed(st)
-        base, pfx, exact = st.dir, "", None
+        base, exact = st.dir, None
         if sub:
-            if raw_path and not sub.endswith("/"):
-                d, b = os.path.split(sub)
+            if (co.use_raw_path or co.single) and not sub.endswith("/"):
+                d, exact = os.path.split(sub)
                 base = os.path.join(st.dir, d) if d else st.dir
-                exact = b
             else:
                 base = os.path.join(st.dir, sub.rstrip("/"))
         os.makedirs(base, exist_ok=True)
-
-        max_fs = int(str(opts.get("max_file_size", 0) or 0))
-        # chunk the result when max_file_size asks for multiple files;
-        # sequential 8-digit part numbers keep the global sort order
-        # observable through (filename, file_row_number)
-        chunks: list[list] = [rows]
-        if max_fs and rows and not single and not exact:
-            est = encode_rows(rows[: max(1, len(rows) // 100)], specs, fmt) \
-                if fmt.type in ("csv", "tsv", "text", "ndjson") else None
-            per = len(est) / max(1, len(rows[: max(1, len(rows) // 100)])) \
-                if est is not None else 64
-            rows_per_file = max(1, int(max_fs / max(per, 1)))
-            chunks = [
-                rows[i : i + rows_per_file]
-                for i in range(0, len(rows), rows_per_file)
-            ]
-            if not re.search(r"\bORDER\s+BY\b", src, re.I) and len(chunks) > 2:
-                # parallel unload does not preserve global order unless
-                # the source is ORDER BY'd (ordered_unload.test asserts
-                # the disorder); emulate with a deterministic shuffle
-                chunks = chunks[::-1]
         self._qid += 1
-        qid = f"{self._qid:032x}"
-        from databend_spark.sources.stage_format import FORMAT_SUFFIX
-
-        sfx = FORMAT_SUFFIX.get(fmt.type, ".dat")
-        written: list[tuple[str, int, int]] = []  # (rel, bytes, rows)
-        input_bytes = 0
-        for part, chunk in enumerate(chunks):
-            if fmt.type == "avro":
-                from databend_spark.sources.avro_reader import (
-                    write_avro_bytes,
-                )
-
-                payload = write_avro_bytes(chunk, df.schema)
-                blob = payload
-                comp_sfx = ""
-            elif fmt.type in ("parquet", "orc", "arrow"):
-                payload, _ib = _write_arrow_bytes_rows(chunk, df, fmt)
-                blob = payload
-                comp_sfx = ""
-            else:
-                payload = encode_rows(chunk, specs, fmt)
-                comp_sfx = compression_suffix(fmt.compression)
-                name0 = exact or f"{pfx}data_{qid}_0000_{part:08d}{sfx}"
-                blob = compress(
-                    payload, fmt.compression,
-                    inner_name=name0[:13].ljust(13, "0"),
-                )
-            input_bytes += len(payload)
-            name = exact or (
-                f"{pfx}data_{qid}_0000_{part:08d}{sfx}{comp_sfx}"
-            )
-            out_path = os.path.join(base, name)
-            if exact and os.path.exists(out_path) and not overwrite:
-                raise RuntimeError(f"[1006] file already exists: {name}")
-            # write temp + os.replace: replaces a symlink entry instead
-            # of following it (stage dirs may symlink shared fixtures)
-            tmp_path = f"{out_path}.tmp.{os.getpid()}"
-            with open(tmp_path, "wb") as fh:
-                fh.write(blob)
-            os.replace(tmp_path, out_path)
-            written.append(
-                (os.path.relpath(out_path, st.rel_root), len(blob), len(chunk))
-            )
-        if detailed:
-            return spark.createDataFrame(written, _DETAILED_SCHEMA)
-        return spark.createDataFrame(
-            [(
-                len(rows), input_bytes, sum(w[1] for w in written),
-            )],
-            _UNLOAD_SCHEMA,
+        return copy_into_location(
+            df, base, fmt, co, qid=f"{self._qid:032x}", rel_root=st.rel_root,
+            exact=exact,
+            ordered=bool(re.search(r"\bORDER\s+BY\b", src, re.I)),
         )
 
     # ------------------------------------------------------------------
@@ -2158,7 +1678,6 @@ class StageManager:
         for rel, p in listed:
             raw = open(p, "rb").read()
             if fmt.type == "ndjson":
-                spec = [ColSpec("line", "variant", "Variant")]
                 import json as _json
 
                 from databend_spark.sources.stage_format import decompress
@@ -2230,118 +1749,6 @@ class StageManager:
         sdf.createOrReplaceTempView(vname)
         self._view_cols[vname] = cols
         return vname
-
-
-def _avro_json(rec) -> str:
-    """Canonical (sorted-key) JSON text of one Avro record — the stage
-    select surface exposes each record as a single variant column.
-    Hand-rolled so decimals emit full-precision raw number tokens
-    (json.dumps would quote or round them)."""
-    return _jdump(rec)
-
-
-def _jdump(v) -> str:
-    import datetime as _dt
-    import json as _json
-    from decimal import Decimal as _D
-
-    if v is None:
-        return "null"
-    if isinstance(v, bool):
-        return "true" if v else "false"
-    if isinstance(v, _D):
-        return format(v, "f")
-    if isinstance(v, dict):
-        return "{" + ",".join(
-            f"{_json.dumps(str(k), ensure_ascii=False)}:{_jdump(x)}"
-            for k, x in sorted(v.items(), key=lambda kv: str(kv[0]))
-        ) + "}"
-    if isinstance(v, (list, tuple)):
-        # pyarrow MAP columns arrive as lists of (key, value) 2-TUPLES
-        # (list/struct children arrive as dicts) — render as a JSON
-        # object with sorted keys like the reference's jsonb
-        if v and all(isinstance(x, tuple) and len(x) == 2 for x in v):
-            return "{" + ",".join(
-                f"{_json.dumps(str(k), ensure_ascii=False)}:{_jdump(x)}"
-                for k, x in sorted(v, key=lambda kv: str(kv[0]))
-            ) + "}"
-        return "[" + ",".join(_jdump(x) for x in v) + "]"
-    if isinstance(v, _dt.datetime):
-        return _json.dumps(v.strftime("%Y-%m-%d %H:%M:%S.%f"))
-    if isinstance(v, _dt.date):
-        return _json.dumps(v.isoformat())
-    if isinstance(v, (bytes, bytearray)):
-        return _json.dumps(bytes(v).hex().upper())
-    if isinstance(v, float):
-        if v != v or v in (float("inf"), float("-inf")):
-            return "null"
-        return _json.dumps(v)
-    if isinstance(v, int):
-        return str(v)
-    return _json.dumps(v, ensure_ascii=False)
-
-
-def _avro_jsonable(v):
-    import datetime as _dt
-    from decimal import Decimal as _D
-
-    if isinstance(v, dict):
-        return {k: _avro_jsonable(x) for k, x in v.items()}
-    if isinstance(v, (list, tuple)):
-        return [_avro_jsonable(x) for x in v]
-    if isinstance(v, _D):
-        return float(v) if v == v.to_integral_value() and abs(v) < 10**15 else str(v)
-    if isinstance(v, _dt.datetime):
-        return v.strftime("%Y-%m-%d %H:%M:%S.%f")
-    if isinstance(v, _dt.date):
-        return v.isoformat()
-    if isinstance(v, (bytes, bytearray)):
-        return bytes(v).hex().upper()
-    if isinstance(v, float):
-        if v != v or v in (float("inf"), float("-inf")):
-            return None
-        return v
-    return v
-
-
-def _avro_cast(v, spec: ColSpec):
-    """Avro value -> target column python value."""
-    import json as _json
-
-    if v is None:
-        return None
-    k = spec.kind
-    if k == "variant":
-        return _json.dumps(
-            _avro_jsonable(v), sort_keys=True, separators=(",", ":"),
-            ensure_ascii=False,
-        )
-    if k == "map" and isinstance(v, dict):
-        return {kk: _avro_cast(x, spec.elem) if spec.elem else x
-                for kk, x in v.items()}
-    if k == "map" and isinstance(v, list):
-        return {kk: _avro_cast(x, spec.elem) if spec.elem else x
-                for kk, x in v}
-    if k == "array" and isinstance(v, list):
-        return [_avro_cast(x, spec.elem) if spec.elem else x for x in v]
-    if k == "tuple" and isinstance(v, dict):
-        lower = {kk.lower().lstrip("_"): x for kk, x in v.items()}
-        subs = spec.subs or []
-        if any(sub.name.lower().lstrip("_") in lower for sub in subs):
-            return tuple(
-                _avro_cast(lower.get(sub.name.lower().lstrip("_")), sub)
-                for sub in subs
-            )
-        return tuple(
-            _avro_cast(x, sub) for x, sub in zip(v.values(), subs)
-        )
-    if k == "int" and not isinstance(v, int):
-        return int(v)
-    if k == "float" and not isinstance(v, float):
-        return float(v)
-    if k == "string" and not isinstance(v, str):
-        return _json.dumps(_avro_jsonable(v), separators=(",", ":"))
-    return v
 
 
 def _spark_type_for_display(t: str) -> str:
@@ -2534,183 +1941,3 @@ def _rewrite_positional(sql: str, cols: list[str]) -> str:
     # metadata$ columns need backticks for Spark's parser
     out = re.sub(r"(?<!`)\bmetadata\$(\w+)", r"`metadata$\1`", out)
     return out
-
-
-def _write_arrow_bytes_rows(rows, df, fmt: FormatParams) -> tuple[bytes, int]:
-    """Serialize a subset of a DataFrame's rows (already collected) to
-    parquet/orc/arrow bytes through pyarrow."""
-    import io as _io
-
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.orc as po
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    try:
-        arrow_schema = to_arrow_schema(df.schema)
-    except Exception:  # noqa: BLE001 exotic types
-        arrow_schema = None
-    pdf = pd.DataFrame([tuple(r) for r in rows], columns=df.columns)
-    if arrow_schema is not None:
-        try:
-            tbl = pa.Table.from_pandas(
-                pdf, schema=arrow_schema, preserve_index=False
-            )
-        except Exception:  # noqa: BLE001
-            tbl = pa.Table.from_pandas(pdf, preserve_index=False)
-    else:
-        tbl = pa.Table.from_pandas(pdf, preserve_index=False)
-    buf = _io.BytesIO()
-    comp = fmt.compression if fmt.compression not in ("none", "auto") else None
-    if fmt.type == "parquet":
-        pq.write_table(tbl, buf, compression=comp or "zstd")
-    elif fmt.type == "orc":
-        po.write_table(tbl, buf)
-    else:
-        with pa.ipc.new_file(buf, tbl.schema) as w:
-            w.write_table(tbl)
-    return buf.getvalue(), tbl.nbytes
-
-
-def _write_arrow_bytes(df, fmt: FormatParams) -> tuple[bytes, int]:
-    """Serialize a Spark DataFrame to parquet/orc/arrow bytes via
-    pyarrow; returns (payload, logical_input_bytes)."""
-    import io as _io
-
-    import pyarrow as pa
-    import pyarrow.orc as po
-    import pyarrow.parquet as pq
-
-    tbl = pa.Table.from_pandas(df.toPandas(), preserve_index=False)
-    buf = _io.BytesIO()
-    comp = fmt.compression if fmt.compression not in ("none", "auto") else None
-    if fmt.type == "parquet":
-        pq.write_table(tbl, buf, compression=comp or "zstd")
-    elif fmt.type == "orc":
-        po.write_table(tbl, buf)
-    else:  # arrow IPC file
-        with pa.ipc.new_file(buf, tbl.schema) as w:
-            w.write_table(tbl)
-    return buf.getvalue(), tbl.nbytes
-
-
-def _tflag(v) -> bool:
-    return str(v).strip().lower() in ("true", "1", "yes", "on") if v is not None else False
-
-
-def _read_arrow(path: str, fmt: FormatParams):
-    import pyarrow as pa
-
-    if fmt.type == "parquet":
-        import pyarrow.parquet as pq
-
-        tbl = pq.read_table(path)
-        if not fmt.use_logic_type:
-            # raw physical values: timestamps as epoch ints in their
-            # stored unit, date32 as day numbers (use_logic_type.test)
-            cols = []
-            for i, f in enumerate(tbl.schema):
-                c = tbl.column(i)
-                if pa.types.is_timestamp(f.type):
-                    c = c.cast(pa.int64())
-                elif pa.types.is_date32(f.type):
-                    c = c.cast(pa.int32())
-                elif pa.types.is_date64(f.type):
-                    c = c.cast(pa.int64())
-                cols.append(c)
-            tbl = pa.Table.from_arrays(cols, names=tbl.column_names)
-        return tbl
-    if fmt.type == "orc":
-        import pyarrow.orc as po
-
-        return po.read_table(path)
-    if fmt.type == "arrow":
-        import pyarrow.feather as pf
-
-        try:
-            return pf.read_table(path)
-        except Exception:
-            with pa.ipc.open_stream(path) as rd:
-                return rd.read_all()
-    if fmt.type == "avro":
-        from databend_spark.sources.avro_reader import read_avro_table
-
-        return read_avro_table(path)
-    raise ValueError(f"[2507] unsupported binary format {fmt.type}")
-
-
-def _arrow_cast(v, spec: ColSpec, fmt: FormatParams):
-    import datetime as _dt
-    import json as _json
-    from decimal import Decimal as _D
-
-    if v is None:
-        return None
-    if isinstance(v, str) and v in fmt.null_if:
-        return None
-    k = spec.kind
-    if k == "variant":
-        if isinstance(v, str):
-            # a parquet string loading into VARIANT must itself be JSON
-            try:
-                return _json.dumps(
-                    _json.loads(v), separators=(",", ":"),
-                    ensure_ascii=False,
-                )
-            except ValueError:
-                if fmt.variant_check:
-                    # variant-check failures abort the COPY even under
-                    # ON_ERROR=CONTINUE (parquet_field_types.test)
-                    raise RuntimeError(
-                        "[1006] invalid JSON text for VARIANT column "
-                        "(set DISABLE_VARIANT_CHECK to load as null)"
-                    ) from None
-                return "null"
-        return _json.dumps(_canon(v), separators=(",", ":"), ensure_ascii=False)
-    if k == "map" and isinstance(v, list):
-        # pyarrow maps surface as [key, value] pair lists
-        return {kk: _canon(x) for kk, x in v}
-    if k in ("array", "map", "tuple"):
-        return _canon(v)
-    if k == "int":
-        return int(v)
-    if k == "float":
-        return float(v)
-    if k == "decimal":
-        return v if isinstance(v, _D) else _D(str(v))
-    if k == "string":
-        if isinstance(v, (dict, list)):
-            return _json.dumps(v, separators=(",", ":"), ensure_ascii=False)
-        if isinstance(v, bool):
-            return "true" if v else "false"
-        if isinstance(v, (_dt.date, _dt.datetime)):
-            return v.isoformat(sep=" ")
-        return str(v)
-    if k == "timestamp":
-        if isinstance(v, _dt.date) and not isinstance(v, _dt.datetime):
-            return _dt.datetime(v.year, v.month, v.day)
-        if hasattr(v, "to_pydatetime"):
-            # pandas ns-resolution Timestamp -> plain datetime (µs)
-            return v.to_pydatetime()
-        return v
-    if k == "date" and isinstance(v, _dt.datetime):
-        return v.date()
-    return v
-
-
-def _canon(v):
-    import datetime as _dt
-    from decimal import Decimal as _D
-
-    if isinstance(v, dict):
-        return {k: _canon(x) for k, x in v.items()}
-    if isinstance(v, (list, tuple)):
-        return [_canon(x) for x in v]
-    if isinstance(v, _D):
-        return float(v)
-    if isinstance(v, (_dt.date, _dt.datetime)):
-        return v.isoformat(sep=" ")
-    if isinstance(v, (bytes, bytearray)):
-        return bytes(v).hex().upper()
-    return v

@@ -455,3 +455,194 @@ def test_copy_abort_messages(spark, tmp_path, on_error, message):
         assert str(err.value) == message
     finally:
         spark.sql("DROP TABLE IF EXISTS cp_msg")
+
+
+_ATOMIC_AND_TXN = """
+statement ok
+CREATE STAGE cp_s url='fs://{root}/'
+
+statement ok
+CREATE TABLE cp_atomic (a INT)
+
+statement error 1046
+COPY INTO cp_atomic FROM @cp_s/err/ FILE_FORMAT = (type = CSV) ON_ERROR = abort_2
+
+query I
+SELECT count(*) FROM cp_atomic
+----
+0
+
+query TIITI
+COPY INTO cp_atomic FROM @cp_s/err/ FILE_FORMAT = (type = CSV) ON_ERROR = continue
+----
+err/e1.csv 2 1 Invalid value 'x' for column 0 (a Int32 NULL): invalid text for number 2
+err/e2.csv 3 0 NULL NULL
+err/e3.csv 2 2 Invalid value 'y' for column 0 (a Int32 NULL): invalid text for number 2
+
+statement ok
+CREATE TABLE cp_txn (a INT)
+
+statement ok
+BEGIN
+
+query TIITI
+COPY INTO cp_txn FROM @cp_s/purge/ FILE_FORMAT = (type = CSV) PURGE = TRUE
+----
+purge/p1.csv 1 0 NULL NULL
+purge/p2.csv 1 0 NULL NULL
+
+query I
+SELECT count(*) FROM @cp_s/purge/
+----
+2
+
+statement ok
+ROLLBACK
+
+query TIITI
+COPY INTO cp_txn FROM @cp_s/purge/ FILE_FORMAT = (type = CSV)
+----
+purge/p1.csv 1 0 NULL NULL
+purge/p2.csv 1 0 NULL NULL
+
+statement ok
+BEGIN
+
+query TIITI
+COPY INTO cp_txn FROM @cp_s/purge/ FILE_FORMAT = (type = CSV) PURGE = TRUE FORCE = TRUE
+----
+purge/p1.csv 1 0 NULL NULL
+purge/p2.csv 1 0 NULL NULL
+
+statement ok
+COMMIT
+
+query TIITT
+LIST @cp_s/purge/
+----
+
+query II
+SELECT count(*), sum(a) FROM cp_txn
+----
+4 6
+"""
+
+
+def test_copy_is_atomic_and_follows_the_transaction(spark, sf_dir, tmp_path):
+    """An aborted COPY writes nothing and records no history; inside a
+    transaction ROLLBACK forgets the loaded files and PURGE waits for
+    COMMIT."""
+    test_copy_slt(spark, sf_dir, tmp_path, "atomic_txn", _ATOMIC_AND_TXN)
+
+
+def _jobs_and_decode_stages(spark, group: str) -> tuple[int, list[int]]:
+    """Jobs of ``group`` and the task counts of its stages that ran the
+    decoder (a stage that reads the decoded rows from the cache shows the
+    decoder in its lineage, next to the cache scan)."""
+    sc = spark.sparkContext
+    tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+    jobs = tracker.getJobIdsForGroup(group)
+    decode = []
+    for job in jobs:
+        for stage in tracker.getJobInfo(job).stageIds:
+            names, todo = [], [store.operationGraphForStage(stage).rootCluster()]
+            while todo:
+                cluster = todo.pop()
+                names.append(cluster.name())
+                it = cluster.childClusters().iterator()
+                while it.hasNext():
+                    todo.append(it.next())
+            if "MapInPandas" in names and "InMemoryTableScan" not in names:
+                decode.append(tracker.getStageInfo(stage).numTasks)
+    return len(jobs), decode
+
+
+@pytest.fixture()
+def job_group(spark):
+    sc = spark.sparkContext
+    yield sc.setJobGroup
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    sc.setLocalProperty("spark.job.description", None)
+
+
+def test_copy_decodes_each_file_in_its_own_task(ctx, spark, tmp_path, job_group):
+    for i in range(6):
+        (tmp_path / f"f{i}.csv").write_text(f"{i},x\n{i + 10},y\n")
+    table = "cp_six"
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    spark.sql(f"CREATE TABLE {table} (a INT, b STRING) USING parquet")
+    try:
+        job_group("cp-six", "copy_into")
+        assert ctx.copy_into(table, [str(tmp_path)], "csv") == 6
+        assert _jobs_and_decode_stages(spark, "cp-six")[1] == [6]
+        assert spark.table(table).count() == 12
+        # one output file per source file
+        assert len(spark.table(table).inputFiles()) == 6
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+def test_parquet_copy_into_is_one_job(ctx, spark, tmp_path, job_group):
+    path = str(tmp_path / "batch.parquet")
+    pq.write_table(pa.table({"k": [1, 2], "v": [1.5, 2.5]}), path)
+    table = "cp_one_job"
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    try:
+        job_group("cp-one-job", "copy_into")
+        assert ctx.copy_into(table, [path]) == 1
+        assert _jobs_and_decode_stages(spark, "cp-one-job") == (1, [])
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+def test_session_copy_into_takes_copy_and_format_options(ctx, spark, tmp_path):
+    """``SessionContext.copy_into`` takes the statement's option names:
+    FILE_FORMAT options decode as Databend does, COPY options pick the
+    files and the ON_ERROR policy."""
+    (tmp_path / "a.csv").write_text("id|name\n1|x\n2|y\n")
+    (tmp_path / "b.csv").write_text("id|name\nz|w\n3|v\n")
+    (tmp_path / "c.txt").write_text("id|name\n9|q\n")
+    table = "cp_opts"
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    spark.sql(f"CREATE TABLE {table} (id INT, name STRING) USING parquet")
+    opts = {"skip_header": 1, "field_delimiter": "|", "pattern": r".*\.csv"}
+    try:
+        with pytest.raises(RuntimeError, match=r"\[1046\] error happens"):
+            ctx.copy_into(table, [str(tmp_path)], "csv", **opts)
+        assert spark.table(table).count() == 0
+        assert ctx.copy_into(table, [str(tmp_path)], "csv", on_error="continue", **opts) == 2
+        got = sorted(tuple(r) for r in spark.table(table).collect())
+        assert got == [(1, "x"), (2, "y"), (3, "v")]
+        assert ctx.copy_into(table, [str(tmp_path)], "csv", on_error="continue", **opts) == 0
+        with pytest.raises(ValueError, match="Unknown file format option header"):
+            ctx.copy_into(table, [str(tmp_path)], "csv", header="true")
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+def test_unload_never_collects_its_source(spark, tmp_path, monkeypatch):
+    from pyspark.sql import DataFrame
+
+    from databend_spark.sources.copy_into import CopyOptions, copy_into_location
+    from databend_spark.sources.stage_format import resolve_format
+
+    def refuse(*_a, **_k):
+        raise AssertionError("the unload source reached the driver")
+
+    src = spark.range(0, 300, 1, 3).selectExpr("id", "CAST(id AS STRING) AS s")
+    with monkeypatch.context() as m:
+        for name in ("collect", "toLocalIterator", "toPandas"):
+            m.setattr(DataFrame, name, refuse)
+        res = copy_into_location(
+            src.orderBy("id"), str(tmp_path), resolve_format({"type": "csv"}),
+            CopyOptions(max_file_size=500, detailed_output=True),
+            qid="q", rel_root=str(tmp_path),
+        )
+    files = res.collect()
+    assert sum(f.row_count for f in files) == 300
+    assert len(files) > 3
+    # part files numbered in partition order keep the global sort order
+    ids = []
+    for f in sorted(files):
+        ids += [int(line.split(",")[0]) for line in (tmp_path / f.file_name).read_text().split()]
+    assert ids == list(range(300))
