@@ -21,6 +21,8 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from databend_spark.streaming.incremental import VersionedTable
 
+_DUPLICATE_KEYS = "MERGE source has duplicate join keys"
+
 
 def merge_dataframes(
     target: DataFrame,
@@ -38,18 +40,19 @@ def merge_dataframes(
     * target rows with no source match → kept verbatim
 
     Duplicate source keys are rejected (ANSI: "cannot update the same
-    row twice") via a pre-check aggregate.
+    row twice") inside the plan: the source is grouped by key once, and
+    a key with more than one row fails the query with ``raise_error``
+    (``merge_into`` turns that into a ``ValueError``).
     """
-    dup = source.groupBy(*on).count().filter(F.col("count") > 1)
-    # no .limit(1) before the count: a codegen'd limit names its counter
-    # from a JVM-global sequence, so its classes would be new code text (a
-    # Janino recompile) on every MERGE; the aggregate runs in full either way
-    if dup.count() > 0:
-        raise ValueError("MERGE source has duplicate join keys")
-
-    src = source.select(
+    grouped = source.groupBy(*on).agg(
+        F.count(F.lit(1)).alias("__src_n"),
+        *[F.first(c).alias(c) for c in source.columns if c not in on],
+    )
+    src = grouped.select(
         *[F.col(c).alias(f"__src_{c}") for c in source.columns],
-        F.lit(1).alias("__src_match"),
+        F.when(F.col("__src_n") > 1, F.raise_error(F.lit(_DUPLICATE_KEYS)))
+        .otherwise(F.lit(1))
+        .alias("__src_match"),
     )
     cond = None
     for k in on:
@@ -120,7 +123,13 @@ def merge_into(
         when_matched_delete,
         insert_not_matched,
     )
-    return table.overwrite(merged)
+    try:
+        return table.overwrite(merged)
+    except Exception as e:
+        # the failed commit has removed its data dir: no version is added
+        if _DUPLICATE_KEYS in str(e):
+            raise ValueError(_DUPLICATE_KEYS) from None
+        raise
 
 
 def replace_into(table: VersionedTable, source: DataFrame, on: list[str]) -> int:

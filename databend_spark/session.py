@@ -571,11 +571,15 @@ class SessionContext:
                 "table string, name string, type string, nullable boolean",
             ).filter("table <> ''")
         if name == "functions":
-            from databend_spark.functions.registry import COMPOSED, RENAME
+            from databend_spark.functions.registry import COMPOSED, RENAME, SQL_MACROS
 
-            rows = [(n, "rename", RENAME[n]) for n in RENAME] + [
-                (n, "composed", "") for n in COMPOSED
-            ]
+            # every name the SQL path resolves: renames, composed
+            # functions and the SQL macros the rewriter expands
+            rows = (
+                [(n, "rename", RENAME[n]) for n in RENAME]
+                + [(n, "composed", "") for n in COMPOSED]
+                + [(n, "macro", m if isinstance(m, str) else "") for n, m in SQL_MACROS.items()]
+            )
             return spark.createDataFrame(
                 rows, "name string, kind string, target string"
             )

@@ -3054,13 +3054,21 @@ def _rewrite_asof_outer(s, m, kind, rel, alias, i, on):
         raise UnsupportedSQL(f"ASOF {kind} JOIN: probe relation not found")
     prel, palias, probe_start = probe
     palias = palias or prel.split(".")[-1].strip("`")
-    # --- condition: ON <cond> (an outer USING join merges the key
-    # columns, which this shape does not reproduce)
-    if not on:
+    # --- condition: ON <cond>, or USING (k…, t) read as the ON form
+    # `p.k = b.k … AND p.t >= b.t`
+    um = re.match(r"\s*USING\s*\(([^)]*)\)", s[i:], re.I)
+    using = [c.strip().strip("`") for c in um.group(1).split(",")] if um else []
+    if using:
+        end = i + um.end()
+        cond = " AND ".join(
+            [f"{palias}.`{c}` = {balias_name}.`{c}`" for c in using[:-1]]
+            + [f"{palias}.`{using[-1]}` >= {balias_name}.`{using[-1]}`"]
+        )
+    elif on:
+        end = clause_end(s, i + on.end(), _CLAUSE_END, chars=",;")
+        cond = s[i + on.end() : end].strip()
+    else:
         raise UnsupportedSQL("ASOF JOIN without ON condition")
-    cond_start = i + on.end()
-    end = clause_end(s, cond_start, _CLAUSE_END, chars=",;")
-    cond = s[cond_start:end].strip()
     fixed = _and_terms(cond)
     ineqs = [
         t
@@ -3095,16 +3103,22 @@ def _rewrite_asof_outer(s, m, kind, rel, alias, i, on):
         f" {aug} {kind} JOIN {rel}{' ' + alias if alias else ''} "
         f"ON ({' AND '.join(join_terms)}) "
     )
-    return _except_pick(s[:probe_start] + repl + s[end:], probe_start, palias)
+    return _except_pick(
+        s[:probe_start] + repl + s[end:], probe_start, palias, balias_name, using
+    )
 
 
 _FROM_KW = re.compile(r"\bFROM\b")
 
 
-def _except_pick(s: str, at: int, palias: str) -> str:
+def _except_pick(
+    s: str, at: int, palias: str, balias: str = "", using: list[str] = ()
+) -> str:
     """``*`` and ``palias.*`` items of the SELECT whose FROM clause holds
     ``at`` → ``… EXCEPT (palias.__pick)``: the helper column the outer
-    ASOF join adds to its probe stays out of the result."""
+    ASOF join adds to its probe stays out of the result. With ``using``
+    columns, ``*`` returns each of them once, first, with the build
+    row's value where there is one (the probe's otherwise)."""
     toks = tokens(s, 0, at)
     level = toks[-1].depth if toks else 0
     sel = next(
@@ -3123,7 +3137,13 @@ def _except_pick(s: str, at: int, palias: str) -> str:
         sm = re.fullmatch(
             rf"(\s*(?:DISTINCT\s+)?)(\*|{re.escape(palias)}\.\*)(\s*)", it, re.I
         )
-        if sm:
+        if sm and using and sm.group(2) == "*":
+            merged = "".join(
+                f"coalesce({balias}.`{c}`, {palias}.`{c}`) AS `{c}`, " for c in using
+            )
+            dropped = "".join(f", {a}.`{c}`" for a in (palias, balias) for c in using)
+            it = f"{sm.group(1)}{merged}* EXCEPT ({palias}.__pick{dropped}){sm.group(3)}"
+        elif sm:
             it = f"{sm.group(1)}{sm.group(2)} EXCEPT ({palias}.__pick){sm.group(3)}"
         items.append(it)
     return s[: sel.end] + ",".join(items) + s[end:]

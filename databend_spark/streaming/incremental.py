@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 from collections.abc import Callable
@@ -94,7 +95,13 @@ class VersionedTable:
     def _commit(self, log: list[dict], df: DataFrame, mode: str) -> int:
         version = _head(log) + 1
         data_dir = os.path.join(self.path, f"v{version}_{uuid.uuid4().hex[:8]}")
-        df.write.mode("errorifexists").parquet(data_dir)
+        try:
+            df.write.mode("errorifexists").parquet(data_dir)
+        except BaseException:
+            # no log entry names a failed write's dir, so vacuum would
+            # never remove it
+            shutil.rmtree(data_dir, ignore_errors=True)
+            raise
         entry = {"version": version, "dir": data_dir, "ts": time.time(), "mode": mode}
         _write_json(self._log_path, [*log, entry])
         return version
@@ -225,8 +232,6 @@ class VersionedTable:
         versions readable; time travel to older versions then errors
         (exactly the reference's behavior once snapshots are gc'd).
         Returns the removed dirs."""
-        import shutil
-
         log = self._read_log()
         if not log:
             return []

@@ -153,3 +153,37 @@ def test_slt_isolation_invalidates_view_memo(spark, tmp_path):
 
     register_tables(spark, sf_dir)
     assert spark.table("lineitem").columns  # re-registered after drop
+
+
+def _jobs_of(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_merge_checks_duplicate_keys_inside_its_plan(spark, vt):
+    """The duplicate-key check is part of the merge plan, not an action
+    of its own: a MERGE starts 3 jobs (6 with a separate check). A
+    duplicate key fails the commit, which adds no version and no dir."""
+    import os
+
+    source = spark.createDataFrame(
+        [(2, "b2", 21.0), (4, "d", 40.0)], "id int, name string, price double"
+    )
+    jobs = _jobs_of(spark, "merge-jobs", lambda: merge_into(
+        vt, source, on=["id"], when_matched_update={"name": src("name")}
+    ))
+    assert jobs == 3
+    assert _rows(vt.read()) == {(1, "a", 10.0), (2, "b2", 20.0), (3, "c", 30.0), (4, "d", 40.0)}
+    before = (vt.version, sorted(os.listdir(vt.path)))
+    dup = spark.createDataFrame(
+        [(4, "x", 1.0), (4, "y", 2.0)], "id int, name string, price double"
+    )
+    with pytest.raises(ValueError, match="MERGE source has duplicate join keys"):
+        merge_into(vt, dup, on=["id"])
+    assert (vt.version, sorted(os.listdir(vt.path))) == before

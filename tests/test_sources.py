@@ -105,6 +105,19 @@ def test_system_tables(ctx):
         ctx.system("nope")
 
 
+def test_system_functions_lists_what_sql_resolves(ctx):
+    """Renames, composed functions and SQL macros: the 540 names the SQL
+    path resolves."""
+    from databend_spark.functions.registry import COMPOSED, RENAME, SQL_MACROS
+
+    fns = ctx.system("functions")
+    names = {r.name for r in fns.collect()}
+    assert names == set(RENAME) | set(COMPOSED) | set(SQL_MACROS)
+    assert len(names) == 540
+    macros = {r.name for r in fns.filter("kind = 'macro'").collect()}
+    assert {"to_char", "json_extract_path_text"} <= macros
+
+
 def test_system_catalog_expansion(ctx, sample, tmp_path):
     """query_log / streams / tasks / stages / databases system tables
     (reference: src/query/storages/system/src/*_table.rs)."""

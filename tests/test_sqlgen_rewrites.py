@@ -185,10 +185,15 @@ def test_any_join_derived_table_probe():
 
 
 _ASOF_ON = "ON p.pk = b.bk AND p.pt >= b.bt"
+# p and b with their join keys also under the shared names USING needs
+_USING_P = "(SELECT *, pk AS k, pt AS t FROM p) p"
+_USING_B = "(SELECT *, bk AS k, bt AS t FROM b) b"
 _JOINS = {
     "asof": f"SELECT * FROM p ASOF JOIN b {_ASOF_ON}",
     "asof_left": f"SELECT * FROM p ASOF LEFT JOIN b {_ASOF_ON}",
     "asof_right": f"SELECT * FROM p ASOF RIGHT JOIN b {_ASOF_ON}",
+    "asof_right_using": f"SELECT * FROM {_USING_P} ASOF RIGHT JOIN {_USING_B} USING (k, t)",
+    "asof_full_using": f"SELECT * FROM {_USING_P} ASOF FULL JOIN {_USING_B} USING (k, t)",
     "any": "SELECT * FROM p ANY JOIN b ON p.pk = b.bk",
     "any_alias": "SELECT * FROM p p ANY JOIN b b ON p.pk = b.bk",
     "any_as": "SELECT * FROM p AS p ANY JOIN b AS b ON p.pk = b.bk",
@@ -243,10 +248,7 @@ def test_join_rewrite_stops_at_the_next_clause(spark, join_views, join, tail):
 def test_asof_join_using_drops_the_build_keys(spark):
     """``ASOF JOIN b USING (k, t)``: ``b`` is the build relation, not
     ``b`` aliased ``USING``. The result is the ON form's with the build
-    side's copies of the USING columns dropped. The outer forms keep
-    their explicit error."""
-    from databend_spark.sqlgen import UnsupportedSQL
-
+    side's copies of the USING columns dropped."""
     for name, rows in {
         "pu": "(1, 10, 'a'), (1, 20, 'b'), (2, 5, 'c') AS t(k, t, x)",
         "bu": "(1, 9, 100), (1, 15, 200), (2, 6, 300) AS t(k, t, v)",
@@ -260,5 +262,28 @@ def test_asof_join_using_drops_the_build_keys(spark):
     assert sorted(got.collect()) == sorted(want.collect()) == [
         (1, 10, "a", 100), (1, 20, "b", 200),
     ]
-    with pytest.raises(UnsupportedSQL, match="ON condition"):
-        R("SELECT * FROM pu ASOF RIGHT JOIN bu USING (k, t)")
+
+
+@pytest.mark.parametrize("kind", ["RIGHT", "FULL"])
+def test_asof_outer_join_using_matches_duckdb(spark, kind):
+    """``ASOF RIGHT/FULL JOIN … USING (k, t)`` returns each USING column
+    once, first, with the build row's value where there is one, like
+    DuckDB's native join on the same rows."""
+    import duckdb
+
+    views = {
+        "pu": ("(1, 10, 'p1'), (1, 20, 'p2'), (2, 5, 'p3'), (3, 1, 'p4')", "k, t, x"),
+        "bu": ("(1, 9, 100), (1, 15, 200), (2, 7, 300), (4, 1, 400)", "k, t, v"),
+    }
+    con = duckdb.connect()
+    for name, (rows, cols) in views.items():
+        body = f"SELECT * FROM (VALUES {rows}) AS t({cols})"
+        spark.sql(f"CREATE OR REPLACE TEMP VIEW {name} AS {body}")
+        con.execute(f"CREATE TABLE {name} AS {body}")
+    sql = f"SELECT * FROM pu ASOF {kind} JOIN bu USING (k, t)"
+    got = spark.sql(R(sql))
+    want = con.execute(sql)
+    assert got.columns == [d[0] for d in want.description] == ["k", "t", "x", "v"]
+    assert sorted(map(tuple, got.collect()), key=repr) == sorted(
+        want.fetchall(), key=repr
+    )

@@ -400,3 +400,17 @@ def test_vacuum_mixed_chain(spark, vt, retain_last, removed):
     assert vt.vacuum(retain_last=retain_last) == [dirs[v] for v in removed]
     assert {v for v, d in dirs.items() if not os.path.exists(d)} == set(removed)
     assert {v: vt.read(v).count() for v in retained} == counts
+
+
+def test_failed_commit_leaves_no_data_dir(spark, vt):
+    """A commit whose write fails removes its data dir: no log entry
+    names it, so vacuum would never remove it."""
+    vt.append(_df(spark, [(1, "a")]))
+    before = sorted(os.listdir(vt.path))
+    bad = _df(spark, [(2, "b")]).withColumn(
+        "v", F.when(F.col("id") > 0, F.expr("raise_error('boom')")).otherwise(F.col("v"))
+    )
+    with pytest.raises(Exception, match="boom"):
+        vt.overwrite(bad)
+    assert vt.version == 1
+    assert sorted(os.listdir(vt.path)) == before
