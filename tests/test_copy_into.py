@@ -404,6 +404,10 @@ SELECT id, name, count(*) FROM cp_back GROUP BY id, name ORDER BY id
      ("unloads", _UNLOADS)],
 )
 def test_copy_slt(spark, sf_dir, tmp_path, name, text):
+    _run_slt(spark, sf_dir, tmp_path, name, text)
+
+
+def _run_slt(spark, sf_dir, tmp_path, name, text):
     from databend_spark.session import register_tables
     from databend_spark.testkit import run_slt_file
 
@@ -532,7 +536,7 @@ def test_copy_is_atomic_and_follows_the_transaction(spark, sf_dir, tmp_path):
     """An aborted COPY writes nothing and records no history; inside a
     transaction ROLLBACK forgets the loaded files and PURGE waits for
     COMMIT."""
-    test_copy_slt(spark, sf_dir, tmp_path, "atomic_txn", _ATOMIC_AND_TXN)
+    _run_slt(spark, sf_dir, tmp_path, "atomic_txn", _ATOMIC_AND_TXN)
 
 
 def _jobs_and_decode_stages(spark, group: str) -> tuple[int, list[int]]:
