@@ -698,11 +698,12 @@ class SessionContext:
         ``options`` are the statement's options (``on_error``, ``force``,
         ``pattern``, ``purge``, ...) and its FILE_FORMAT options
         (``skip_header``, ``field_delimiter``, ...), under the names the
-        statement uses. A directory stands for the files under it. Files
-        loaded before, with the same size and mtime, are skipped. Parquet
-        without options reads through ``load_table`` (creating the table
-        if needed); every other load decodes each file in its own task
-        into the existing table. Returns the number of files loaded."""
+        statement uses. A directory stands for the data files under it.
+        Files loaded before, with the same size and mtime, are skipped.
+        Parquet without options reads through ``load_table`` (creating
+        the table if needed); every other load decodes each file in its
+        own task into the existing table. Returns how many of ``paths``
+        had files loaded (a directory counts once)."""
         from databend_spark.sources.copy_into import (
             copy_into_table,
             copy_options,
@@ -711,16 +712,15 @@ class SessionContext:
         from databend_spark.sources.stage_format import resolve_format
 
         co, format_opts = copy_options(options)
-        history = self._copy_history.setdefault(table, {})
-        if fmt == "parquet" and not options:
-            fmt_params, info, listed = None, None, [(p, p) for p in paths]
-        else:
+        fmt_params = info = None
+        if fmt != "parquet" or options:
             fmt_params = resolve_format({"type": fmt, **format_opts})
             info = (self.spark.table(table).schema.fields, {}, {}, {})
-            listed = _list_files(paths, co.files, co.pattern)
-        loaded = copy_into_table(
-            self.spark, table, pick_files(listed, history, co), fmt_params, co,
-            info=info,
-        )
+        history = self._copy_history.setdefault(table, {})
+        picked = pick_files(_list_files(paths, co.files, co.pattern), history, co)
+        loaded = copy_into_table(self.spark, table, picked, fmt_params, co, info=info)
         history.update(loaded.history)
-        return len(loaded.history)
+        return sum(
+            any(p == root or p.startswith(os.path.join(root, "")) for _, p, _ in picked)
+            for root in paths
+        )

@@ -144,7 +144,6 @@ def copy_into_table(
     fmt: FormatParams | None,
     options: CopyOptions,
     info: tuple | None = None,
-    columns: list[str] | None = None,
     numeric_cast: str = "rounding",
     purge_later: list[str] | None = None,
 ) -> Loaded:
@@ -154,10 +153,10 @@ def copy_into_table(
     ``load_table`` and inserts by position (creating the table if it is
     missing): one Spark job. Otherwise every file is decoded into the
     target columns: ``info`` is (fields, declared types, nullability,
-    defaults) of the table, ``columns`` an explicit column list; the
-    other columns take their DEFAULT. PURGE removes the loaded files
-    after the write, or appends them to ``purge_later`` when the caller
-    defers it (inside a transaction)."""
+    defaults), where the fields are the table's or those of an explicit
+    column list; the other columns take their DEFAULT. PURGE removes the
+    loaded files after the write, or appends them to ``purge_later``
+    when the caller defers it (inside a transaction)."""
     history = {os.path.realpath(p): sig for _, p, sig in picked}
     if not picked:
         return Loaded([], history)
@@ -174,9 +173,6 @@ def copy_into_table(
         return Loaded(results, history)
 
     fields_, decl, nulls, defaults = info
-    if columns:
-        by_name = {f.name.lower(): f for f in fields_}
-        fields_ = [by_name[c] for c in columns]
     specs = build_colspecs(fields_, decl, nulls, defaults)
     schema = T.StructType([T.StructField(f.name, f.dataType, True) for f in fields_])
     if options.disable_variant_check:
@@ -194,7 +190,7 @@ def copy_into_table(
             return last["_row"], last["_error"]
 
         results, dropped = _on_error(picked, summary, options.on_error, nth_error)
-        if sum(r[1] for r in results if r[1]):
+        if any(r[1] for r in results):
             good = decoded.filter(
                 F.col("_error").isNull() & F.col("_row").isNotNull()
                 & ~F.col("_file").isin(dropped)

@@ -1070,9 +1070,12 @@ class StageManager:
         ).lower() in ("1", "true"):
             fmt = replace(fmt, auto_detect_datetime=True)
 
+        fields, decl, nulls, defaults = self.table_info(table)
+        if col_list:
+            by_name = {f.name.lower(): f for f in fields}
+            fields = [by_name[c] for c in col_list]
         tx = self.txn()
         if transform_sql is not None:
-            fields = self.table_info(table)[0]
             results = [
                 (rel, self._load_transform(
                     transform_sql, stage_ref, st, rel, p, fmt, table,
@@ -1085,7 +1088,7 @@ class StageManager:
             res = copy_into_table(
                 self.spark, table, picked, fmt,
                 replace(co, purge=co.purge and not st.read_only),
-                info=self.table_info(table), columns=col_list,
+                info=(fields, decl, nulls, defaults),
                 numeric_cast=self.get_setting("numeric_cast_option", "rounding"),
                 # purge is durable only at COMMIT (copy_into_txn)
                 purge_later=tx.setdefault("stage_purges", [])

@@ -570,14 +570,16 @@ def job_group(spark):
 
 
 def test_copy_decodes_each_file_in_its_own_task(ctx, spark, tmp_path, job_group):
+    files = []
     for i in range(6):
-        (tmp_path / f"f{i}.csv").write_text(f"{i},x\n{i + 10},y\n")
+        files.append(tmp_path / f"f{i}.csv")
+        files[-1].write_text(f"{i},x\n{i + 10},y\n")
     table = "cp_six"
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     spark.sql(f"CREATE TABLE {table} (a INT, b STRING) USING parquet")
     try:
         job_group("cp-six", "copy_into")
-        assert ctx.copy_into(table, [str(tmp_path)], "csv") == 6
+        assert ctx.copy_into(table, [str(f) for f in files], "csv") == 6
         assert _jobs_and_decode_stages(spark, "cp-six")[1] == [6]
         assert spark.table(table).count() == 12
         # one output file per source file
@@ -614,10 +616,14 @@ def test_session_copy_into_takes_copy_and_format_options(ctx, spark, tmp_path):
         with pytest.raises(RuntimeError, match=r"\[1046\] error happens"):
             ctx.copy_into(table, [str(tmp_path)], "csv", **opts)
         assert spark.table(table).count() == 0
-        assert ctx.copy_into(table, [str(tmp_path)], "csv", on_error="continue", **opts) == 2
+        assert ctx.copy_into(table, [str(tmp_path)], "csv", on_error="continue", **opts) == 1
         got = sorted(tuple(r) for r in spark.table(table).collect())
         assert got == [(1, "x"), (2, "y"), (3, "v")]
         assert ctx.copy_into(table, [str(tmp_path)], "csv", on_error="continue", **opts) == 0
+        # a file added to a loaded directory is the only one loaded next
+        (tmp_path / "d.csv").write_text("id|name\n4|u\n")
+        assert ctx.copy_into(table, [str(tmp_path)], "csv", on_error="continue", **opts) == 1
+        assert spark.table(table).count() == 4
         with pytest.raises(ValueError, match="Unknown file format option header"):
             ctx.copy_into(table, [str(tmp_path)], "csv", header="true")
     finally:
@@ -650,3 +656,19 @@ def test_unload_never_collects_its_source(spark, tmp_path, monkeypatch):
     for f in sorted(files):
         ids += [int(line.split(",")[0]) for line in (tmp_path / f.file_name).read_text().split()]
     assert ids == list(range(300))
+
+
+def test_parquet_copy_into_loads_only_new_files_of_a_directory(ctx, spark, tmp_path):
+    d = tmp_path / "landing"
+    d.mkdir()
+    pq.write_table(pa.table({"k": [1, 2]}), str(d / "a.parquet"))
+    table = "cp_dir"
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    try:
+        assert ctx.copy_into(table, [str(d)]) == 1
+        assert ctx.copy_into(table, [str(d)]) == 0
+        pq.write_table(pa.table({"k": [3]}), str(d / "b.parquet"))
+        assert ctx.copy_into(table, [str(d)]) == 1
+        assert sorted(r.k for r in spark.table(table).collect()) == [1, 2, 3]
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
