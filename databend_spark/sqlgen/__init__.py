@@ -3112,7 +3112,7 @@ _FROM_KW = re.compile(r"\bFROM\b")
 
 
 def _except_pick(
-    s: str, at: int, palias: str, balias: str = "", using: list[str] = ()
+    s: str, at: int, palias: str, balias: str = "", using: list[str] | tuple = ()
 ) -> str:
     """``*`` and ``palias.*`` items of the SELECT whose FROM clause holds
     ``at`` → ``… EXCEPT (palias.__pick)``: the helper column the outer
