@@ -41,8 +41,11 @@ def merge_dataframes(
 
     Duplicate source keys are rejected (ANSI: "cannot update the same
     row twice") inside the plan: the source is grouped by key once, and
-    a key with more than one row fails the query with ``raise_error``
-    (``merge_into`` turns that into a ``ValueError``).
+    a key with more than one row fails the query with ``raise_error``.
+    So this function itself does not raise: the action that runs the
+    returned plan fails with a Spark error whose message contains
+    "MERGE source has duplicate join keys" (``merge_into`` turns that
+    into a ``ValueError``).
     """
     grouped = source.groupBy(*on).agg(
         F.count(F.lit(1)).alias("__src_n"),

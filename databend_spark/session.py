@@ -392,31 +392,6 @@ def load_table(spark: SparkSession, *paths: str) -> DataFrame:
     return df.withColumns(fixed) if fixed else df
 
 
-def _list_files(
-    paths: list[str], files: list[str] | None, pattern: str | None
-) -> list[tuple[str, str]]:
-    """(name, path) of the data files under ``paths``: a directory lists
-    the files below it (Spark's ``_``/``.`` markers left out), named
-    relative to it; FILES and PATTERN select by that name."""
-    out = []
-    for root in paths:
-        if not os.path.isdir(root):
-            out.append((os.path.basename(root), root))
-            continue
-        for dirp, dirs, names in os.walk(root):
-            dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
-            out += [
-                (os.path.relpath(os.path.join(dirp, f), root), os.path.join(dirp, f))
-                for f in sorted(names)
-                if not f.startswith(("_", "."))
-            ]
-    if files:
-        out = [f for f in out if f[0] in files]
-    if pattern is not None:
-        out = [f for f in out if re.fullmatch(pattern, f[0])]
-    return out
-
-
 class SessionContext:
     """bendpy-style facade over SparkSession.
 
@@ -698,29 +673,46 @@ class SessionContext:
         ``options`` are the statement's options (``on_error``, ``force``,
         ``pattern``, ``purge``, ...) and its FILE_FORMAT options
         (``skip_header``, ``field_delimiter``, ...), under the names the
-        statement uses. A directory stands for the data files under it.
-        Files loaded before, with the same size and mtime, are skipped.
-        Parquet without options reads through ``load_table`` (creating
-        the table if needed); every other load decodes each file in its
-        own task into the existing table. Returns how many of ``paths``
-        had files loaded (a directory counts once)."""
+        statement uses. Each path is a location as in the statement: a
+        directory stands for the files under it, any other path is a
+        name prefix. Files loaded before, with the same size and mtime,
+        are skipped. Parquet without FILE_FORMAT options reads through
+        ``load_table`` (creating the table if needed) in one Spark job;
+        every other load decodes each file in its own task into the
+        existing table. Returns how many of ``paths`` had files loaded."""
         from databend_spark.sources.copy_into import (
             copy_into_table,
             copy_options,
+            history_of,
+            list_files,
             pick_files,
+            purge_files,
         )
         from databend_spark.sources.stage_format import resolve_format
 
         co, format_opts = copy_options(options)
-        fmt_params = info = None
-        if fmt != "parquet" or options:
+        listed = []
+        for path in paths:
+            path = os.path.abspath(path)
+            if os.path.isdir(path):
+                listed.append(list_files(path, "", co.pattern, co.files))
+            else:
+                base, name = os.path.split(path)
+                listed.append(list_files(base, name, co.pattern, co.files))
+        history = self._copy_history.setdefault(table, {})
+        picked = pick_files([f for fs in listed for f in fs], history, co)
+        if fmt.lower() == "parquet" and not format_opts:
+            if picked:
+                df = load_table(self.spark, *[p for _, p, _ in picked])
+                if self.spark.catalog.tableExists(table):
+                    df.write.insertInto(table)
+                else:
+                    df.write.saveAsTable(table)
+                purge_files(picked, co)
+        else:
             fmt_params = resolve_format({"type": fmt, **format_opts})
             info = (self.spark.table(table).schema.fields, {}, {}, {})
-        history = self._copy_history.setdefault(table, {})
-        picked = pick_files(_list_files(paths, co.files, co.pattern), history, co)
-        loaded = copy_into_table(self.spark, table, picked, fmt_params, co, info=info)
-        history.update(loaded.history)
-        return sum(
-            any(p == root or p.startswith(os.path.join(root, "")) for _, p, _ in picked)
-            for root in paths
-        )
+            copy_into_table(self.spark, table, picked, fmt_params, co, info)
+        history.update(history_of(picked))
+        chosen = {p for _, p, _ in picked}
+        return sum(any(p in chosen for _, p in fs) for fs in listed)

@@ -53,11 +53,14 @@ from databend_spark.sources.stage_format import (
 __all__ = [
     "CopyOptions",
     "copy_options",
+    "list_files",
     "pick_files",
+    "history_of",
     "copy_into_table",
     "copy_into_location",
     "copy_into_distributed",
     "copy_error_summary",
+    "purge_files",
     "build_colspecs",
     "insert_into",
 ]
@@ -116,6 +119,62 @@ def copy_options(opts: dict[str, object]) -> tuple[CopyOptions, dict[str, object
     return co, rest
 
 
+def list_files(
+    base: str,
+    subpath: str = "",
+    pattern: str | None = None,
+    files: list[str] | None = None,
+    rel_root: str | None = None,
+) -> list[tuple[str, str]]:
+    """(name, path) of the files a COPY from ``base``/``subpath`` sees,
+    sorted, named relative to ``rel_root`` (default ``base``).
+
+    FILES names files under the location (``[1006]`` when one is
+    missing), and PATTERN is then ignored. Otherwise the location is a
+    name prefix, as in the reference's list API: ``ab`` matches
+    ``ab.csv``, ``ab/cd.csv`` and ``ab2/x``, and ``ab/`` or an empty
+    subpath everything below. Listing is recursive and leaves out
+    Spark/Hadoop writer markers; PATTERN full-matches the part of the
+    name after the location (``dir/`` + ``x.*`` sees ``x.csv``)."""
+    rel_root = rel_root or base
+    out: list[tuple[str, str]] = []
+    if files:
+        sub = subpath.rstrip("/")
+        for f in files:
+            p = os.path.join(base, sub, f) if sub else os.path.join(base, f)
+            if not os.path.isfile(p):
+                raise ValueError(f"[1006] file {f} not found in stage")
+            out.append((os.path.relpath(p, rel_root), p))
+        return sorted(out)
+    target = os.path.join(base, subpath) if subpath else base
+    root, pfx = target, None
+    if subpath and not subpath.endswith("/"):
+        root, pfx = os.path.split(target)
+    if os.path.isdir(root):
+        for dirp, dirs, names in os.walk(root, followlinks=True):
+            dirs[:] = [d for d in dirs if not d.startswith((".", "_temporary"))]
+            for f in names:
+                # writer markers only: the reference lists other
+                # _-prefixed objects (its _v_… verification key)
+                if f.startswith((".", "_committed", "_started", "_temporary")) or f == "_SUCCESS":
+                    continue
+                p = os.path.join(dirp, f)
+                if pfx is None or os.path.relpath(p, root).startswith(pfx):
+                    out.append((os.path.relpath(p, rel_root), p))
+    if pattern is not None:
+        try:
+            rx = re.compile(pattern)
+        except re.error:
+            rx = re.compile(re.escape(pattern))
+
+        def remainder(p: str) -> str:
+            rel = os.path.relpath(p, base)
+            return rel[len(subpath):] if subpath and rel.startswith(subpath) else rel
+
+        out = [f for f in out if rx.fullmatch(remainder(f[1]))]
+    return sorted(out)
+
+
 def pick_files(
     listed: list[tuple[str, str]], history: dict[str, tuple], options: CopyOptions
 ) -> list[tuple[str, str, tuple]]:
@@ -131,47 +190,30 @@ def pick_files(
     return picked[: options.max_files] if options.max_files else picked
 
 
-@dataclass
-class Loaded:
-    results: list[tuple]  # per-file result rows, COPY_RESULT_SCHEMA order
-    history: dict[str, tuple]  # real path -> (size, mtime), every picked file
+def history_of(picked: list[tuple[str, str, tuple]]) -> dict[str, tuple]:
+    """The history entries of loaded files: real path -> (size, mtime)."""
+    return {os.path.realpath(p): sig for _, p, sig in picked}
 
 
 def copy_into_table(
     spark: SparkSession,
     table: str,
     picked: list[tuple[str, str, tuple]],
-    fmt: FormatParams | None,
+    fmt: FormatParams,
     options: CopyOptions,
-    info: tuple | None = None,
+    info: tuple,
     numeric_cast: str = "rounding",
     purge_later: list[str] | None = None,
-) -> Loaded:
-    """Load the picked files into ``table``.
-
-    ``fmt`` None reads parquet files in their own schema through
-    ``load_table`` and inserts by position (creating the table if it is
-    missing): one Spark job. Otherwise every file is decoded into the
-    target columns: ``info`` is (fields, declared types, nullability,
-    defaults), where the fields are the table's or those of an explicit
-    column list; the other columns take their DEFAULT. PURGE removes the
-    loaded files after the write, or appends them to ``purge_later``
-    when the caller defers it (inside a transaction)."""
-    history = {os.path.realpath(p): sig for _, p, sig in picked}
+) -> list[tuple]:
+    """Load the picked files into ``table`` -> the per-file result rows
+    (``COPY_RESULT_SCHEMA`` order). Every file is decoded into the
+    target columns. ``info`` is (fields, declared types,
+    nullability, defaults), where the fields are the table's or those of
+    an explicit column list; the other columns take their DEFAULT. PURGE
+    removes the loaded files after the write, or appends them to
+    ``purge_later`` when the caller defers it (inside a transaction)."""
     if not picked:
-        return Loaded([], history)
-    if fmt is None:
-        from databend_spark.session import load_table
-
-        df = load_table(spark, *[p for _, p, _ in picked])
-        if spark.catalog.tableExists(table):
-            df.write.insertInto(table)
-        else:
-            df.write.saveAsTable(table)
-        results = [(rel, None, 0, None, None) for rel, _, _ in picked]
-        _purge(picked, options, purge_later)
-        return Loaded(results, history)
-
+        return []
     fields_, decl, nulls, defaults = info
     specs = build_colspecs(fields_, decl, nulls, defaults)
     schema = T.StructType([T.StructField(f.name, f.dataType, True) for f in fields_])
@@ -198,8 +240,8 @@ def copy_into_table(
             insert_into(spark, good.select(*schema.names), table, fields_, defaults)
     finally:
         decoded.unpersist()
-    _purge([f for f in picked if f[1] not in dropped], options, purge_later)
-    return Loaded(results, history)
+    purge_files([f for f in picked if f[1] not in dropped], options, purge_later)
+    return results
 
 
 def _on_error(picked, summary, on_error: str, nth_error) -> tuple[list, list]:
@@ -247,7 +289,10 @@ def _on_error(picked, summary, on_error: str, nth_error) -> tuple[list, list]:
     return results, dropped
 
 
-def _purge(picked, options: CopyOptions, purge_later: list[str] | None) -> None:
+def purge_files(
+    picked, options: CopyOptions, purge_later: list[str] | None = None
+) -> None:
+    """PURGE: remove the loaded files, or defer them to ``purge_later``."""
     if not options.purge:
         return
     for _rel, p, _sig in picked:

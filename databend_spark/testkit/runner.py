@@ -2176,6 +2176,8 @@ def run_slt_file(
             bumped=set(),
             analyze=set(),
             backups=backups,
+            stage_hist_undo=[],
+            stage_purges=[],
             saved=(
                 _copy.deepcopy(tbl_commits),
                 _copy.deepcopy(tbl_segments),
@@ -2244,20 +2246,19 @@ def run_slt_file(
                 # COPY file-history recorded in this txn rolls back, and
                 # deferred purges are skipped (copy_into_txn.test)
                 for tkey, key, old in reversed(
-                    txn_state.get("stage_hist_undo", [])
+                    txn_state["stage_hist_undo"]
                 ):
                     h = stage_mgr.copy_history.setdefault(tkey, {})
                     if old is None:
                         h.pop(key, None)
                     else:
                         h[key] = old
-                txn_state.pop("stage_purges", None)
             else:
                 for bak in txn_state["backups"].values():
                     spark.sql(f"DROP TABLE IF EXISTS {cur}.`{bak}`")
                 import os as _os2
 
-                for _p in txn_state.pop("stage_purges", []):
+                for _p in txn_state["stage_purges"]:
                     try:
                         _os2.remove(_p)
                     except OSError:
@@ -2288,7 +2289,8 @@ def run_slt_file(
         txn_state.update(
             active=False, backups={}, saved=None, consumed={},
             stream_marked=set(), explicit_consumed=set(),
-            analyze=set(), bumped=set(),
+            analyze=set(), bumped=set(), stage_hist_undo=[],
+            stage_purges=[],
         )
 
     def _cluster_track_insert(tkey: str, new_files: list[str]) -> None:

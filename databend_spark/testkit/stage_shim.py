@@ -20,7 +20,6 @@ files; the decode and encode run in Spark tasks.
 
 from __future__ import annotations
 
-import glob as _glob
 import os
 import re
 import shutil
@@ -33,7 +32,9 @@ from databend_spark.sources.copy_into import (
     copy_into_location,
     copy_into_table,
     copy_options,
+    history_of,
     insert_into,
+    list_files,
     pick_files,
 )
 from databend_spark.sources.stage_format import (
@@ -41,7 +42,6 @@ from databend_spark.sources.stage_format import (
     _avro_json,
     _jdump,
     _read_arrow,
-    compression_suffix,
     parse_option_list,
     resolve_format,
 )
@@ -513,73 +513,10 @@ class StageManager:
         pattern: str | None = None,
         files: list[str] | None = None,
     ) -> list[tuple[str, str]]:
-        """-> [(rel_name, abs_path)], rel to the stage's rel_root.
-        Directory / exact-file / name-prefix resolution mirrors the
-        reference's list API (prefix match, recursive)."""
+        """-> [(rel_name, abs_path)], rel to the stage's rel_root
+        (``sources.copy_into.list_files``)."""
         _require_sandboxed(stage)
-        base = stage.dir
-        out: list[tuple[str, str]] = []
-        if files:
-            sub = subpath.rstrip("/")
-            for f in files:
-                p = os.path.join(base, sub, f) if sub else os.path.join(base, f)
-                if os.path.isfile(p):
-                    out.append((os.path.relpath(p, stage.rel_root), p))
-                else:
-                    raise ValueError(f"[1006] file {f} not found in stage")
-        else:
-            target = os.path.join(base, subpath) if subpath else base
-            # prefix semantics (reference list API): a non-slash
-            # path component matches every object whose name starts
-            # with it — `/ab` matches ab.csv, ab/cd.csv, ab2/x
-            root, pfx = target, None
-            if subpath and not subpath.endswith("/"):
-                root, pfx = os.path.split(target)
-            if os.path.isdir(root):
-                for dirp, _dirs, fs in os.walk(root, followlinks=True):
-                    _dirs[:] = [
-                        d
-                        for d in _dirs
-                        if not d.startswith((".", "_temporary"))
-                    ]
-                    for f in fs:
-                        # skip Spark/Hadoop writer artifacts but NOT
-                        # every _-prefixed object: the reference
-                        # lists its _v_… verification key
-                        # (ee/03_ee_vacuum/03_0000_vacuum_ctas)
-                        if f.startswith(".") or f == "_SUCCESS" or f.startswith(
-                            ("_committed", "_started", "_temporary")
-                        ):
-                            continue
-                        p = os.path.join(dirp, f)
-                        if pfx is not None:
-                            rel_here = os.path.relpath(p, root)
-                            if not rel_here.startswith(pfx):
-                                continue
-                        out.append(
-                            (os.path.relpath(p, stage.rel_root), p)
-                        )
-        if pattern is not None and not files:
-            try:
-                rx = re.compile(pattern)
-            except re.error:
-                rx = re.compile(re.escape(pattern))
-
-            # the pattern full-matches the REMAINDER after the queried
-            # prefix: `@s/dir/` + 'x.*' sees 'x.csv'; `@s/file.csv` +
-            # '' sees '' for file.csv and '.gz' for file.csv.gz
-            def _m(abs_p: str) -> bool:
-                rel_here = os.path.relpath(abs_p, base)
-                rem = (
-                    rel_here[len(subpath):]
-                    if subpath and rel_here.startswith(subpath)
-                    else rel_here
-                )
-                return bool(rx.fullmatch(rem))
-
-            out = [fp for fp in out if _m(fp[1])]
-        out.sort()
-        return out
+        return list_files(stage.dir, subpath, pattern, files, stage.rel_root)
 
     # ------------------------------------------------------------------
     # statement dispatch
@@ -1075,17 +1012,29 @@ class StageManager:
             by_name = {f.name.lower(): f for f in fields}
             fields = [by_name[c] for c in col_list]
         tx = self.txn()
+
+        def note(key, sig):
+            # inside a txn, remember the prior value so ROLLBACK
+            # restores it (copy_into_txn.test)
+            if tx.get("active"):
+                tx.setdefault("stage_hist_undo", []).append(
+                    (table.lower(), key, hist.get(key))
+                )
+            hist[key] = sig
+
         if transform_sql is not None:
-            results = [
-                (rel, self._load_transform(
+            # each file is its own insert: record it as it lands, so a
+            # failure on a later file does not reload the earlier ones
+            results = []
+            for rel, p, sig in picked:
+                n = self._load_transform(
                     transform_sql, stage_ref, st, rel, p, fmt, table,
                     fields, run_sql,
-                ), 0, None, None)
-                for rel, p, _sig in picked
-            ]
-            loaded = {os.path.realpath(p): sig for _r, p, sig in picked}
+                )
+                results.append((rel, n, 0, None, None))
+                note(os.path.realpath(p), sig)
         else:
-            res = copy_into_table(
+            results = copy_into_table(
                 self.spark, table, picked, fmt,
                 replace(co, purge=co.purge and not st.read_only),
                 info=(fields, decl, nulls, defaults),
@@ -1094,15 +1043,8 @@ class StageManager:
                 purge_later=tx.setdefault("stage_purges", [])
                 if tx.get("active") else None,
             )
-            results, loaded = res.results, res.history
-        for key, sig in loaded.items():
-            # inside a txn, remember the prior value so ROLLBACK
-            # restores it (copy_into_txn.test)
-            if tx.get("active"):
-                tx.setdefault("stage_hist_undo", []).append(
-                    (table.lower(), key, hist.get(key))
-                )
-            hist[key] = sig
+            for key, sig in history_of(picked).items():
+                note(key, sig)
         if co.return_failed_only:
             results = [r for r in results if r[2]]
         return self.spark.createDataFrame(results, COPY_RESULT_SCHEMA)

@@ -28,6 +28,8 @@ def _stage_files(root) -> None:
         "purge/p1.csv": "1\n",
         "purge/p2.csv": "2\n",
         "txn/t1.csv": "5\n",
+        # a transform COPY decodes a.parquet and then fails on this one
+        "tr/b.parquet": "not parquet\n",
     }
     for rel, body in files.items():
         path = os.path.join(root, rel)
@@ -35,13 +37,14 @@ def _stage_files(root) -> None:
         with open(path, "w") as fh:
             fh.write(body)
     os.makedirs(os.path.join(root, "parquet"))
-    pq.write_table(
-        pa.table({
-            "id": pa.array([1, 2], pa.int32()),
-            "name": ["alice", "bob"],
-        }),
-        os.path.join(root, "parquet", "a.parquet"),
-    )
+    for rel in ("parquet/a.parquet", "tr/a.parquet"):
+        pq.write_table(
+            pa.table({
+                "id": pa.array([1, 2], pa.int32()),
+                "name": ["alice", "bob"],
+            }),
+            os.path.join(root, rel),
+        )
 
 
 _LOADS = """
@@ -529,6 +532,35 @@ query II
 SELECT count(*), sum(a) FROM cp_txn
 ----
 4 6
+
+statement ok
+CREATE TABLE cp_txn_later (a INT)
+
+statement ok
+BEGIN
+
+query TIITI
+COPY INTO cp_txn_later FROM @cp_s/txn/ FILE_FORMAT = (type = CSV)
+----
+txn/t1.csv 1 0 NULL NULL
+
+statement ok
+COMMIT
+
+statement ok
+BEGIN
+
+statement ok
+ROLLBACK
+
+query TIITI
+COPY INTO cp_txn_later FROM @cp_s/txn/ FILE_FORMAT = (type = CSV)
+----
+
+query I
+SELECT count(*) FROM cp_txn_later
+----
+1
 """
 
 
@@ -537,6 +569,34 @@ def test_copy_is_atomic_and_follows_the_transaction(spark, sf_dir, tmp_path):
     transaction ROLLBACK forgets the loaded files and PURGE waits for
     COMMIT."""
     _run_slt(spark, sf_dir, tmp_path, "atomic_txn", _ATOMIC_AND_TXN)
+
+
+_TRANSFORM_FAILS = """
+statement ok
+CREATE STAGE cp_s url='fs://{root}/'
+
+statement ok
+CREATE TABLE cp_tr (id INT)
+
+statement error
+COPY INTO cp_tr FROM (SELECT id FROM @cp_s/tr/) FILE_FORMAT = (type = PARQUET)
+
+query TIITI
+COPY INTO cp_tr FROM (SELECT id FROM @cp_s/tr/) FILE_FORMAT = (type = PARQUET) FILES = ('a.parquet')
+----
+
+query I
+SELECT count(*) FROM cp_tr
+----
+2
+"""
+
+
+def test_transform_copy_records_each_file_as_it_loads(spark, sf_dir, tmp_path):
+    """A transform COPY inserts file by file: when a later file fails,
+    the files already inserted are in the history and do not load
+    again."""
+    _run_slt(spark, sf_dir, tmp_path, "transform_fails", _TRANSFORM_FAILS)
 
 
 def _jobs_and_decode_stages(spark, group: str) -> tuple[int, list[int]]:
@@ -597,6 +657,14 @@ def test_parquet_copy_into_is_one_job(ctx, spark, tmp_path, job_group):
         job_group("cp-one-job", "copy_into")
         assert ctx.copy_into(table, [path]) == 1
         assert _jobs_and_decode_stages(spark, "cp-one-job") == (1, [])
+        # COPY-only options do not change how a file decodes: still one
+        # job, and a missing table is still created
+        spark.sql(f"DROP TABLE {table}")
+        job_group("cp-one-job-opts", "copy_into")
+        assert ctx.copy_into(table, [path], force=True, purge=True) == 1
+        assert _jobs_and_decode_stages(spark, "cp-one-job-opts") == (1, [])
+        assert spark.table(table).count() == 2
+        assert not os.path.exists(path)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 
@@ -626,6 +694,34 @@ def test_session_copy_into_takes_copy_and_format_options(ctx, spark, tmp_path):
         assert spark.table(table).count() == 4
         with pytest.raises(ValueError, match="Unknown file format option header"):
             ctx.copy_into(table, [str(tmp_path)], "csv", header="true")
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+def test_session_copy_into_lists_files_like_the_statement(ctx, spark, tmp_path):
+    """``ctx.copy_into`` and the statement share one lister: writer
+    markers are left out but other ``_`` files load, a FILES entry that
+    is missing raises [1006], PATTERN is ignored under FILES, and a path
+    that is not a directory is a name prefix."""
+    for name, body in [("a.csv", "1\n"), ("_b.csv", "2\n"), ("_SUCCESS", ""),
+                       (".a.csv.crc", "x\n"), ("a.csv.1", "3\n")]:
+        (tmp_path / name).write_text(body)
+    table = "cp_list"
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    spark.sql(f"CREATE TABLE {table} (a INT) USING parquet")
+
+    def loaded():
+        return sorted(r.a for r in spark.table(table).collect())
+
+    try:
+        with pytest.raises(ValueError, match=r"\[1006\] file nope.csv not found"):
+            ctx.copy_into(table, [str(tmp_path)], "csv", files=["nope.csv"])
+        ctx.copy_into(table, [str(tmp_path)], "csv", files=["a.csv"], pattern="none")
+        assert loaded() == [1]
+        ctx.copy_into(table, [str(tmp_path / "a.csv")], "csv")
+        assert loaded() == [1, 3]
+        ctx.copy_into(table, [str(tmp_path)], "csv")
+        assert loaded() == [1, 2, 3]
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 
